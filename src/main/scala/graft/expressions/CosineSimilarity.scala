@@ -40,7 +40,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = RaggedGuard.length(prettyName, x, y)
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     while (i < n) {
       val xi = x.getDouble(i); val yi = y.getDouble(i)
@@ -57,7 +57,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
       val dot = ctx.freshName("dot"); val na = ctx.freshName("na")
       val nb = ctx.freshName("nb"); val d = ctx.freshName("d")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |${RaggedGuard.code(prettyName, a, b)}
+         |int $n = $a.numElements();
          |double $dot = 0.0, $na = 0.0, $nb = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  double xi = $a.getDouble($i);
@@ -87,6 +88,26 @@ object CosineSimilarity {
   }
 }
 
+/** Loud dimension guard for the array kernels, in both evaluation paths
+  * (as [[HyperplaneKernel]] has). The reference `zip_with` form null-pads
+  * the shorter array and returns NULL; a loop bounded by the shorter
+  * length would instead return a plausible wrong score. */
+private object RaggedGuard {
+  def length(fn: String, x: ArrayData, y: ArrayData): Int = {
+    val n = x.numElements()
+    if (y.numElements() != n)
+      throw new IllegalArgumentException(
+        s"$fn: arrays of unequal length ($n vs ${y.numElements()})")
+    n
+  }
+
+  def code(fn: String, a: String, b: String): String =
+    s"""if ($a.numElements() != $b.numElements()) {
+       |  throw new IllegalArgumentException("$fn: arrays of unequal length (" +
+       |    $a.numElements() + " vs " + $b.numElements() + ")");
+       |}""".stripMargin
+}
+
 /** Native dot product over two double arrays — the scoring half of
   * [[CosineSimilarity]] for callers that carry PRECOMPUTED norms
   * ([[graft.operators.Similarity.cosinePrenormed]] — the per-candidate-
@@ -114,7 +135,7 @@ case class DotProduct(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = RaggedGuard.length(prettyName, x, y)
     var dot = 0.0; var i = 0
     while (i < n) { dot += x.getDouble(i) * y.getDouble(i); i += 1 }
     dot
@@ -125,7 +146,8 @@ case class DotProduct(left: Expression, right: Expression)
       val n = ctx.freshName("n"); val i = ctx.freshName("i")
       val dot = ctx.freshName("dot")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |${RaggedGuard.code(prettyName, a, b)}
+         |int $n = $a.numElements();
          |double $dot = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  $dot += $a.getDouble($i) * $b.getDouble($i);

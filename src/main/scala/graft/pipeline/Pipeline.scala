@@ -1,8 +1,14 @@
 package graft.pipeline
 
+import java.util.concurrent.{ConcurrentLinkedQueue, Executors}
 import scala.collection.mutable
-import scala.util.{Failure, Success, Try}
-import org.apache.spark.sql.DataFrame
+import scala.concurrent.duration.Duration
+import scala.concurrent.{Await, ExecutionContext, Future, Promise}
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+import scala.util.{Failure, Success}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** In-process pipeline graph runner — the engine's replacement for the
   * reference's Airflow DAG orchestration (SURVEY §3, `dags/<dag>/run.py`,
@@ -12,10 +18,25 @@ import org.apache.spark.sql.DataFrame
   *
   * Stages produce DataFrames lazily; a stage whose input is empty reports
   * `Skipped` without running its action — exactly the reference's
-  * "No data to process" early return. Results are memoized so shared
-  * upstream stages (e.g. dim_company feeding three facts) evaluate once
-  * per run — the cross-job reuse the reference's job-per-script
-  * architecture cannot express (SURVEY §4 caching row).
+  * "No data to process" early return.
+  *
+  * Concurrency: a stage starts as soon as every dependency has completed,
+  * so independent stages run at the same time — the reference's
+  * task-group parallelism under Airflow (SURVEY §3.2, §4), on a daemon
+  * pool sized to the session's task slots. Stage builds and sinks must
+  * therefore be thread-safe, and concurrent sinks must write distinct
+  * paths. A build sees only its own dependencies' frames.
+  *
+  * Shared stages evaluate once per run: a stage with a sink and at least
+  * one dependent is persisted before its emptiness probe, so the probe,
+  * the sink and every dependent read one materialization — the cross-job
+  * reuse the reference's job-per-script architecture cannot express
+  * (SURVEY §4 caching row). Dependents start only after that sink has
+  * returned, and every persisted frame is released before `run` returns.
+  * The one exception keeps written schemas unchanged: a frame whose
+  * optimized plan is less nullable than its analyzed plan (dim_date's
+  * constant-folded start date) is not persisted, since a cached frame
+  * carries the analyzed nullability into its sink.
   */
 object Pipeline {
 
@@ -24,42 +45,94 @@ object Pipeline {
   case object Skipped extends Result
   case class Errored(error: Throwable) extends Result
 
+  /** The default sink: a stage without one only feeds its dependents. */
+  val NoSink: DataFrame => Unit = _ => ()
+
   case class Stage(
       name: String,
       deps: Seq[String],
       build: Map[String, DataFrame] => DataFrame,
-      sink: DataFrame => Unit = _ => (),
+      sink: DataFrame => Unit = NoSink,
       skipWhenEmpty: Boolean = true)
+
+  /** A stage's result, with its frame when it completed. */
+  private type Outcome = (Result, Option[DataFrame])
 
   class Runner(notifier: (String, Throwable) => Unit = (_, _) => ()) {
     private val stages = mutable.LinkedHashMap.empty[String, Stage]
-    private val frames = mutable.Map.empty[String, DataFrame]
 
     def add(stage: Stage): Runner = { stages(stage.name) = stage; this }
 
-    /** Topologically run every stage; returns per-stage results. A failed
-      * or skipped dependency skips its dependents. */
+    /** Run every stage, each once all its dependencies have completed;
+      * returns per-stage results. A failed or skipped dependency skips
+      * its dependents; independent stages still run. */
     def run(): Map[String, Result] = {
-      val results = mutable.LinkedHashMap.empty[String, Result]
-
-      def exec(name: String): Result = results.getOrElseUpdate(name, {
-        val st = stages.getOrElse(name,
-          throw new IllegalArgumentException(s"unknown stage: $name"))
-        val depResults = st.deps.map(exec)
-        if (depResults.exists(r => r == Skipped || r.isInstanceOf[Errored])) Skipped
-        else Try {
-          val df = st.build(frames.toMap)
-          frames(name) = df
-          if (st.skipWhenEmpty && df.isEmpty) Skipped
-          else { st.sink(df); Completed() }
-        } match {
-          case Success(r) => r
-          case Failure(e) => notifier(name, e); Errored(e)
-        }
+      for (st <- stages.values; d <- st.deps if !stages.contains(d))
+        throw new IllegalArgumentException(s"unknown stage: $d")
+      val fed = stages.values.flatMap(_.deps).toSet
+      // the session's task slots; before any session exists (the stages
+      // would create it) the cores it would default to
+      val slots = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+        .fold(Runtime.getRuntime.availableProcessors)(_.sparkContext.defaultParallelism)
+      val pool = Executors.newFixedThreadPool(slots, (r: Runnable) => {
+        val t = new Thread(r, "graft-pipeline")
+        t.setDaemon(true)
+        t
       })
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+      val persisted = new ConcurrentLinkedQueue[DataFrame]()
 
-      stages.keys.foreach(exec)
-      results.toMap
+      def exec(st: Stage, inputs: Map[String, DataFrame]): Outcome =
+        try {
+          val built = st.build(inputs)
+          // A cached frame exposes its analyzed schema, so one whose
+          // optimizer tightens nullability (a constant-folded input) would
+          // be written with looser columns; it is recomputed per consumer
+          // instead. A frame the caller already cached stays theirs.
+          val shared = st.sink.ne(NoSink) && fed(st.name) &&
+            built.storageLevel == StorageLevel.NONE &&
+            built.queryExecution.optimizedPlan.schema == built.schema
+          val df =
+            if (shared) {
+              persisted.add(built)
+              built.persist(StorageLevel.MEMORY_AND_DISK)
+            } else built
+          if (st.skipWhenEmpty && df.isEmpty) (Skipped, None)
+          else { st.sink(df); (Completed(), Some(df)) }
+        } catch {
+          case NonFatal(e) =>
+            notifier.synchronized(notifier(st.name, e))
+            (Errored(e), None)
+        }
+
+      val futures = mutable.LinkedHashMap.empty[String, Future[Outcome]]
+      def schedule(name: String): Future[Outcome] = futures.get(name) match {
+        case Some(f) => f
+        case None =>
+          val st = stages(name)
+          val f = Future.sequence(st.deps.map(schedule)).flatMap { ups =>
+            if (ups.forall(_._2.isDefined)) task(exec(st, st.deps.zip(ups.map(_._2.get)).toMap))
+            else Future.successful((Skipped, None))
+          }
+          futures(name) = f
+          f
+      }
+
+      try {
+        val outcomes = Await.result(Future.sequence(stages.keys.toSeq.map(schedule)), Duration.Inf)
+        stages.keys.zip(outcomes.map(_._1)).toMap
+      } finally {
+        pool.shutdown()
+        persisted.asScala.foreach(_.unpersist())
+      }
+    }
+
+    /** `body` on the pool. Unlike `Future(body)`, a fatal error fails the
+      * future instead of leaving it pending, so `run` cannot hang. */
+    private def task[A](body: => A)(implicit ec: ExecutionContext): Future[A] = {
+      val p = Promise[A]()
+      ec.execute(() => p.complete(try Success(body) catch { case t: Throwable => Failure(t) }))
+      p.future
     }
   }
 }

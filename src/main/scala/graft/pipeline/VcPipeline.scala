@@ -12,9 +12,15 @@ import graft.sources.{Readers, Writers}
   *
   * Differences from the reference's architecture, by design:
   *  - one SparkSession for the whole graph — shared dims (dim_company
-  *    feeds three facts) are built once and memoized, where the
-  *    reference re-reads dim tables over JDBC in every per-table job
-  *    (SURVEY §4 caching row);
+  *    feeds four tables and profiling) are computed once per run and
+  *    read from that one copy by their probe, their sink and every
+  *    dependent, where the reference re-reads dim tables over JDBC in
+  *    every per-table job (SURVEY §4 caching row). dim_date, a generated
+  *    range, is the exception: caching it would loosen its written
+  *    schema (see [[Pipeline]]), so each consumer regenerates it;
+  *  - independent stages run concurrently (see [[Pipeline]]): every
+  *    build and sink here is thread-safe and writes its own path under
+  *    `outDir`;
   *  - skip-on-empty short-circuits per stage, as the reference does per
   *    job (P3);
   *  - incremental mode is a declarative `created_at` day filter pushed
@@ -83,7 +89,8 @@ object VcPipeline {
           graft.sources.JdbcUpsert.mergeByKey(existing, newRows, keys, keys.head)
       }
     /** Warehouse-table stage. Overwrite mode sinks after the emptiness
-      * check, as before. Append mode PUBLISHES inside the build — swap
+      * check, and the runner hands dependents the one materialization
+      * its probe and sink read. Append mode PUBLISHES inside the build — swap
       * the snapshot, then hand downstream a fresh read of the new files —
       * because the merged frame lazily reads the files the swap replaces:
       * a post-sink consumer of the old frame would hit deleted parts. */

@@ -1,7 +1,12 @@
 package graft
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import graft.expressions.CosineSimilarity
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
+import graft.expressions.{CosineSimilarity, DotProduct}
 import graft.operators.Similarity
 
 /** The native codegen expression must be bit-identical to the
@@ -55,5 +60,25 @@ class CosineExprSpec extends SparkSpec {
     val got = df.select(CosineSimilarity.column(spark, $"a", $"b").as("c")).collect()
     assert(got(0).getDouble(0) == 0.0) // zero vector -> 0, not NaN
     assert(got(1).isNullAt(0))         // null input -> null
+  }
+
+  test("ragged input fails loudly in the interpreted and the codegen path") {
+    val t = ArrayType(DoubleType, containsNull = false)
+    val (a, b) = (BoundReference(0, t, nullable = true), BoundReference(1, t, nullable = true))
+    val ragged = InternalRow(ArrayData.toArrayData(Array(1.0, 2.0, 3.0)),
+      ArrayData.toArrayData(Array(1.0, 2.0)))
+    for (e <- Seq[Expression](DotProduct(a, b), CosineSimilarity(a, b))) {
+      val interpreted = intercept[IllegalArgumentException](e.eval(ragged))
+      val generated = intercept[IllegalArgumentException](
+        GenerateUnsafeProjection.generate(Seq(e)).apply(ragged))
+      for (err <- Seq(interpreted, generated))
+        assert(err.getMessage.contains("unequal length (3 vs 2)"), s"${e.prettyName}: $err")
+    }
+    // a query reaches the same guard instead of a truncated score
+    val q = Seq((Seq(1.0, 2.0, 3.0), Seq(1.0, 2.0))).toDF("a", "b")
+      .select(Similarity.dotNative($"a", $"b"))
+    val err = intercept[Exception](q.collect())
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(c => c.getMessage != null && c.getMessage.contains("unequal length")), err)
   }
 }

@@ -1,22 +1,33 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 import org.apache.spark.sql.functions._
 import graft.pipeline.Pipeline
 import graft.pipeline.Pipeline._
 
 /** Pipeline runner: dependency order, skip-on-empty short-circuit,
-  * error notification, memoized shared upstream stages. */
+  * error notification, concurrent independent stages, and shared
+  * upstream stages computed once per run.
+  *
+  * Stage callbacks run on the runner's pool threads, so every collector
+  * a callback mutates is updated under `synchronized`. */
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Bounded wait for the concurrency specs: a runner that serializes
+    * stages fails them instead of hanging. */
+  private def await(latch: CountDownLatch): Boolean = latch.await(30, TimeUnit.SECONDS)
 
   test("stages run in dependency order; shared upstream memoized") {
     var builds = 0
     var sunk: Seq[String] = Nil
     val r = new Runner()
-      .add(Stage("dim", Nil, { _ => builds += 1; Seq((1, "c:1")).toDF("sk", "nk") },
-        df => sunk :+= "dim"))
-      .add(Stage("fact_a", Seq("dim"), { f => f("dim").select("sk") }, _ => sunk :+= "fact_a"))
-      .add(Stage("fact_b", Seq("dim"), { f => f("dim").select("nk") }, _ => sunk :+= "fact_b"))
+      .add(Stage("dim", Nil, { _ => synchronized(builds += 1); Seq((1, "c:1")).toDF("sk", "nk") },
+        df => synchronized(sunk :+= "dim")))
+      .add(Stage("fact_a", Seq("dim"), { f => f("dim").select("sk") },
+        _ => synchronized(sunk :+= "fact_a")))
+      .add(Stage("fact_b", Seq("dim"), { f => f("dim").select("nk") },
+        _ => synchronized(sunk :+= "fact_b")))
       .run()
     assert(builds == 1)
     assert(r.values.forall(_ == Completed()))
@@ -27,18 +38,91 @@ class PipelineSpec extends SparkSpec {
     var sinkRan = false
     val r = new Runner()
       .add(Stage("src", Nil, { _ => Seq.empty[(Int, String)].toDF("a", "b") }))
-      .add(Stage("down", Seq("src"), { f => f("src") }, _ => sinkRan = true))
+      .add(Stage("down", Seq("src"), { f => f("src") }, _ => synchronized { sinkRan = true }))
       .run()
     assert(r("src") == Skipped && r("down") == Skipped && !sinkRan)
   }
 
   test("failure notifies and skips dependents") {
     var notified: Option[String] = None
-    val r = new Runner((name, _) => notified = Some(name))
+    val r = new Runner((name, _) => synchronized { notified = Some(name) })
       .add(Stage("boom", Nil, { _ => throw new RuntimeException("x") }))
       .add(Stage("down", Seq("boom"), { f => f("boom") }))
       .run()
     assert(r("boom").isInstanceOf[Errored] && r("down") == Skipped)
     assert(notified.contains("boom"))
+  }
+
+  test("independent stages run at the same time") {
+    val met = new CountDownLatch(2)
+    def meet(n: Int) = Stage(s"s$n", Nil, { _ =>
+      met.countDown()
+      require(await(met), s"s$n waited alone: independent stages ran one at a time")
+      Seq(n).toDF("n")
+    })
+    val r = new Runner().add(meet(1)).add(meet(2)).run()
+    assert(r == Map("s1" -> Completed(), "s2" -> Completed()))
+  }
+
+  test("a shared stage with a sink and three dependents computes its rows once") {
+    val computed = spark.sparkContext.longAccumulator("shared-rows")
+    val tick = udf { (id: Long) => computed.add(1); id }
+    // each consumer sums the column, so an unshared plan re-runs the udf
+    def total(df: org.apache.spark.sql.DataFrame): Unit = df.agg(sum("v")).collect()
+    val r = new Runner()
+      .add(Stage("up", Nil, { _ => spark.range(0, 100, 1, 4).select(tick($"id").as("v")) }, total))
+      .add(Stage("a", Seq("up"), { f => f("up") }, total))
+      .add(Stage("b", Seq("up"), { f => f("up").filter($"v" > 10) }, total))
+      .add(Stage("c", Seq("up"), { f => f("up").select(($"v" * 2).as("v")) }, total))
+      .run()
+    assert(r.values.forall(_ == Completed()))
+    assert(computed.value == 100L, s"the shared stage computed ${computed.value} rows, not 100")
+  }
+
+  test("a failing branch neither skips nor cancels an independent sibling") {
+    var notified = Seq.empty[String]
+    val failed = new CountDownLatch(1)
+    var siblingRows = 0L
+    val r = new Runner((name, _) => { synchronized(notified :+= name); failed.countDown() })
+      .add(Stage("boom", Nil, { _ => throw new RuntimeException("x") }))
+      .add(Stage("down", Seq("boom"), { f => f("boom") }))
+      .add(Stage("sibling", Nil, { _ =>
+        require(await(failed), "the failing branch never notified")
+        spark.range(0, 50, 1, 4).toDF()
+      }, df => synchronized { siblingRows = df.count() }))
+      .run()
+    assert(r("boom").isInstanceOf[Errored] && r("down") == Skipped)
+    assert(r("sibling") == Completed() && siblingRows == 50L)
+    assert(notified == Seq("boom"))
+  }
+
+  test("no dependent build starts before its upstream sink has returned") {
+    var events = Seq.empty[String]
+    def log(e: String): Unit = synchronized(events :+= e)
+    val up = Stage("up", Nil, { _ => Seq(1, 2, 3).toDF("v") }, { df =>
+      df.collect()
+      Thread.sleep(300)
+      log("up:sunk")
+    })
+    val runner = new Runner().add(up)
+    for (d <- Seq("a", "b", "c"))
+      runner.add(Stage(d, Seq("up"), { f => log(s"$d:build"); f("up") }))
+    assert(runner.run().values.forall(_ == Completed()))
+    val sunkAt = events.indexOf("up:sunk")
+    assert(sunkAt >= 0 && Seq("a", "b", "c").forall(d => events.indexOf(s"$d:build") > sunkAt),
+      s"events: $events")
+  }
+
+  test("run() leaves nothing in the cache manager") {
+    spark.catalog.clearCache()
+    val cache = spark.sharedState.cacheManager
+    var cachedDuringRun = false
+    val r = new Runner()
+      .add(Stage("up", Nil, { _ => spark.range(0, 20, 1, 2).toDF() }, _.collect()))
+      .add(Stage("down", Seq("up"), { f => synchronized { cachedDuringRun = !cache.isEmpty }; f("up") }))
+      .run()
+    assert(r.values.forall(_ == Completed()))
+    assert(cachedDuringRun, "the shared stage was never cached")
+    assert(cache.isEmpty)
   }
 }

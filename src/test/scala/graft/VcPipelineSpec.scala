@@ -101,6 +101,137 @@ class VcPipelineSpec extends SparkSpec {
     assert(read("data_profile").select("table_name").distinct().count() == 3)
   }
 
+  /** Each column of a written table as its parquet footer declares it:
+    * repetition (REQUIRED / OPTIONAL), physical type, name, annotation.
+    * Spark reads every file column back as nullable, so only the footer
+    * shows whether a column was written non-nullable. */
+  private def parquetColumns(dir: String): Seq[String] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val part = path.getFileSystem(conf).listStatus(path).map(_.getPath)
+      .find(_.getName.endsWith(".parquet")).getOrElse(fail(s"no parquet part in $dir"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(part, conf))
+    try reader.getFooter.getFileMetaData.getSchema.toString
+      .split("[{};]").drop(1).map(_.trim).filter(_.nonEmpty).toSeq
+    finally reader.close()
+  }
+
+  test("overwrite run pins every table's parquet schema, nullability included") {
+    val out = Files.createTempDirectory("vc_out_schema").toString
+    VcPipeline.run(spark, VcPipeline.Config(writeStaging(), out))
+    // surrogate keys stay REQUIRED in the facts and the bridge: they read
+    // the dims' in-run frames, never a re-read of the written files
+    val expected = Map(
+      "bridge_company_people" -> Seq(
+        "required int64 sk_company_id",
+        "required int64 sk_people_id",
+        "optional binary title (STRING)",
+        "optional binary is_past (STRING)",
+        "optional int32 relationship_start_at",
+        "optional int32 relationship_end_at"),
+      "data_profile" -> Seq(
+        "required binary schema (STRING)",
+        "required binary table_name (STRING)",
+        "required binary column_name (STRING)",
+        "required int32 ordinal",
+        "required binary data_type (STRING)",
+        "required int64 n_rows",
+        "required int32 n_cols",
+        "required int64 not_null_count",
+        "optional double percentage_completeness",
+        "required binary completeness_grade (STRING)",
+        "required int64 negative_count",
+        "required boolean is_negative_values",
+        "optional binary sample_data (STRING)"),
+      "dim_company" -> Seq(
+        "optional binary nk_company_id (STRING)",
+        "optional binary entity_type (STRING)",
+        "optional binary full_address (STRING)",
+        "optional binary region (STRING)",
+        "optional binary city (STRING)",
+        "optional binary country_code (STRING)",
+        "required int64 sk_company_id"),
+      "dim_date" -> Seq(
+        "optional int32 date_id",
+        "required int32 date_actual (DATE)",
+        "required binary day_suffix (STRING)",
+        "required binary day_name (STRING)",
+        "required int32 day_of_year",
+        "optional int32 week_of_month",
+        "required int32 week_of_year",
+        "required binary week_of_year_iso (STRING)",
+        "required int32 month_actual",
+        "required binary month_name (STRING)",
+        "required binary month_name_abbreviated (STRING)",
+        "required int32 quarter_actual",
+        "required binary quarter_name (STRING)",
+        "required int32 year_actual",
+        "required int32 first_day_of_week (DATE)",
+        "required int32 last_day_of_week (DATE)",
+        "optional int32 first_day_of_month (DATE)",
+        "required int32 last_day_of_month (DATE)",
+        "optional int32 first_day_of_quarter (DATE)",
+        "optional int32 last_day_of_quarter (DATE)",
+        "optional int32 first_day_of_year (DATE)",
+        "required int32 last_day_of_year (DATE)",
+        "required binary mmyyyy (STRING)",
+        "required binary mmddyyyy (STRING)",
+        "required binary weekend_indr (STRING)"),
+      "dim_funds" -> Seq(
+        "optional binary nk_fund_id (STRING)",
+        "optional binary fund_name (STRING)",
+        "optional int64 raised_amount_usd (DECIMAL(18,2))",
+        "optional int32 funded_at",
+        "optional binary fund_description (STRING)",
+        "required int64 sk_fund_id"),
+      "dim_people" -> Seq(
+        "optional binary nk_people_id (STRING)",
+        "optional binary full_name (STRING)",
+        "optional binary affiliation_name (STRING)",
+        "required int64 sk_people_id"),
+      "fct_acquisition" -> Seq(
+        "optional int64 dd_acquisition_id",
+        "required int64 sk_acquiring_company_id",
+        "required int64 sk_acquired_company_id",
+        "optional int64 price_amount_usd (DECIMAL(18,2))",
+        "optional int32 acquired_at",
+        "optional binary term_code (STRING)",
+        "optional binary acquisition_description (STRING)"),
+      "fct_investments" -> Seq(
+        "optional int64 dd_investment_id",
+        "required int64 sk_company_id",
+        "required int64 sk_fund_id",
+        "optional int32 funded_at",
+        "optional binary funding_round_type (STRING)",
+        "optional binary num_of_participants (STRING)",
+        "optional fixed_len_byte_array(16) raised_amount_usd (DECIMAL(38,18))",
+        "optional fixed_len_byte_array(16) pre_money_valuation_usd (DECIMAL(38,18))",
+        "optional fixed_len_byte_array(16) post_money_valuation_usd (DECIMAL(38,18))"),
+      "fct_ipos" -> Seq(
+        "optional int32 dd_ipo_id",
+        "required int64 sk_company_id",
+        "optional int64 valuation_amount_usd (DECIMAL(18,2))",
+        "optional int64 raised_amount_usd (DECIMAL(18,2))",
+        "optional int32 public_at",
+        "optional binary stock_symbol (STRING)",
+        "optional binary ipo_description (STRING)"),
+      "milestones" -> Seq(
+        "optional int96 created_at",
+        "optional binary description (STRING)",
+        "optional binary milestone_at (STRING)",
+        "optional binary milestone_code (STRING)",
+        "optional int32 milestone_id",
+        "optional binary object_id (STRING)",
+        "optional binary source_description (STRING)",
+        "optional binary source_url (STRING)",
+        "optional int96 updated_at"))
+    val written = expected.keys.map(t => t -> parquetColumns(s"$out/$t")).toMap
+    val wrong = expected.keys.filter(t => written(t) != expected(t)).toSeq.sorted
+    assert(wrong.isEmpty, wrong.map(t => s"$t: ${written(t).mkString(", ")}").mkString("\n"))
+  }
+
   test("milestones: keyed upsert across runs, delta wins, idempotent replay") {
     val out = Files.createTempDirectory("vc_out_ms").toString
     val staging = writeStaging()
