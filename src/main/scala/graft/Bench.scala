@@ -239,16 +239,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val (quietVerdict, quietWaitSec) = quietGate()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the full machine (brief: local[32]) when the driver
-    // doesn't pin a core count
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.core.GraftSession.builder()
       // Heap-proofing (round-8 finding, SCALE.md "heap contamination"):
       // Spark frees broadcast/shuffle/checkpoint state via weak references,
       // so cleanup only happens when the driver GCs. At a huge heap

@@ -109,21 +109,14 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     // SPARK_GRAFT_AQE=false is the determinism lane's perturbation
     // (tools/determinism_lane.sh): disabling AQE defeats exchange reuse,
     // the configuration under which the sampled-range-boundary bug class
     // (Warehouse r14, Packing r16) actually diverges — production runs
     // keep the default (AQE on).
     val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = graft.core.GraftSession.builder()
       .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT", "600").toLong

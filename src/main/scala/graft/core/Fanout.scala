@@ -46,6 +46,17 @@ object Fanout {
   def plannedScanTasks(df: DataFrame): Option[Long] =
     scanLayout(df).map(_._1)
 
+  /** Bytes of input per fan-out task. CPU-dense text/vector kernels here
+    * process raw input at single-digit MB/s/core (tools/FanoutProbe,
+    * deleted after 17eacc8: the 1.1 MB near-dup corpus costs ~1.2 s of
+    * single-core minhash), so ~64 KB gives each task ~50–100 ms of real
+    * work — comfortably above the
+    * ~10–30 ms per-task fixed cost, where a blanket fan-out to the full
+    * core count left light gates paying more overhead than they
+    * parallelized away (r20 A/B: ii2/cur3/v4 +0.3 s at 32-way, recovered
+    * at the bytes-derived width). */
+  val SpreadBytesPerTask: Long = 64 * 1024
+
   /** Byte estimate for an RDD-backed leaf whose plan-time statistics are
     * the "unknown" default: partitions × this. 8 task-worths per existing
     * partition keeps the width DATA-derived (a tiny few-partition
@@ -53,7 +64,9 @@ object Fanout {
     * full core count — the r20 ii2/cur3/v4 +0.3 s blanket-fanout shape,
     * flagged by the r20 advice) while still unlocking real parallelism
     * for the common case this path exists for: an AQE-coalesced
-    * 1–4-partition checkpoint feeding a CPU-dense kernel. */
+    * 1–4-partition checkpoint feeding a CPU-dense kernel. Declared after
+    * [[SpreadBytesPerTask]]: object vals initialize in order, and a
+    * forward reference would read 0. */
   val RddFallbackBytesPerPartition: Long = 8 * SpreadBytesPerTask
 
   /** (estimated scan tasks, total input bytes) of `df`'s leaves — see
@@ -98,16 +111,6 @@ object Fanout {
       Some((counts.flatten.map(_._1).sum, counts.flatten.map(_._2).sum))
     else None
   }
-
-  /** Bytes of input per fan-out task. CPU-dense text/vector kernels here
-    * process raw input at single-digit MB/s/core (FanoutProbe: the 1.1 MB
-    * near-dup corpus costs ~1.2 s of single-core minhash), so ~64 KB
-    * gives each task ~50–100 ms of real work — comfortably above the
-    * ~10–30 ms per-task fixed cost, where a blanket fan-out to the full
-    * core count left light gates paying more overhead than they
-    * parallelized away (r20 A/B: ii2/cur3/v4 +0.3 s at 32-way, recovered
-    * at the bytes-derived width). */
-  val SpreadBytesPerTask: Long = 64 * 1024
 
   /** SPARK_GRAFT_FANOUT_CAP, parsed and validated ONCE per JVM (r20
     * advice: the per-call unguarded `.toInt` threw NumberFormatException

@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * The reference runs PySpark 3.5.5 on a 3-worker standalone cluster with
   * dynamicAllocation (reference `docker-compose.yml:129-184`,
   * `dags/vcapital_staging/tasks/extract_db.py:18-31`). We target Spark 4.x
-  * local[32] for tests while keeping every setting meaningful on a real
+  * local mode while keeping every setting meaningful on a real
   * multi-executor cluster:
   *
   *  - AQE on: runtime shuffle-partition coalescing + skew-join splitting are
@@ -16,16 +16,21 @@ import org.apache.spark.sql.SparkSession
   *    AQE's coalescing (initialPartitionNum stays high).
   *  - UTC session TZ so timestamp semantics match the reference's
   *    `timestamp without time zone` columns and the DuckDB oracle.
+  *
+  * Every session in the engine, its mains, tools and specs is built here;
+  * callers add only their own settings on the returned builder.
   */
 object GraftSession {
-  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** Task slots: SPARK_GRAFT_CPUS, else the machine's cores. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors().toString)
 
-  def builder(master: String = s"local[$cpus]"): SparkSession.Builder =
-    SparkSession
-      .builder()
-      .master(master)
+  /** `local[cpus]` with `cpus` shuffle partitions and the engine defaults. */
+  def builder(cpus: Int = GraftSession.cpus.toInt): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

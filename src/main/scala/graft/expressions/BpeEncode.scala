@@ -15,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `regexp_replace` pass) before merge i+1 starts. Bit-identical to
   * [[graft.operators.Lm.bpeEncode]]'s literal regexp chain (the arms
   * are spec-pinned equal), verified per merge count by
-  * `tools/BpeScaleProbe`.
+  * `tools/BpeScaleProbe` (deleted after 17eacc8).
   *
   * The merge TABLE is data, not tree: it rides in as one foldable
   * array literal, so the plan holds O(1) expression nodes however many

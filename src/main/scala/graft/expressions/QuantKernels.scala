@@ -14,10 +14,11 @@ import org.apache.spark.sql.types._
   * expression nodes at any C), and scoring is a tight primitive loop —
   * where the literal-folded Column arms grow O(C·dim) nodes and fall
   * out of codegen past a few dozen centroids (measured:
-  * `Ivf.ExpressionAssignMaxC`'s scaladoc; tools/QuantParamProbe pins
-  * the cliff at production C).
+  * `Ivf.ExpressionAssignMaxC`'s scaladoc; tools/QuantParamProbe,
+  * deleted after 17eacc8, pinned the cliff at production C).
   *
-  * Bit-faithfulness contract (spec-pinned against the literal arms):
+  * Bit-faithfulness contract (spec-pinned against the literal arms, the
+  * test-scope `graft.operators.LiteralArms`):
   * dots and squared distances fold ascending-index exactly like
   * `aggregate(zip_with(...))`, and ordering uses Spark SQL's double
   * semantics — NaN greatest and self-equal, -0.0 == 0.0 — NOT
@@ -45,7 +46,7 @@ final class CentroidKernel(val cids: Array[Int],
 
   /** negscore(i) = -(dot(v, c_i)/|c_i|), or -0.0 for a zero-norm
     * centroid — the exact value the literal arm's `-centScore` lane
-    * computes (ascending-index dot fold). */
+    * (`LiteralArms.nearestCids`) computes (ascending-index dot fold). */
   private def negScores(v: ArrayData): Array[Double] = {
     require(v.numElements() == dim,
       s"nearest centroids: expected $dim-dim vector, got ${v.numElements()}")
@@ -165,7 +166,8 @@ final class PqCodebookKernel(val books: Array[Array[Array[Double]]])
   * centroids: FOLDABLE array&lt;struct&lt;cid, vec, norm&gt;&gt;, n:
   * foldable int. Returns the n nearest centroid ids, nearest first,
   * ties to the smaller cid — bit-identical to
-  * [[graft.operators.Ivf.nearestCids]]'s literal struct-sort arm. */
+  * the literal struct-sort arm of [[graft.operators.Ivf.nearestCids]]
+  * (`LiteralArms.nearestCids`). */
 case class NearestCentroids(vec: Expression, cents: Expression, n: Expression)
     extends TernaryExpression {
 
@@ -243,7 +245,8 @@ case class NearestCentroids(vec: Expression, cents: Expression, n: Expression)
 /** `graft_pq_codes(v, books)` — PQ encode: per-subspace argmin code,
   * ties to the smaller code. books: FOLDABLE
   * array&lt;array&lt;array&lt;double&gt;&gt;&gt; (subspace → code →
-  * centroid). Bit-identical to [[graft.operators.Pq]]'s literal arm. */
+  * centroid). Bit-identical to [[graft.operators.Pq]]'s literal arm
+  * (`LiteralArms.codesCol`). */
 case class PqCodes(vec: Expression, books: Expression)
     extends BinaryExpression {
 
@@ -387,7 +390,8 @@ final class HyperplaneKernel(val planes: Array[Array[Double]],
   * planes: FOLDABLE array&lt;array&lt;double&gt;&gt;, buckets: foldable
   * long (&le; 0 = raw sign-bit signature, no fold). Returns the bucket
   * id — bit-identical to
-  * [[graft.operators.Similarity.foldedSignature]]'s literal arm. */
+  * [[graft.operators.Similarity.foldedSignature]]'s literal arm
+  * (`LiteralArms.foldedSignature`). */
 case class HyperplaneSig(vec: Expression, planes: Expression,
                          buckets: Expression) extends TernaryExpression {
 

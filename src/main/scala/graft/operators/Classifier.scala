@@ -41,7 +41,8 @@ import graft.functions.TextAnalysis
   *    token rows stay in their scan partition, the partial aggregate
   *    collapses them to ~1 row per doc map-side, and the only
   *    corpus-sized exchange carries C+1 numbers per document
-  *    (tools/NbVocabProbe measures this shape to 7.3M-term vocabs);
+  *    (tools/NbVocabProbe, deleted after 17eacc8, measured this shape
+  *    to 7.3M-term vocabs);
   *  - classes ride as COLUMNS end-to-end (C conditional sums per row),
   *    never as an explode factor — no C× row blow-up anywhere.
   *
@@ -150,7 +151,8 @@ object Classifier {
     // aggregate. The model side is EXPLICITLY broadcast: it is bounded
     // by construction (|V|×C — cap it with nbTopVocab for huge V) while
     // the corpus side is O(data), and leaving the choice to size
-    // estimates was observed (tools/NbVocabProbe) to flip the build to
+    // estimates was observed (tools/NbVocabProbe, deleted after
+    // 17eacc8) to flip the build to
     // the CORPUS side on stats-starved inputs. Token instances of one
     // doc stay in their parent row's partition, so the partial
     // aggregate collapses to ~1 row per doc map-side and the only

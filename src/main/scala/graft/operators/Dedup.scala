@@ -238,7 +238,8 @@ object Dedup {
       }
 
   /** Min-label iteration budget before [[clusters]] (deep = false)
-    * falls back to the star path. Pinned from tools/ChainProbe (10⁶
+    * falls back to the star path. Pinned from tools/ChainProbe,
+    * deleted after 17eacc8 (10⁶
     * edges, quiet box): min-label wins at diameter ≤ 7 (4.4–7.6 s vs
     * star's 6.6–10.5 s — star pays ~13–15 s of fixed O(log n)-round
     * cost at this scale regardless of diameter), star wins from
@@ -768,7 +769,7 @@ object Dedup {
     * Measured alternative (round 4, sf0.1 / 20k docs): a pure-projection
     * form — grams32 materialized, then 128 `array_min(transform(...))`
     * lanes with no explode/aggregate/exchange — is 2.1× SLOWER (3.9 s vs
-    * 1.8 s, X3Probe): per-lane `transform` allocates an array per row per
+    * 1.8 s, tools/X3Probe, deleted after 17eacc8): per-lane `transform` allocates an array per row per
     * lane, while this aggregator's while-loop updates one buffer in
     * place. The explode+aggregate shape also stays map-side combinable,
     * which the projection form can't improve on anyway (it has no

@@ -1,5 +1,6 @@
 package graft.operators
 
+import java.time.LocalDate
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
@@ -40,13 +41,15 @@ object DimDate {
     concat(dom.cast("string"), suffix)
   }
 
-  /** Generate the 25-column date dimension. */
+  /** Generate the 25-column date dimension. The start date is a date
+    * literal, so the analyzed schema already has the optimizer's
+    * nullability and a cached copy writes the same parquet schema. */
   def build(spark: SparkSession,
             start: String = DefaultStart,
             days: Int = DefaultDays): DataFrame = {
     val d = col("date_actual")
     spark.range(0, days)
-      .select(date_add(to_date(lit(start)), col("id").cast(IntegerType)).as("date_actual"))
+      .select(date_add(lit(LocalDate.parse(start)), col("id").cast(IntegerType)).as("date_actual"))
       .select(
         date_format(d, "yyyyMMdd").cast(IntegerType).as("date_id"),
         d,

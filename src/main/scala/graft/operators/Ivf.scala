@@ -80,42 +80,21 @@ object Ivf {
     }
   }
 
-  /** `dot(v, centroid) / |centroid|` — cosine-equivalent ranking score
-    * for a fixed row vector (see object doc). */
-  private def centScore(v: Column, cent: Centroid): Column = {
-    val cv = array(cent.v.map(lit): _*)
-    if (cent.norm > 0) Similarity.dot(v, cv) / lit(cent.norm) else lit(0.0)
-  }
-
   /** Array of the `n` nearest centroid ids for vector column `v`,
     * nearest first, ties to the smaller cid — always the
     * [[graft.expressions.NearestCentroids]] kernel (centroid matrix as
     * ONE literal, per-row scoring loop). The kernel owns EVERY centroid
     * count since r21: it was always required at SemDeDup-scale C
     * (10⁴–10⁵, where the literal tree stops analyzing/codegenning —
-    * tools/QuantParamProbe), and tools/QuantArmProbe measured it 1.7×
-    * faster than the literal tree even at the gates' c = 16 (0.23 →
-    * 0.14 s over the sf0.1 corpus) while keeping the serialized plan
-    * O(1) nodes (the literal trees were the 1.2–1.7 MiB "broadcasting
-    * large task binary" warnings in the y5/y6 bench tail). The literal
-    * arm ([[nearestCidsLiteral]]) remains the SQL-expressible reference
-    * implementation, spec-pinned bit-identical (IvfSpec). */
+    * tools/QuantParamProbe, deleted after 17eacc8), and
+    * tools/QuantArmProbe (deleted after 17eacc8) measured it 1.7× faster
+    * than the literal tree even at the gates' c = 16 (0.23 → 0.14 s over
+    * the sf0.1 corpus) while keeping the serialized plan O(1) nodes (the
+    * literal trees were the 1.2–1.7 MiB "broadcasting large task binary"
+    * warnings in the y5/y6 bench tail). The literal arm, ascending
+    * (-score, cid) struct sort, is a test-scope reference, spec-pinned
+    * bit-identical (IvfSpec). */
   def nearestCids(v: Column, centroids: Seq[Centroid], n: Int): Column =
-    nearestCidsKernel(v, centroids, n)
-
-  /** Literal arm (probe-addressable; production entry is the
-    * dispatching [[nearestCids]]). */
-  private[graft] def nearestCidsLiteral(v: Column, centroids: Seq[Centroid],
-                                        n: Int): Column = {
-    val entries = centroids.map { c =>
-      struct((-centScore(v, c)).as("negscore"), lit(c.cid).as("cid"))
-    }
-    slice(transform(array_sort(array(entries: _*)), e => e.getField("cid")), 1, n)
-  }
-
-  /** Kernel arm: centroid matrix as one literal, per-row scoring loop. */
-  private[graft] def nearestCidsKernel(v: Column, centroids: Seq[Centroid],
-                                       n: Int): Column =
     graft.expressions.QuantKernels.nearestCids(
       org.apache.spark.sql.SparkSession.active, v,
       centroids.map(c => (c.cid, c.v, c.norm)), n)
@@ -126,7 +105,7 @@ object Ivf {
     * centroids stops fitting whole-stage codegen (measured: the sd1
     * gate at c=625 ran 10× slower through the expression than through
     * the kernel). Since r21 the small-c expression arm scores through
-    * [[nearestCidsKernel]] (see [[nearestCids]]), so this threshold only
+    * the kernel too (see [[nearestCids]]), so this threshold only
     * decides projection-vs-mapPartitions shape, and specs use it to
     * parameterize the big-c arms. */
   val ExpressionAssignMaxC = 32

@@ -236,12 +236,14 @@ object Lm {
     *     blocks, so storage is 2 frames regardless of round count.
     * After round 1 no full pair recount ever runs, and the affected
     * fraction shrinks as merges get rarer — the property that makes
-    * 10k-round training feasible (measured: tools/BpeProbe, SCALE.md).
+    * 10k-round training feasible (measured: tools/BpeProbe, deleted
+    * after 17eacc8; SCALE.md).
     * The final round skips steps 2-3 entirely (its state has no
     * consumer). For multi-hour production runs prefer `checkpoint()`
     * to reliable storage (executor loss invalidates local checkpoints).
     * `onRound` is a probe hook (round, phase, nanos) — a no-op by
-    * default, used by tools/BpeProbe to publish per-phase cost.
+    * default, used by tools/BpeProbe (deleted after 17eacc8) to
+    * publish per-phase cost.
     *
     * TWO ARMS, chosen by the EXPLICIT `sampled` flag (r15 advice: the
     * earlier rounds>64 auto-dispatch silently switched semantics —
@@ -280,8 +282,9 @@ object Lm {
   /** Advisory round count above which the exact arm of [[bpeMerges]]
     * logs a latency warning (it is O(rounds) SEQUENTIAL Spark jobs —
     * one top-1 collect per round, flat ~0.3-0.4 s/round at any corpus
-    * size, tools/BpeProbe — so a production 30k-50k-merge vocabulary
-    * would be hours of driver round-trips; tools/BpeTrainProbe shows
+    * size, tools/BpeProbe, deleted after 17eacc8 — so a production
+    * 30k-50k-merge vocabulary would be hours of driver round-trips;
+    * tools/BpeTrainProbe, deleted after 17eacc8, showed
     * the sampled arm's crossover is round-count-driven, not
     * data-driven). Purely advisory since r16: arm choice is the
     * caller's explicit `sampled` flag, never an auto-dispatch. 64
@@ -394,7 +397,8 @@ object Lm {
     *  2. the merge loop runs driver-local with delta-maintained pair
     *     counts, a pair→docs occurrence index, and a lazy-deletion
     *     max-heap — per round O(affected docs × doc length), no Spark
-    *     job at all (tools/BpeTrainProbe: ~10³-10⁴ rounds/s vs the
+    *     job at all (tools/BpeTrainProbe, deleted after 17eacc8:
+    *     ~10³-10⁴ rounds/s vs the
     *     distributed arm's ~3 rounds/s).
     *
     * Semantics per round are EXACTLY the distributed arm's: count every
@@ -428,8 +432,7 @@ object Lm {
   }
 
   /** The driver-local merge loop behind [[bpeMergesSampled]] — exposed
-    * package-private so specs and tools/BpeTrainProbe can drive it on
-    * in-memory corpora. */
+    * package-private so specs can drive it on in-memory corpora. */
   private[graft] def trainLocal(docs: Array[Array[String]], rounds: Int,
                                 joiner: String): Seq[(Int, String, Long)] = {
     import java.nio.charset.StandardCharsets.UTF_8
@@ -588,15 +591,17 @@ object Lm {
     *    expression — the merge table rides as ONE array literal into a
     *    per-row kernel, so plan size is O(1) in the vocabulary where
     *    the regexp chain grows one nested node per merge and dies of
-    *    analyzer stack depth in the low thousands (tools/BpeScaleProbe
-    *    measured the break; production vocabularies are 10k–50k).
+    *    analyzer stack depth in the low thousands (tools/BpeScaleProbe,
+    *    deleted after 17eacc8, measured the break; production
+    *    vocabularies are 10k–50k).
     *
     * Either arm: no UDF, no shuffle, no state — encoding 100 TB is a
     * pure map over the corpus scan, which is the whole point of running
     * tokenization inside the engine. */
   /** Above this merge count [[bpeEncode]] switches from the literal
     * regexp chain to the [[graft.expressions.BpeEncode]] kernel
-    * expression. tools/BpeScaleProbe: the chain's nested plan hits
+    * expression. tools/BpeScaleProbe (deleted after 17eacc8): the
+    * chain's nested plan hits
     * analyzer stack limits in the low thousands of merges and its
     * per-row cost is a full string scan per merge; 128 keeps every
     * oracle-mirrored gate (3–50 merges) on the SQL-expressible arm with
@@ -611,9 +616,7 @@ object Lm {
     else bpeEncodeKernel(df, idCol, textCol, merges, joiner)
 
   /** Literal arm: one nested regexp_replace per merge, one projection.
-    * Exposed package-private so tools/BpeScaleProbe can measure where
-    * this plan shape breaks; production entry is the dispatching
-    * [[bpeEncode]]. */
+    * Production entry is the dispatching [[bpeEncode]]. */
   private[graft] def bpeEncodeLiteral(df: DataFrame, idCol: String,
                                       textCol: String,
                                       merges: Seq[(String, String)],

@@ -29,7 +29,8 @@ object Multimodal {
   /** Per-partition cached WAV reader (one instance per partition, like
     * the writer caches): AudioSystem.getAudioInputStream re-scans the
     * AudioFileReader SPI registry per call — measured 23x the actual
-    * parse+read work (626ms vs 27ms / 20k clips, tools/WavPerfProbe).
+    * parse+read work (626ms vs 27ms / 20k clips, tools/WavPerfProbe,
+    * deleted after 17eacc8).
     * The first payload resolves the provider; a payload the cached
     * reader rejects falls back to the full AudioSystem path (and
     * re-caches from it), so mixed-container inputs stay correct. */
@@ -186,7 +187,8 @@ object Multimodal {
     * the first `w*h` payload bytes, written through a per-partition
     * CACHED ImageWriter (`ImageIO.write` re-scans the writer registry
     * per call — same flat per-row SPI tax the WAV kernels measured, see
-    * tools/WavPerfProbe). Output column is named after the format. */
+    * tools/WavPerfProbe, deleted after 17eacc8). Output column is named
+    * after the format. */
   private def encodeGrayLossless(media: DataFrame, format: String,
                                  w: Int, h: Int): DataFrame = {
     require(w > 0 && h > 0, s"encodeGray($format): w=$w h=$h")
@@ -358,7 +360,8 @@ object Multimodal {
         // Provider cached ONCE per partition: AudioSystem.write re-scans
         // the AudioFileWriter SPI registry on EVERY call — measured 12x
         // the actual container-write work (713ms vs 57ms / 20k clips,
-        // tools/WavPerfProbe), and the dominant flat per-row term behind
+        // tools/WavPerfProbe, deleted after 17eacc8), and the dominant
+        // flat per-row term behind
         // m6's 8.1x sf1 ratio. Falls back to AudioSystem if no provider
         // is visible to this classloader.
         import scala.jdk.CollectionConverters._

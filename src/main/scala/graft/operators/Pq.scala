@@ -59,27 +59,6 @@ object Pq {
     (0 until m).map(s => seeds.toSeq.map(_.slice(s * d, (s + 1) * d)))
   }
 
-  /** Components s·d+1 .. (s+1)·d of `v` (1-based slice). */
-  private def subvec(v: Column, s: Int, d: Int): Column =
-    slice(v, s * d + 1, d)
-
-  /** Squared L2 distance between a column subvector and a literal
-    * centroid — one fused fold, no intermediate arrays beyond the zip. */
-  private def l2sq(a: Column, cent: Seq[Double]): Column =
-    aggregate(zip_with(a, array(cent.map(lit): _*),
-      (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
-
-  /** Per-subspace code: argmin-distance centroid, ties to the smaller
-    * code (ascending (dist, cid) struct sort — same trick as
-    * [[Ivf.nearestCids]]). */
-  private def code(v: Column, s: Int, d: Int, book: Seq[Seq[Double]]): Column = {
-    val entries = book.zipWithIndex.map { case (c, i) =>
-      struct(l2sq(subvec(v, s, d), c).as("dist"), lit(i).as("cid"))
-    }
-    element_at(transform(array_sort(array(entries: _*)),
-      e => e.getField("cid")), 1)
-  }
-
   /** Spec parameterization bound: PqSpec exercises the (historical)
     * literal expression arm against the kernels ABOVE this ks to pin
     * them bit-identical. Production dispatch no longer branches on it —
@@ -91,22 +70,14 @@ object Pq {
     * Always the [[graft.expressions.PqCodes]] kernel (codebooks as ONE
     * literal, O(1) plan nodes) since r21: the kernel was always required
     * at production ks = 256–4096 (the literal tree stops
-    * analyzing/codegenning — tools/QuantParamProbe), and
-    * tools/QuantArmProbe measured it 5.4× faster than the literal tree
-    * even at the gates' ks = 16 (0.86 → 0.16 s over the sf0.1 corpus);
-    * the literal trees were also the 1.2–1.7 MiB "broadcasting large
-    * task binary" warnings in the y5/y6 bench tail. The literal arm
-    * stays as the SQL-expressible reference, spec-pinned bit-identical
-    * (PqSpec). */
+    * analyzing/codegenning — tools/QuantParamProbe, deleted after
+    * 17eacc8), and tools/QuantArmProbe (deleted after 17eacc8) measured
+    * it 5.4× faster than the literal tree even at the gates' ks = 16
+    * (0.86 → 0.16 s over the sf0.1 corpus); the literal trees were also
+    * the 1.2–1.7 MiB "broadcasting large task binary" warnings in the
+    * y5/y6 bench tail. The literal arm is a test-scope reference,
+    * spec-pinned bit-identical (PqSpec). */
   private[graft] def codesCol(v: Column, books: Codebooks): Column =
-    codesColKernel(v, books)
-
-  private[graft] def codesColLiteral(v: Column, books: Codebooks): Column = {
-    val d = books.head.head.size
-    array(books.indices.map(s => code(v, s, d, books(s))): _*)
-  }
-
-  private[graft] def codesColKernel(v: Column, books: Codebooks): Column =
     graft.expressions.QuantKernels.pqCodes(
       org.apache.spark.sql.SparkSession.active, v, books)
 
@@ -114,15 +85,6 @@ object Pq {
     * subspace s), computed ONCE per query row. Kernel-only like
     * [[codesCol]] (same r21 measurement and rationale). */
   private[graft] def lutCol(q: Column, books: Codebooks): Column =
-    lutColKernel(q, books)
-
-  private[graft] def lutColLiteral(q: Column, books: Codebooks): Column = {
-    val d = books.head.head.size
-    array(books.indices.map(s =>
-      array(books(s).map(c => l2sq(subvec(q, s, d), c)): _*)): _*)
-  }
-
-  private[graft] def lutColKernel(q: Column, books: Codebooks): Column =
     graft.expressions.QuantKernels.pqLut(
       org.apache.spark.sql.SparkSession.active, q, books)
 

@@ -118,31 +118,14 @@ object Similarity {
     * per-plane `zip_with`/`aggregate` trees evaluated interpreted and
     * grew O(tables·planes·dim) plan nodes — the same pathology the
     * PQ/IVF kernels fixed, measured 5.4×/1.7× there
-    * (tools/QuantArmProbe) and a y2/y3/x5 banding-stage cost here. The
-    * literal arm ([[hyperplaneSignatureLiteral]]) stays as the
-    * SQL-expressible reference, spec-pinned bit-identical
-    * (SimilaritySpec). */
+    * (tools/QuantArmProbe, deleted after 17eacc8) and a y2/y3/x5
+    * banding-stage cost here. The literal arm is a test-scope reference,
+    * spec-pinned bit-identical (SimilaritySpec). */
   def hyperplaneSignature(v: Column, planes: Int, table: Int = 0,
                           dim: Int = 64): Column =
     graft.expressions.QuantKernels.hyperplaneSig(
       org.apache.spark.sql.SparkSession.active, v,
       planeLiterals(planes, dim, table), buckets = 0L)
-
-  /** Literal reference arm of [[hyperplaneSignature]] (probe/spec
-    * access; per-plane `when(dot > 0, 1 << i)` lanes + a raise_error
-    * dimension guard). */
-  private[graft] def hyperplaneSignatureLiteral(v: Column, planes: Int,
-                                                table: Int = 0,
-                                                dim: Int = 64): Column = {
-    val sig = planeLiterals(planes, dim, table).zipWithIndex.map { case (p, i) =>
-      val plane = array(p.map(lit): _*)
-      when(dot(v, plane) > 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
-    }
-    val dimGuard = when(size(v) === dim, lit(0L))
-      .otherwise(raise_error(concat(
-        lit(s"hyperplaneSignature: expected $dim-dim vector, got "), size(v))))
-    sig.reduce(_ + _) + dimGuard
-  }
 
   /** [[hyperplaneSignature]] optionally folded into a non-power-of-two
     * bucket count (`buckets <= 0` = no fold — raw sign-bit bucket). The
@@ -155,14 +138,6 @@ object Similarity {
     graft.expressions.QuantKernels.hyperplaneSig(
       org.apache.spark.sql.SparkSession.active, v,
       planeLiterals(planes, dim, table), buckets = math.max(0L, buckets))
-
-  /** Literal reference arm of [[foldedSignature]]. */
-  private[graft] def foldedSignatureLiteral(v: Column, planes: Int, table: Int,
-                                            buckets: Long = 0,
-                                            dim: Int = 64): Column = {
-    val sig = hyperplaneSignatureLiteral(v, planes, table, dim)
-    if (buckets > 0) pmod(sig, lit(buckets)) else sig
-  }
 
   /** Exact cosine top-k for a fixed set of query vector ids.
     * Output: (query_id, rank, neighbor_id, cosine_sim). `native=true`

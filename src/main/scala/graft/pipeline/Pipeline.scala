@@ -34,9 +34,9 @@ import org.apache.spark.storage.StorageLevel
   * (SURVEY §4 caching row). Dependents start only after that sink has
   * returned, and every persisted frame is released before `run` returns.
   * The one exception keeps written schemas unchanged: a frame whose
-  * optimized plan is less nullable than its analyzed plan (dim_date's
-  * constant-folded start date) is not persisted, since a cached frame
-  * carries the analyzed nullability into its sink.
+  * optimized plan is less nullable than its analyzed plan (say, one
+  * built over a constant-folded expression) is not persisted, since a
+  * cached frame carries the analyzed nullability into its sink.
   */
 object Pipeline {
 

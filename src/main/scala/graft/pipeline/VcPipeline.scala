@@ -16,8 +16,7 @@ import graft.sources.{Readers, Writers}
   *    read from that one copy by their probe, their sink and every
   *    dependent, where the reference re-reads dim tables over JDBC in
   *    every per-table job (SURVEY §4 caching row). dim_date, a generated
-  *    range, is the exception: caching it would loosen its written
-  *    schema (see [[Pipeline]]), so each consumer regenerates it;
+  *    range, is shared the same way;
   *  - independent stages run concurrently (see [[Pipeline]]): every
   *    build and sink here is thread-safe and writes its own path under
   *    `outDir`;

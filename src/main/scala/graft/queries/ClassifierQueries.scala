@@ -161,8 +161,9 @@ object ClassifierQueries {
       // repartition at the stage boundary: AQE coalesces the broadcast
       // anti-join's output toward its 64MB advisory size, leaving a few
       // FAT partitions (measured at sf10: the downstream 8-gram explode
-      // ran 4 tasks of 8.3 s where 16 of ~0.8 s fit — tools/Cur5Probe /
-      // DecontStageProbe), so the post-dedup corpus is explicitly
+      // ran 4 tasks of 8.3 s where 16 of ~0.8 s fit — tools/Cur5Probe and
+      // tools/DecontStageProbe, deleted after 17eacc8), so the post-dedup
+      // corpus is explicitly
       // rebalanced before it fans into decontamination and packing
       val survivors = uniq.join(clusters, Seq("doc_id"), "left_anti")
         .unionByName(reps.select(col("keep_id").as("doc_id"))

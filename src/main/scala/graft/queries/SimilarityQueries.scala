@@ -802,7 +802,8 @@ object SimilarityQueries {
 
   // y4/y7 shared oracle: the ENTIRE IVF path mirrored in SQL — seed
   // selection (vec_id % 7 == 0, smallest 16), cosine-equivalent centroid
-  // score dot(v,c)/|c| (zero-norm guard mirroring Ivf.centScore), argmax
+  // score dot(v,c)/|c| (zero-norm guard mirroring the NearestCentroids
+  // kernel), argmax
   // assignment, nprobe probe lists, exact-cosine ranking.
   private lazy val ivfOracleSql: String = ivfOracle("TRUE")
 
@@ -810,7 +811,7 @@ object SimilarityQueries {
     * the candidate set only (centroids and query probing stay
     * filter-independent — the y8 one-index-many-filters contract). */
   private def ivfOracle(corpusFilter: String): String = {
-      // zero-norm guard mirrors Ivf.centScore (Ivf.scala): an all-zero
+      // zero-norm guard mirrors the NearestCentroids kernel: an all-zero
       // seed vector scores 0.0, never NULL/NaN — engine/oracle parity
       // must not hinge on the data containing no zero vectors
       val centScore = s"""CASE WHEN ${sqlNorm("s.cv")} > 0

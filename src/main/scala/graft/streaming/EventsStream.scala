@@ -314,7 +314,8 @@ object EventsStream {
     *    (`max(event_time over batches 0..b-1) - delay`), but LATE-EVENT
     *    FILTERING uses the previous batch's — `max(event_time over
     *    batches 0..b-2) - delay`, millisecond precision, initially epoch
-    *    0 (measured by tools/LateDataProbe: batch 1 drops nothing even
+    *    0 (measured by tools/LateDataProbe, deleted after 17eacc8:
+    *    batch 1 drops nothing even
     *    though its reported watermark already trails batch 0's max);
     *  - an input row is DROPPED iff its tumbling window's end is at or
     *    below that LATE-EVENTS watermark. Every admitted row's window is

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Ivf, Pq, Similarity}
 
@@ -44,17 +44,7 @@ object AnnCounters {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outJson = if (args.length > 1) args(1)
       else s"ANN_COUNTERS_${new java.io.File(sfDir).getName}.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.get()
 
     val emb = graft.Tables.embeddings(spark, sfDir)
     val n = emb.count()

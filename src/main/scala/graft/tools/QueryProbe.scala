@@ -1,15 +1,15 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Generic per-query bench forensics (r20 optimization round): runs the
   * named gates N times in one JVM and attributes each run's wall time to
   * jobs / stages / tasks, so a slow gate can be blamed on task compute,
   * a straggler, GC, or driver gaps (planning, codegen, scheduling) —
-  * the thing the sf0.1 bench numbers alone cannot distinguish. Y3Probe
-  * generalized to any gate. Not part of the library surface.
+  * the thing the sf0.1 bench numbers alone cannot distinguish.
+  * tools/Y3Probe (deleted after 17eacc8) generalized to any gate; the one
+  * per-gate attribution probe. Not part of the library surface.
   *
   *   runMain graft.tools.QueryProbe <sfDir> <query...>
   */
@@ -24,17 +24,7 @@ object QueryProbe {
     val names = args.drop(1).toSeq
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val topN = sys.env.getOrElse("SPARK_GRAFT_PROBE_TOP", "8").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.get()
 
     val stageStart = mutable.Map[Int, Long]()
     val stages = mutable.ArrayBuffer[StageRec]()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up generator: replicates an existing testdata
@@ -49,7 +49,8 @@ object ScaleGen {
     * `HotDocText` REPLACES ~10 % of all docs wholesale (one exact-dup
     * cluster holding 10 % of the nodes — the x10/x6 mega-cluster).
     * Both skews are the shapes the map-side-combinable-aggregate
-    * scaladocs argue about; tools/SkewProbe measures them. */
+    * scaladocs argue about; tools/SkewProbe, deleted after 17eacc8,
+    * measured them. */
   val HotParagraph: String =
     "all rights reserved terms of service privacy policy cookie notice " +
       "contact us subscribe to our newsletter for updates"
@@ -112,19 +113,11 @@ object ScaleGen {
       if (args.length > 3) args(3).split(",").toSet else _ => true
     // optional 5th arg "zipf": documents get the hot-key skews (10 % of
     // docs share HotParagraph; a different 10 % become HotDocText
-    // exact dups) — the straggler-stress corpus for tools/SkewProbe
+    // exact dups) — the straggler-stress corpus (tools/SkewProbe,
+    // deleted after 17eacc8)
     val zipf = args.length > 4 && args(4) == "zipf"
     requireDistinctCiphers(factor)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.get()
 
     def in(name: String) = spark.read.parquet(s"$inDir/$name.parquet")
     def out(df: => DataFrame, name: String, parts: Int): Unit =

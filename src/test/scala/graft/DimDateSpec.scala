@@ -18,6 +18,17 @@ class DimDateSpec extends SparkSpec {
     assert(ids.getInt(0) == 19500101 && ids.getInt(1) == 20291231)
   }
 
+  test("analyzed and optimized schemas are equal, nullability included") {
+    // the pipeline runner shares (persists) only frames whose optimizer
+    // does not tighten nullability: a cached frame writes its analyzed
+    // schema, so this is what lets one dim_date serve every consumer.
+    // A shorter range than `dim`, so the cached plan does not stand in.
+    val fresh = DimDate.build(spark, days = 366)
+    assert(fresh.queryExecution.optimizedPlan.schema == fresh.schema,
+      s"analyzed:\n${fresh.schema.treeString}\noptimized:\n" +
+        fresh.queryExecution.optimizedPlan.schema.treeString)
+  }
+
   test("1950-01-01 golden row") {
     val r = row(19500101)
     assert(r.getAs[String]("day_name") == "Sunday")

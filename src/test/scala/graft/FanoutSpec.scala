@@ -76,6 +76,23 @@ class FanoutSpec extends SparkSpec {
       s"tiny checkpoint must not fan to the core count:\n$p")
   }
 
+  test("an RDD leaf with unknown stats fans out from the per-partition fallback") {
+    // a 1-partition createDataFrame(rdd, schema) leaf carries the
+    // conf-default "unknown" size, so its bytes come from
+    // RddFallbackBytesPerPartition (8 task-worths), which must not read 0
+    assert(Fanout.RddFallbackBytesPerPartition == 8 * Fanout.SpreadBytesPerTask)
+    val rdd = spark.sparkContext.parallelize(
+      (0L until 64L).map(i => org.apache.spark.sql.Row(i, s"t$i")), numSlices = 1)
+    val schema = Seq((1L, "a")).toDF("id", "t").schema
+    val df = spark.createDataFrame(rdd, schema)
+    assert(df.queryExecution.analyzed.stats.sizeInBytes ==
+      BigInt(spark.sessionState.conf.defaultSizeInBytes))
+    assert(Fanout.plannedScanTasks(df).contains(1L))
+    val p = Fanout.spread(df, col("id")).queryExecution.executedPlan.toString
+    assert(p.contains("REPARTITION_BY_NUM"),
+      s"unknown-stats RDD leaf should gain the fan-out exchange:\n$p")
+  }
+
   test("spread is a no-op on plans already carrying an explicit-width repartition") {
     // r20 advice (low): a query-level spread followed by an operator-level
     // one stacked two consecutive same-key exchanges (a Project between

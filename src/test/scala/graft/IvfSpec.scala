@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Ivf, Similarity}
+import graft.operators.{Ivf, LiteralArms, Similarity}
 
 /** IVF ANN specs: exactness at nprobe=c, twin recall at nprobe<c,
   * Lloyd refinement properties, and the no-corpus-shuffle plan shape. */
@@ -41,7 +41,7 @@ class IvfSpec extends SparkSpec {
     val viaExpr = corpus.filter($"vec_id".isNotNull)
       .select($"vec_id".as("id"), Similarity.toDouble($"embedding").as("v"))
       .withColumn("cluster_id",
-        element_at(Ivf.nearestCidsLiteral(col("v"), cents, 1), 1))
+        element_at(LiteralArms.nearestCids(col("v"), cents, 1), 1))
       .withColumn("nv", Similarity.norm(col("v")))
       .collect().map(r => (r.getLong(0), r.getInt(2), r.getDouble(3))).sortBy(_._1)
     assert(viaKernel.length == viaExpr.length && viaKernel.nonEmpty)
@@ -63,10 +63,10 @@ class IvfSpec extends SparkSpec {
     val cents = Ivf.seedCentroids(corpus, "vec_id", "embedding", c, stride = 1L)
     for (n <- Seq(1, 4)) {
       val lit = corpus.select($"vec_id",
-          Ivf.nearestCidsLiteral(Similarity.toDouble($"embedding"), cents, n).as("p"))
+          LiteralArms.nearestCids(Similarity.toDouble($"embedding"), cents, n).as("p"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).sortBy(_._1)
       val ker = corpus.select($"vec_id",
-          Ivf.nearestCidsKernel(Similarity.toDouble($"embedding"), cents, n).as("p"))
+          Ivf.nearestCids(Similarity.toDouble($"embedding"), cents, n).as("p"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).sortBy(_._1)
       assert(lit.nonEmpty && lit.length == ker.length)
       lit.zip(ker).foreach { case (l, k) =>

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Pq, Similarity}
+import graft.operators.{LiteralArms, Pq, Similarity}
 
 /** PQ/ADC specs: codebook shapes, encode determinism, twin recall,
   * reconstruction-distance sanity, and the compressed-scan plan shape. */
@@ -97,15 +97,15 @@ class PqSpec extends SparkSpec {
     val books = Pq.seedCodebooks(bigger, "vec_id", "embedding", m = 8,
       ks = ks, stride = 1L)
     val v = Similarity.toDouble($"embedding")
-    val litC = bigger.select($"vec_id", Pq.codesColLiteral(v, books).as("c"))
+    val litC = bigger.select($"vec_id", LiteralArms.codesCol(v, books).as("c"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).sortBy(_._1)
-    val kerC = bigger.select($"vec_id", Pq.codesColKernel(v, books).as("c"))
+    val kerC = bigger.select($"vec_id", Pq.codesCol(v, books).as("c"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).sortBy(_._1)
     assert(litC.nonEmpty && litC.length == kerC.length)
     litC.zip(kerC).foreach { case (l, k) => assert(l == k, s"codes $l != $k") }
-    val litL = bigger.limit(20).select($"vec_id", Pq.lutColLiteral(v, books).as("l"))
+    val litL = bigger.limit(20).select($"vec_id", LiteralArms.lutCol(v, books).as("l"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Seq[Double]](1)).sortBy(_._1)
-    val kerL = bigger.limit(20).select($"vec_id", Pq.lutColKernel(v, books).as("l"))
+    val kerL = bigger.limit(20).select($"vec_id", Pq.lutCol(v, books).as("l"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Seq[Double]](1)).sortBy(_._1)
     assert(litL.nonEmpty && litL.length == kerL.length)
     litL.zip(kerL).foreach { case (l, k) => assert(l == k, s"lut $l != $k") }

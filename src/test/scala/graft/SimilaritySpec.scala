@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Multimodal, Similarity}
+import graft.operators.{LiteralArms, Multimodal, Similarity}
 
 /** ANN + multimodal specs: cosine math, LSH recall vs brute force,
   * batched decode checksum, frame-sampling coverage. */
@@ -28,7 +28,7 @@ class SimilaritySpec extends SparkSpec {
         Similarity.foldedSignature($"v", planes = 6, table, buckets).as("s"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
       val lit0 = emb.select($"vec_id",
-        Similarity.foldedSignatureLiteral($"v", planes = 6, table, buckets).as("s"))
+        LiteralArms.foldedSignature($"v", planes = 6, table, buckets).as("s"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
       assert(ker.nonEmpty && ker.sameElements(lit0),
         s"table=$table buckets=$buckets: kernel and literal signatures differ")

@@ -6,14 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for specs (one JVM-wide session; Test/fork=true). */
 object TestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.core.GraftSession.builder(4).getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

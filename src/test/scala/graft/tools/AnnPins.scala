@@ -24,9 +24,9 @@ import graft.operators.{Dedup, Similarity}
   * and ranks/thresholds computed on them agree exactly.
   *
   * Usage:
-  *   runMain graft.tools.X5Pin <sfDir>
-  *   runMain graft.tools.Y2Pin <sfDir>
-  *   runMain graft.tools.Y3Pin <sfDir>
+  *   tools/run-main.sh graft.tools.X5Pin <sfDir>
+  *   tools/run-main.sh graft.tools.Y2Pin <sfDir>
+  *   tools/run-main.sh graft.tools.Y3Pin <sfDir>
   * Exit 1 on any roster diff.
   */
 private[tools] object AnnPinMath {
@@ -54,18 +54,6 @@ private[tools] object AnnPinMath {
     var sig = 0L; var i = 0
     while (i < ps.length) { if (dot(v, ps(i)) > 0) sig |= (1L << i); i += 1 }
     sig
-  }
-  def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
   }
   /** (id, double-cast vector) of the embeddings table — the engine's
     * own `toDouble` projection, collected. */
@@ -100,7 +88,7 @@ object X5Pin {
   def main(args: Array[String]): Unit = {
     import AnnPinMath._
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = session()
+    val spark = graft.core.GraftSession.get()
     val t0 = System.nanoTime()
     val engine = graft.SparkEntry.queries("x5_embedding_near_dup")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
@@ -151,7 +139,7 @@ object Y2Pin {
   def main(args: Array[String]): Unit = {
     import AnnPinMath._
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = session()
+    val spark = graft.core.GraftSession.get()
     val t0 = System.nanoTime()
     val engine = graft.SparkEntry.queries("y2_ann_lsh")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
@@ -195,7 +183,7 @@ object Y3Pin {
   def main(args: Array[String]): Unit = {
     import AnnPinMath._
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = session()
+    val spark = graft.core.GraftSession.get()
     val t0 = System.nanoTime()
     val engine = graft.SparkEntry.queries("y3_knn_graph")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Arm-equivalence pin for BPE training at scale factors the v3/v6
   * DuckDB oracle cannot reach (allocator class): run the EXACT
@@ -12,21 +11,13 @@ import org.apache.spark.sql.SparkSession
   * agreement at 50k/500k docs pins the sampled arm's whole pipeline at
   * the scales the v6 gate's SQL mirror OOMs at. Expected: diff 0.
   *
-  * Usage: runMain graft.tools.BpeArmPin <sfDir> [rounds]
+  * Usage: tools/run-main.sh graft.tools.BpeArmPin <sfDir> [rounds]
   */
 object BpeArmPin {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/testdata/sf1")
     val rounds = args.lift(1).map(_.toInt).getOrElse(12)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.get()
     val docs = graft.Tables.documents(spark, sfDir)
     def collectPicks(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))

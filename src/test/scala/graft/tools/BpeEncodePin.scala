@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf1 correctness pin for `v4_bpe_encode` via an INDEPENDENT second
@@ -22,7 +21,7 @@ import org.apache.spark.sql.functions._
   * difference (want 0) over the FULL 4-column contract
   * (doc_id, n_tokens_raw, n_tokens_bpe, encoded_text).
   *
-  * Usage: runMain graft.tools.BpeEncodePin <sfDir> [rounds]
+  * Usage: tools/run-main.sh graft.tools.BpeEncodePin <sfDir> [rounds]
   */
 object BpeEncodePin {
 
@@ -42,15 +41,7 @@ object BpeEncodePin {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("testdata/sf1")
     val rounds = args.lift(1).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.get()
     import spark.implicits._
     val docs = graft.Tables.documents(spark, sfDir)
     val merges = graft.operators.Lm.bpeMerges(docs, "doc_id", "text",

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Roster-neutrality pin for cur5's exact pre-collapse (the r15-advice
@@ -23,22 +22,13 @@ import org.apache.spark.sql.functions._
   * (measured at sf10zipf: the 50,000-copy family's post-resample
   * maximum identical family is 2).
   *
-  * Usage: runMain graft.tools.Cur5PreCollapsePin <sfDir>
+  * Usage: tools/run-main.sh graft.tools.Cur5PreCollapsePin <sfDir>
   * Exit 1 on any roster or offset diff.
   */
 object Cur5PreCollapsePin {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.get()
 
     def arm(pre: Boolean): (org.apache.spark.sql.DataFrame, Double) = {
       val t0 = System.nanoTime()

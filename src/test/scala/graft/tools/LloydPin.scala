@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Independent-comparator pin for the Lloyd-refinement path
@@ -17,7 +16,7 @@ import org.apache.spark.sql.functions._
   * divergence, the nb1 ln-note class), emptied-cluster carry-over,
   * probe lists, exact-cosine ranking. Expected: diff 0.
   *
-  * Usage: runMain graft.tools.LloydPin <sfDir> [iters]
+  * Usage: tools/run-main.sh graft.tools.LloydPin <sfDir> [iters]
   */
 object LloydPin {
 
@@ -98,15 +97,7 @@ object LloydPin {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val iters = args.lift(1).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.get()
     val queryIds = Seq(0L, 1L, 2L, 3L, 4L, 5L, 6L, 7L)
     val emb = graft.Tables.embeddings(spark, sfDir)
     val t0 = System.nanoTime()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Independent-comparator pin for sd1_semantic_dedup at scale factors
@@ -17,20 +16,12 @@ import org.apache.spark.sql.functions._
   * no Spark plan shapes shared. Expected: diff 0 over the full
   * (vec_id, cluster_id, kept) roster.
   *
-  * Usage: runMain graft.tools.Sd1Pin <sfDir>
+  * Usage: tools/run-main.sh graft.tools.Sd1Pin <sfDir>
   */
 object Sd1Pin {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.get()
     val t0 = System.nanoTime()
     val engine = graft.SparkEntry.queries("sd1_semantic_dedup")(spark, sfDir)
       .collect()

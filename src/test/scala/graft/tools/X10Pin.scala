@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,21 +15,12 @@ import org.apache.spark.sql.functions._
   * and scores. Selection logic shares no code; agreement over every
   * cluster pins the survivor, the score, and the member count.
   *
-  * Usage: runMain graft.tools.X10Pin <sfDir>
+  * Usage: tools/run-main.sh graft.tools.X10Pin <sfDir>
   */
 object X10Pin {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.get()
     val corpus = graft.queries.TextQueries.nearDupCorpus(spark, sfDir)
     val pairs = graft.operators.Dedup.minhashLshPairsShared(
       corpus, "doc_id", "text", n = 3, bands = 16, rowsPerBand = 8, threshold = 0.6)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Independent-comparator pin for x11_cross_dedup at scale factors the
@@ -14,21 +13,12 @@ import org.apache.spark.sql.functions._
   * but band, join, and select through different code; agreement over
   * every leaked doc pins the roster.
   *
-  * Usage: runMain graft.tools.X11Pin <sfDir>
+  * Usage: tools/run-main.sh graft.tools.X11Pin <sfDir>
   */
 object X11Pin {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.get()
     val left = graft.Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
     val right = graft.queries.TextQueries.perturbedDocs(spark, sfDir)
     // The union-self-join reference below is only valid if the two

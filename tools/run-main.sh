@@ -1,6 +1,8 @@
 #!/bin/bash
-# Run a graft main class directly (faster than sbt run).
+# Run a graft main class directly (faster than sbt run). Test classes are
+# on the classpath too, so the comparator pins in src/test run the same way.
 # Usage: tools/run-main.sh graft.Verify /root/testdata/sf0.01 /tmp/verify_out
+#        tools/run-main.sh graft.tools.LloydPin <sfDir>
 set -e
 cd "$(dirname "$0")/.."
 OPENS=""
@@ -14,4 +16,4 @@ done
 # GRAFT_JAVA_OPTS: extra JVM flags (GC logging, collector choice) for experiments
 exec java $OPENS -Xmx${SPARK_DRIVER_MEM:-8g} ${GRAFT_JAVA_OPTS:-} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
+  -cp "target/scala-2.13/classes:target/scala-2.13/test-classes:/opt/spark/jars/*" "$@"
