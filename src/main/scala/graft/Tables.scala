@@ -17,17 +17,6 @@ object Tables {
   def nation(s: SparkSession, d: String): DataFrame     = t(s, d, "nation")
   def region(s: SparkSession, d: String): DataFrame     = t(s, d, "region")
   def events(s: SparkSession, d: String): DataFrame     = t(s, d, "events")
-
-  /** events with `ts` normalized to a microsecond TimestampType column
-    * for windowing/streaming — type-adaptive over both physical layouts
-    * the table has shipped with (nanos-BIGINT and timestamp[us]); see
-    * [[graft.streaming.EventsStream.eventTimeCol]]. */
-  def eventsTs(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val df = events(s, d)
-    df.withColumn("ts",
-      graft.streaming.EventsStream.eventTimeCol(col("ts"), df.schema("ts").dataType))
-  }
   def documents(s: SparkSession, d: String): DataFrame  = t(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
 }

@@ -433,7 +433,7 @@ object Dedup {
     * runs in the scan stage — a narrow input (one parquet split) would
     * serialize it on one core (r20 QueryProbe: ~1 s single-task stages in
     * every x-gate at sf0.1). No-op at corpus scale by construction. */
-  private def tokenized(df: DataFrame, idCol: String, textCol: String): DataFrame =
+  private[graft] def tokenized(df: DataFrame, idCol: String, textCol: String): DataFrame =
     graft.core.Fanout.spread(df, col(idCol))
       .select(col(idCol).as("id"), TextAnalysis.tokens(col(textCol)).as("__toks"))
 
@@ -512,7 +512,7 @@ object Dedup {
     // merge hint: both sides then share one Exchange(prefix, n_grams) —
     // the same shuffle the block-count window already needs — so the
     // shingle pipeline is computed once and reused, instead of once per
-    // broadcast side (see minhashLshPairs candidate join).
+    // broadcast side (see selfCandidates).
     val small = withKey.filter(col("__bc") <= maxBlockSize)
     val smallPairs = verify(
       small.select(col("id").as("id_a"), col("grams").as("grams_a"),
@@ -530,29 +530,12 @@ object Dedup {
       array_min(transform(col("grams"),
         g => pmod(pmod(g, lit(4294967296L)) * a + b, lit(MinhashPrime))))
     }
-    val banded0 = big
-      .withColumn("sig", array(bigLanes: _*))
-      .select(col("id"), col("prefix"), col("n_grams"),
-        posexplode(array((0 until 8).map(b =>
-          slice(col("sig"), b * 4 + 1, 4)): _*)))
-      .withColumn("bucket", xxhash64(col("pos"), col("col").cast("string")))
-      .select("id", "prefix", "n_grams", "pos", "bucket")
     // mega-cluster guard: the count window partitions on exactly the
     // candidate join's key, so it rides the join's own exchange
-    val banded =
-      if (maxBucketSize == Int.MaxValue) banded0
-      else banded0.withColumn("__bs", count(lit(1)).over(
-          Window.partitionBy(col("prefix"), col("n_grams"),
-            col("pos"), col("bucket"))))
-        .filter(col("__bs") <= maxBucketSize)
-        .drop("__bs")
-    val bigCands = banded.select(col("id").as("id_a"), col("prefix"),
-      col("n_grams"), col("pos"), col("bucket")).hint("merge")
-      .join(banded.select(col("id").as("id_b"), col("prefix"),
-        col("n_grams"), col("pos"), col("bucket")),
-        Seq("prefix", "n_grams", "pos", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+    val bigCands = selfCandidates(
+      bandRows(big.withColumn("sig", array(bigLanes: _*)), 8, 4,
+        "prefix", "n_grams"),
+      maxBucketSize, "prefix", "n_grams")
     val gramsById = withKey.select(col("id"), col("grams"))
     val bigPairs = verify(
       bigCands
@@ -590,7 +573,7 @@ object Dedup {
     * rows carrying 8-byte hashes, not text — behind a lazy
     * localCheckpoint, so the gram-count build and the probe side read
     * the materialized pass instead of re-scanning the corpus (the
-    * [[minhashLshPairsShared]] pattern; production would use reliable
+    * [[minhashLshPairs]] pattern; production would use reliable
     * `checkpoint()`). Gram multiplicity via a partial-aggregated
     * groupBy(gh) (map-side combine absorbs hot grams: each map task
     * emits each gh once); duplicated positions come back via an
@@ -678,48 +661,10 @@ object Dedup {
     Seq.fill(numHashes)((rnd.nextInt(Int.MaxValue).toLong + 1, rnd.nextInt(Int.MaxValue).toLong))
   }
 
-  /** MinHash signature (array of `numHashes` longs) of a text column.
-    * NOTE: as a single Column expression Catalyst inlines the shingle
-    * computation into every hash lane (numHashes× recompute) — fine for a
-    * handful of lanes, never for 128. [[minhashSignatures]] is the
-    * one-pass DataFrame shape used by the pair finder. */
-  def minhashSignature(c: Column, n: Int = 3, numHashes: Int = 128): Column = {
-    val hashes32 = transform(shingles(c, n), s => TextAnalysis.tokenHash32(s))
-    val sig = hashParams(numHashes).map { case (a, b) =>
-      array_min(transform(hashes32, h => pmod(h * a + b, lit(MinhashPrime))))
-    }
-    array(sig: _*)
-  }
-
-  /** One-pass signatures: explode shingle hashes to rows, then ONE hash
-    * aggregate computes all `numHashes` mins — each shingle is hashed
-    * once, each lane is one cheap `min` column. This is the map-side
-    * combinable shape that scales (shuffle carries numHashes longs per
-    * doc, not shingles). Output: (id, sig array).
-    *
-    * Measured at sf0.1 (20k docs): 4.2 s warm vs 4.0 s for
-    * [[minhashSignaturesTyped]] (identical output, 0 mismatching
-    * signatures) — the typed array aggregator is the production path;
-    * this expression form is kept as the pure-SQL-plannable variant. */
-  def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-                        n: Int = 3, numHashes: Int = 128): DataFrame = {
-    val hashRows = tokenized(df, idCol, textCol).select(col("id"),
-      explode(transform(shinglesFromTokens(col("__toks"), n),
-        s => TextAnalysis.tokenHash32(s))).as("h"))
-    val lanes = hashParams(numHashes).zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(col("h") * a + b, lit(MinhashPrime))).as(s"m$i")
-    }
-    hashRows.groupBy(col("id"))
-      .agg(lanes.head, lanes.tail: _*)
-      .select(col("id"),
-        array((0 until numHashes).map(i => col(s"m$i")): _*).as("sig"))
-  }
-
-  /** Typed alternative to the 128-column signature aggregate: ONE
-    * Aggregator whose buffer is a primitive Long array updated
-    * elementwise. Fewer aggregate columns for the planner, one buffer
-    * object per group; measured against [[minhashSignatures]] to pick
-    * the production path (see Scaladoc there for the verdict). */
+  /** The signature aggregate: ONE Aggregator whose buffer is a primitive
+    * Long array updated elementwise (sf0.1: 4.0 s warm vs 4.2 s for the
+    * 128-column `min(pmod(...))` aggregate, identical signatures; that
+    * variant was deleted after cf5af8c). Built only via [[minhashAgg]]. */
   private class MinhashArrayAgg(numHashes: Int, params: Array[(Long, Long)])
       extends org.apache.spark.sql.expressions.Aggregator[Long, Array[Long], Seq[Long]] {
     override def zero: Array[Long] = Array.fill(numHashes)(Long.MaxValue)
@@ -763,83 +708,102 @@ object Dedup {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
   }
 
-  /** Signature computation via the typed array aggregator (same output
-    * as [[minhashSignatures]]).
+  /** The MinHash signature aggregate over 32-bit shingle hashes: one
+    * `numHashes`-lane Long array per group, map-side combinable (the
+    * shuffle carries numHashes longs per doc, not shingles). Every
+    * signature frame is built from this one call.
     *
     * Measured alternative (round 4, sf0.1 / 20k docs): a pure-projection
     * form — grams32 materialized, then 128 `array_min(transform(...))`
     * lanes with no explode/aggregate/exchange — is 2.1× SLOWER (3.9 s vs
-    * 1.8 s, tools/X3Probe, deleted after 17eacc8): per-lane `transform` allocates an array per row per
-    * lane, while this aggregator's while-loop updates one buffer in
-    * place. The explode+aggregate shape also stays map-side combinable,
-    * which the projection form can't improve on anyway (it has no
-    * shuffle to combine into). Don't "simplify" this to expressions. */
-  def minhashSignaturesTyped(df: DataFrame, idCol: String, textCol: String,
-                             n: Int = 3, numHashes: Int = 128): DataFrame = {
-    val hashRows = tokenized(df, idCol, textCol).select(col("id"),
-      explode(transform(shinglesFromTokens(col("__toks"), n),
-        s => TextAnalysis.tokenHash32(s))).as("h"))
-    val agg = udaf(new MinhashArrayAgg(numHashes, hashParams(numHashes).toArray))
-    hashRows.groupBy(col("id")).agg(agg(col("h")).as("sig"))
+    * 1.8 s, tools/X3Probe, deleted after 17eacc8): per-lane `transform`
+    * allocates an array per row per lane, while this aggregator's
+    * while-loop updates one buffer in place. Don't "simplify" this to
+    * expressions. */
+  private[graft] def minhashAgg(numHashes: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
+    udaf(new MinhashArrayAgg(numHashes, hashParams(numHashes).toArray))
+
+  /** LSH banding of a signature frame (id, sig, keys…): one row per
+    * (doc, band), bucket = xxhash64 of the band index and its
+    * `rowsPerBand` signature lanes. Output: (id, keys…, band, bucket) —
+    * ids only past this point, so the band shuffle stays narrow. */
+  private def bandRows(sigs: DataFrame, bands: Int, rowsPerBand: Int,
+                       keys: String*): DataFrame =
+    sigs.select(col("id") +: keys.map(col) :+
+        posexplode(array((0 until bands).map(b =>
+          slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)): _*)): _*)
+      .withColumnRenamed("pos", "band")
+      .withColumn("bucket", xxhash64(col("band"), col("col").cast("string")))
+      .select((("id" +: keys) :+ "band" :+ "bucket").map(col): _*)
+
+  /** Candidate pairs (id_a, id_b), id_a < id_b, of a [[bandRows]] frame:
+    * docs that share any (keys…, band, bucket), distinct.
+    *
+    * Bucket-size guard (r15: measured on sf1zipf — a 2,500-copy
+    * exact-dup cluster put x10's unguarded gate at 137 s where the
+    * guarded form matches uniform-corpus cost): a bucket of B ids emits
+    * B²/2 candidates, and oversized buckets are exact-dup mega-clusters
+    * by construction, owned by the O(B) x1 pass. Deterministic
+    * wholesale drop; one count window over the join-key exchange the
+    * self-join needs anyway — no extra corpus shuffle.
+    *
+    * SELF-JOIN AS SORT-MERGE, NOT BROADCAST: with a broadcast the
+    * signature pipeline (scan → shingle-explode → minhash aggregate →
+    * band Generate) is planned TWICE — once streamed, once under the
+    * BroadcastExchange — because ReuseExchange can only unify identical
+    * exchanges. Forcing shuffle-merge makes both sides the SAME
+    * Exchange(hashpartitioning(band, bucket)) subtree, so the second is
+    * a ReusedExchange and signatures are computed exactly once
+    * (PlanSpec-asserted). Also the only shape that exists at corpus
+    * scale, where the banded side cannot broadcast. */
+  private def selfCandidates(banded: DataFrame, maxBucketSize: Int,
+                             keys: String*): DataFrame = {
+    val joinKeys = keys ++ Seq("band", "bucket")
+    val guarded =
+      if (maxBucketSize == Int.MaxValue) banded
+      else banded.withColumn("__bs", count(lit(1)).over(
+          org.apache.spark.sql.expressions.Window
+            .partitionBy(joinKeys.map(col): _*)))
+        .filter(col("__bs") <= maxBucketSize)
+        .drop("__bs")
+    def side(id: String) = guarded.select(col("id").as(id) +: joinKeys.map(col): _*)
+    side("id_a").hint("merge")
+      .join(side("id_b"), joinKeys)
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b").distinct()
   }
 
-  /** Shared-scan variant of [[minhashLshPairs]]: ONE tokenize+shingle
-    * pass feeds both the signature aggregate and the verify-side shingle
-    * sets — the combined (id, sig, grams) aggregate is materialized via
-    * a LAZY localCheckpoint, so the banded self-join and the two grams
-    * attach legs all read the same computed blocks instead of each
-    * re-deriving the text pipeline (tokenization is the dominant CPU
-    * cost; the plain path runs it twice). grams is collect_set-deduped —
-    * [[jaccard]] is set-based, so the value is unchanged (spec-asserted
-    * identical output). Docs with zero shingles drop out of the exploded
-    * rows, which is output-neutral: they can never be banded candidates,
-    * and grams only re-attaches to candidates.
+  /** LSH candidate pairs + exact-Jaccard verification: bands×rowsPerBand
+    * hashes; a pair is a candidate if any band of its signatures matches
+    * exactly ([[selfCandidates]]), verified at `threshold`.
+    * Output: (id_a, id_b, jaccard_sim) with jaccard_sim >= threshold.
+    *
+    * ONE tokenize+shingle pass feeds both the signature aggregate and
+    * the verify-side shingle sets — the combined [[sigGramsFrame]] is
+    * materialized via a LAZY localCheckpoint, so the banded self-join
+    * and the two grams attach legs all read the same computed blocks
+    * instead of each re-deriving the text pipeline (tokenization is the
+    * dominant CPU cost; the two-pass reference arm in test scope runs it
+    * twice). grams is collect_set-deduped — [[jaccard]] is set-based, so
+    * the value is unchanged (spec-asserted identical output to that
+    * arm). Docs with zero shingles drop out of the exploded rows, which
+    * is output-neutral: they can never be banded candidates, and grams
+    * only re-attaches to candidates.
     *
     * The materialization is (id, 128 longs, distinct-gram longs) — the
     * exact state a production dedup would checkpoint; for multi-hour
     * jobs prefer `checkpoint()` to reliable storage (executor loss
     * invalidates local checkpoints). */
-  def minhashLshPairsShared(df: DataFrame, idCol: String, textCol: String,
-                            n: Int = 3, bands: Int = 16, rowsPerBand: Int = 8,
-                            threshold: Double = 0.5,
-                            maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    val rows = tokenized(df, idCol, textCol).select(col("id"),
-      explode(shinglesFromTokens(col("__toks"), n)).as("g"))
-      .select(col("id"), TextAnalysis.tokenHash32(col("g")).as("h32"),
-        xxhash64(col("g")).as("h64"))
-    val agg = udaf(new MinhashArrayAgg(numHashes, hashParams(numHashes).toArray))
-    val sigGrams = rows.groupBy(col("id"))
-      .agg(agg(col("h32")).as("sig"), collect_set(col("h64")).as("grams"))
+  def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
+                      n: Int = 3, bands: Int = 16, rowsPerBand: Int = 8,
+                      threshold: Double = 0.5,
+                      maxBucketSize: Int = Int.MaxValue): DataFrame = {
+    val sigGrams = sigGramsFrame(df, idCol, textCol, n, bands * rowsPerBand)
       .localCheckpoint(false)
-    val bandedRaw = sigGrams.select(col("id"),
-      posexplode(array((0 until bands).map(b =>
-        slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)): _*)))
-      .withColumnRenamed("pos", "band")
-      .withColumn("bucket", xxhash64(col("band"), col("col").cast("string")))
-      .select("id", "band", "bucket")
-    // bucket-size guard (the editDistancePairs rule, r15: measured on
-    // sf1zipf — a 2,500-copy exact-dup cluster put x10's unguarded gate
-    // at 137 s where the guarded form matches uniform-corpus cost): a
-    // bucket of B ids emits B²/2 candidates, and oversized buckets are
-    // exact-dup mega-clusters by construction, owned by the O(B) x1
-    // pass. Deterministic wholesale drop; one count window over the
-    // (band, bucket) exchange the self-join needs anyway.
-    val banded =
-      if (maxBucketSize == Int.MaxValue) bandedRaw
-      else bandedRaw.withColumn("__bs", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("band"), col("bucket"))))
-        .filter(col("__bs") <= maxBucketSize)
-        .drop("__bs")
-    val candidates = banded.select(col("id").as("id_a"), col("band"), col("bucket"))
-      .hint("merge")
-      .join(banded.select(col("id").as("id_b"), col("band"), col("bucket")),
-        Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
     val grams = sigGrams.select(col("id"), col("grams"))
-    candidates
+    // same reuse argument for the two grams attach legs: both shuffle the
+    // grams subtree by its id — one Exchange, one ReusedExchange.
+    selfCandidates(bandRows(sigGrams, bands, rowsPerBand), maxBucketSize)
       .join(grams.select(col("id").as("id_a"), col("grams").as("grams_a")).hint("merge"), Seq("id_a"))
       .join(grams.select(col("id").as("id_b"), col("grams").as("grams_b")).hint("merge"), Seq("id_b"))
       .withColumn("jaccard_sim", jaccard(col("grams_a"), col("grams_b")))
@@ -847,7 +811,7 @@ object Dedup {
       .select("id_a", "id_b", "jaccard_sim")
   }
 
-  /** Character-level near-duplicate pairs: the [[minhashLshPairsShared]]
+  /** Character-level near-duplicate pairs: the [[minhashLshPairs]]
     * band machinery for candidate generation, but verified by
     * Levenshtein EDIT DISTANCE over the raw text instead of shingle
     * Jaccard — the modality that ranks small in-place edits (typo
@@ -871,53 +835,26 @@ object Dedup {
     * Text attaches to candidates by two id-keyed joins (ids-only band
     * join stays narrow — the x10 re-attach pattern).
     *
-    * Skew guard: like every banded self-join (the x2/x3 data term), a
-    * bucket holding B ids emits B²/2 candidates — on zipf-shaped
-    * corpora a 10⁶-copy boilerplate doc would put its whole cluster in
-    * ONE bucket per band. `maxBucketSize` DROPS buckets larger than
-    * the bound before the self-join (deterministic — a bucket is in or
-    * out wholesale, never sampled): oversized buckets are exact-dup
-    * mega-clusters by construction, which the pipeline's x1 pass
-    * already handles at O(B); run exact dedup first, then near-dup
-    * with the guard on. Default unbounded (the gate arm — exact over
-    * the gate corpora). */
+    * Skew guard: `maxBucketSize` drops oversized buckets wholesale
+    * before the self-join ([[selfCandidates]]); run exact dedup first,
+    * then near-dup with the guard on. Default unbounded (the gate arm —
+    * exact over the gate corpora). */
   def editDistancePairs(df: DataFrame, idCol: String, textCol: String,
                         maxDist: Int, n: Int = 3, bands: Int = 16,
                         rowsPerBand: Int = 8, maxLen: Int = 2000,
                         maxBucketSize: Int = Int.MaxValue): DataFrame = {
     require(maxDist >= 0 && maxLen > 0 && maxBucketSize > 1,
       "editDistancePairs: bad bounds")
-    val numHashes = bands * rowsPerBand
-    val rows = tokenized(df, idCol, textCol).select(col("id"),
+    // sig-ONLY frame: the checkpoint stores no gram sets
+    val sigs = tokenized(df, idCol, textCol).select(col("id"),
       explode(shinglesFromTokens(col("__toks"), n)).as("g"))
       .select(col("id"), TextAnalysis.tokenHash32(col("g")).as("h32"))
-    val agg = udaf(new MinhashArrayAgg(numHashes, hashParams(numHashes).toArray))
-    val sigs = rows.groupBy(col("id")).agg(agg(col("h32")).as("sig"))
+      .groupBy(col("id"))
+      .agg(minhashAgg(bands * rowsPerBand)(col("h32")).as("sig"))
       .localCheckpoint(false)
-    val bandedRaw = sigs.select(col("id"),
-      posexplode(array((0 until bands).map(b =>
-        slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)): _*)))
-      .withColumnRenamed("pos", "band")
-      .withColumn("bucket", xxhash64(col("band"), col("col").cast("string")))
-      .select("id", "band", "bucket")
-    // bucket-size guard: a count window over the (band, bucket)
-    // exchange the self-join needs anyway — no extra corpus shuffle
-    val banded =
-      if (maxBucketSize == Int.MaxValue) bandedRaw
-      else bandedRaw.withColumn("__bs", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("band"), col("bucket"))))
-        .filter(col("__bs") <= maxBucketSize)
-        .drop("__bs")
-    val candidates = banded.select(col("id").as("id_a"), col("band"), col("bucket"))
-      .hint("merge")
-      .join(banded.select(col("id").as("id_b"), col("band"), col("bucket")),
-        Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
     val texts = df.select(col(idCol).as("id"),
       substring(col(textCol), 1, maxLen).as("t"))
-    candidates
+    selfCandidates(bandRows(sigs, bands, rowsPerBand), maxBucketSize)
       .join(texts.select(col("id").as("id_a"), col("t").as("t_a")).hint("merge"), Seq("id_a"))
       .join(texts.select(col("id").as("id_b"), col("t").as("t_b")).hint("merge"), Seq("id_b"))
       // threshold form: banded DP, returns -1 past maxDist
@@ -938,7 +875,7 @@ object Dedup {
     * own dedup pass ran; the cross join's candidate volume is only the
     * actual leakage).
     *
-    * Scale shape mirrors [[minhashLshPairsShared]]: each side tokenizes
+    * Scale shape mirrors [[minhashLshPairs]]: each side tokenizes
     * ONCE into a checkpointed (id, sig, grams) frame, the band join
     * carries ids only, gram sets attach to verified candidates, and the
     * best-match roster is one map-side-combinable max(struct) per right
@@ -960,10 +897,6 @@ object Dedup {
         .localCheckpoint(false),
       bands, rowsPerBand, threshold, maxBucketSize)
 
-  /** The banded-minhash UDAF as a reusable column function (probe access). */
-  private[graft] def minhashAgg(numHashes: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udaf(new MinhashArrayAgg(numHashes, hashParams(numHashes).toArray))
-
   /** The (id, sig, grams) signature frame both near-dup families build
     * on — one tokenize+shingle pass, one map-side-combinable aggregate. */
   private[graft] def sigGramsFrame(df: DataFrame, idCol: String, textCol: String,
@@ -972,9 +905,9 @@ object Dedup {
       explode(shinglesFromTokens(col("__toks"), n)).as("g"))
       .select(col("id"), TextAnalysis.tokenHash32(col("g")).as("h32"),
         xxhash64(col("g")).as("h64"))
-    val agg = udaf(new MinhashArrayAgg(numHashes, hashParams(numHashes).toArray))
     rows.groupBy(col("id"))
-      .agg(agg(col("h32")).as("sig"), collect_set(col("h64")).as("grams"))
+      .agg(minhashAgg(numHashes)(col("h32")).as("sig"),
+        collect_set(col("h64")).as("grams"))
   }
 
   /** A×B band join + verify + per-B-doc argmax over two prepared
@@ -983,12 +916,6 @@ object Dedup {
   private def crossRosterOf(sgL: DataFrame, sgR: DataFrame, bands: Int,
                             rowsPerBand: Int, threshold: Double,
                             maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    def banded(sg: DataFrame) = sg.select(col("id"),
-        posexplode(array((0 until bands).map(b =>
-          slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)): _*)))
-      .withColumnRenamed("pos", "band")
-      .withColumn("bucket", xxhash64(col("band"), col("col").cast("string")))
-      .select(col("id"), col("band"), col("bucket"))
     // the x3-family bucket guard, CROSS form (r15): a (band, bucket)
     // key holding a left ids and b right ids emits a·b candidates, so
     // the size that matters is the COMBINED a+b membership (matching
@@ -1002,11 +929,11 @@ object Dedup {
     // resolve to broadcasts under AQE at any real scale (and AQE
     // DELETES them outright when the set is empty — PLANS.md); each
     // side keeps its own exchange exactly as unguarded. Deterministic
-    // wholesale drop, same rationale as minhashLshPairsShared:
+    // wholesale drop, same rationale as selfCandidates:
     // oversized buckets are exact-dup mega-clusters the O(B) exact
     // pass owns.
-    val bandedL = banded(sgL)
-    val bandedR = banded(sgR)
+    val bandedL = bandRows(sgL, bands, rowsPerBand)
+    val bandedR = bandRows(sgR, bands, rowsPerBand)
     val (guardedL, guardedR) =
       if (maxBucketSize == Int.MaxValue) (bandedL, bandedR)
       else {
@@ -1145,55 +1072,6 @@ object Dedup {
         col("rows_per_band"))
   }
 
-  /** LSH candidate pairs + exact-Jaccard verification.
-    * bands×rowsPerBand hashes; a pair is a candidate if any band of its
-    * signatures matches exactly (equality join on (band, bucket-hash)).
-    * Candidates carry only ids; shingle sets are joined back for the
-    * verify step, so the band shuffle stays narrow.
-    * Output: (id_a, id_b, jaccard_sim) with jaccard_sim >= threshold. */
-  def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
-                      n: Int = 3, bands: Int = 16, rowsPerBand: Int = 8,
-                      threshold: Double = 0.5): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    // hashed shingle sets for the verify step (same rationale as in
-    // ngramJaccardPairs: narrow shuffle, long compares)
-    val grams = tokenized(df, idCol, textCol).select(col("id"),
-      transform(shinglesFromTokens(col("__toks"), n), g => xxhash64(g)).as("grams"))
-    val sigs = minhashSignaturesTyped(df, idCol, textCol, n, numHashes)
-
-    val banded = sigs.select(col("id"),
-      posexplode(array((0 until bands).map(b =>
-        slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)): _*)))
-      .withColumnRenamed("pos", "band")
-      .withColumn("bucket", xxhash64(col("band"), col("col").cast("string")))
-      .select("id", "band", "bucket")
-
-    // SELF-JOIN AS SORT-MERGE, NOT BROADCAST: with a broadcast the
-    // signature pipeline (scan → shingle-explode → minhash aggregate →
-    // band Generate) is planned TWICE — once streamed, once under the
-    // BroadcastExchange — because ReuseExchange can only unify identical
-    // exchanges. Forcing shuffle-merge makes both sides the SAME
-    // Exchange(hashpartitioning(band, bucket)) subtree, so the second is
-    // a ReusedExchange and signatures are computed exactly once
-    // (PlanSpec-asserted). Also the only shape that exists at corpus
-    // scale, where the banded side cannot broadcast.
-    val candidates = banded.select(col("id").as("id_a"), col("band"), col("bucket"))
-      .hint("merge")
-      .join(banded.select(col("id").as("id_b"), col("band"), col("bucket")),
-        Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-
-    // same reuse argument for the two grams attach legs: both shuffle the
-    // grams subtree by its id — one Exchange, one ReusedExchange.
-    candidates
-      .join(grams.select(col("id").as("id_a"), col("grams").as("grams_a")).hint("merge"), Seq("id_a"))
-      .join(grams.select(col("id").as("id_b"), col("grams").as("grams_b")).hint("merge"), Seq("id_b"))
-      .withColumn("jaccard_sim", jaccard(col("grams_a"), col("grams_b")))
-      .filter(col("jaccard_sim") >= threshold)
-      .select("id_a", "id_b", "jaccard_sim")
-  }
-
   // ---- SimHash -----------------------------------------------------------
 
   /** Band boundaries distributing 64 signature bits as evenly as possible
@@ -1274,7 +1152,7 @@ object Dedup {
     val sigsAll = simhashes(df, idCol, textCol)
     // a map-side-combinable count per sh over the CHECKPOINTED (id, sh)
     // frame (two longs per doc — the lazy localCheckpoint is the same
-    // pattern as minhashLshPairsShared's (sig, grams) frame), then
+    // pattern as minhashLshPairs's (sig, grams) frame), then
     // anti-join the (tiny, empty-on-healthy-corpora) oversized key set
     // back. NOT a window over sh — that was measured 1.63× on the
     // uniform gate (a full exchange+sort of every row between the vote
@@ -1302,7 +1180,7 @@ object Dedup {
     // filtering first shrinks the dedup shuffle to the near-dup pairs
     // instead of every band collision.
     // merge hint: identical-exchange self-join so the simhash aggregate
-    // is computed once and reused (see minhashLshPairs candidate join).
+    // is computed once and reused (see selfCandidates).
     a.hint("merge").join(b, Seq("band", "bucket"))
       .filter(col("id_a") < col("id_b"))
       .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
@@ -1385,7 +1263,7 @@ object Dedup {
       col("nv").as("n_a"), col("bucket"), col("sub"))
     val b = sigs.select(col("id").as("id_b"), col("v").as("v_b"),
       col("nv").as("n_b"), col("bucket"), col("sub"))
-    // merge hint, same rationale as minhashLshPairs: the corpus-vs-corpus
+    // merge hint, same rationale as selfCandidates: the corpus-vs-corpus
     // self-join must never broadcast (AQE would at toy scale), and as a
     // sort-merge both sides are the identical Exchange(bucket) subtree —
     // the scan + signature projection runs once, ReusedExchange second leg.

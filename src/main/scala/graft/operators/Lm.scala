@@ -241,9 +241,6 @@ object Lm {
     * The final round skips steps 2-3 entirely (its state has no
     * consumer). For multi-hour production runs prefer `checkpoint()`
     * to reliable storage (executor loss invalidates local checkpoints).
-    * `onRound` is a probe hook (round, phase, nanos) — a no-op by
-    * default, used by tools/BpeProbe (deleted after 17eacc8) to
-    * publish per-phase cost.
     *
     * TWO ARMS, chosen by the EXPLICIT `sampled` flag (r15 advice: the
     * earlier rounds>64 auto-dispatch silently switched semantics —
@@ -274,7 +271,7 @@ object Lm {
           "size) — for large vocabularies pass sampled = true (bounded " +
           "deterministic sample, driver-local merge loop; identical " +
           "whenever the sample covers the corpus)")
-      bpeMergesDistributed(df, idCol, textCol, rounds, joiner, (_, _, _) => ())
+      bpeMergesDistributed(df, idCol, textCol, rounds, joiner)
     }
 
   private lazy val logger = org.slf4j.LoggerFactory.getLogger("graft.operators.Lm")
@@ -302,8 +299,7 @@ object Lm {
 
   private[graft] def bpeMergesDistributed(
       df: DataFrame, idCol: String, textCol: String,
-      rounds: Int, joiner: String,
-      onRound: (Int, String, Long) => Unit): DataFrame = {
+      rounds: Int, joiner: String): DataFrame = {
     require(rounds > 0, s"bpeMerges: rounds must be positive, got $rounds")
     val spark = df.sparkSession
     val sc = spark.sparkContext
@@ -319,28 +315,23 @@ object Lm {
     }
     def drop(ids: Set[Int]): Unit =
       ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    def timed[A](r: Int, phase: String)(body: => A): A = {
-      val t0 = System.nanoTime(); val a = body
-      onRound(r, phase, System.nanoTime() - t0); a
-    }
     // corpus state: ONE space-padded joined-token string per row — the
     // domain applyMergeStr rewrites and `contains` probes directly.
     // Round-trips exactly: tokens are whitespace-split and non-empty.
-    var (cur, curIds) = timed(0, "tokenize")(checkpointTracked(
+    var (cur, curIds) = checkpointTracked(
       df.select(concat(lit(" "),
-        array_join(TextAnalysis.tokens(col(textCol)), " "), lit(" ")).as("s"))))
+        array_join(TextAnalysis.tokens(col(textCol)), " "), lit(" ")).as("s")))
     // the ONE full pair count (an empty/1-token row pads to a string
     // that trims+splits to a single token — no pairs, by the m-clamp)
     val toksOf = (s: Column) => split(trim(s), " ")
-    var (counts, countIds) = timed(0, "initial_count")(checkpointTracked(
+    var (counts, countIds) = checkpointTracked(
       cur.select(explode(pairsFromToks(toksOf(col("s")))).as("pair"))
-        .groupBy(col("pair")).agg(count(lit(1)).as("n"))))
+        .groupBy(col("pair")).agg(count(lit(1)).as("n")))
     val picks = scala.collection.mutable.ArrayBuffer[(Int, String, Long)]()
     var r = 1
     var exhausted = false
     while (r <= rounds && !exhausted) {
-      val top = timed(r, "top1")(
-        counts.orderBy(col("n").desc, col("pair").asc).limit(1).collect())
+      val top = counts.orderBy(col("n").desc, col("pair").asc).limit(1).collect()
       if (top.isEmpty) exhausted = true // corpus has no adjacent pairs left
       else {
         val pair = top(0).getString(0)
@@ -364,13 +355,13 @@ object Lm {
                 p => struct(p.as("pair"), lit(1L).as("w"))))).as("pw"))
             .groupBy(col("pw.pair").as("pair"))
             .agg(sum(col("pw.w")).as("n"))
-          val (nc, ncIds) = timed(r, "delta_counts")(checkpointTracked(
+          val (nc, ncIds) = checkpointTracked(
             counts.unionByName(delta)
               .groupBy(col("pair")).agg(sum(col("n")).as("n"))
-              .filter(col("n") > 0)))
+              .filter(col("n") > 0))
           drop(countIds); counts = nc; countIds = ncIds
-          val (nr, nrIds) = timed(r, "rewrite")(checkpointTracked(
-            cur.select(when(hit, rewritten).otherwise(col("s")).as("s"))))
+          val (nr, nrIds) = checkpointTracked(
+            cur.select(when(hit, rewritten).otherwise(col("s")).as("s")))
           drop(curIds); cur = nr; curIds = nrIds
         }
       }

@@ -139,6 +139,17 @@ object Similarity {
       org.apache.spark.sql.SparkSession.active, v,
       planeLiterals(planes, dim, table), buckets = math.max(0L, buckets))
 
+  /** L-table hyperplane banding of an (id, v) frame: one (id, t, bucket)
+    * row per vector per table, bucket = table t's [[foldedSignature]].
+    * The one banding every hyperplane-LSH path (and the AnnCounters
+    * volume counters) runs; callers add their own partitioning. */
+  private[graft] def tableBuckets(base: DataFrame, planes: Int, tables: Int,
+                                  buckets: Long): DataFrame =
+    base.select(col("id"),
+      posexplode(array((0 until tables).map(t =>
+        foldedSignature(col("v"), planes, t, buckets)): _*)))
+      .withColumnRenamed("pos", "t").withColumnRenamed("col", "bucket")
+
   /** Exact cosine top-k for a fixed set of query vector ids.
     * Output: (query_id, rank, neighbor_id, cosine_sim). `native=true`
     * scores with the codegen'd [[graft.expressions.CosineSimilarity]]
@@ -180,10 +191,7 @@ object Similarity {
     // distinct shuffle two longs per row, never the vectors themselves.
     // buckets > 0 folds the signature into exactly that many buckets
     // ([[bucketsFor]] — average bucket size pinned to target at any n).
-    val banded = base.select(col("id"),
-      posexplode(array((0 until tables).map(t =>
-        foldedSignature(col("v"), planes, t, buckets)): _*)))
-      .withColumnRenamed("pos", "t").withColumnRenamed("col", "bucket")
+    val banded = tableBuckets(base, planes, tables, buckets)
     val probes = banded.filter(col("id").isin(queryIds: _*))
       .select(col("id").as("query_id"), col("t"), col("bucket"))
     val candidates = banded.select(col("id").as("neighbor_id"), col("t"), col("bucket"))
@@ -281,10 +289,7 @@ object Similarity {
     // plan the shuffles instead would push a partial WindowGroupLimit
     // BELOW the neighbor leg's exchange — the two subtrees then differ,
     // nothing is reused, and banding is computed twice.)
-    val banded = base.select(col("id"),
-      posexplode(array((0 until tables).map(t =>
-        foldedSignature(col("v"), planes, t, buckets)): _*)))
-      .withColumnRenamed("pos", "t").withColumnRenamed("col", "bucket")
+    val banded = tableBuckets(base, planes, tables, buckets)
       .repartition(col("t"), col("bucket"))
     // one windowed pass per leg over the SAME reused exchange yields the
     // cap rank AND the bucket size (count needs no extra sort: it shares

@@ -150,9 +150,7 @@ object ClassifierQueries {
             .select(col("doc_id"), col("text"))
         else corpus.select(col("doc_id"), col("text")))
         .localCheckpoint(false)
-      val pairs = Dedup.minhashLshPairsShared(uniq, "doc_id", "text",
-        n = 3, bands = 16, rowsPerBand = 8, threshold = 0.6,
-        maxBucketSize = TextQueries.MaxBucket)
+      val pairs = TextQueries.nearDupPairs(uniq)
       val clusters = Dedup.clusters(pairs, "id_a", "id_b")
         .select(col("id").as("doc_id"), col("cluster_id"))
       val reps = Dedup.clusterRepresentatives(clusters, "doc_id", "cluster_id",

@@ -38,6 +38,14 @@ object TextQueries {
     documents(s, d).select(col("doc_id"), col("text"))
       .unionByName(perturbedDocs(s, d))
 
+  /** The x3-family near-dup pair list (x3, x6, x8, x10, cur5): MinHash-LSH
+    * at n = 3, 16 bands × 8 rows, jaccard ≥ 0.6, buckets capped at
+    * [[MaxBucket]] — the parameters the oracle mirrors carry. */
+  private[queries] def nearDupPairs(corpus: DataFrame): DataFrame =
+    Dedup.minhashLshPairs(corpus, "doc_id", "text",
+      n = 3, bands = 16, rowsPerBand = 8, threshold = 0.6,
+      maxBucketSize = MaxBucket)
+
   /** Multi-paragraph corpus for sub-document dedup: documents texts have
     * no newlines, so composites are built by joining each run of 4
     * consecutive doc_ids' texts with '\n' (doc_id order within the
@@ -149,18 +157,13 @@ object TextQueries {
     // MinHash+LSH near-dup pairs (shingle→minhash→band→bucket-join;
     // engine-hash-based — rows-only check + recall spec vs exact Jaccard).
     "x3_minhash_lsh" -> { (s, d) =>
-      Dedup.minhashLshPairsShared(nearDupCorpus(s, d), "doc_id", "text",
-        n = 3, bands = 16, rowsPerBand = 8, threshold = 0.6,
-        maxBucketSize = MaxBucket)
-        .orderBy(col("id_a"), col("id_b"))
+      nearDupPairs(nearDupCorpus(s, d)).orderBy(col("id_a"), col("id_b"))
     },
 
     // pair list -> clusters: components over the x3 pairs; canonical
     // doc per dup group = min id (deterministic keep-one policy).
     "x6_dup_clusters" -> { (s, d) =>
-      val pairs = Dedup.minhashLshPairsShared(nearDupCorpus(s, d), "doc_id", "text",
-        n = 3, bands = 16, rowsPerBand = 8, threshold = 0.6,
-        maxBucketSize = MaxBucket)
+      val pairs = nearDupPairs(nearDupCorpus(s, d))
       // components (min-label), not componentsAlternating: near-dup
       // graphs are clique-ish (diameter 1-2), where min-label's folded
       // first hop converges in one confirming pass — measured 1.6x
@@ -176,9 +179,7 @@ object TextQueries {
     // against the same transitive closure as x6, so both component
     // implementations are hash-pinned to identical cluster assignments.
     "x8_dup_clusters_star" -> { (s, d) =>
-      val pairs = Dedup.minhashLshPairsShared(nearDupCorpus(s, d), "doc_id", "text",
-        n = 3, bands = 16, rowsPerBand = 8, threshold = 0.6,
-        maxBucketSize = MaxBucket)
+      val pairs = nearDupPairs(nearDupCorpus(s, d))
       Dedup.componentsAlternating(pairs, "id_a", "id_b")
         .select(col("id").as("doc_id"), col("cluster_id"))
         .orderBy(col("doc_id"))
@@ -189,9 +190,7 @@ object TextQueries {
     // clustering, argmax via map-side-combinable max(struct).
     "x10_cluster_keep_best" -> { (s, d) =>
       val corpus = nearDupCorpus(s, d)
-      val pairs = Dedup.minhashLshPairsShared(corpus, "doc_id", "text",
-        n = 3, bands = 16, rowsPerBand = 8, threshold = 0.6,
-        maxBucketSize = MaxBucket)
+      val pairs = nearDupPairs(corpus)
       val clusters = Dedup.components(pairs, "id_a", "id_b")
         .select(col("id").as("doc_id"), col("cluster_id"))
       val scored = corpus.select(col("doc_id"),

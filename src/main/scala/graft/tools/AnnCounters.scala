@@ -55,15 +55,13 @@ object AnnCounters {
     /** (t, bucket) sizes for L tables at the gate's planesFor count,
       * with the gate's bucketsFor fold (r20: y2/y3 fold the signature
       * into round(n/32) buckets so the average bucket is exactly the
-      * target at any n — the counters mirror the gates verbatim). */
+      * target at any n — the banding is the gates' own
+      * [[Similarity.tableBuckets]]). */
     def bucketSizes(tables: Int): (Int, DataFrame) = {
       val planes = Similarity.planesFor(n, targetBucket = 32)
       val b = Similarity.bucketsFor(n, targetBucket = 32, planes = planes)
-      val banded = base.select(col("id"),
-        posexplode(array((0 until tables).map(t =>
-          Similarity.foldedSignature(col("v"), planes, t, b)): _*)))
-        .withColumnRenamed("pos", "t").withColumnRenamed("col", "bucket")
-      (planes, banded.groupBy("t", "bucket")
+      (planes, Similarity.tableBuckets(base, planes, tables, b)
+        .groupBy("t", "bucket")
         .agg(count(lit(1)).as("c"),
           sum(when(col("id").isin(QueryIds: _*), 1L).otherwise(0L)).as("nq"))
         .localCheckpoint())
@@ -95,10 +93,7 @@ object AnnCounters {
     // banded self-join, ids only (the probe's one expensive step)
     val planes3 = p3
     val buckets3 = Similarity.bucketsFor(n, targetBucket = 32, planes = p3)
-    val banded3 = base.select(col("id"),
-      posexplode(array((0 until 4).map(t =>
-        Similarity.foldedSignature(col("v"), planes3, t, buckets3)): _*)))
-      .withColumnRenamed("pos", "t").withColumnRenamed("col", "bucket")
+    val banded3 = Similarity.tableBuckets(base, planes3, 4, buckets3)
       .repartition(col("t"), col("bucket"))
     val capW = org.apache.spark.sql.expressions.Window
       .partitionBy(col("t"), col("bucket")).orderBy(col("id"))

@@ -35,7 +35,7 @@ class CurationMegaDupSpec extends SparkSpec {
   ).toDF("doc_id", "text")
 
   private def chain(df: org.apache.spark.sql.DataFrame) = {
-    val pairs = Dedup.minhashLshPairsShared(df, "doc_id", "text",
+    val pairs = Dedup.minhashLshPairs(df, "doc_id", "text",
       n = 3, bands = 16, rowsPerBand = 8, threshold = 0.6,
       maxBucketSize = Cap)
     val cl = Dedup.clusters(pairs, "id_a", "id_b")

@@ -108,7 +108,7 @@ class FanoutSpec extends SparkSpec {
 
   test("fan-out changes no results (minhash pairs bit-identical)") {
     val corpus = graft.queries.TextQueries.nearDupCorpus(spark, dBig)
-    def pairs() = graft.operators.Dedup.minhashLshPairsShared(
+    def pairs() = graft.operators.Dedup.minhashLshPairs(
       corpus, "doc_id", "text", n = 3, bands = 16, rowsPerBand = 8,
       threshold = 0.6).orderBy("id_a", "id_b").collect().toSeq
     val spreadRun = pairs() // narrow input: fan-out active

@@ -166,7 +166,7 @@ class LmSpec extends SparkSpec {
       List.fill(1 + rnd.nextInt(30))(Seq("a", "b", "c", "d")(rnd.nextInt(4))))
     val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t.mkString(" ")) }
       .toDF("doc_id", "text")
-    val dist = Lm.bpeMergesDistributed(df, "doc_id", "text", 12, "~", (_, _, _) => ())
+    val dist = Lm.bpeMergesDistributed(df, "doc_id", "text", 12, "~")
       .orderBy($"round").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
     val samp = Lm.bpeMergesSampled(df, "doc_id", "text", rounds = 12,
@@ -201,7 +201,7 @@ class LmSpec extends SparkSpec {
     val lo = "�"
     val df = Seq((1L, s"q $hi"), (2L, s"q $lo")).toDF("doc_id", "text")
     assert(s"q $hi".compareTo(s"q $lo") < 0, "UTF-16 premise broke")
-    val dist = Lm.bpeMergesDistributed(df, "doc_id", "text", 1, "~", (_, _, _) => ())
+    val dist = Lm.bpeMergesDistributed(df, "doc_id", "text", 1, "~")
       .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
     val samp = Lm.bpeMergesSampled(df, "doc_id", "text", rounds = 1,
         sampleDocs = 100)

@@ -171,6 +171,15 @@ class PlanSpec extends SparkSpec {
       s"expected the checkpointed (id, sig, grams) scan:\n$x3")
     assert("Generate explode".r.findAllIn(x3).isEmpty,
       s"shingle pipeline leaked out of the checkpoint:\n$x3")
+    // x13 bands its checkpointed sig-only frame through the same
+    // self-join: the banded exchange is reused, the shingle pipeline
+    // stays behind the checkpoint
+    val x13 = finalPlan("x13_edit_distance")
+    assert("ReusedExchange".r.findAllIn(x13).length >= 1, x13)
+    assert(x13.contains("Scan ExistingRDD"),
+      s"expected the checkpointed (id, sig) scan:\n$x13")
+    assert("Generate explode".r.findAllIn(x13).isEmpty,
+      s"shingle pipeline leaked out of the checkpoint:\n$x13")
     // x4: the guarded gate arm checkpoints the (id, sh) vote frame
     // (same contract as x3's (sig, grams) checkpoint), so tokenize +
     // vote aggregation runs once BY CONSTRUCTION — no explode in the

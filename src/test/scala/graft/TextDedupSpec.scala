@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.functions.TextAnalysis
 import graft.operators.Dedup
+import graft.operators.LiteralArms
 
 /** Text-analysis + dedup semantics, incl. LSH recall vs exact Jaccard. */
 class TextDedupSpec extends SparkSpec {
@@ -122,7 +123,7 @@ class TextDedupSpec extends SparkSpec {
     val corpus = graft.queries.TextQueries.nearDupCorpus(spark, "/root/testdata/sf0.001")
     val exact = Dedup.ngramJaccardPairs(corpus, "doc_id", "text", 3, 0.8)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = Dedup.minhashLshPairs(corpus, "doc_id", "text", 3, 16, 8, 0.8)
+    val lsh = LiteralArms.minhashLshPairsPlain(corpus, "doc_id", "text", 3, 16, 8, 0.8)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.nonEmpty, "corpus must contain true near-dups")
     val recall = (exact intersect lsh).size.toDouble / exact.size
@@ -183,8 +184,8 @@ class TextDedupSpec extends SparkSpec {
     val corpus = graft.queries.TextQueries.nearDupCorpus(spark, "/root/testdata/sf0.001")
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val plain = rows(Dedup.minhashLshPairs(corpus, "doc_id", "text", 3, 16, 8, 0.6))
-    val shared = rows(Dedup.minhashLshPairsShared(corpus, "doc_id", "text", 3, 16, 8, 0.6))
+    val plain = rows(LiteralArms.minhashLshPairsPlain(corpus, "doc_id", "text", 3, 16, 8, 0.6))
+    val shared = rows(Dedup.minhashLshPairs(corpus, "doc_id", "text", 3, 16, 8, 0.6))
     assert(plain.nonEmpty && shared == plain,
       s"|plain|=${plain.size} |shared|=${shared.size} diff=${(plain diff shared).take(3)}")
   }

@@ -1,13 +1,17 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.TextAnalysis
+import graft.operators.Dedup.{jaccard, minhashAgg, shinglesFromTokens, tokenized}
 
 /** SQL-expressible reference arms of the PQ, IVF and hyperplane-LSH
   * kernels: the literal expression trees production dispatched to before
   * the codegen kernels replaced them. Specs pin every kernel bit-identical
   * to these (PqSpec, IvfSpec, SimilaritySpec); nothing in the engine calls
-  * them.
+  * them. Also the two-pass MinHash-LSH pair finder, the independent
+  * reference [[Dedup.minhashLshPairs]] is pinned row-identical to
+  * (TextDedupSpec).
   */
 object LiteralArms {
 
@@ -79,5 +83,59 @@ object LiteralArms {
                       buckets: Long = 0, dim: Int = 64): Column = {
     val sig = hyperplaneSignature(v, planes, table, dim)
     if (buckets > 0) pmod(sig, lit(buckets)) else sig
+  }
+
+  /** (id, sig) via the typed array aggregator ([[Dedup.minhashAgg]]). */
+  private def minhashSignaturesTyped(df: DataFrame, idCol: String, textCol: String,
+                                     n: Int = 3, numHashes: Int = 128): DataFrame = {
+    val hashRows = tokenized(df, idCol, textCol).select(col("id"),
+      explode(transform(shinglesFromTokens(col("__toks"), n),
+        s => TextAnalysis.tokenHash32(s))).as("h"))
+    val agg = minhashAgg(numHashes)
+    hashRows.groupBy(col("id")).agg(agg(col("h")).as("sig"))
+  }
+
+  /** LSH candidate pairs + exact-Jaccard verification — the plain
+    * two-pass reference arm of [[Dedup.minhashLshPairs]] (shingles are
+    * derived once for the signatures and once for the verify sets).
+    * bands×rowsPerBand hashes; a pair is a candidate if any band of its
+    * signatures matches exactly (equality join on (band, bucket-hash)).
+    * Candidates carry only ids; shingle sets are joined back for the
+    * verify step, so the band shuffle stays narrow.
+    * Output: (id_a, id_b, jaccard_sim) with jaccard_sim >= threshold. */
+  def minhashLshPairsPlain(df: DataFrame, idCol: String, textCol: String,
+                           n: Int = 3, bands: Int = 16, rowsPerBand: Int = 8,
+                           threshold: Double = 0.5): DataFrame = {
+    val numHashes = bands * rowsPerBand
+    // hashed shingle sets for the verify step (same rationale as in
+    // ngramJaccardPairs: narrow shuffle, long compares)
+    val grams = tokenized(df, idCol, textCol).select(col("id"),
+      transform(shinglesFromTokens(col("__toks"), n), g => xxhash64(g)).as("grams"))
+    val sigs = minhashSignaturesTyped(df, idCol, textCol, n, numHashes)
+
+    val banded = sigs.select(col("id"),
+      posexplode(array((0 until bands).map(b =>
+        slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)): _*)))
+      .withColumnRenamed("pos", "band")
+      .withColumn("bucket", xxhash64(col("band"), col("col").cast("string")))
+      .select("id", "band", "bucket")
+
+    // sort-merge self-join: both sides are the same exchange subtree,
+    // so the second is a ReusedExchange (see Dedup.selfCandidates)
+    val candidates = banded.select(col("id").as("id_a"), col("band"), col("bucket"))
+      .hint("merge")
+      .join(banded.select(col("id").as("id_b"), col("band"), col("bucket")),
+        Seq("band", "bucket"))
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b").distinct()
+
+    // same reuse argument for the two grams attach legs: both shuffle the
+    // grams subtree by its id — one Exchange, one ReusedExchange.
+    candidates
+      .join(grams.select(col("id").as("id_a"), col("grams").as("grams_a")).hint("merge"), Seq("id_a"))
+      .join(grams.select(col("id").as("id_b"), col("grams").as("grams_b")).hint("merge"), Seq("id_b"))
+      .withColumn("jaccard_sim", jaccard(col("grams_a"), col("grams_b")))
+      .filter(col("jaccard_sim") >= threshold)
+      .select("id_a", "id_b", "jaccard_sim")
   }
 }

@@ -24,7 +24,7 @@ object BpeArmPin {
         .sortBy(_._1).toSeq
     val t0 = System.nanoTime()
     val dist = collectPicks(graft.operators.Lm.bpeMergesDistributed(
-      docs, "doc_id", "text", rounds, "~", (_, _, _) => ()))
+      docs, "doc_id", "text", rounds, "~"))
     val tDist = (System.nanoTime() - t0) / 1e9
     val t1 = System.nanoTime()
     val samp = collectPicks(graft.operators.Lm.bpeMergesSampled(

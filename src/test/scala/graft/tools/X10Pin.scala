@@ -22,7 +22,7 @@ object X10Pin {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = graft.core.GraftSession.get()
     val corpus = graft.queries.TextQueries.nearDupCorpus(spark, sfDir)
-    val pairs = graft.operators.Dedup.minhashLshPairsShared(
+    val pairs = graft.operators.Dedup.minhashLshPairs(
       corpus, "doc_id", "text", n = 3, bands = 16, rowsPerBand = 8, threshold = 0.6)
     val clusters = graft.operators.Dedup.components(pairs, "id_a", "id_b")
       .select(col("id").as("doc_id"), col("cluster_id"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
   * DuckDB oracle cannot reach (the same x3-family oracle disk limit as
   * X10Pin documents): the engine's A×B cross band-join roster is
   * compared against a derivation through the INDEPENDENT union
-  * self-join path — `minhashLshPairsShared` over A ∪ B, pairs filtered
+  * self-join path — `minhashLshPairs` over A ∪ B, pairs filtered
   * to one-id-per-side by set membership (both orientations), then the
   * same (jaccard desc, min A-id) argmax. The two paths share the hash
   * family and verify formula (they must — a pair scores one jaccard)
@@ -42,7 +42,7 @@ object X11Pin {
       n = 3, bands = 16, rowsPerBand = 8, threshold = 0.6,
       maxBucketSize = graft.queries.TextQueries.MaxBucket)
     val union = left.unionByName(right)
-    val pairs = graft.operators.Dedup.minhashLshPairsShared(
+    val pairs = graft.operators.Dedup.minhashLshPairs(
       union, "doc_id", "text", n = 3, bands = 16, rowsPerBand = 8, threshold = 0.6,
       maxBucketSize = graft.queries.TextQueries.MaxBucket)
     val aIds = left.select(col("doc_id").as("a_id"))
