@@ -16,6 +16,8 @@ import org.apache.spark.sql.SparkSession
   *    AQE's coalescing (initialPartitionNum stays high).
   *  - UTC session TZ so timestamp semantics match the reference's
   *    `timestamp without time zone` columns and the DuckDB oracle.
+  *  - every `graft_*` kernel is injected into the function registry
+  *    once, here ([[graft.expressions.GraftExtensions]]).
   *
   * Every session in the engine, its mains, tools and specs is built here;
   * callers add only their own settings on the returned builder.
@@ -39,6 +41,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.expressions.GraftExtensions)
 
   /** Get-or-create with engine defaults. */
   def get(): SparkSession = {

@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -183,17 +183,9 @@ case class BpeEncode(tokens: Expression, merges: Expression, joiner: Expression)
 }
 
 object BpeEncode {
-  /** Register `graft_bpe_encode` (also SQL-callable). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bpe_encode",
-      exprs => BpeEncode(exprs(0), exprs(1), exprs(2)), "built-in")
-
-  /** Column form: encode a token-array column under a merge table. */
-  def column(spark: SparkSession, tokens: Column,
-             merges: Seq[(String, String)], joiner: String): Column = {
-    register(spark)
+  /** Column form of `graft_bpe_encode` ([[GraftExtensions]] registers
+    * it): encode a token-array column under a merge table. */
+  def column(tokens: Column, merges: Seq[(String, String)], joiner: String): Column =
     call_function("graft_bpe_encode", tokens,
       typedLit(merges.map(p => Seq(p._1, p._2))), lit(joiner))
-  }
 }

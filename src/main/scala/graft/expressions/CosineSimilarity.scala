@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -75,17 +75,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
-  /** Register `graft_cosine` in the session's function registry (also
-    * makes it SQL-callable: `SELECT graft_cosine(a, b)`). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-
-  /** Column form (registers on first use in the session). */
-  def column(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("graft_cosine", a, b)
-  }
+  /** Column form of `graft_cosine` ([[GraftExtensions]] registers it). */
+  def column(a: Column, b: Column): Column = call_function("graft_cosine", a, b)
 }
 
 /** Loud dimension guard for the array kernels, in both evaluation paths
@@ -161,13 +152,6 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-
-  /** Column form (registers on first use in the session). */
-  def column(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("graft_dot", a, b)
-  }
+  /** Column form of `graft_dot` ([[GraftExtensions]] registers it). */
+  def column(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 }

@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -450,45 +450,21 @@ case class HyperplaneSig(vec: Expression, planes: Expression,
     copy(vec = f, planes = s, buckets = t)
 }
 
-/** Registration + Column builders for the quantizer expressions. */
+/** Column builders for the quantizer expressions ([[GraftExtensions]]
+  * registers them). */
 object QuantKernels {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nearest_cids",
-      exprs => NearestCentroids(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_codes", exprs => PqCodes(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_lut", exprs => PqLut(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hyperplane_sig",
-      exprs => HyperplaneSig(exprs(0), exprs(1), exprs(2)), "built-in")
-  }
-
   /** (cid, vector, norm) triples as the foldable centroid literal. */
-  def nearestCids(spark: SparkSession, v: Column,
-                  cents: Seq[(Int, Seq[Double], Double)], n: Int): Column = {
-    register(spark)
+  def nearestCids(v: Column, cents: Seq[(Int, Seq[Double], Double)], n: Int): Column =
     call_function("graft_nearest_cids", v, typedLit(cents), lit(n))
-  }
 
-  def pqCodes(spark: SparkSession, v: Column,
-              books: Seq[Seq[Seq[Double]]]): Column = {
-    register(spark)
+  def pqCodes(v: Column, books: Seq[Seq[Seq[Double]]]): Column =
     call_function("graft_pq_codes", v, typedLit(books))
-  }
 
-  def pqLut(spark: SparkSession, q: Column,
-            books: Seq[Seq[Seq[Double]]]): Column = {
-    register(spark)
+  def pqLut(q: Column, books: Seq[Seq[Seq[Double]]]): Column =
     call_function("graft_pq_lut", q, typedLit(books))
-  }
 
   /** Hyperplane rows as the foldable plane literal; buckets <= 0 = no
     * fold (raw sign-bit signature). */
-  def hyperplaneSig(spark: SparkSession, v: Column,
-                    planes: Seq[Seq[Double]], buckets: Long): Column = {
-    register(spark)
+  def hyperplaneSig(v: Column, planes: Seq[Seq[Double]], buckets: Long): Column =
     call_function("graft_hyperplane_sig", v, typedLit(planes), lit(buckets))
-  }
 }

@@ -16,21 +16,18 @@ object Integrity {
   /** Child rows whose `childKey` has no match in `parent.parentKey`.
     * No distinct on the parent side: anti-join existence semantics are
     * unaffected by duplicate build-side keys, and the distinct would add
-    * a full shuffle stage before the broadcast. (A non-broadcast
-    * sort-merge anti join also dedups effectively during the merge.)
-    * Caveat when `broadcastParent` is set: the broadcast carries every
-    * duplicate parent key, so it is sized by parent ROWS, not distinct
-    * keys. Fine for the intended use (dimensions with unique/PK-like
-    * keys); for a parent with heavy key duplication either pass
-    * `parent.select(key).distinct()` yourself or disable the broadcast. */
+    * a full shuffle stage before the broadcast.
+    * Caveat: the parent is always broadcast, and the broadcast carries
+    * every duplicate parent key, so it is sized by parent ROWS, not
+    * distinct keys. Fine for the intended use (dimensions with
+    * unique/PK-like keys); for a parent with heavy key duplication pass
+    * `parent.select(key).distinct()`, and for a parent too large to
+    * broadcast use [[fkViolationsBloom]]. */
   def fkViolations(child: DataFrame, childKey: String,
-                   parent: DataFrame, parentKey: String,
-                   broadcastParent: Boolean = true): DataFrame = {
-    val p = parent.select(col(parentKey).as("__pk"))
-    val pSide = if (broadcastParent) broadcast(p) else p
+                   parent: DataFrame, parentKey: String): DataFrame =
     child.filter(col(childKey).isNotNull)
-      .join(pSide, col(childKey) === col("__pk"), "left_anti")
-  }
+      .join(broadcast(parent.select(col(parentKey).as("__pk"))),
+        col(childKey) === col("__pk"), "left_anti")
 
   /** FK violations via Bloom-filter reductions on BOTH sides — the
     * shape for parents too large to broadcast exactly. [[fkViolations]]
@@ -56,8 +53,12 @@ object Integrity {
     * Result is EXACTLY [[fkViolations]] (spec-asserted, incl. planted
     * violations and NULL child keys — both variants filter NULLs out, per
     * SQL FK semantics); only the data movement changes. Both predicates
-    * use Spark's native codegen'd BloomFilterMightContain — the serialized
-    * filter rides the plan as a binary literal, no UDF in the scan.
+    * use Spark's native codegen'd BloomFilterMightContain (registered as
+    * `graft_might_contain` by [[graft.expressions.GraftExtensions]]) — the
+    * serialized filter rides the plan as a binary literal, no UDF in the
+    * scan. Each filter is sized for its side's non-null key count (one
+    * count job per side), so the literal grows with the data, not with a
+    * fixed capacity; `expectedKeys` overrides that count for both.
     *
     * Keys MUST be integral (byte/short/int/long): the bloom probe casts
     * to long, and a non-numeric string key would cast to NULL and make
@@ -66,10 +67,9 @@ object Integrity {
     * on both sides first. */
   def fkViolationsBloom(child: DataFrame, childKey: String,
                         parent: DataFrame, parentKey: String,
-                        expectedKeys: Long = 1000000L,
+                        expectedKeys: Option[Long] = None,
                         fpp: Double = 0.01): DataFrame = {
     import org.apache.spark.sql.Column
-    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     def requireIntegral(df: DataFrame, key: String, side: String): Unit = {
       val dt = df.schema(key).dataType
@@ -85,13 +85,12 @@ object Integrity {
       // NOT Fanout.spread here (r20, measured): hashing integral keys
       // into the filter is ~ns/row, so the fan-out exchange costs more
       // than the serial build it parallelizes (ri2 A/B: 1.57 s -> 1.98 s)
-      val bloom = df.stat.bloomFilter(key, expectedKeys, fpp)
+      val keys = expectedKeys.getOrElse(
+        math.max(1L, df.select(count(col(key))).head().getLong(0)))
+      val bloom = df.stat.bloomFilter(key, keys, fpp)
       val out = new java.io.ByteArrayOutputStream()
       bloom.writeTo(out)
       val bytes = out.toByteArray
-      df.sparkSession.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_might_contain",
-        exprs => BloomFilterMightContain(exprs(0), exprs(1)), "built-in")
       v => call_function("graft_might_contain", lit(bytes), v.cast("long"))
     }
     val notNull = child.filter(col(childKey).isNotNull)

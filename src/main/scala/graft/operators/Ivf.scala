@@ -95,8 +95,7 @@ object Ivf {
     * (-score, cid) struct sort, is a test-scope reference, spec-pinned
     * bit-identical (IvfSpec). */
   def nearestCids(v: Column, centroids: Seq[Centroid], n: Int): Column =
-    graft.expressions.QuantKernels.nearestCids(
-      org.apache.spark.sql.SparkSession.active, v,
+    graft.expressions.QuantKernels.nearestCids(v,
       centroids.map(c => (c.cid, c.v, c.norm)), n)
 
   /** Above this centroid count, [[assign]] switches from the expression

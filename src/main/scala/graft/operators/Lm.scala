@@ -634,8 +634,7 @@ object Lm {
       .select(col(idCol).as("doc_id"),
         TextAnalysis.tokens(col(textCol)).as("__raw"))
     encodeEpilogue(base,
-      graft.expressions.BpeEncode.column(
-        df.sparkSession, col("__raw"), merges, joiner))
+      graft.expressions.BpeEncode.column(col("__raw"), merges, joiner))
   }
 
   // __encs behind a projection boundary: it feeds BOTH the token count

@@ -78,15 +78,13 @@ object Pq {
     * y5/y6 bench tail. The literal arm is a test-scope reference,
     * spec-pinned bit-identical (PqSpec). */
   private[graft] def codesCol(v: Column, books: Codebooks): Column =
-    graft.expressions.QuantKernels.pqCodes(
-      org.apache.spark.sql.SparkSession.active, v, books)
+    graft.expressions.QuantKernels.pqCodes(v, books)
 
   /** Per-query lookup table: lut(s)(c) = d²(q_s, centroid c of
     * subspace s), computed ONCE per query row. Kernel-only like
     * [[codesCol]] (same r21 measurement and rationale). */
   private[graft] def lutCol(q: Column, books: Codebooks): Column =
-    graft.expressions.QuantKernels.pqLut(
-      org.apache.spark.sql.SparkSession.active, q, books)
+    graft.expressions.QuantKernels.pqLut(q, books)
 
   /** Fixed-order ADC fold s = 0..m-1 over a lut and a codes column —
     * deterministic double sum, mirrored exactly by the oracle's ordered

@@ -37,8 +37,7 @@ object Similarity {
     * This is the per-candidate-PAIR scoring op of every banded ANN
     * verify stage (r21: the zip_with form evaluated interpreted there). */
   def dotNative(a: Column, b: Column): Column =
-    graft.expressions.DotProduct.column(
-      org.apache.spark.sql.SparkSession.active, a, b)
+    graft.expressions.DotProduct.column(a, b)
 
   def norm(a: Column): Column = sqrt(dotNative(a, a))
 
@@ -123,8 +122,7 @@ object Similarity {
     * spec-pinned bit-identical (SimilaritySpec). */
   def hyperplaneSignature(v: Column, planes: Int, table: Int = 0,
                           dim: Int = 64): Column =
-    graft.expressions.QuantKernels.hyperplaneSig(
-      org.apache.spark.sql.SparkSession.active, v,
+    graft.expressions.QuantKernels.hyperplaneSig(v,
       planeLiterals(planes, dim, table), buckets = 0L)
 
   /** [[hyperplaneSignature]] optionally folded into a non-power-of-two
@@ -135,8 +133,7 @@ object Similarity {
     * pmod node). */
   def foldedSignature(v: Column, planes: Int, table: Int,
                       buckets: Long = 0, dim: Int = 64): Column =
-    graft.expressions.QuantKernels.hyperplaneSig(
-      org.apache.spark.sql.SparkSession.active, v,
+    graft.expressions.QuantKernels.hyperplaneSig(v,
       planeLiterals(planes, dim, table), buckets = math.max(0L, buckets))
 
   /** L-table hyperplane banding of an (id, v) frame: one (id, t, bucket)
@@ -151,21 +148,18 @@ object Similarity {
       .withColumnRenamed("pos", "t").withColumnRenamed("col", "bucket")
 
   /** Exact cosine top-k for a fixed set of query vector ids.
-    * Output: (query_id, rank, neighbor_id, cosine_sim). `native=true`
-    * scores with the codegen'd [[graft.expressions.CosineSimilarity]]
-    * (bit-identical to the zip_with form, no intermediate arrays). */
+    * Output: (query_id, rank, neighbor_id, cosine_sim), scored with the
+    * codegen'd [[graft.expressions.CosineSimilarity]] (bit-identical to
+    * the zip_with form, no intermediate arrays). */
   def bruteForceTopK(emb: DataFrame, idCol: String, vecCol: String,
-                     queryIds: Seq[Long], k: Int = 10,
-                     native: Boolean = true): DataFrame = {
+                     queryIds: Seq[Long], k: Int = 10): DataFrame = {
     val corpus = emb.select(col(idCol).as("neighbor_id"), toDouble(col(vecCol)).as("v"))
     val queries = emb.filter(col(idCol).isin(queryIds: _*))
       .select(col(idCol).as("query_id"), toDouble(col(vecCol)).as("q"))
-    val score =
-      if (native) graft.expressions.CosineSimilarity.column(emb.sparkSession, col("q"), col("v"))
-      else cosine(col("q"), col("v"))
     val scored = corpus.crossJoin(broadcast(queries))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine_sim", score)
+      .withColumn("cosine_sim",
+        graft.expressions.CosineSimilarity.column(col("q"), col("v")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine_sim").desc, col("neighbor_id").asc)
     scored

@@ -15,9 +15,7 @@ import graft.functions.Cleaning
   *  - dims joined to facts are explicitly `broadcast()` when used as pure
   *    key-lookup sides (the reference relies on the implicit 10 MB
   *    threshold); at 100 TB fact scale the dim side must never shuffle
-  *    the fact. If a dim outgrows broadcast, dropping the hint falls back
-  *    to sort-merge automatically — the builders take a `broadcastDims`
-  *    flag for that.
+  *    the fact.
   *  - date-dimension joins select only `date_id` before the join (the
   *    reference joins all 25 dim_date columns and lets pruning fix it).
   *  - surrogate keys: the reference delegates to Postgres BIGSERIAL at
@@ -26,9 +24,6 @@ import graft.functions.Cleaning
   *    `monotonically_increasing_id`-based keys (no global sort at scale).
   */
 object Warehouse {
-
-  private def maybeBroadcast(df: DataFrame, on: Boolean): DataFrame =
-    if (on) broadcast(df) else df
 
   /** Plans whose optimizer size estimate is at or below this use the
     * single-window dense-key path; above it, the range-bucket path.
@@ -151,8 +146,7 @@ object Warehouse {
     * The engine omits the join — identical output, one fewer join stage.
     * (dimDate still accepted so the signature documents the dependency
     * and callers can re-enable validation if they want an INNER check.) */
-  def dimFunds(funds: DataFrame, dimDate: DataFrame,
-               broadcastDims: Boolean = true): DataFrame = {
+  def dimFunds(funds: DataFrame, dimDate: DataFrame): DataFrame = {
     funds
       .withColumn("name", trim(lower(col("name"))))
       .withColumn("source_description", trim(lower(col("source_description"))))
@@ -186,10 +180,9 @@ object Warehouse {
     * (`init_stg.sql:158-169`) are typed here — start/end become yyyyMMdd
     * int date keys, blank titles null out. */
   def bridgeCompanyPeople(relationships: DataFrame, dimCompany: DataFrame,
-                          dimPeople: DataFrame,
-                          broadcastDims: Boolean = true): DataFrame = {
-    val comp = maybeBroadcast(dimCompany.select("sk_company_id", "nk_company_id"), broadcastDims)
-    val ppl  = maybeBroadcast(dimPeople.select("sk_people_id", "nk_people_id"), broadcastDims)
+                          dimPeople: DataFrame): DataFrame = {
+    val comp = broadcast(dimCompany.select("sk_company_id", "nk_company_id"))
+    val ppl  = broadcast(dimPeople.select("sk_people_id", "nk_people_id"))
     relationships
       .join(ppl, relationships("person_object_id") === ppl("nk_people_id"), "inner")
       .join(comp, relationships("relationship_object_id") === comp("nk_company_id"), "inner")
@@ -206,11 +199,10 @@ object Warehouse {
     * (inner = date-validity semi-join), then a USING-style left join. */
   def fctInvestments(investments: DataFrame, dimCompany: DataFrame,
                      dimFunds: DataFrame, dimDate: DataFrame,
-                     fundingRounds: DataFrame,
-                     broadcastDims: Boolean = true): DataFrame = {
-    val comp  = maybeBroadcast(dimCompany.select("sk_company_id", "nk_company_id"), broadcastDims)
-    val funds = maybeBroadcast(dimFunds.select("sk_fund_id", "nk_fund_id"), broadcastDims)
-    val dates = maybeBroadcast(dimDate.select("date_id"), broadcastDims)
+                     fundingRounds: DataFrame): DataFrame = {
+    val comp  = broadcast(dimCompany.select("sk_company_id", "nk_company_id"))
+    val funds = broadcast(dimFunds.select("sk_fund_id", "nk_fund_id"))
+    val dates = broadcast(dimDate.select("date_id"))
 
     val rounds = fundingRounds
       .withColumn("funded_at", Cleaning.dateKey(col("funded_at")))
@@ -236,10 +228,9 @@ object Warehouse {
   /** fct_ipos (extract_transform.py:349-448): int-cast natural id, company
     * key lookup (inner), date FK (left), two USD conversions, stock-symbol
     * cleanse, description normalize. */
-  def fctIpos(ipos: DataFrame, dimCompany: DataFrame, dimDate: DataFrame,
-              broadcastDims: Boolean = true): DataFrame = {
-    val comp  = maybeBroadcast(dimCompany.select("sk_company_id", "nk_company_id"), broadcastDims)
-    val dates = maybeBroadcast(dimDate.select("date_id"), broadcastDims)
+  def fctIpos(ipos: DataFrame, dimCompany: DataFrame, dimDate: DataFrame): DataFrame = {
+    val comp  = broadcast(dimCompany.select("sk_company_id", "nk_company_id"))
+    val dates = broadcast(dimDate.select("date_id"))
     ipos
       .withColumn("ipo_id", col("ipo_id").cast("integer"))
       .join(comp, col("object_id") === comp("nk_company_id"), "inner")
@@ -314,15 +305,14 @@ object Warehouse {
     * self-join in two roles (acquiring/acquired) via aliased+renamed key
     * pairs, date FK (left), USD price, term-code/description cleanse. */
   def fctAcquisition(acquisition: DataFrame, dimCompany: DataFrame,
-                     dimDate: DataFrame,
-                     broadcastDims: Boolean = true): DataFrame = {
-    val acq = maybeBroadcast(dimCompany.select(
+                     dimDate: DataFrame): DataFrame = {
+    val acq = broadcast(dimCompany.select(
       col("sk_company_id").as("sk_acquiring_company_id"),
-      col("nk_company_id").as("nk_acquiring_company_id")), broadcastDims)
-    val acd = maybeBroadcast(dimCompany.select(
+      col("nk_company_id").as("nk_acquiring_company_id")))
+    val acd = broadcast(dimCompany.select(
       col("sk_company_id").as("sk_acquired_company_id"),
-      col("nk_company_id").as("nk_acquired_company_id")), broadcastDims)
-    val dates = maybeBroadcast(dimDate.select("date_id"), broadcastDims)
+      col("nk_company_id").as("nk_acquired_company_id")))
+    val dates = broadcast(dimDate.select("date_id"))
 
     val termClean = trim(lower(col("term_code")))
     val descClean = trim(lower(col("source_description")))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -27,7 +27,7 @@ class CosineExprSpec extends SparkSpec {
     val withBoth = emb.crossJoin(emb.limit(5).select($"v".as("q")))
       .select(
         pureCosine($"q", $"v").as("composed"),
-        CosineSimilarity.column(spark, $"q", $"v").as("native"),
+        CosineSimilarity.column($"q", $"v").as("native"),
         Similarity.cosine($"q", $"v").as("routed"))
     val diff = withBoth.filter($"composed" =!= $"native" ||
       $"composed" =!= $"routed").count()
@@ -46,8 +46,15 @@ class CosineExprSpec extends SparkSpec {
   }
 
   test("SQL-callable after registration") {
-    CosineSimilarity.register(spark)
-    val r = spark.sql("SELECT graft_cosine(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c")
+    // GraftSession injects every kernel when the session is built, so a
+    // fresh session of it resolves all of them with no registration call
+    val fresh = spark.newSession()
+    val registry = fresh.sessionState.functionRegistry
+    for (name <- Seq("graft_cosine", "graft_dot", "graft_nearest_cids",
+        "graft_pq_codes", "graft_pq_lut", "graft_hyperplane_sig",
+        "graft_bpe_encode", "graft_might_contain"))
+      assert(registry.functionExists(FunctionIdentifier(name)), s"$name not registered")
+    val r = fresh.sql("SELECT graft_cosine(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c")
       .collect()(0).getDouble(0)
     assert(math.abs(r - 1.0) < 1e-15)
   }
@@ -57,7 +64,7 @@ class CosineExprSpec extends SparkSpec {
       (Some(Seq(0.0, 0.0)), Some(Seq(1.0, 2.0))),
       (None, Some(Seq(1.0, 2.0)))
     ).toDF("a", "b")
-    val got = df.select(CosineSimilarity.column(spark, $"a", $"b").as("c")).collect()
+    val got = df.select(CosineSimilarity.column($"a", $"b").as("c")).collect()
     assert(got(0).getDouble(0) == 0.0) // zero vector -> 0, not NaN
     assert(got(1).isNullAt(0))         // null input -> null
   }

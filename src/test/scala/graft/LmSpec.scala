@@ -292,7 +292,7 @@ class LmSpec extends SparkSpec {
     val literal = Lm.bpeEncode(docs, "doc_id", "text", merges)
       .collect().map(r => r.getLong(0) -> r.getString(3)).toMap
     val kernel = docs.select($"doc_id",
-        graft.expressions.BpeEncode.column(spark,
+        graft.expressions.BpeEncode.column(
           TextAnalysis.tokens($"text"), merges, "~").as("enc"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(kernel == literal)

@@ -1,7 +1,9 @@
 package graft
 
 import java.sql.{Date, Timestamp}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BinaryType
 import graft.operators.{DimDate, Warehouse}
 
 /** Golden tests for the star-schema builders over FIXTURES.md edge cases. */
@@ -85,12 +87,18 @@ class WarehouseSpec extends SparkSpec {
       df.select("id").collect().map(_.getLong(0)).sorted.toSeq
     val exact = ids(Integrity.fkViolations(child, "fk", parent, "pk"))
     assert(exact.nonEmpty)
-    val bloom = ids(Integrity.fkViolationsBloom(child, "fk", parent, "pk"))
-    assert(bloom == exact)
+    val bloomPlan = Integrity.fkViolationsBloom(child, "fk", parent, "pk")
+    assert(ids(bloomPlan) == exact)
+    // each filter is sized from its side's keys (1k parent, 10k child),
+    // not from a fixed million-key capacity (~1.2 MB per literal)
+    val literalBytes = bloomPlan.queryExecution.logical.collect { case node =>
+      node.expressions.flatMap(_.collect { case Literal(b: Array[Byte], BinaryType) => b.length })
+    }.flatten
+    assert(literalBytes.nonEmpty && literalBytes.forall(_ < 32 * 1024), literalBytes)
     // adversarial: tiny capacity -> high false-positive rate; the exact
     // residual join must still remove every FP (result unchanged)
     val noisy = ids(Integrity.fkViolationsBloom(child, "fk", parent, "pk",
-      expectedKeys = 10L, fpp = 0.5))
+      expectedKeys = Some(10L), fpp = 0.5))
     assert(noisy == exact)
   }
 
