@@ -112,39 +112,16 @@ object Fanout {
     else None
   }
 
-  /** SPARK_GRAFT_FANOUT_CAP, parsed and validated ONCE per JVM (r20
-    * advice: the per-call unguarded `.toInt` threw NumberFormatException
-    * deep inside operator construction on junk input, and a zero or
-    * negative value silently disabled the fan-out). Env vars cannot
-    * change mid-JVM, so a lazy val loses nothing. */
-  private lazy val FanoutCap: Int = sys.env.get("SPARK_GRAFT_FANOUT_CAP") match {
-    case None => Int.MaxValue
-    case Some(s) => s.toIntOption.filter(_ > 0).getOrElse(
-      throw new IllegalArgumentException(
-        s"SPARK_GRAFT_FANOUT_CAP must be a positive integer, got '$s'" +
-          " (1 disables the fan-out; unset leaves it uncapped)"))
-  }
-
   /** `df`, hash-repartitioned on `keys` to the session's default
     * parallelism IFF its planned scan parallelism is below that — the
     * guard that makes the repartition a small-input-only move (see
     * object doc). Call immediately BEFORE a CPU-dense narrow stage.
     *
-    * A plan that already carries an explicit-width hash repartition (a
-    * REPARTITION_BY_NUM — in practice an upstream `spread` on a derived,
-    * un-checkpointed frame) is left alone: `scanLayout` only inspects
-    * LEAVES, so without this check a query-level spread followed by an
-    * operator-level one stacked two consecutive exchanges on the same
-    * key (a Project between them defeats CollapseRepartition — r20
-    * advice, the cur5 `cleaned` → nbScore shape). */
+    * A plan that is already spread on `keys` is left alone (see
+    * [[alreadySpread]]). */
   def spread(df: DataFrame, keys: Column*): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
-    val alreadySpread = df.queryExecution.analyzed.exists {
-      case r: RepartitionByExpression => r.optNumPartitions.isDefined
-      case _ => false
-    }
-    if (alreadySpread) return df
-    val cores = math.min(FanoutCap, df.sparkSession.sparkContext.defaultParallelism)
+    if (alreadySpread(df, keys)) return df
+    val cores = df.sparkSession.sparkContext.defaultParallelism
     scanLayout(df) match {
       case Some((planned, bytes)) =>
         // width derived from input size: enough tasks that each holds
@@ -155,6 +132,33 @@ object Fanout {
           (bytes + SpreadBytesPerTask - 1) / SpreadBytesPerTask).toInt
         if (planned < target) df.repartition(target, keys: _*) else df
       case _ => df
+    }
+  }
+
+  /** True when an explicit-width hash repartition on the same `keys` (a
+    * REPARTITION_BY_NUM — in practice an upstream `spread` on a derived,
+    * un-checkpointed frame) still shapes `df`'s output: it is reached
+    * from the root through narrow unary nodes only. `scanLayout` only
+    * inspects LEAVES, so without this check a query-level spread
+    * followed by an operator-level one stacked two consecutive exchanges
+    * on the same key (a Project between them defeats CollapseRepartition
+    * — r20 advice, the cur5 `cleaned` → nbScore shape). A repartition on
+    * other keys, or one below a join, aggregate or other exchange, says
+    * nothing about how `df`'s rows are spread, so the walk stops there. */
+  private def alreadySpread(df: DataFrame, keys: Seq[Column]): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    @scala.annotation.tailrec
+    def explicitWidth(p: LogicalPlan): Option[RepartitionByExpression] = p match {
+      case r: RepartitionByExpression => Some(r).filter(_.optNumPartitions.isDefined)
+      case _: Project | _: Filter | _: SubqueryAlias | _: ResolvedHint |
+           _: Generate | _: Sample => explicitWidth(p.children.head)
+      case _ => None
+    }
+    explicitWidth(df.queryExecution.analyzed).exists { r =>
+      // `keys` resolved against `df`, the form a repartition node holds
+      val wanted = df.repartition(1, keys: _*).queryExecution.analyzed
+        .asInstanceOf[RepartitionByExpression].partitionExpressions
+      r.partitionExpressions.corresponds(wanted)(_ semanticEquals _)
     }
   }
 }

@@ -70,8 +70,8 @@ object Clustering {
     // (disjoint per-file zkey intervals) holds for ANY boundary choice,
     // and z1's gate reads the rows back boundary-independently. If a
     // second consumer of the ranged frame is ever added, pin the
-    // materialization with .localCheckpoint(false) like the other two
-    // sites.
+    // materialization with .localCheckpoint(false) like
+    // Warehouse.rangedRunningSum.
     df.withColumn("zkey", zValue(col(aCol), col(bCol), bits))
       .repartitionByRange(files, col("zkey"))
       .sortWithinPartitions(col("zkey"))

@@ -201,44 +201,35 @@ object Dedup {
   }
 
   /** Caller-facing clustering facade over the two components
-    * algorithms, so a caller can't accidentally pick the wrong regime
-    * (round-12 advice): the min-label path is measured ~1.6× faster on
-    * the clique-ish graphs near-dup producers emit (diameter 1-2, 2
+    * algorithms: the min-label path is measured ~1.6× faster on the
+    * clique-ish graphs near-dup producers emit (diameter 1-2, 2
     * iterations), but needs diameter-many hops — a long transitive
     * chain blows past `maxIters` and throws; the star path is O(log n)
     * rounds at ANY diameter but pays two phases + a verified
-    * set-equality per round. Declare the shape:
-    *
-    *  - `deep = false` (default): clique-ish pair graphs — LSH/simhash/
-    *    cosine near-dup output, where every member pairs with most
-    *    others. Dispatches to [[components]].
-    *  - `deep = true`: possibly-deep graphs — transitive chains
-    *    (A≈B≈C… without A≈C), entity-resolution edges, anything whose
-    *    diameter is unknown. Dispatches to [[componentsAlternating]].
+    * set-equality per round. So the facade runs [[components]] for at
+    * most [[MinLabelFallbackIters]] rounds and falls back to
+    * [[componentsAlternating]] when the graph turns out deeper. A caller
+    * that knows its graph is deep (transitive chains, entity-resolution
+    * edges) calls [[componentsAlternating]] directly.
     *
     * Both produce the identical (id, cluster_id = component minimum)
-    * contract for every id in `pairs` — hash-interchangeable, so a
-    * wrong declaration costs time (or a loud maxIters failure), never
-    * correctness. */
-  def clusters(pairs: DataFrame, aCol: String, bCol: String,
-               deep: Boolean = false,
-               minLabelBudget: Int = MinLabelFallbackIters): DataFrame =
-    if (deep) componentsAlternating(pairs, aCol, bCol)
-    else
-      try components(pairs, aCol, bCol, maxIters = minLabelBudget)
-      catch {
-        case _: ComponentsDidNotConverge =>
-          // the caller's shallow assumption was wrong — rescue with the
-          // O(log n)-round star path instead of failing the job. The
-          // wasted budget is bounded: `minLabelBudget` min-label rounds
-          // (~budget × the per-round cost) plus one upstream re-derivation.
-          // Dispatch is on the dedicated exception TYPE (round-14 advice) —
-          // a reworded message cannot silently disable the rescue.
-          componentsAlternating(pairs, aCol, bCol)
-      }
+    * contract for every id in `pairs` — hash-interchangeable, so the
+    * fallback costs time, never correctness. */
+  def clusters(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
+    try components(pairs, aCol, bCol, maxIters = MinLabelFallbackIters)
+    catch {
+      case _: ComponentsDidNotConverge =>
+        // the shallow assumption was wrong — rescue with the O(log n)-
+        // round star path instead of failing the job. The wasted budget
+        // is bounded: MinLabelFallbackIters min-label rounds (~budget ×
+        // the per-round cost) plus one upstream re-derivation. Dispatch
+        // is on the dedicated exception TYPE (round-14 advice) — a
+        // reworded message cannot silently disable the rescue.
+        componentsAlternating(pairs, aCol, bCol)
+    }
 
-  /** Min-label iteration budget before [[clusters]] (deep = false)
-    * falls back to the star path. Pinned from tools/ChainProbe,
+  /** Min-label iteration budget before [[clusters]] falls back to the
+    * star path. Pinned from tools/ChainProbe,
     * deleted after 17eacc8 (10⁶
     * edges, quiet box): min-label wins at diameter ≤ 7 (4.4–7.6 s vs
     * star's 6.6–10.5 s — star pays ~13–15 s of fixed O(log n)-round

@@ -5,12 +5,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing: image/audio/video as opaque `binary`
-  * columns with a typed metadata struct, plus batch-shaped decode /
-  * feature-extract / frame-sample operators.
+  * columns with a typed metadata struct, plus decode / feature-extract /
+  * frame-sample operators.
   *
-  * Two decode kernels share the batched `mapPartitions` execution shape
-  * (iterator → fixed-size batches → per-batch kernel, the Scala analogue
-  * of `mapInPandas` arrow batches):
+  * Two decode kernels share the per-row `mapPartitions` execution shape
+  * (codec machinery set up once per partition, one decode per row):
   *
   *  - [[decodeImageFeatures]] is a REAL codec: `javax.imageio` image
   *    decode (format sniffed from the bytes) with three real in-JVM
@@ -58,14 +57,6 @@ object Multimodal {
     }
   }
 
-  val MediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("media", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("format", StringType, nullable = true),
-      StructField("n_bytes", IntegerType, nullable = true),
-      StructField("channels", IntegerType, nullable = true))), nullable = true)))
-
   /** Build a media table from the documents table: the UTF-8 bytes of
     * `text` stand in for an encoded media payload. */
   def fromDocuments(docs: DataFrame): DataFrame =
@@ -87,7 +78,7 @@ object Multimodal {
     bytes.foldLeft(0L)((acc, b) => (acc * 31 + (b & 0xFF)) % 1000000007L)
 
   /** THE generic decode surface (r17 verdict #7: the real m4–m7 kernels
-    * now flow THROUGH this one batched path instead of beside it).
+    * now flow THROUGH this one path instead of beside it).
     * Dispatches on `meta.format` and emits features over the DECODED
     * byte domain:
     *
@@ -102,13 +93,13 @@ object Multimodal {
     *    container lacks) → the documented byte-level STAND-IN: the
     *    domain is the raw container bytes. This fallback is the honest
     *    plumbing contract for absent codecs — a production kernel slots
-    *    the format's decoder into this same per-batch position.
+    *    the format's decoder into this same per-row position.
     *
-    * Executes as mapPartitions with fixed-size batches — the decode
-    * kernel sees `batchSize` payloads at a time, the shape vectorized
-    * codecs want. Output: (media_id, format, n_bytes, first_byte,
-    * checksum) over the decoded domain, uniform across formats. */
-  def decodeFeatures(media: DataFrame, batchSize: Int = 64): DataFrame = {
+    * Executes as mapPartitions, one decode per row with the codec
+    * machinery cached per partition. Output: (media_id, format, n_bytes,
+    * first_byte, checksum) over the decoded domain, uniform across
+    * formats. */
+  def decodeFeatures(media: DataFrame): DataFrame = {
     val out = StructType(Seq(
       StructField("media_id", LongType, nullable = false),
       StructField("format", StringType, nullable = false),
@@ -128,37 +119,33 @@ object Multimodal {
     media.mapPartitions { rows =>
       javax.imageio.ImageIO.setUseCache(false)
       val wavReader = new CachedWavReader
-      rows.grouped(batchSize).flatMap { batch =>
-        // per-batch decode kernel — dispatch once per row, decode with
-        // the per-partition cached codec machinery
-        batch.iterator.map { r =>
-          val id = r.getLong(idIdx)
-          // media is declared nullable — treat a null payload as empty
-          val bytes = Option(r.getAs[Array[Byte]](mediaIdx)).getOrElse(Array.emptyByteArray)
-          val fmt = Option(r.getStruct(metaIdx)).flatMap(m =>
-            Option(m.getString(fmtIdx))).getOrElse("bin")
-          val decoded = fmt match {
-            case "png" | "bmp" | "jpeg" if bytes.nonEmpty =>
-              val img = javax.imageio.ImageIO.read(
-                new java.io.ByteArrayInputStream(bytes))
-              require(img != null, s"decodeFeatures: undecodable $fmt payload")
-              val raster = img.getRaster
-              val (w, h) = (img.getWidth, img.getHeight)
-              val px = new Array[Byte](w * h)
-              var y = 0
-              while (y < h) {
-                var x = 0
-                while (x < w) { px(y * w + x) = raster.getSample(x, y, 0).toByte; x += 1 }
-                y += 1
-              }
-              px
-            case "wav" if bytes.nonEmpty =>
-              wavReader.open(bytes).readAllBytes()
-            case _ => bytes // STAND-IN: no codec for this format in-container
-          }
-          Row(id, fmt, decoded.length,
-            if (decoded.isEmpty) -1 else decoded(0) & 0xFF, byteChecksum(decoded))
+      rows.map { r =>
+        val id = r.getLong(idIdx)
+        // media is declared nullable — treat a null payload as empty
+        val bytes = Option(r.getAs[Array[Byte]](mediaIdx)).getOrElse(Array.emptyByteArray)
+        val fmt = Option(r.getStruct(metaIdx)).flatMap(m =>
+          Option(m.getString(fmtIdx))).getOrElse("bin")
+        val decoded = fmt match {
+          case "png" | "bmp" | "jpeg" if bytes.nonEmpty =>
+            val img = javax.imageio.ImageIO.read(
+              new java.io.ByteArrayInputStream(bytes))
+            require(img != null, s"decodeFeatures: undecodable $fmt payload")
+            val raster = img.getRaster
+            val (w, h) = (img.getWidth, img.getHeight)
+            val px = new Array[Byte](w * h)
+            var y = 0
+            while (y < h) {
+              var x = 0
+              while (x < w) { px(y * w + x) = raster.getSample(x, y, 0).toByte; x += 1 }
+              y += 1
+            }
+            px
+          case "wav" if bytes.nonEmpty =>
+            wavReader.open(bytes).readAllBytes()
+          case _ => bytes // STAND-IN: no codec for this format in-container
         }
+        Row(id, fmt, decoded.length,
+          if (decoded.isEmpty) -1 else decoded(0) & 0xFF, byteChecksum(decoded))
       }
     }(enc)
   }
@@ -275,15 +262,13 @@ object Multimodal {
   /** Decode image payloads (PNG or JPEG — `ImageIO.read` sniffs the
     * container from the bytes) and emit per-image pixel statistics:
     * dimensions, mean luminance (fixed row-major summation), and the two
-    * corner pixels. The REAL counterpart of the [[decodeFeatures]] stub —
-    * batched like a vectorized codec wants.
+    * corner pixels. The REAL counterpart of the [[decodeFeatures]] stub.
     * Output: (media_id, width, height, mean_px, px_first, px_last);
     * with `markers=true` a trailing `soi_eoi_ok` boolean is computed in
     * the SAME kernel pass (JPEG payload starts FFD8 / ends FFD9) — the
     * m5 oracle's container-integrity bit without a second codec pass or
     * a join back to the payload. */
-  def decodeImageFeatures(png: DataFrame, batchSize: Int = 64,
-                          payloadCol: String = "png",
+  def decodeImageFeatures(png: DataFrame, payloadCol: String = "png",
                           markers: Boolean = false): DataFrame = {
     val base = Seq(
       StructField("media_id", LongType, nullable = false),
@@ -300,34 +285,30 @@ object Multimodal {
     val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(out)
     png.mapPartitions { rows =>
       javax.imageio.ImageIO.setUseCache(false)
-      rows.grouped(batchSize).flatMap { batch =>
-        // per-batch decode kernel — a vectorized codec would take the
-        // whole batch at once; ImageIO decodes per image
-        batch.iterator.map { r =>
-          val bytes = r.getAs[Array[Byte]](pngIdx)
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(bytes))
-          require(img != null, "decodeImageFeatures: undecodable payload")
-          val (w, h) = (img.getWidth, img.getHeight)
-          val raster = img.getRaster
-          var sum = 0L
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) { sum += raster.getSample(x, y, 0); x += 1 }
-            y += 1
-          }
-          val stats = Seq[Any](r.getLong(idIdx), w, h,
-            sum.toDouble / (w.toLong * h),
-            raster.getSample(0, 0, 0), raster.getSample(w - 1, h - 1, 0))
-          if (markers) {
-            val n = bytes.length
-            val ok = n >= 4 &&
-              (bytes(0) & 0xFF) == 0xFF && (bytes(1) & 0xFF) == 0xD8 &&
-              (bytes(n - 2) & 0xFF) == 0xFF && (bytes(n - 1) & 0xFF) == 0xD9
-            Row.fromSeq(stats :+ ok)
-          } else Row.fromSeq(stats)
+      rows.map { r =>
+        val bytes = r.getAs[Array[Byte]](pngIdx)
+        val img = javax.imageio.ImageIO.read(
+          new java.io.ByteArrayInputStream(bytes))
+        require(img != null, "decodeImageFeatures: undecodable payload")
+        val (w, h) = (img.getWidth, img.getHeight)
+        val raster = img.getRaster
+        var sum = 0L
+        var y = 0
+        while (y < h) {
+          var x = 0
+          while (x < w) { sum += raster.getSample(x, y, 0); x += 1 }
+          y += 1
         }
+        val stats = Seq[Any](r.getLong(idIdx), w, h,
+          sum.toDouble / (w.toLong * h),
+          raster.getSample(0, 0, 0), raster.getSample(w - 1, h - 1, 0))
+        if (markers) {
+          val n = bytes.length
+          val ok = n >= 4 &&
+            (bytes(0) & 0xFF) == 0xFF && (bytes(1) & 0xFF) == 0xD8 &&
+            (bytes(n - 2) & 0xFF) == 0xFF && (bytes(n - 1) & 0xFF) == 0xD9
+          Row.fromSeq(stats :+ ok)
+        } else Row.fromSeq(stats)
       }
     }(enc)
   }
@@ -340,7 +321,7 @@ object Multimodal {
     * so [[decodeWavFeatures]] recovers exactly the source samples — like
     * PNG (m4) and unlike JPEG (m5), a SQL oracle can verify the full
     * encode→decode round trip against the original payload bytes.
-    * Same batched `mapPartitions` codec-boundary shape as the image
+    * Same `mapPartitions` codec-boundary shape as the image
     * kernels. Output: (media_id, wav BINARY). */
   def encodeWav(media: DataFrame, nSamples: Int = 64,
                 sampleRate: Int = 16000): DataFrame = {
@@ -388,12 +369,11 @@ object Multimodal {
   /** Decode WAV payloads (real `javax.sound.sampled` container + format
     * parse — sample rate, bit depth, and frame count come from the RIFF
     * header, not from trust) and emit per-clip sample statistics. The
-    * audio counterpart of [[decodeImageFeatures]], batched the same way.
+    * audio counterpart of [[decodeImageFeatures]], run the same way.
     * Output: (media_id, n_samples, sample_rate, amp_first, amp_last,
     * mean_amp) — amplitudes are the decoded signed 16-bit samples; the
     * mean uses a fixed left-to-right integer summation. */
-  def decodeWavFeatures(wav: DataFrame, batchSize: Int = 64,
-                        payloadCol: String = "wav"): DataFrame = {
+  def decodeWavFeatures(wav: DataFrame, payloadCol: String = "wav"): DataFrame = {
     val out = StructType(Seq(
       StructField("media_id", LongType, nullable = false),
       StructField("n_samples", IntegerType, nullable = false),
@@ -407,27 +387,24 @@ object Multimodal {
     wav.mapPartitions { rows =>
       // reader provider cached per partition (see CachedWavReader)
       val reader = new CachedWavReader
-      rows.grouped(batchSize).flatMap { batch =>
-        // per-batch decode kernel (vectorized-codec shape, as elsewhere)
-        batch.iterator.map { r =>
-          val ais = reader.open(r.getAs[Array[Byte]](wavIdx))
-          val fmt = ais.getFormat
-          require(fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1,
-            s"decodeWavFeatures: expected 16-bit mono PCM, got $fmt")
-          val bytes = ais.readAllBytes()
-          val n = bytes.length / 2
-          var sum = 0L
-          var i = 0
-          def sampleAt(j: Int): Int = {
-            // little-endian signed 16-bit (AudioSystem.write's WAV byte order)
-            ((bytes(2 * j + 1) << 8) | (bytes(2 * j) & 0xFF))
-          }
-          while (i < n) { sum += sampleAt(i); i += 1 }
-          Row(r.getLong(idIdx), n, fmt.getSampleRate.toInt,
-            if (n == 0) 0 else sampleAt(0),
-            if (n == 0) 0 else sampleAt(n - 1),
-            if (n == 0) 0.0 else sum.toDouble / n)
+      rows.map { r =>
+        val ais = reader.open(r.getAs[Array[Byte]](wavIdx))
+        val fmt = ais.getFormat
+        require(fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1,
+          s"decodeWavFeatures: expected 16-bit mono PCM, got $fmt")
+        val bytes = ais.readAllBytes()
+        val n = bytes.length / 2
+        var sum = 0L
+        var i = 0
+        def sampleAt(j: Int): Int = {
+          // little-endian signed 16-bit (AudioSystem.write's WAV byte order)
+          ((bytes(2 * j + 1) << 8) | (bytes(2 * j) & 0xFF))
         }
+        while (i < n) { sum += sampleAt(i); i += 1 }
+        Row(r.getLong(idIdx), n, fmt.getSampleRate.toInt,
+          if (n == 0) 0 else sampleAt(0),
+          if (n == 0) 0 else sampleAt(n - 1),
+          if (n == 0) 0.0 else sum.toDouble / n)
       }
     }(enc)
   }
@@ -444,8 +421,7 @@ object Multimodal {
     * extracted from the BINARY payload via substring→hex→conv (works on
     * arbitrary bytes, not just text payloads — spec covers 0x00/0xFF).
     * A real pipeline would hand `substring(media, start+1, winSize)`
-    * slices to the decode kernel (see [[decodeFeatures]] for the batch
-    * shape); the boundary bytes here make the gate verify actual
+    * slices to the decode kernel (see [[decodeFeatures]]); the boundary bytes here make the gate verify actual
     * payload content, not just geometry.
     * Output: (media_id, window_idx, start_byte, first_byte, last_byte). */
   def audioWindows(media: DataFrame, winSize: Int = 400, hop: Int = 160): DataFrame = {

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Sequence packing for training-data pipelines: lay documents
@@ -11,53 +10,27 @@ import org.apache.spark.sql.functions._
   * `start_offset` on the tape, the `bin_id` its first token lands in,
   * and the `bin_offset` within that bin.
   *
-  * Scale shape: the global running sum is the two-level construction
-  * from [[Warehouse.withDenseKeyRanged]] — range-partition by the
-  * order key, per-partition running sums in parallel, then per-partition
-  * totals (O(#partitions) rows) get an exclusive prefix sum on a single
-  * tiny partition and broadcast back. No corpus-sized single-task
-  * window anywhere; the data-sized work is one range exchange.
+  * Scale shape: the tape offsets are [[Warehouse.rangedRunningSum]] —
+  * no corpus-sized single-task window anywhere; the data-sized work is
+  * one range exchange.
   */
 object Packing {
 
   /** Adds `start_offset`, `bin_id`, `bin_offset` for packing
     * `tokenCol`-sized documents in `orderCol` order into `budget`-token
     * bins. Integral arithmetic throughout (`div`/`pmod`) — exact at any
-    * tape length a 64-bit offset can address. */
+    * tape length a 64-bit offset can address. A document's start is the
+    * [[Warehouse.rangedRunningSum]] of the token counts up to and
+    * including it, minus its own count; that helper documents why its
+    * ranged frame is materialized exactly once. */
   def packSequences(df: DataFrame, tokenCol: String, orderCol: String,
-                    budget: Long, partitions: Int = 0): DataFrame = {
+                    budget: Long): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
-    val n = if (partitions > 0) partitions
-            else df.sparkSession.sessionState.conf.numShufflePartitions
-    // The ranked frame MUST materialize exactly once (the
-    // withDenseKeyRanged rule, its second home): both consumers — the
-    // per-partition cumulative sums and the per-partition total
-    // aggregate — depend on the range partitioner's SAMPLED boundaries,
-    // and Spark seeds that sampling from the RDD id. If the two legs
-    // plan separate exchanges (column pruning makes the subtrees
-    // differ, defeating ReuseExchange — observed at sf1 inside cur5's
-    // composed chain, where the offsets described partitions the cum
-    // leg never ranked: nondeterministic start_offsets on identical
-    // rosters, tools/Cur5PreCollapsePin caught it), they sample
-    // DIFFERENT boundaries. The lazy checkpoint pins one
-    // materialization — correctness, not (only) perf.
-    val local = df.repartitionByRange(n, col(orderCol))
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__cum", sum(col(tokenCol).cast("long")).over(
-        Window.partitionBy(col("__pid")).orderBy(col(orderCol))))
-      .localCheckpoint(false)
-    val offW = Window.orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = local.groupBy(col("__pid"))
-      .agg(sum(col(tokenCol).cast("long")).as("__cnt"))
-      .withColumn("__off", coalesce(sum(col("__cnt")).over(offW), lit(0L)))
-      .select(col("__pid"), col("__off"))
-    local.join(broadcast(offsets), Seq("__pid"))
-      .withColumn("start_offset",
-        col("__cum") - col(tokenCol).cast("long") + col("__off"))
+    val tokens = col(tokenCol).cast("long")
+    Warehouse.rangedRunningSum(df, Seq(orderCol), tokens, "start_offset")
+      .withColumn("start_offset", col("start_offset") - tokens)
       .withColumn("bin_id", expr(s"start_offset div ${budget}L"))
       .withColumn("bin_offset", pmod(col("start_offset"), lit(budget)))
-      .drop("__pid", "__cum", "__off")
   }
 
   /** Overlapping token-window chunking — the retrieval/RAG-style

@@ -169,6 +169,6 @@ object Sampling {
                         positionName: String = "position"): DataFrame =
     Warehouse.withDenseKeyRanged(
       df.withColumn("__h", xxhash64(col(keyCol), lit(seed))),
-      positionName, Seq("__h", keyCol), 0L, 0)
+      positionName, Seq("__h", keyCol))
       .drop("__h")
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Cleaning
@@ -37,7 +37,7 @@ object Warehouse {
     *
     * Size-aware dispatch: toy and mid-size dimensions take
     * [[withDenseKeyWindowed]] (one exchange, no sampling pass); anything
-    * whose optimizer stats estimate exceeds `smallThresholdBytes` takes
+    * whose optimizer stats estimate exceeds [[DenseKeySmallBytes]] takes
     * the scale-safe [[withDenseKeyRanged]] path. The estimate comes from
     * `optimizedPlan.stats` — driver-side plan metadata (file sizes ×
     * filter/project selectivity), no job. For UNIQUE `orderCol` values
@@ -45,68 +45,67 @@ object Warehouse {
     * never change results; with duplicate keys both variants break ties
     * nondeterministically (and differently), as any `row_number` over a
     * non-unique order does — callers needing stable keys on duplicates
-    * must extend `orderCol` to a unique composite first.
-    *
-    * An explicit `partitions > 0` is a request for the ranged path (the
-    * windowed variant has no partition knob), so it bypasses the size
-    * estimate. */
+    * must extend `orderCol` to a unique composite first. */
   def withDenseKey(df: DataFrame, keyName: String, orderCol: String,
-                   offset: Long = 0L, partitions: Int = 0,
-                   smallThresholdBytes: Long = DenseKeySmallBytes): DataFrame = {
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (partitions <= 0 && est <= BigInt(smallThresholdBytes))
+                   offset: Long = 0L): DataFrame =
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(DenseKeySmallBytes))
       withDenseKeyWindowed(df, keyName, orderCol, offset)
-    else withDenseKeyRanged(df, keyName, orderCol, offset, partitions)
-  }
+    else withDenseKeyRanged(df, keyName, Seq(orderCol), offset)
 
-  /** Scale-safe construction (no single-partition pass over the data):
-    *  1. range-repartition by the natural key — partition i holds keys
-    *     strictly below partition i+1's;
-    *  2. row_number within each range bucket (hash exchange on the bucket
-    *     id — every bucket ranks in parallel);
-    *  3. per-bucket cumulative offsets from the bucket-count aggregate —
-    *     the only single-partition window runs over O(#partitions) rows,
-    *     never the dimension itself — broadcast-joined back.
-    * The composed key equals the global `row_number() OVER (ORDER BY
-    * orderCol)` regardless of where the sampled range bounds fall, so the
-    * result is bit-identical to [[withDenseKeyWindowed]] for unique keys.
-    * `offset` carries the max existing key for incremental appends. */
-  def withDenseKeyRanged(df: DataFrame, keyName: String, orderCol: String,
-                         offset: Long = 0L, partitions: Int = 0): DataFrame =
-    withDenseKeyRanged(df, keyName, Seq(orderCol), offset, partitions)
-
-  /** Multi-column variant: rank order is the lexicographic tuple of
-    * `orderCols` — the form a deterministic global shuffle needs
-    * (hash-then-id ordering; see [[Sampling.shuffledPositions]]). */
+  /** Scale-safe dense key (no single-partition pass over the data): the
+    * [[rangedRunningSum]] of 1 per row, which equals the global
+    * `row_number() OVER (ORDER BY orderCols)` wherever the sampled range
+    * bounds fall — bit-identical to [[withDenseKeyWindowed]] for unique
+    * keys. Rank order is the lexicographic tuple of `orderCols` (the
+    * form a deterministic global shuffle needs; see
+    * [[Sampling.shuffledPositions]]). `offset` carries the max existing
+    * key for incremental appends. */
   def withDenseKeyRanged(df: DataFrame, keyName: String, orderCols: Seq[String],
-                         offset: Long, partitions: Int): DataFrame = {
-    val n = if (partitions > 0) partitions
-            else df.sparkSession.sessionState.conf.numShufflePartitions
+                         offset: Long = 0L): DataFrame =
+    rangedRunningSum(df, orderCols, lit(1L), keyName)
+      .withColumn(keyName, col(keyName) + lit(offset))
+
+  /** `df` plus `out`: the global inclusive running sum of `weight` in
+    * `orderCols` order, built without a single-partition pass over the
+    * data:
+    *  1. range-repartition by `orderCols` to the session's shuffle width
+    *     — partition i holds keys strictly below partition i+1's;
+    *  2. a running sum within each range partition (a ROWS frame, so
+    *     every partition sums in parallel and ties never share a value);
+    *  3. per-partition totals (O(#partitions) rows) get an exclusive
+    *     prefix sum on one tiny partition and are broadcast-joined back.
+    * The result does not depend on where the sampled bounds fall. An
+    * all-null prefix sums to 0, not null, so `out` is non-nullable. */
+  private[graft] def rangedRunningSum(df: DataFrame, orderCols: Seq[String],
+                                      weight: Column, out: String): DataFrame = {
+    val n = df.sparkSession.sessionState.conf.numShufflePartitions
     val cols = orderCols.map(col)
-    // The ranked frame MUST materialize exactly once: both consumers
-    // (the per-bucket counts and the join leg) depend on the range
+    // The ranged frame MUST materialize exactly once: both consumers
+    // (the per-partition totals and the join leg) depend on the range
     // partitioner's SAMPLED boundaries, and Spark seeds that sampling
     // from the RDD id — if the two legs plan separate exchanges (e.g.
     // column pruning makes the subtrees differ, defeating
-    // ReuseExchange; observed at sf1 in ds4), they sample DIFFERENT
-    // boundaries and the offsets no longer describe the partitions the
-    // join leg ranked, silently corrupting every key past the first
-    // divergent bucket. The lazy checkpoint pins one materialization —
-    // correctness, not (only) perf.
+    // ReuseExchange; observed at sf1 in ds4 and inside cur5's packing),
+    // they sample DIFFERENT boundaries and the offsets no longer
+    // describe the partitions the join leg summed, silently corrupting
+    // every value past the first divergent partition. The lazy
+    // checkpoint pins one materialization — correctness, not (only)
+    // perf.
     val local = df.repartitionByRange(n, cols: _*)
       .withColumn("__pid", spark_partition_id())
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("__pid")).orderBy(cols: _*)))
+      .withColumn("__cum", coalesce(sum(weight).over(
+        Window.partitionBy(col("__pid")).orderBy(cols: _*)
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)), lit(0L)))
       .localCheckpoint(false)
     val offW = Window.orderBy(col("__pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val offsets = local.groupBy(col("__pid"))
-      .agg(count(lit(1)).as("__cnt"))
-      .withColumn("__off", coalesce(sum(col("__cnt")).over(offW), lit(0L)))
+      .agg(sum(weight).as("__tot"))
+      .withColumn("__off", coalesce(sum(col("__tot")).over(offW), lit(0L)))
       .select(col("__pid"), col("__off"))
     local.join(broadcast(offsets), Seq("__pid"))
-      .withColumn(keyName, col("__rn") + col("__off") + lit(offset))
-      .drop("__pid", "__rn", "__off")
+      .withColumn(out, col("__cum") + col("__off"))
+      .drop("__pid", "__cum", "__off")
   }
 
   /** The global-window variant: a single-partition sort of the whole
@@ -143,10 +142,9 @@ object Warehouse {
     * and then selects none of its columns — provably dead work: date_id
     * is unique in dim_date, so a left join can neither drop nor duplicate
     * rows, and Catalyst cannot eliminate it (it can't see the uniqueness).
-    * The engine omits the join — identical output, one fewer join stage.
-    * (dimDate still accepted so the signature documents the dependency
-    * and callers can re-enable validation if they want an INNER check.) */
-  def dimFunds(funds: DataFrame, dimDate: DataFrame): DataFrame = {
+    * The engine omits the join — identical output, one fewer join stage
+    * (so do [[fctIpos]] and [[fctAcquisition]]). */
+  def dimFunds(funds: DataFrame): DataFrame = {
     funds
       .withColumn("name", trim(lower(col("name"))))
       .withColumn("source_description", trim(lower(col("source_description"))))
@@ -226,16 +224,15 @@ object Warehouse {
   }
 
   /** fct_ipos (extract_transform.py:349-448): int-cast natural id, company
-    * key lookup (inner), date FK (left), two USD conversions, stock-symbol
-    * cleanse, description normalize. */
-  def fctIpos(ipos: DataFrame, dimCompany: DataFrame, dimDate: DataFrame): DataFrame = {
+    * key lookup (inner), date FK, two USD conversions, stock-symbol
+    * cleanse, description normalize. The reference's left join to
+    * dim_date selects no column and is dropped, as in [[dimFunds]]. */
+  def fctIpos(ipos: DataFrame, dimCompany: DataFrame): DataFrame = {
     val comp  = broadcast(dimCompany.select("sk_company_id", "nk_company_id"))
-    val dates = broadcast(dimDate.select("date_id"))
     ipos
       .withColumn("ipo_id", col("ipo_id").cast("integer"))
       .join(comp, col("object_id") === comp("nk_company_id"), "inner")
       .withColumn("public_date_id", Cleaning.dateKey(col("public_at")))
-      .join(dates, col("public_date_id") === dates("date_id"), "left")
       .withColumn("valuation_amount_usd",
         Cleaning.toUsd(col("valuation_currency_code"), col("valuation_amount")))
       .withColumn("raised_amount_usd",
@@ -303,16 +300,16 @@ object Warehouse {
 
   /** fct_acquisition (extract_transform.py:451-565): the dim_company
     * self-join in two roles (acquiring/acquired) via aliased+renamed key
-    * pairs, date FK (left), USD price, term-code/description cleanse. */
-  def fctAcquisition(acquisition: DataFrame, dimCompany: DataFrame,
-                     dimDate: DataFrame): DataFrame = {
+    * pairs, date FK, USD price, term-code/description cleanse. The
+    * reference's left join to dim_date selects no column and is dropped,
+    * as in [[dimFunds]]. */
+  def fctAcquisition(acquisition: DataFrame, dimCompany: DataFrame): DataFrame = {
     val acq = broadcast(dimCompany.select(
       col("sk_company_id").as("sk_acquiring_company_id"),
       col("nk_company_id").as("nk_acquiring_company_id")))
     val acd = broadcast(dimCompany.select(
       col("sk_company_id").as("sk_acquired_company_id"),
       col("nk_company_id").as("nk_acquired_company_id")))
-    val dates = broadcast(dimDate.select("date_id"))
 
     val termClean = trim(lower(col("term_code")))
     val descClean = trim(lower(col("source_description")))
@@ -320,7 +317,6 @@ object Warehouse {
       .join(acq, col("acquiring_object_id") === acq("nk_acquiring_company_id"), "inner")
       .join(acd, col("acquired_object_id") === acd("nk_acquired_company_id"), "inner")
       .withColumn("acquired_date_id", Cleaning.dateKey(col("acquired_at")))
-      .join(dates, col("acquired_date_id") === dates("date_id"), "left")
       .withColumn("price_amount_usd",
         Cleaning.toUsd(col("price_currency_code"), col("price_amount")))
       .withColumn("term_code", when(termClean === "", lit(null)).otherwise(termClean))

@@ -114,9 +114,9 @@ object VcPipeline {
       .add(tableStage("dim_company", Seq("stg_company"),
         f => dimFrame("dim_company", "sk_company_id", "nk_company_id",
           Warehouse.dimCompany(f("stg_company")))))
-      .add(tableStage("dim_funds", Seq("stg_funds", "dim_date"),
+      .add(tableStage("dim_funds", Seq("stg_funds"),
         f => dimFrame("dim_funds", "sk_fund_id", "nk_fund_id",
-          Warehouse.dimFunds(f("stg_funds"), f("dim_date")))))
+          Warehouse.dimFunds(f("stg_funds")))))
       .add(tableStage("dim_people", Seq("stg_people"),
         f => dimFrame("dim_people", "sk_people_id", "nk_people_id",
           Warehouse.dimPeople(f("stg_people")))))
@@ -127,12 +127,12 @@ object VcPipeline {
         f => factFrame("fct_investments", Seq("dd_investment_id"),
           Warehouse.fctInvestments(f("stg_investments"), f("dim_company"),
             f("dim_funds"), f("dim_date"), f("stg_funding_rounds")))))
-      .add(tableStage("fct_ipos", Seq("stg_ipos", "dim_company", "dim_date"),
+      .add(tableStage("fct_ipos", Seq("stg_ipos", "dim_company"),
         f => factFrame("fct_ipos", Seq("dd_ipo_id"),
-          Warehouse.fctIpos(f("stg_ipos"), f("dim_company"), f("dim_date")))))
-      .add(tableStage("fct_acquisition", Seq("stg_acquisition", "dim_company", "dim_date"),
+          Warehouse.fctIpos(f("stg_ipos"), f("dim_company")))))
+      .add(tableStage("fct_acquisition", Seq("stg_acquisition", "dim_company"),
         f => factFrame("fct_acquisition", Seq("dd_acquisition_id"),
-          Warehouse.fctAcquisition(f("stg_acquisition"), f("dim_company"), f("dim_date")))))
+          Warehouse.fctAcquisition(f("stg_acquisition"), f("dim_company")))))
       .add(tableStage("bridge_company_people",
         Seq("stg_relationships", "dim_company", "dim_people"),
         f => factFrame("bridge_company_people",

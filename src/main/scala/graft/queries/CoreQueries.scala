@@ -95,11 +95,12 @@ object CoreQueries {
     // Calls the RANGED variant explicitly (not the size dispatcher, which
     // would route every tested scale to the windowed path) so the oracle
     // gate keeps covering the production scale path: range buckets +
-    // per-bucket rank + cumulative offsets, no single-partition pass.
+    // per-bucket running count + cumulative offsets, no single-partition
+    // pass.
     "w1_surrogate_keys" -> { (s, d) =>
       graft.operators.Warehouse.withDenseKeyRanged(
         customer(s, d).select(col("c_custkey"), col("c_name")),
-        "sk_customer_id", "c_custkey", offset = 100L)
+        "sk_customer_id", Seq("c_custkey"), offset = 100L)
         .orderBy(col("c_custkey"))
     },
 

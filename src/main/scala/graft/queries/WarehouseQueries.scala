@@ -65,7 +65,7 @@ object WarehouseQueries {
 
   private def dimFundsKeyed(s: SparkSession, d: String): DataFrame =
     Warehouse.withDenseKey(
-      Warehouse.dimFunds(fundsStaging(s, d), DimDate.build(s)),
+      Warehouse.dimFunds(fundsStaging(s, d)),
       "sk_fund_id", "nk_fund_id")
 
   /** staging.investments from orders. */
@@ -198,7 +198,7 @@ object WarehouseQueries {
         .orderBy(col("dd_investment_id"))
     },
     "fct_ipos_build" -> { (s, d) =>
-      Warehouse.fctIpos(iposStaging(s, d), dimCompanyKeyed(s, d), DimDate.build(s))
+      Warehouse.fctIpos(iposStaging(s, d), dimCompanyKeyed(s, d))
         .withColumn("valuation_amount_usd", col("valuation_amount_usd").cast("double"))
         .withColumn("raised_amount_usd", col("raised_amount_usd").cast("double"))
         .orderBy(col("dd_ipo_id"))
@@ -236,7 +236,7 @@ object WarehouseQueries {
     "fct_acquisition_build" -> { (s, d) =>
       // dd_acquisition_id collides when (l_orderkey, l_linenumber) repeats
       // in the synthetic lineitem — extend the sort to all non-null cols.
-      Warehouse.fctAcquisition(acquisitionStaging(s, d), dimCompanyKeyed(s, d), DimDate.build(s))
+      Warehouse.fctAcquisition(acquisitionStaging(s, d), dimCompanyKeyed(s, d))
         .withColumn("price_amount_usd", col("price_amount_usd").cast("double"))
         .orderBy(col("dd_acquisition_id"), col("price_amount_usd"),
           col("acquired_at"), col("sk_acquiring_company_id"), col("sk_acquired_company_id"))

@@ -12,6 +12,15 @@ class DatasetSpec extends SparkSpec {
   private val d = "/root/testdata/sf0.01"
   private def docs = graft.Tables.documents(spark, d)
 
+  /** Runs `body` at a session shuffle width of `n`, the width the ranged
+    * running sum behind packSequences partitions to. */
+  private def withShufflePartitions[A](n: Int)(body: => A): A = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try body finally spark.conf.set(key, prev)
+  }
+
   test("sampleByHash is deterministic and partition-independent") {
     val a = Sampling.sampleByHash(docs.repartition(1), "doc_id", 0.3, 42L)
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
@@ -86,9 +95,9 @@ class DatasetSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    try withShufflePartitions(8) {
       val in = (1L to 5000L).map(i => (i, (i % 13).toInt + 1)).toDF("id", "toks")
-      val df = Packing.packSequences(in, "toks", "id", 64L, partitions = 8)
+      val df = Packing.packSequences(in, "toks", "id", 64L)
       assert(df.count() == 5000)
       val singles = df.queryExecution.executedPlan.collect {
         case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition => e
@@ -129,10 +138,12 @@ class DatasetSpec extends SparkSpec {
 
   test("packSequences is partition-count independent") {
     val in = (1L to 1000L).map(i => (i, (i % 17).toInt + 1)).toDF("id", "toks")
-    val a = Packing.packSequences(in, "toks", "id", 64L, partitions = 1)
-      .orderBy("id").select("start_offset").collect().map(_.getLong(0)).toSeq
-    val b = Packing.packSequences(in, "toks", "id", 64L, partitions = 7)
-      .orderBy("id").select("start_offset").collect().map(_.getLong(0)).toSeq
+    def offsets(partitions: Int) = withShufflePartitions(partitions) {
+      Packing.packSequences(in, "toks", "id", 64L)
+        .orderBy("id").select("start_offset").collect().map(_.getLong(0)).toSeq
+    }
+    val a = offsets(1)
+    val b = offsets(7)
     assert(a == b)
     // exclusive prefix sum sanity: last start = total - last size
     val total = in.agg(sum($"toks")).first().getLong(0)

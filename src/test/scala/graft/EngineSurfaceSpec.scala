@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins the engine's one-of-each surfaces: every main, tool and spec
   * builds its session through [[graft.core.GraftSession.builder]], so no
   * other main source may call Spark's session builder itself; every
-  * custom function is injected by the one registry; and every MinHash
-  * signature frame is built through the one aggregate site. */
+  * custom function is injected by the one registry; every MinHash
+  * signature frame is built through the one aggregate site; and every
+  * global running sum goes through the one ranged construction. */
 class EngineSurfaceSpec extends AnyFunSuite {
   private def mainSources: Seq[Path] = {
     val root = Paths.get("src/main/scala")
@@ -43,5 +44,24 @@ class EngineSurfaceSpec extends AnyFunSuite {
       Seq.fill(ctor.findAllIn(Files.readString(p)).length)(p.toString))
     assert(sites.size == 1,
       s"build signatures through Dedup.minhashAgg: ${sites.size} sites in ${sites.distinct.sorted.mkString(", ")}")
+  }
+
+  test("one ranged running sum: spark_partition_id at 1 code site, repartitionByRange at 2") {
+    // code lines only — a comment citing the API is not a site
+    def codeSites(word: String) = mainSources.flatMap { p =>
+      Files.readAllLines(p).asScala.toSeq.filter { line =>
+        val t = line.trim
+        line.contains(word) && !(t.startsWith("//") || t.startsWith("*") || t.startsWith("/*"))
+      }.map(_ => p.toString)
+    }.sorted
+    val warehouse = "src/main/scala/graft/operators/Warehouse.scala"
+    val pid = codeSites("spark_partition_id")
+    assert(pid == Seq(warehouse),
+      s"build per-partition offsets through Warehouse.rangedRunningSum: ${pid.mkString(", ")}")
+    // the other range exchange is Clustering's contract-marked
+    // single-consumer write (RangeExchangeAuditSpec)
+    val ranged = codeSites("repartitionByRange")
+    assert(ranged == Seq("src/main/scala/graft/operators/Clustering.scala", warehouse),
+      s"range-partition through Warehouse.rangedRunningSum: ${ranged.mkString(", ")}")
   }
 }

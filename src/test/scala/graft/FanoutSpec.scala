@@ -106,6 +106,26 @@ class FanoutSpec extends SparkSpec {
     assert(n == 1, s"expected exactly one fan-out exchange, got $n")
   }
 
+  test("spread ignores explicit repartitions on other keys or behind a join") {
+    // only a same-key repartition that still shapes the frame's rows
+    // (reached through narrow nodes) means the frame is already spread
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+    def spreadsOn(df: org.apache.spark.sql.DataFrame, key: String): Boolean =
+      Fanout.spread(df, col(key)).queryExecution.analyzed match {
+        case r: RepartitionByExpression => r.partitionExpressions.toString.contains(key)
+        case _ => false
+      }
+    val docs = graft.Tables.documents(spark, dBig)
+    val otherKey = docs.repartition(2, col("lang"))
+      .select(col("doc_id"), upper(col("text")).as("text"))
+    assert(spreadsOn(otherKey, "doc_id"),
+      "a repartition on another key must not suppress the doc_id spread")
+    val behindJoin = docs.repartition(2, col("doc_id"))
+      .join(docs.select(col("doc_id"), col("lang").as("lang2")), "doc_id")
+    assert(spreadsOn(behindJoin, "doc_id"),
+      "a repartition below a join must not suppress the spread above it")
+  }
+
   test("fan-out changes no results (minhash pairs bit-identical)") {
     val corpus = graft.queries.TextQueries.nearDupCorpus(spark, dBig)
     def pairs() = graft.operators.Dedup.minhashLshPairs(

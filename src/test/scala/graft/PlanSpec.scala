@@ -106,10 +106,10 @@ class PlanSpec extends SparkSpec {
     // AQE off so executedPlan exposes raw exchanges with their metrics
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      // force the scale path (threshold 0) — dispatch picks windowed at sf0.001
-      val df = graft.operators.Warehouse.withDenseKey(
+      // the scale path itself — dispatch picks windowed at sf0.001
+      val df = graft.operators.Warehouse.withDenseKeyRanged(
         graft.Tables.customer(spark, d).select(col("c_custkey"), col("c_name")),
-        "sk", "c_custkey", smallThresholdBytes = 0L)
+        "sk", Seq("c_custkey"))
       assert(df.collect().length > 30)
       val singles = df.queryExecution.executedPlan.collect {
         case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition => e
@@ -130,16 +130,19 @@ class PlanSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(!small.contains("rangepartitioning"),
       s"small dim took the range-bucket path:\n$small")
-    // forced-large -> ranged. The range exchange lives INSIDE the
-    // checkpointed rank frame (one materialization — the boundary
-    // sampling is RDD-id-seeded, so a second execution of the same
-    // subtree can sample different bucket boundaries; both consumers
-    // must read the same one), so the outer plan shows the checkpoint
-    // scan, not the rangepartitioning node.
-    val ranged = graft.operators.Warehouse.withDenseKey(
-      dim, "sk", "c_custkey", smallThresholdBytes = 0L)
+    // large plan -> ranged: the same rows behind an RDD leaf, whose
+    // "unknown" size estimate exceeds DenseKeySmallBytes. The range
+    // exchange lives INSIDE the checkpointed rank frame (one
+    // materialization — the boundary sampling is RDD-id-seeded, so a
+    // second execution of the same subtree can sample different bucket
+    // boundaries; both consumers must read the same one), so the outer
+    // plan shows the checkpoint scan, not the rangepartitioning node.
+    val large = spark.createDataFrame(dim.rdd, dim.schema)
+    assert(large.queryExecution.optimizedPlan.stats.sizeInBytes >
+      BigInt(graft.operators.Warehouse.DenseKeySmallBytes))
+    val ranged = graft.operators.Warehouse.withDenseKey(large, "sk", "c_custkey")
     val rplan = ranged.queryExecution.executedPlan.toString
-    assert(rplan.contains("Scan ExistingRDD"),
+    assert(rplan.contains("Scan ExistingRDD") && rplan.contains("__pid"),
       s"ranged arm did not materialize the rank frame once:\n$rplan")
     assert(!rplan.contains("rangepartitioning"), // it's inside the checkpoint
       s"range exchange leaked outside the single materialization:\n$rplan")

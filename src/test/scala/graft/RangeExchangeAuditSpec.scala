@@ -12,7 +12,9 @@ import scala.jdk.CollectionConverters._
   * DIFFERENT boundaries and any per-partition arithmetic built on them
   * (spark_partition_id + offsets) silently corrupts. This bug shipped
   * twice — `Warehouse.withDenseKeyRanged` (r14) and
-  * `Packing.packSequences` (r16) — each time invisible at sf0.01.
+  * `Packing.packSequences` (r16) — each time invisible at sf0.01. Both
+  * now share one site, `Warehouse.rangedRunningSum`; the other is
+  * `Clustering.clusteredWrite`'s single-consumer write.
   *
   * The audit: every `repartitionByRange` call site in src/main must,
   * within its enclosing expression (the following lines up to the next

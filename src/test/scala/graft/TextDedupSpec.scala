@@ -264,19 +264,19 @@ class TextDedupSpec extends SparkSpec {
     val clique = Seq((10L,11L),(10L,12L),(11L,12L),(20L,21L)).toDF("id_a","id_b")
     val shallow = Dedup.clusters(clique, "id_a", "id_b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
-    val viaDeep = Dedup.clusters(clique, "id_a", "id_b", deep = true)
+    val viaDeep = Dedup.componentsAlternating(clique, "id_a", "id_b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
     assert(shallow == viaDeep && shallow ==
       Set(10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L), shallow)
     // deep-chain input (diameter 59, far past the min-label budget): the
     // default regime exhausts its budget and the facade RESCUES via the
     // star path — correct clusters, never a silent split, no user
-    // foresight required. deep=true goes straight to the star path.
+    // foresight required. componentsAlternating is the star path itself.
     val chain = (0L until 59L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val rescued = Dedup.clusters(chain, "id_a", "id_b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((0L to 59L).forall(rescued(_) == 0L), rescued.filter(_._2 != 0L).take(5))
-    val deep = Dedup.clusters(chain, "id_a", "id_b", deep = true)
+    val deep = Dedup.componentsAlternating(chain, "id_a", "id_b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((0L to 59L).forall(deep(_) == 0L), deep.filter(_._2 != 0L).take(5))
     // the raw operator keeps its loud-failure contract for callers that

@@ -37,12 +37,12 @@ class WarehouseSpec extends SparkSpec {
       ("fd2", "f:2", "Beta", Date.valueOf("2035-01-01"), BigDecimal("50.00"), "ZZZ", "   ")
     ).toDF("fund_id", "object_id", "name", "funded_at", "raised_amount",
       "raised_currency_code", "source_description")
-    val got = Warehouse.dimFunds(funds, dimDate).orderBy("nk_fund_id").collect()
+    val got = Warehouse.dimFunds(funds).orderBy("nk_fund_id").collect()
     assert(got(0).getAs[String]("fund_name") == "alpha fund")
     assert(got(0).getAs[java.math.BigDecimal]("raised_amount_usd").toString == "114.00")
     assert(got(0).getAs[Int]("funded_at") == 20040228)
     assert(got(0).getAs[String]("fund_description") == "desc")
-    // unknown currency -> amount unchanged; 2035 outside dim_date but LEFT join keeps row
+    // unknown currency -> amount unchanged; 2035 is outside dim_date and the row stays
     assert(got(1).getAs[java.math.BigDecimal]("raised_amount_usd").toString == "50.00")
     assert(got(1).getAs[Int]("funded_at") == 20350101)
     assert(got(1).getAs[String]("fund_description") == null)
@@ -170,7 +170,7 @@ class WarehouseSpec extends SparkSpec {
       (3L, "c:9", "c:1", "x", BigDecimal("1.00"), "USD", Timestamp.valueOf("2012-01-01 00:00:00"), "y")
     ).toDF("acquisition_id", "acquiring_object_id", "acquired_object_id", "term_code",
       "price_amount", "price_currency_code", "acquired_at", "source_description")
-    val got = Warehouse.fctAcquisition(acq, dimCompany, dimDate)
+    val got = Warehouse.fctAcquisition(acq, dimCompany)
       .orderBy("dd_acquisition_id").collect()
     assert(got.length == 2) // c:9 acquirer dropped
     assert(got(0).getAs[Long]("sk_acquiring_company_id") == 1L)
@@ -183,6 +183,32 @@ class WarehouseSpec extends SparkSpec {
     assert(got(1).getAs[Long]("sk_acquired_company_id") == 2L)
     assert(got(1).getAs[String]("term_code") == null)
     assert(got(1).getAs[String]("acquisition_description") == null)
+  }
+
+  test("fct_ipos and fct_acquisition plan no dim_date join") {
+    // the reference's left join to dim_date selects no column and
+    // date_id is unique, so it can neither drop nor duplicate a row:
+    // only the company key lookups remain
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val plans = new AdaptiveSparkPlanHelper {}
+    def joins(df: org.apache.spark.sql.DataFrame): Int = {
+      df.collect()
+      plans.collect(df.queryExecution.executedPlan) { case j: BaseJoinExec => j }.size
+    }
+    val dimCompany = Warehouse.withDenseKey(
+      Seq(("c:1", "company"), ("c:2", "company")).toDF("nk_company_id", "entity_type"),
+      "sk_company_id", "nk_company_id")
+    val ipos = Seq(("7", "c:1", Date.valueOf("2010-05-04"), BigDecimal("10.00"), "USD",
+      BigDecimal("1.00"), "GBP", " nasdaq:abc ", " Listed ")).toDF("ipo_id", "object_id",
+      "public_at", "valuation_amount", "valuation_currency_code", "raised_amount",
+      "raised_currency_code", "stock_symbol", "source_description")
+    val acq = Seq((1L, "c:1", "c:2", "cash", BigDecimal("1.00"), "USD",
+      Timestamp.valueOf("2010-05-04 00:00:00"), "deal")).toDF("acquisition_id",
+      "acquiring_object_id", "acquired_object_id", "term_code", "price_amount",
+      "price_currency_code", "acquired_at", "source_description")
+    assert(joins(Warehouse.fctIpos(ipos, dimCompany)) == 1)
+    assert(joins(Warehouse.fctAcquisition(acq, dimCompany)) == 2)
   }
 
   test("scd2: transitions open versions, intervals tile, no-change rows collapse") {

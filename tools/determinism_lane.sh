@@ -54,8 +54,9 @@ python3 tools/det_diff.py "$RUN1" "$RUN2" "$OUT" "$EXPECT"
 # dependent), so the full-surface sf0.01 lane alone cannot certify the
 # bug class. Re-run the gates whose plans contain a sampled-range site —
 # keep this list in sync with RangeExchangeAuditSpec's printed inventory
-# (Warehouse.withDenseKeyRanged -> w1; Packing.packSequences -> ds3,
-# cur5; Clustering.clusteredWrite -> z1; plus ds4, the r14 bug's gate) —
+# (Warehouse.rangedRunningSum -> w1 and ds4 through withDenseKeyRanged,
+# ds3 and cur5 through Packing.packSequences; Clustering.clusteredWrite
+# -> z1) —
 # twice at RANGE_SF_DIR (default testdata/sf1; HARD FAIL if absent:
 # regenerate with ScaleGen — a silently skipped arm is not a lane pass).
 RANGE_SF=${RANGE_SF_DIR:-testdata/sf1}
