@@ -12,10 +12,10 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Per-row BPE merge application with FAITHFUL sequential-pass
   * semantics: merge i runs to completion over the token sequence
   * (greedy left-to-right, non-overlapping — exactly one
-  * `regexp_replace` pass) before merge i+1 starts. Bit-identical to
-  * [[graft.operators.Lm.bpeEncode]]'s literal regexp chain (the arms
-  * are spec-pinned equal), verified per merge count by
-  * `tools/BpeScaleProbe` (deleted after 17eacc8).
+  * `regexp_replace` pass) before merge i+1 starts. The kernel behind
+  * [[graft.operators.Lm.bpeEncode]] at every merge count; spec-pinned
+  * char for char against the regexp-chain reference (the test-scope
+  * `LiteralArms.bpeEncodeLiteral`, LmSpec).
   *
   * The merge TABLE is data, not tree: it rides in as one foldable
   * array literal, so the plan holds O(1) expression nodes however many
@@ -35,7 +35,7 @@ import org.apache.spark.unsafe.types.UTF8String
 final class BpeMergeKernel(mergeA: Array[String], mergeB: Array[String],
                            joiner: String) extends Serializable {
 
-  /** Space-joined encoded tokens (same value the literal arm's
+  /** Space-joined encoded tokens (same value the reference's
     * `trim(regexp chain over the padded join)` yields). */
   def encode(tokens: Array[String]): String = {
     val n = tokens.length

@@ -13,8 +13,8 @@ import org.apache.spark.sql.types._
   * codebook matrices ride the plan as ONE array literal each (O(1)
   * expression nodes at any C), and scoring is a tight primitive loop —
   * where the literal-folded Column arms grow O(C·dim) nodes and fall
-  * out of codegen past a few dozen centroids (measured:
-  * `Ivf.ExpressionAssignMaxC`'s scaladoc; tools/QuantParamProbe,
+  * out of codegen past a few dozen centroids (measured: the sd1 gate at
+  * c = 625 ran 10× slower through the literal tree; tools/QuantParamProbe,
   * deleted after 17eacc8, pinned the cliff at production C).
   *
   * Bit-faithfulness contract (spec-pinned against the literal arms, the
@@ -23,8 +23,8 @@ import org.apache.spark.sql.types._
   * `aggregate(zip_with(...))`, and ordering uses Spark SQL's double
   * semantics — NaN greatest and self-equal, -0.0 == 0.0 — NOT
   * `java.lang.Double.compare` (which splits the zeros). Dimension
-  * mismatches fail loudly (the `Ivf.assign` kernel convention; the
-  * literal arm would null-propagate garbage instead). */
+  * mismatches fail loudly (the codebase convention; the literal arm
+  * would null-propagate garbage instead). */
 private[expressions] object QuantOrd {
   /** Spark SQL double comparison (Utils.nanSafeCompareDoubles shape). */
   def cmp(x: Double, y: Double): Int = {

@@ -1211,8 +1211,7 @@ object Dedup {
   def embeddingCosinePairs(df: DataFrame, idCol: String, vecCol: String,
                            threshold: Double = 0.95, planes: Int = 12,
                            maxBucketSize: Int = Int.MaxValue,
-                           refinePlanes: Int = 12,
-                           refineTable: Int = RefineTable): DataFrame = {
+                           refinePlanes: Int = 12): DataFrame = {
     // fan a narrow scan out before the per-vector signature + norm
     // arithmetic — no-op at scale (Fanout, r20)
     val sigs0 = graft.core.Fanout.spread(df, col(idCol))
@@ -1242,7 +1241,7 @@ object Dedup {
         val withSub = ck.join(hot, Seq("bucket"), "left")
           .withColumn("sub", when(col("__hot").isNull, lit(0L))
             .otherwise(Similarity.hyperplaneSignature(
-              col("v"), refinePlanes, refineTable) + lit(1L)))
+              col("v"), refinePlanes, RefineTable) + lit(1L)))
           .drop("__hot")
         val oversized = withSub.groupBy("bucket", "sub")
           .agg(count(lit(1)).as("__bs2"))
@@ -1289,11 +1288,12 @@ object Dedup {
     * keep each component's minimum — that's the iterative operator's
     * job, not this one's.)
     *
-    * Scale design: assignment is the [[Ivf]] literal-centroid map-side
-    * expression (no quantizer join, corpus never shuffles for it); the
-    * within-cluster self-join is a SORT-MERGE on cluster_id where both
-    * legs read the identical assign exchange (ReusedExchange — the
-    * assign projection runs once); cost is Σ|cluster|², WHICH IS THE
+    * Scale design: assignment is [[Ivf.assign]]'s map-side
+    * nearest-centroid kernel projection (no quantizer join, corpus
+    * never shuffles for it); the within-cluster self-join is a
+    * SORT-MERGE on cluster_id where both legs read the identical assign
+    * exchange (ReusedExchange — the assign projection runs once); cost
+    * is Σ|cluster|², WHICH IS THE
     * PUBLISHED METHOD'S CONTRACT: C grows with the corpus so n/C stays
     * bounded (SemDeDup uses ~100k clusters at web scale), making the
     * per-cluster quadratic a constant-size unit of work. The `c`

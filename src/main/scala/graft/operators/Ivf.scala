@@ -98,95 +98,23 @@ object Ivf {
     graft.expressions.QuantKernels.nearestCids(v,
       centroids.map(c => (c.cid, c.v, c.norm)), n)
 
-  /** Above this centroid count, [[assign]] switches from the expression
-    * projection to the broadcast-matrix mapPartitions kernel: the
-    * expression tree grows O(c·d) literals and past a few dozen
-    * centroids stops fitting whole-stage codegen (measured: the sd1
-    * gate at c=625 ran 10× slower through the expression than through
-    * the kernel). Since r21 the small-c expression arm scores through
-    * the kernel too (see [[nearestCids]]), so this threshold only
-    * decides projection-vs-mapPartitions shape, and specs use it to
-    * parameterize the big-c arms. */
-  val ExpressionAssignMaxC = 32
-
   /** Corpus with its cluster assignment — map-side only, no shuffle, no
     * quantizer join. Output: (id, v, cluster_id, nv) with nv the
     * precomputed vector norm (computed once per vector here so the
-    * candidate scoring never re-derives it per pair).
-    *
-    * Two equivalent physical forms (spec-asserted identical, both
-    * left-to-right IEEE summation and smaller-cid tie-break):
-    *  - c ≤ [[ExpressionAssignMaxC]]: centroids as literal arrays inside
-    *    one codegen'd expression — zero serialization, stays inside
-    *    WholeStageCodegen (the oracle-mirrored gates all live here);
-    *  - larger c: a broadcast centroid MATRIX and a tight argmax loop in
-    *    a `mapPartitions` kernel — the c×d GEMV shape a production
-    *    quantizer uses; an O(c·d)-literal expression tree would fall out
-    *    of codegen and evaluate interpreted (SemDeDup-scale C needs
-    *    this path). */
+    * candidate scoring never re-derives it per pair). One projection at
+    * every centroid count: the nearest cid through the
+    * [[graft.expressions.NearestCentroids]] kernel ([[nearestCids]] with
+    * n = 1: left-to-right IEEE dots, smaller-cid tie-break) and the norm,
+    * both inside whole-stage codegen. */
   def assign(emb: DataFrame, idCol: String, vecCol: String,
-             centroids: Seq[Centroid]): DataFrame = {
+             centroids: Seq[Centroid]): DataFrame =
     // fan a narrow scan out before the c×d multiply-adds per vector
     // (assignment is the corpus-wide GEMV pass) — no-op at scale
-    val spread = graft.core.Fanout.spread(emb, col(idCol))
-    if (centroids.size <= ExpressionAssignMaxC)
-      spread.filter(col(idCol).isNotNull)
-        .select(col(idCol).as("id"), Similarity.toDouble(col(vecCol)).as("v"))
-        .withColumn("cluster_id", element_at(nearestCids(col("v"), centroids, 1), 1))
-        .withColumn("nv", Similarity.norm(col("v")))
-    else {
-      import org.apache.spark.sql.types._
-      val pre = spread.filter(col(idCol).isNotNull)
-        .select(col(idCol).as("id"), Similarity.toDouble(col(vecCol)).as("v"))
-      val out = StructType(Seq(
-        StructField("id", pre.schema("id").dataType, nullable = false),
-        StructField("v", ArrayType(DoubleType, containsNull = false), nullable = false),
-        StructField("cluster_id", IntegerType, nullable = false),
-        StructField("nv", DoubleType, nullable = false)))
-      val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(out)
-      // centroids ride a broadcast, not the task closure: one transfer
-      // per executor however many tasks the corpus scan fans out to
-      val bc = emb.sparkSession.sparkContext.broadcast(
-        centroids.sortBy(_.cid).map(c => (c.cid, c.v.toArray, c.norm)).toArray)
-      pre.mapPartitions { rows =>
-        val cents = bc.value
-        val dim = if (cents.nonEmpty) cents(0)._2.length else 0
-        rows.map { r =>
-          val v = r.getSeq[Double](1).toArray
-          // loud failure on a mismatched vector, the codebase convention
-          // (hyperplaneSignature raises for exactly this hazard) — a
-          // truncated dot would assign a confident-looking wrong cluster
-          require(v.length == dim,
-            s"assign: expected $dim-dim vector, got ${v.length}")
-          var best = -1
-          var bestScore = Double.NegativeInfinity
-          var ci = 0
-          while (ci < cents.length) {
-            val (cid, cv, cn) = cents(ci)
-            val score =
-              if (cn > 0) {
-                var s = 0.0
-                var i = 0
-                while (i < dim) { s += v(i) * cv(i); i += 1 }
-                s / cn
-              } else 0.0
-            // strict > with ascending cid order = smaller-cid tie-break,
-            // exactly nearestCids' (-score, cid) sort
-            if (score > bestScore) { bestScore = score; best = cid }
-            ci += 1
-          }
-          // all scores NaN (a NaN-bearing vector): the expression path's
-          // struct sort treats the NaN entries as equal and ties to the
-          // smallest cid — mirror it rather than emitting a ghost -1
-          if (best == -1) best = cents(0)._1
-          var nv = 0.0
-          var i = 0
-          while (i < v.length) { nv += v(i) * v(i); i += 1 }
-          org.apache.spark.sql.Row(r.get(0), v.toSeq, best, math.sqrt(nv))
-        }
-      }(enc)
-    }
-  }
+    graft.core.Fanout.spread(emb, col(idCol))
+      .filter(col(idCol).isNotNull)
+      .select(col(idCol).as("id"), Similarity.toDouble(col(vecCol)).as("v"))
+      .withColumn("cluster_id", element_at(nearestCids(col("v"), centroids, 1), 1))
+      .withColumn("nv", Similarity.norm(col("v")))
 
   /** Lloyd refinement: `iters` rounds of (map-side assign → distributed
     * per-component mean → collect C·dim means). An emptied cluster keeps

@@ -156,46 +156,32 @@ object Lm {
       .select("rank", "pair", "n")
   }
 
-  /** Apply ONE BPE merge (a, b) -> a·b to a token-array column, greedy
-    * left-to-right non-overlapping (Sennrich et al. 2016 semantics: in
-    * "a a a" the first pair merges and the survivor does NOT re-pair
-    * with the third token in the same round).
+  /** Symbol joining a merged pair: merge (a, b) yields the token
+    * `a + Joiner + b`. Tokens are whitespace-split, so any non-space
+    * string works; every trainer and encoder here uses this one. */
+  val Joiner = "~"
+
+  /** Apply ONE BPE merge (a, b) -> a·b in the string domain: input and
+    * output are the SPACE-PADDED joined token string (" t1 t2 ... tn "),
+    * greedy left-to-right non-overlapping (Sennrich et al. 2016
+    * semantics: in "a a a" the first pair merges and the survivor does
+    * NOT re-pair with the third token in the same round).
     *
-    * Implementation: ONE regexp pass over the space-padded joined string
-    * — Java regex replacement is itself leftmost-first non-overlapping
+    * Java regex replacement is itself leftmost-first non-overlapping
     * (after a match, scanning resumes at the match end), which IS the
     * greedy BPE rule, and the lookarounds don't consume the delimiter
     * spaces, so back-to-back occurrences ("a b a b") all merge in the
     * single pass. Tokens are whitespace-split ([[TextAnalysis.tokens]])
     * so the padded string round-trips exactly: no token contains a space
-    * and none is empty. Per-row cost is genuinely O(tokens) — the
-    * previous expression-fold built its output with array_append on the
-    * accumulator (a copy per element, O(tokens²) per row; round-12
-    * advice) — and RegExpReplace/split/trim are all codegen'd
-    * built-ins, so the merge stays a pure shuffle-free map.
-    * Property-pinned against a driver-side greedy scan (PropertySpec). */
-  private[graft] def applyMerge(toks: Column, a: String, b: String,
-                                joiner: String): Column = {
-    val padded = concat(lit(" "), array_join(toks, " "), lit(" "))
-    // split("", " ") is [""], not [] — guard the no-token row
-    when(size(toks) === 0, toks)
-      .otherwise(split(trim(applyMergeStr(padded, a, b, joiner)), " "))
-  }
-
-  /** [[applyMerge]] in the string domain: input and output are the
-    * SPACE-PADDED joined token string (" t1 t2 ... tn "). Both the
-    * pattern and the replacement are literal-quoted, so tokens carrying
-    * regex metacharacters (or prior merges' joiner) are matched exactly.
-    * Chains compose linearly: unlike lambda higher-order functions,
-    * regexp_replace reads its child exactly once, so R stacked merges in
-    * one projection cost R linear passes — no projection boundary per
-    * merge needed (contrast the r12 fold, which required one). */
-  private[graft] def applyMergeStr(padded: Column, a: String, b: String,
-                                   joiner: String): Column = {
+    * and none is empty. Both the pattern and the replacement are
+    * literal-quoted, so tokens carrying regex metacharacters (or prior
+    * merges' joiner) are matched exactly. Property-pinned against a
+    * driver-side greedy scan (PropertySpec). */
+  private[graft] def applyMergeStr(padded: Column, a: String, b: String): Column = {
     import java.util.regex.{Matcher, Pattern}
     regexp_replace(padded,
       lit("(?<= )" + Pattern.quote(a) + " " + Pattern.quote(b) + "(?= )"),
-      lit(Matcher.quoteReplacement(a + joiner + b)))
+      lit(Matcher.quoteReplacement(a + Joiner + b)))
   }
 
   /** Adjacent-pair array ("x y" strings) of a token-array column —
@@ -242,64 +228,18 @@ object Lm {
     * consumer). For multi-hour production runs prefer `checkpoint()`
     * to reliable storage (executor loss invalidates local checkpoints).
     *
-    * TWO ARMS, chosen by the EXPLICIT `sampled` flag (r15 advice: the
-    * earlier rounds>64 auto-dispatch silently switched semantics —
-    * above 200k docs the result became sample-derived and the `n`
-    * column changed meaning from corpus-wide to within-sample counts,
-    * with no signal to the caller; a latency heuristic must not be a
-    * semantics boundary). Default `sampled = false` always runs the
-    * exact corpus-wide trainer below. Delta maintenance makes each
-    * distributed round CHEAP, but it is still one sequential Spark job
-    * per round — at a production 30k-50k-merge vocabulary that is
-    * hours of driver round-trips regardless of corpus size, so callers
-    * training real vocabularies should opt in with `sampled = true`
-    * (driver-local merge loop over a bounded deterministic sample —
-    * the SentencePiece/HF industry shape); a WARN fires when the exact
-    * arm is asked for more than [[DistributedTrainMaxRounds]] rounds.
-    * The two arms are spec-pinned identical whenever the sample covers
-    * the corpus (LmSpec), which is true for every oracle-mirrored
-    * gate. */
+    * Exact and corpus-wide, but still one sequential Spark job per
+    * round: ~0.3-0.4 s each at any corpus size (same probe), so a
+    * production 30k-50k-merge vocabulary is hours of driver
+    * round-trips. Train those with [[bpeMergesSampled]] (driver-local
+    * merge loop over a bounded deterministic sample — the
+    * SentencePiece/HF industry shape), whose `n` is the count within
+    * the sample. The choice is the caller's, never a size heuristic: a
+    * latency threshold must not silently switch the meaning of `n`.
+    * The two are spec-pinned identical whenever the sample covers the
+    * corpus (LmSpec), which is true for every oracle-mirrored gate. */
   def bpeMerges(df: DataFrame, idCol: String, textCol: String,
-                rounds: Int = 3, joiner: String = "~",
-                sampled: Boolean = false): DataFrame =
-    if (sampled)
-      bpeMergesSampled(df, idCol, textCol, rounds, joiner)
-    else {
-      if (rounds > DistributedTrainMaxRounds) logger.warn(
-        s"bpeMerges: exact distributed training for $rounds rounds is " +
-          s"$rounds sequential Spark jobs (~0.3-0.4 s each at any corpus " +
-          "size) — for large vocabularies pass sampled = true (bounded " +
-          "deterministic sample, driver-local merge loop; identical " +
-          "whenever the sample covers the corpus)")
-      bpeMergesDistributed(df, idCol, textCol, rounds, joiner)
-    }
-
-  private lazy val logger = org.slf4j.LoggerFactory.getLogger("graft.operators.Lm")
-
-  /** Advisory round count above which the exact arm of [[bpeMerges]]
-    * logs a latency warning (it is O(rounds) SEQUENTIAL Spark jobs —
-    * one top-1 collect per round, flat ~0.3-0.4 s/round at any corpus
-    * size, tools/BpeProbe, deleted after 17eacc8 — so a production
-    * 30k-50k-merge vocabulary would be hours of driver round-trips;
-    * tools/BpeTrainProbe, deleted after 17eacc8, showed
-    * the sampled arm's crossover is round-count-driven, not
-    * data-driven). Purely advisory since r16: arm choice is the
-    * caller's explicit `sampled` flag, never an auto-dispatch. 64
-    * keeps every oracle-mirrored gate (3-12 rounds) far below the
-    * warning. */
-  val DistributedTrainMaxRounds = 64
-
-  /** Bounded sample for [[bpeMergesSampled]] — the SentencePiece
-    * `input_sentence_size` convention. 200k docs × ~10² tokens ≈ 2×10⁷
-    * symbols of driver state: comfortably driver-resident, and merge
-    * statistics at this sample size are stable for vocabularies far
-    * beyond 50k merges (HF/SentencePiece train on samples of this
-    * order against TB-scale corpora). */
-  val DefaultTrainSampleDocs = 200000
-
-  private[graft] def bpeMergesDistributed(
-      df: DataFrame, idCol: String, textCol: String,
-      rounds: Int, joiner: String): DataFrame = {
+                rounds: Int = 3): DataFrame = {
     require(rounds > 0, s"bpeMerges: rounds must be positive, got $rounds")
     val spark = df.sparkSession
     val sc = spark.sparkContext
@@ -336,14 +276,14 @@ object Lm {
       else {
         val pair = top(0).getString(0)
         picks += ((r, pair, top(0).getLong(1)))
-        // tokens are whitespace-split and merges join with `joiner`, so
+        // tokens are whitespace-split and merges join with `Joiner`, so
         // neither side of a pair can contain a space: split is exact
         val Array(a, b) = pair.split(" ", 2)
         if (r < rounds) { // the final pick's state has no consumer
           // a row is affected iff it contains the pair — the padded
           // form makes " a b " an exact adjacent-occurrence test
           val hit = col("s").contains(" " + a + " " + b + " ")
-          val rewritten = applyMergeStr(col("s"), a, b, joiner)
+          val rewritten = applyMergeStr(col("s"), a, b)
           // ± deltas over affected rows only; token arrays materialized
           // behind aliases so the non-cheap split/regexp evaluate once
           val delta = cur.filter(hit)
@@ -370,6 +310,14 @@ object Lm {
     drop(countIds); drop(curIds)
     picks.toSeq.toDF("round", "pair", "n")
   }
+
+  /** Bounded sample for [[bpeMergesSampled]] — the SentencePiece
+    * `input_sentence_size` convention. 200k docs × ~10² tokens ≈ 2×10⁷
+    * symbols of driver state: comfortably driver-resident, and merge
+    * statistics at this sample size are stable for vocabularies far
+    * beyond 50k merges (HF/SentencePiece train on samples of this
+    * order against TB-scale corpora). */
+  val DefaultTrainSampleDocs = 200000
 
   /** BPE merge selection trained DRIVER-LOCAL on a bounded deterministic
     * document sample — the arm that makes production round counts
@@ -400,13 +348,13 @@ object Lm {
     * characters), apply it greedy leftmost non-overlapping, repeat;
     * stop early when no pairs remain. When `sampleDocs` covers the
     * whole corpus the output is spec-pinned IDENTICAL to
-    * [[bpeMergesDistributed]] (LmSpec); on larger corpora `n` is the
+    * [[bpeMerges]] (LmSpec); on larger corpora `n` is the
     * count within the sample — the standard statistical-training
     * contract, which is why the oracle-mirrored gates all run the exact
     * arm. Driver memory is O(sample tokens + distinct pairs), bounded
     * by construction. */
   def bpeMergesSampled(df: DataFrame, idCol: String, textCol: String,
-                       rounds: Int, joiner: String = "~",
+                       rounds: Int,
                        sampleDocs: Int = DefaultTrainSampleDocs): DataFrame = {
     require(rounds > 0, s"bpeMergesSampled: rounds must be positive, got $rounds")
     require(sampleDocs > 0,
@@ -419,13 +367,13 @@ object Lm {
       .limit(sampleDocs)
       .select(col("t")).as[Seq[String]]
       .collect().map(_.toArray)
-    trainLocal(docs, rounds, joiner).toDF("round", "pair", "n")
+    trainLocal(docs, rounds).toDF("round", "pair", "n")
   }
 
   /** The driver-local merge loop behind [[bpeMergesSampled]] — exposed
     * package-private so specs can drive it on in-memory corpora. */
-  private[graft] def trainLocal(docs: Array[Array[String]], rounds: Int,
-                                joiner: String): Seq[(Int, String, Long)] = {
+  private[graft] def trainLocal(docs: Array[Array[String]],
+                                rounds: Int): Seq[(Int, String, Long)] = {
     import java.nio.charset.StandardCharsets.UTF_8
     // pair key = "a b" — the distributed arm's exact key domain (tokens
     // are whitespace-split, so the space delimiter is unambiguous)
@@ -504,7 +452,7 @@ object Lm {
         picks += ((r, top.pair, top.n))
         if (r < rounds) {
           val Array(a, b) = top.pair.split(" ", 2)
-          val merged = a + joiner + b
+          val merged = a + Joiner + b
           val hits = occ.remove(top.pair)
           counts.remove(top.pair)
           heap.poll() // drop the chosen head; its count is now gone
@@ -568,80 +516,28 @@ object Lm {
     * encoded sequence space-joined — the gate pins the entire encoding,
     * not a summary.
     *
-    * Scale shape — TWO spec-pinned-identical arms dispatched on merge
-    * count (the [[graft.operators.Warehouse]] size-aware pattern):
-    *
-    *  - `merges.size <=` [[LiteralEncodeMaxMerges]]: the whole table
-    *    folds into ONE projection — a chain of literal-pattern
-    *    [[applyMergeStr]] regexp passes over the space-padded token
-    *    string (each pass linear, each read exactly once; the r12 fold
-    *    needed a projection boundary PER merge because lambda HOFs
-    *    re-evaluate their child per element — regexp chains don't).
-    *    SQL-expressible, so the oracle gate lives here.
-    *  - larger tables: the [[graft.expressions.BpeEncode]] codegen
-    *    expression — the merge table rides as ONE array literal into a
-    *    per-row kernel, so plan size is O(1) in the vocabulary where
-    *    the regexp chain grows one nested node per merge and dies of
-    *    analyzer stack depth in the low thousands (tools/BpeScaleProbe,
-    *    deleted after 17eacc8, measured the break; production
-    *    vocabularies are 10k–50k).
-    *
-    * Either arm: no UDF, no shuffle, no state — encoding 100 TB is a
-    * pure map over the corpus scan, which is the whole point of running
-    * tokenization inside the engine. */
-  /** Above this merge count [[bpeEncode]] switches from the literal
-    * regexp chain to the [[graft.expressions.BpeEncode]] kernel
-    * expression. tools/BpeScaleProbe (deleted after 17eacc8): the
-    * chain's nested plan hits
-    * analyzer stack limits in the low thousands of merges and its
-    * per-row cost is a full string scan per merge; 128 keeps every
-    * oracle-mirrored gate (3–50 merges) on the SQL-expressible arm with
-    * wide margin below the cliff. */
-  val LiteralEncodeMaxMerges = 128
-
+    * Scale shape: the [[graft.expressions.BpeEncode]] codegen
+    * expression at every table size — the merge table rides as ONE
+    * array literal into a per-row kernel, so plan size is O(1) in the
+    * vocabulary (a chain of [[applyMergeStr]] regexp passes grows one
+    * nested node per merge and dies of analyzer stack depth in the low
+    * thousands — tools/BpeScaleProbe, deleted after 17eacc8, measured
+    * the break; production vocabularies are 10k–50k), and a
+    * token-presence check skips every merge that cannot fire in the
+    * row. No UDF, no shuffle, no state — encoding 100 TB is a pure map
+    * over the corpus scan, which is the whole point of running
+    * tokenization inside the engine. The regexp chain is a test-scope
+    * reference, spec-pinned char for char (LmSpec). */
   def bpeEncode(df: DataFrame, idCol: String, textCol: String,
-                merges: Seq[(String, String)],
-                joiner: String = "~"): DataFrame =
-    if (merges.size <= LiteralEncodeMaxMerges)
-      bpeEncodeLiteral(df, idCol, textCol, merges, joiner)
-    else bpeEncodeKernel(df, idCol, textCol, merges, joiner)
-
-  /** Literal arm: one nested regexp_replace per merge, one projection.
-    * Production entry is the dispatching [[bpeEncode]]. */
-  private[graft] def bpeEncodeLiteral(df: DataFrame, idCol: String,
-                                      textCol: String,
-                                      merges: Seq[(String, String)],
-                                      joiner: String = "~"): DataFrame = {
-    // fan a narrow scan out before the per-row merge-chain regexps (one
-    // full string pass per merge) — no-op at scale (Fanout)
-    val base = graft.core.Fanout.spread(df, col(idCol))
+                merges: Seq[(String, String)]): DataFrame =
+    graft.core.Fanout.spread(df, col(idCol))
       .select(col(idCol).as("doc_id"),
         TextAnalysis.tokens(col(textCol)).as("__raw"))
-    val padded = concat(lit(" "), array_join(col("__raw"), " "), lit(" "))
-    val encStr = trim(merges.foldLeft(padded) {
-      case (s, (a, b)) => applyMergeStr(s, a, b, joiner)
-    })
-    encodeEpilogue(base, encStr)
-  }
-
-  /** Kernel arm: the merge table as one array literal feeding the
-    * [[graft.expressions.BpeEncode]] codegen expression. */
-  private[graft] def bpeEncodeKernel(df: DataFrame, idCol: String,
-                                     textCol: String,
-                                     merges: Seq[(String, String)],
-                                     joiner: String = "~"): DataFrame = {
-    val base = graft.core.Fanout.spread(df, col(idCol))
-      .select(col(idCol).as("doc_id"),
-        TextAnalysis.tokens(col(textCol)).as("__raw"))
-    encodeEpilogue(base,
-      graft.expressions.BpeEncode.column(col("__raw"), merges, joiner))
-  }
-
-  // __encs behind a projection boundary: it feeds BOTH the token count
-  // and the output text; the alias guarantees one evaluation per row
-  // without leaning on codegen subexpression elimination
-  private def encodeEpilogue(base: DataFrame, encStr: Column): DataFrame =
-    base.select(col("doc_id"), col("__raw"), encStr.as("__encs"))
+      // __encs behind a projection boundary: it feeds BOTH the token
+      // count and the output text; the alias guarantees one evaluation
+      // per row without leaning on codegen subexpression elimination
+      .select(col("doc_id"), col("__raw"),
+        graft.expressions.BpeEncode.column(col("__raw"), merges, Joiner).as("__encs"))
       .select(col("doc_id"),
         size(col("__raw")).as("n_tokens_raw"),
         when(size(col("__raw")) === 0, lit(0))

@@ -59,12 +59,6 @@ object Pq {
     (0 until m).map(s => seeds.toSeq.map(_.slice(s * d, (s + 1) * d)))
   }
 
-  /** Spec parameterization bound: PqSpec exercises the (historical)
-    * literal expression arm against the kernels ABOVE this ks to pin
-    * them bit-identical. Production dispatch no longer branches on it —
-    * see [[codesCol]]. */
-  val LiteralCodebookMaxKs = 32
-
   /** codes[m] for a vector column — exposed so compositions ([[IvfPq]])
     * can encode in the same projection as other map-side columns.
     * Always the [[graft.expressions.PqCodes]] kernel (codebooks as ONE

@@ -15,25 +15,21 @@ import org.apache.spark.sql.functions._
   *    scale path — candidates share a signature bucket (with multi-probe
   *    over 1-bit flips), then exact cosine ranks within candidates.
   *
-  * All vector math is `zip_with`/`aggregate` expressions over
-  * double-cast arrays — distributed, codegen-friendly, deterministic
-  * (index-ordered folds, same IEEE sequence every run).
+  * Vector math runs over double-cast arrays through the codegen'd
+  * [[graft.expressions.DotProduct]] and hyperplane kernels —
+  * distributed, deterministic (ascending-index folds, the same IEEE
+  * sequence every run).
   */
 object Similarity {
 
   /** Cast a float array column to double. */
   def toDouble(v: Column): Column = transform(v, x => x.cast("double"))
 
-  /** Index-ordered dot product — the `zip_with`/`aggregate` reference
-    * form. Interpreted (higher-order functions have no codegen) and
-    * allocates the product array per call: hot paths use [[dotNative]];
-    * this form remains for the spec-pinned literal reference arms. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  /** [[dot]] through the codegen'd [[graft.expressions.DotProduct]]
-    * kernel — same ascending-index IEEE summation, bit-identical values
-    * (CosineExprSpec), no intermediate array, full whole-stage codegen.
+  /** Index-ordered dot product through the codegen'd
+    * [[graft.expressions.DotProduct]] kernel — ascending-index IEEE
+    * summation, bit-identical to the `zip_with`/`aggregate` reference
+    * form (test-scope `LiteralArms.dot`, CosineExprSpec), no intermediate
+    * array, full whole-stage codegen.
     * This is the per-candidate-PAIR scoring op of every banded ANN
     * verify stage (r21: the zip_with form evaluated interpreted there). */
   def dotNative(a: Column, b: Column): Column =

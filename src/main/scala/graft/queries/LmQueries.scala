@@ -92,7 +92,7 @@ object LmQueries {
     },
 
     // BPE APPLICATION: train the 3-round merge table, then encode the
-    // whole corpus with it — one literal-folded projection, no shuffle.
+    // whole corpus with it — one graft_bpe_encode projection, no shuffle.
     // The gate pins every document's full encoded token sequence.
     "v4_bpe_encode" -> { (s, d) =>
       val merges = Lm.bpeMerges(documents(s, d), "doc_id", "text",

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
@@ -9,9 +8,9 @@ import graft.sources.{JdbcUpsert, Readers, Writers}
 /** Source/sink coverage (SURVEY §2.1): CSV round-trip (S8+S9), JSON
   * parse/flatten (S6), keyed upsert-merge semantics (S7), partitioned
   * parquet write + pruned read-back (S4+S3). Sinks are exercised by
-  * writing to a fresh temp dir inside the query and reading back — the
-  * oracle computes the same result straight from the parquet tables, so a
-  * lossy round-trip fails the hash compare. */
+  * writing to a fresh [[StoreDirs]] scratch dir inside the query and
+  * reading back — the oracle computes the same result straight from the
+  * parquet tables, so a lossy round-trip fails the hash compare. */
 object SourceQueries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -44,7 +43,7 @@ object SourceQueries {
     // the oracle is format-independent (reads the same rows from
     // parquet), so the gate proves the ORC path is lossless.
     "s12_orc_roundtrip" -> { (s, d) =>
-      val tmp = Files.createTempDirectory("graft_orc").toString
+      val tmp = StoreDirs.fresh("orc", d)
       val out = customer(s, d).select(
         col("c_custkey"), col("c_mktsegment"),
         col("c_acctbal").cast("decimal(18,2)").as("bal"))
@@ -57,7 +56,7 @@ object SourceQueries {
     },
 
     "s8s9_csv_roundtrip" -> { (s, d) =>
-      val tmp = Files.createTempDirectory("graft_csv").toString
+      val tmp = StoreDirs.fresh("csv", d)
       val out = customer(s, d).select(
         col("c_custkey"), col("c_mktsegment"),
         col("c_acctbal").cast("decimal(18,2)").as("bal"))
@@ -72,7 +71,7 @@ object SourceQueries {
 
     // JSON-lines sink then source round-trip (raw payload persistence).
     "s6b_json_roundtrip" -> { (s, d) =>
-      val tmp = Files.createTempDirectory("graft_json").toString
+      val tmp = StoreDirs.fresh("json", d)
       Writers.json(events(s, d).select(col("event_id"), col("event_type"),
         col("value").cast("decimal(18,2)").as("value")), s"$tmp/events")
       Readers.json(s, s"$tmp/events")
@@ -89,7 +88,7 @@ object SourceQueries {
     // row lost or duplicated by the rewrite fails the hash compare (the
     // file-count bound itself is asserted in SourcesSpec).
     "s13_compaction" -> { (s, d) =>
-      val tmp = Files.createTempDirectory("graft_compact").toString
+      val tmp = StoreDirs.fresh("compact", d)
       val out = s"$tmp/events"
       events(s, d).select(col("event_id"), col("event_type"),
           col("value").cast("decimal(18,2)").as("value"))
@@ -109,7 +108,7 @@ object SourceQueries {
     // cross-checked. File-interval disjointness (the data-skipping
     // property the layout exists for) is asserted in SourcesSpec.
     "z1_zorder_cluster" -> { (s, d) =>
-      val tmp = Files.createTempDirectory("graft_zorder").toString
+      val tmp = StoreDirs.fresh("zorder", d)
       graft.operators.Clustering.clusteredWrite(
         lineitem(s, d).select(col("l_partkey"), col("l_suppkey"),
           col("l_quantity")),
@@ -125,7 +124,7 @@ object SourceQueries {
     // S4: partitioned parquet write with dynamic overwrite, then a pruned
     // read-back (the filter prunes partition directories, not rows).
     "s4_partitioned_write" -> { (s, d) =>
-      val tmp = Files.createTempDirectory("graft_part").toString
+      val tmp = StoreDirs.fresh("part", d)
       Writers.parquetPartitioned(
         events(s, d).select(col("event_id"), col("event_type"),
           col("value").cast("decimal(18,2)").as("value")),

@@ -1,8 +1,10 @@
 package graft.queries
 
-/** Scratch directories for the store-roundtrip gates (nb2/y7/x12): each
-  * gate invocation writes a model/assignment/signature store to parquet
-  * and reads it back INSIDE the gate, so the directory must be (a)
+/** Scratch directories for every gate that writes and reads back inside
+  * its own body: the store-roundtrip gates (nb2/y7/y9/x12/x14) and the
+  * sink round-trip gates (s12/s8s9/s6b/s13/z1/s4). Each invocation
+  * writes a model/assignment/signature store or a sink's files and
+  * reads them back INSIDE the gate, so the directory must be (a)
   * unique per invocation — the earlier `hashCode(sfDir)` keying let two
   * concurrent runs on the same sf dir overwrite each other's store
   * mid-gate, and 32-bit collisions could alias different data dirs

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 import graft.expressions.{CosineSimilarity, DotProduct}
-import graft.operators.Similarity
+import graft.operators.{LiteralArms, Similarity}
 
 /** The native codegen expression must be bit-identical to the
   * zip_with/aggregate composition, SQL-callable, and null-safe. */
@@ -21,8 +21,8 @@ class CosineExprSpec extends SparkSpec {
     // (Similarity.cosine itself routes through the dot kernel since r21,
     // so it can no longer serve as the independent reference)
     def pureCosine(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) = {
-      val d = sqrt(Similarity.dot(a, a)) * sqrt(Similarity.dot(b, b))
-      when(d > 0, Similarity.dot(a, b) / d).otherwise(lit(0.0))
+      val d = sqrt(LiteralArms.dot(a, a)) * sqrt(LiteralArms.dot(b, b))
+      when(d > 0, LiteralArms.dot(a, b) / d).otherwise(lit(0.0))
     }
     val withBoth = emb.crossJoin(emb.limit(5).select($"v".as("q")))
       .select(
@@ -39,7 +39,7 @@ class CosineExprSpec extends SparkSpec {
       .select($"vec_id", Similarity.toDouble($"embedding").as("v"))
     val withBoth = emb.crossJoin(emb.limit(5).select($"v".as("q")))
       .select(
-        Similarity.dot($"q", $"v").as("composed"),
+        LiteralArms.dot($"q", $"v").as("composed"),
         Similarity.dotNative($"q", $"v").as("native"))
     val diff = withBoth.filter($"composed" =!= $"native").count()
     assert(diff == 0, s"$diff rows differ between composed and native dot")

@@ -8,8 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * builds its session through [[graft.core.GraftSession.builder]], so no
   * other main source may call Spark's session builder itself; every
   * custom function is injected by the one registry; every MinHash
-  * signature frame is built through the one aggregate site; and every
-  * global running sum goes through the one ranged construction. */
+  * signature frame is built through the one aggregate site; every
+  * global running sum goes through the one ranged construction; every
+  * scratch directory comes from the one cleaned-up factory; and the only
+  * hand-written partition loops are the codec decoders. */
 class EngineSurfaceSpec extends AnyFunSuite {
   private def mainSources: Seq[Path] = {
     val root = Paths.get("src/main/scala")
@@ -63,5 +65,23 @@ class EngineSurfaceSpec extends AnyFunSuite {
     val ranged = codeSites("repartitionByRange")
     assert(ranged == Seq("src/main/scala/graft/operators/Clustering.scala", warehouse),
       s"range-partition through Warehouse.rangedRunningSum: ${ranged.mkString(", ")}")
+  }
+
+  private def filesMentioning(word: String): Seq[String] =
+    mainSources.filter(p => Files.readString(p).contains(word)).map(_.toString).sorted
+
+  test("scratch directories come only from StoreDirs") {
+    // StoreDirs.fresh registers each directory for deletion at JVM exit;
+    // a raw temp directory elsewhere outlives the run
+    val sites = filesMentioning("createTempDirectory")
+    assert(sites == Seq("src/main/scala/graft/queries/StoreDirs.scala"),
+      s"take scratch dirs from StoreDirs.fresh: ${sites.mkString(", ")}")
+  }
+
+  test("mapPartitions only in the codec decoders") {
+    // every other per-row loop is a codegen'd expression kernel
+    val sites = filesMentioning("mapPartitions")
+    assert(sites == Seq("src/main/scala/graft/operators/Multimodal.scala"),
+      s"express per-row work as a kernel expression: ${sites.mkString(", ")}")
   }
 }

@@ -25,19 +25,20 @@ class IvfSpec extends SparkSpec {
   }
 
   test("assign: kernel path (c > ExpressionAssignMaxC) matches the codegen expression exactly") {
-    // same corpus, same centroids, forced through BOTH physical forms —
-    // assignments, vectors, and norms must be bit-identical (both are
-    // left-to-right IEEE sums with a smaller-cid tie-break)
-    val c = Ivf.ExpressionAssignMaxC + 6 // kernel path
+    // same corpus, same centroids, through the kernel projection and the
+    // literal reference — assignments, vectors, and norms must be
+    // bit-identical (both are left-to-right IEEE sums with a smaller-cid
+    // tie-break); c = 38 is past the width the literal arm once served
+    val c = 38
     val base = emb.select($"vec_id", $"embedding")
     val corpus = base.unionByName(
       base.select(($"vec_id" + 100000L).as("vec_id"), $"embedding"))
     val cents = Ivf.seedCentroids(corpus, "vec_id", "embedding", c, stride = 1L)
     val viaKernel = Ivf.assign(corpus, "vec_id", "embedding", cents)
       .collect().map(r => (r.getLong(0), r.getInt(2), r.getDouble(3))).sortBy(_._1)
-    // literal-expression path, forced explicitly (at this c the public
-    // nearestCids dispatches to the NearestCentroids kernel expression,
-    // which the next spec pins separately)
+    // literal-expression path, forced explicitly (the public
+    // nearestCids is the NearestCentroids kernel expression, which the
+    // next spec pins separately)
     val viaExpr = corpus.filter($"vec_id".isNotNull)
       .select($"vec_id".as("id"), Similarity.toDouble($"embedding").as("v"))
       .withColumn("cluster_id",
@@ -57,7 +58,7 @@ class IvfSpec extends SparkSpec {
     val base = emb.select($"vec_id", $"embedding")
     val corpus = base.unionByName(
       base.select(($"vec_id" + 100000L).as("vec_id"), $"embedding"))
-    val c = Ivf.ExpressionAssignMaxC + 8
+    val c = 40
     // duplicate CENTROIDS too (seed twice from the doubled corpus ids):
     // two cids with the same vector tie on every row
     val cents = Ivf.seedCentroids(corpus, "vec_id", "embedding", c, stride = 1L)
@@ -78,7 +79,7 @@ class IvfSpec extends SparkSpec {
   test("ivfTopK above the dispatch threshold (kernel probes) is still exact at nprobe=c") {
     val bigger = graft.Tables.embeddings(spark, "/root/testdata/sf0.01")
     val qs = Seq(0L, 1L, 2L, 3L)
-    val c = Ivf.ExpressionAssignMaxC + 16 // both assign and probes on kernel arms
+    val c = 48
     val ivf = Ivf.ivfTopK(bigger, "vec_id", "embedding", qs, k = 10, c = c,
       nprobe = c, stride = 1L).collect().map(r =>
         (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq

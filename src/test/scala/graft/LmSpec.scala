@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Lm
+import graft.operators.{LiteralArms, Lm}
 import graft.functions.TextAnalysis
 
 /** LM data-prep specs: hand-computed unigram probabilities, vocab and
@@ -82,7 +82,7 @@ class LmSpec extends SparkSpec {
       (6L, Seq.empty[String]))           // empty doc stays empty
       .toDF("id", "toks")
     val got = df.select(col("id"),
-        Lm.applyMerge(col("toks"), "a", "a", "~").as("m"))
+        LiteralArms.applyMerge(col("toks"), "a", "a").as("m"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(got(1L) == Seq("a~a", "a"))
     assert(got(2L) == Seq("a~a", "a~a"))
@@ -166,7 +166,7 @@ class LmSpec extends SparkSpec {
       List.fill(1 + rnd.nextInt(30))(Seq("a", "b", "c", "d")(rnd.nextInt(4))))
     val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t.mkString(" ")) }
       .toDF("doc_id", "text")
-    val dist = Lm.bpeMergesDistributed(df, "doc_id", "text", 12, "~")
+    val dist = Lm.bpeMerges(df, "doc_id", "text", 12)
       .orderBy($"round").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
     val samp = Lm.bpeMergesSampled(df, "doc_id", "text", rounds = 12,
@@ -174,17 +174,15 @@ class LmSpec extends SparkSpec {
       .orderBy($"round").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
     assert(samp == dist, s"sampled arm diverged:\n$samp\nvs\n$dist")
-    // arm choice is the caller's EXPLICIT flag (r15 advice: no silent
-    // semantics switch on a round-count heuristic): sampled = true
-    // opts in and still matches; the default stays on the exact arm
-    // even past the advisory warning threshold (rounds exhaust long
-    // before 65 on this corpus, so both runs are cheap)
-    val optIn = Lm.bpeMerges(df, "doc_id", "text",
-        rounds = Lm.DistributedTrainMaxRounds + 1, sampled = true)
+    // arm choice is the caller's EXPLICIT call (r15 advice: no silent
+    // semantics switch on a round-count heuristic): the sampled trainer
+    // at its default sample still matches the exact one at high round
+    // counts (rounds exhaust long before 65 on this corpus, so both
+    // runs are cheap)
+    val optIn = Lm.bpeMergesSampled(df, "doc_id", "text", rounds = 65)
       .orderBy($"round").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
-    val distLong = Lm.bpeMerges(df, "doc_id", "text",
-        rounds = Lm.DistributedTrainMaxRounds + 1)
+    val distLong = Lm.bpeMerges(df, "doc_id", "text", rounds = 65)
       .orderBy($"round").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
     assert(optIn == distLong, "opt-in sampled arm diverged at high rounds")
@@ -201,7 +199,7 @@ class LmSpec extends SparkSpec {
     val lo = "�"
     val df = Seq((1L, s"q $hi"), (2L, s"q $lo")).toDF("doc_id", "text")
     assert(s"q $hi".compareTo(s"q $lo") < 0, "UTF-16 premise broke")
-    val dist = Lm.bpeMergesDistributed(df, "doc_id", "text", 1, "~")
+    val dist = Lm.bpeMerges(df, "doc_id", "text", 1)
       .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
     val samp = Lm.bpeMergesSampled(df, "doc_id", "text", rounds = 1,
         sampleDocs = 100)
@@ -275,11 +273,11 @@ class LmSpec extends SparkSpec {
 
   test("bpeEncode kernel arm == literal regexp arm, char for char") {
     // Same corpus, same table, both arms driven through Spark: the
-    // literal chain via the public dispatch (table <= threshold), the
-    // kernel expression invoked directly. Tokens include regex
-    // metacharacters so Pattern.quote parity is exercised, and the
-    // table includes a self-pair (a,a) and a composed pair built from
-    // an earlier merge's output.
+    // literal chain via the test-scope reference, the kernel via the
+    // public bpeEncode, compared on all four output columns. Tokens
+    // include regex metacharacters so Pattern.quote parity is exercised,
+    // and the table includes a self-pair (a,a) and a composed pair built
+    // from an earlier merge's output.
     val rnd = new scala.util.Random(42)
     val alpha = Seq("a", "b", "c", "d", "a.b", "c+")
     val docs = (1L to 40L).map(i => (i,
@@ -288,21 +286,18 @@ class LmSpec extends SparkSpec {
     val merges = Seq(("a", "b"), ("a", "a"), ("a~b", "c"), ("a.b", "c+")) ++
       (1 to 116).map(_ => (alpha(rnd.nextInt(alpha.size)),
         alpha(rnd.nextInt(alpha.size))))
-    assert(merges.size <= Lm.LiteralEncodeMaxMerges) // literal arm below
-    val literal = Lm.bpeEncode(docs, "doc_id", "text", merges)
-      .collect().map(r => r.getLong(0) -> r.getString(3)).toMap
-    val kernel = docs.select($"doc_id",
-        graft.expressions.BpeEncode.column(
-          TextAnalysis.tokens($"text"), merges, "~").as("enc"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2), r.getString(3)))).toMap
+    val literal = rows(LiteralArms.bpeEncodeLiteral(docs, "doc_id", "text", merges))
+    val kernel = rows(Lm.bpeEncode(docs, "doc_id", "text", merges))
+    assert(literal.size == 40)
     assert(kernel == literal)
   }
 
   test("bpeEncode kernel arm == independent regex reference at 300 merges") {
-    // Above the dispatch threshold the public API routes to the kernel;
-    // pin it against a plain-JVM sequential regexp-pass reference (the
-    // defining semantics) on a table size the literal Column arm is
-    // never asked to hold.
+    // pin the public API's kernel against a plain-JVM sequential
+    // regexp-pass reference (the defining semantics) on a table size the
+    // literal Column arm is never asked to hold.
     import java.util.regex.{Matcher, Pattern}
     def ref(text: String, merges: Seq[(String, String)]): String = {
       val toks = text.trim.split("\\s+").filter(_.nonEmpty)
@@ -326,7 +321,6 @@ class LmSpec extends SparkSpec {
       grown = grown :+ (p._1 + "~" + p._2)
       p
     }
-    assert(merges.size > Lm.LiteralEncodeMaxMerges) // kernel arm via dispatch
     val got = Lm.bpeEncode(texts.toDF("doc_id", "text"), "doc_id", "text", merges)
       .collect().map(r => r.getLong(0) -> r.getString(3)).toMap
     texts.foreach { case (id, t) =>

@@ -68,21 +68,33 @@ class PlanSpec extends SparkSpec {
 
   test("bpeEncode is a shuffle-free single-stage regexp chain") {
     withAtScaleScans {
-    val enc = graft.operators.Lm.bpeEncode(
-      graft.Tables.documents(spark, d), "doc_id", "text",
-      Seq(("a", "b"), ("c", "d"), ("e", "f")))
+    val docs = graft.Tables.documents(spark, d)
+    val merges = Seq(("a", "b"), ("c", "d"), ("e", "f"))
+    val enc = graft.operators.Lm.bpeEncode(docs, "doc_id", "text", merges)
     val p = enc.queryExecution.executedPlan.toString
     // pure map over the scan: encoding 100 TB must never shuffle
     assert(!p.contains("Exchange"), s"bpeEncode gained a shuffle:\n$p")
-    // the whole merge table rides as a chain of regexp passes — one
+    // the whole merge table rides as one kernel call, inside whole-stage
+    // codegen (codegen stages render as "*(n)" in the plan string)
+    assert(p.contains("graft_bpe_encode"), s"bpeEncode lost its kernel:\n$p")
+    assert(p.contains("*(2) Project"), s"bpeEncode fell out of codegen:\n$p")
+    // the test-scope reference keeps the regexp-chain shape: one
     // regexp_replace per merge, all inside whole-stage codegen. (The r12
     // expression-fold shape needed a projection boundary per merge; the
     // regexp chain reads each child exactly once, so merges stack freely.)
-    val regexps = "(?i)regexp_replace".r.findAllIn(p).length
-    assert(regexps == 3, s"expected 3 regexp merge passes, got $regexps:\n$p")
-    // codegen stages render as "*(n)" in the plan string
-    assert(p.contains("*(2) Project"), s"bpeEncode fell out of codegen:\n$p")
+    val r = graft.operators.LiteralArms.bpeEncodeLiteral(docs, "doc_id", "text", merges)
+      .queryExecution.executedPlan.toString
+    assert(!r.contains("Exchange"), s"the regexp chain gained a shuffle:\n$r")
+    val regexps = "(?i)regexp_replace".r.findAllIn(r).length
+    assert(regexps == 3, s"expected 3 regexp merge passes, got $regexps:\n$r")
+    assert(r.contains("*(2) Project"), s"the regexp chain fell out of codegen:\n$r")
     }
+  }
+
+  test("v4_bpe_encode encodes through graft_bpe_encode, not a regexp chain") {
+    val p = plan("v4_bpe_encode")
+    assert(p.contains("graft_bpe_encode"), s"v4 lost the encode kernel:\n$p")
+    assert(!p.contains("regexp_replace"), s"v4 plans a regexp chain:\n$p")
   }
 
   test("range join plans as hash join, never nested loop") {
@@ -245,20 +257,22 @@ class PlanSpec extends SparkSpec {
   test("Ivf.assign kernel path (c > ExpressionAssignMaxC) stays map-side only") {
     import spark.implicits._
     import graft.operators.Ivf
-    val c = Ivf.ExpressionAssignMaxC + 1
-    val corpus = (0L until (4L * c)).map(i =>
-      (i, Array.tabulate(64)(j => ((i * 31 + j) % 97).toFloat / 97f)))
+    val c = 33
+    // an RDD-backed corpus: a local Seq would fold the whole projection
+    // into a LocalTableScan and hide its shape
+    val corpus = spark.sparkContext.parallelize((0L until (4L * c)).map(i =>
+      (i, Array.tabulate(64)(j => ((i * 31 + j) % 97).toFloat / 97f))))
       .toDF("vec_id", "embedding")
     val cents = Ivf.seedCentroids(corpus, "vec_id", "embedding", c, stride = 1L)
     val p = Ivf.assign(corpus, "vec_id", "embedding", cents)
       .queryExecution.executedPlan.toString
     // assignment is the quantizer's whole point at 100 TB: the corpus
-    // must take its cluster id from a broadcast matrix without ANY
-    // exchange — scan, project, kernel, done
+    // must take its cluster id from the centroid-matrix kernel without
+    // ANY exchange — scan, project, kernel, done
     assert(!p.contains("Exchange"),
       s"large-c assign must not shuffle the corpus:\n$p")
-    assert(p.contains("MapPartitions") || p.contains("mapPartitions"),
-      s"expected the kernel form above ExpressionAssignMaxC:\n$p")
+    assert(p.contains("graft_nearest_cids"),
+      s"expected the nearest-centroid kernel projection:\n$p")
   }
 
   test("x13: checkpointed signatures, band self-join reuses its exchange") {

@@ -9,6 +9,9 @@ class PqSpec extends SparkSpec {
   import spark.implicits._
 
   private val sf = "/root/testdata/sf0.001"
+  /** The largest ks the literal expression arm was once dispatched at;
+    * the kernel-vs-literal cases run above it. */
+  private val LiteralCodebookMaxKs = 32
   private def emb = graft.Tables.embeddings(spark, sf)
 
   test("seedCodebooks slices seeds into m codebooks of ks centroids") {
@@ -93,7 +96,7 @@ class PqSpec extends SparkSpec {
     // literal arm (forced) and the PqCodes/PqLut kernels must agree to
     // the bit — same ascending-index folds, same (dist, code) tie-break
     val bigger = graft.Tables.embeddings(spark, "/root/testdata/sf0.01")
-    val ks = Pq.LiteralCodebookMaxKs + 16
+    val ks = LiteralCodebookMaxKs + 16
     val books = Pq.seedCodebooks(bigger, "vec_id", "embedding", m = 8,
       ks = ks, stride = 1L)
     val v = Similarity.toDouble($"embedding")
@@ -117,7 +120,7 @@ class PqSpec extends SparkSpec {
       .select(($"vec_id" + 500000L).as("vec_id"), $"embedding", $"label")
     val corpus = bigger.unionByName(twin)
     val got = Pq.adcTopK(corpus, "vec_id", "embedding", Seq(500003L), k = 3,
-      m = 8, ks = Pq.LiteralCodebookMaxKs + 16, stride = 1L)
+      m = 8, ks = LiteralCodebookMaxKs + 16, stride = 1L)
       .filter($"rank" === 1).collect()
     assert(got.length == 1)
     // the twin's nearest neighbor at rank 1 is its identical original

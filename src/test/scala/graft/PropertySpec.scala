@@ -48,7 +48,7 @@ class PropertySpec extends SparkSpec {
     val df = arrays.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("i", "toks")
     pairs.foreach { case (a, b) =>
       val got = df.select($"i",
-          graft.operators.Lm.applyMerge($"toks", a, b, "~").as("m"))
+          graft.operators.LiteralArms.applyMerge($"toks", a, b).as("m"))
         .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toList).toMap
       arrays.zipWithIndex.foreach { case (t, i) =>
         val want = reference(t, a, b)

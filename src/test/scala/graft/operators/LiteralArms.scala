@@ -5,15 +5,20 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextAnalysis
 import graft.operators.Dedup.{jaccard, minhashAgg, shinglesFromTokens, tokenized}
 
-/** SQL-expressible reference arms of the PQ, IVF and hyperplane-LSH
-  * kernels: the literal expression trees production dispatched to before
-  * the codegen kernels replaced them. Specs pin every kernel bit-identical
-  * to these (PqSpec, IvfSpec, SimilaritySpec); nothing in the engine calls
-  * them. Also the two-pass MinHash-LSH pair finder, the independent
-  * reference [[Dedup.minhashLshPairs]] is pinned row-identical to
-  * (TextDedupSpec).
+/** SQL-expressible reference arms of the dot, PQ, IVF, hyperplane-LSH
+  * and BPE-encode kernels: the literal expression trees production
+  * dispatched to before the codegen kernels replaced them. Specs pin
+  * every kernel bit-identical to these (CosineExprSpec, PqSpec, IvfSpec,
+  * SimilaritySpec, LmSpec); nothing in the engine calls them. Also the
+  * two-pass MinHash-LSH pair finder, the independent reference
+  * [[Dedup.minhashLshPairs]] is pinned row-identical to (TextDedupSpec).
   */
 object LiteralArms {
+
+  /** Index-ordered dot product as a `zip_with`/`aggregate` fold — the
+    * reference form of [[Similarity.dotNative]]. */
+  def dot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
   /** Components s·d+1 .. (s+1)·d of `v` (1-based slice). */
   private def subvec(v: Column, s: Int, d: Int): Column =
@@ -52,7 +57,7 @@ object LiteralArms {
     * for a fixed row vector. */
   private def centScore(v: Column, cent: Ivf.Centroid): Column = {
     val cv = array(cent.v.map(lit): _*)
-    if (cent.norm > 0) Similarity.dot(v, cv) / lit(cent.norm) else lit(0.0)
+    if (cent.norm > 0) dot(v, cv) / lit(cent.norm) else lit(0.0)
   }
 
   /** Reference arm of [[Ivf.nearestCids]]: ascending (-score, cid)
@@ -70,7 +75,7 @@ object LiteralArms {
                           dim: Int = 64): Column = {
     val sig = Similarity.planeLiterals(planes, dim, table).zipWithIndex.map { case (p, i) =>
       val plane = array(p.map(lit): _*)
-      when(Similarity.dot(v, plane) > 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
+      when(dot(v, plane) > 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
     }
     val dimGuard = when(size(v) === dim, lit(0L))
       .otherwise(raise_error(concat(
@@ -83,6 +88,36 @@ object LiteralArms {
                       buckets: Long = 0, dim: Int = 64): Column = {
     val sig = hyperplaneSignature(v, planes, table, dim)
     if (buckets > 0) pmod(sig, lit(buckets)) else sig
+  }
+
+  /** [[Lm.applyMergeStr]] on a token-array column: one BPE merge
+    * (a, b) -> a·b, greedy left-to-right non-overlapping, as one regexp
+    * pass over the space-padded joined string. */
+  def applyMerge(toks: Column, a: String, b: String): Column = {
+    val padded = concat(lit(" "), array_join(toks, " "), lit(" "))
+    // split("", " ") is [""], not [] — guard the no-token row
+    when(size(toks) === 0, toks)
+      .otherwise(split(trim(Lm.applyMergeStr(padded, a, b)), " "))
+  }
+
+  /** Reference arm of [[Lm.bpeEncode]]: the whole merge table as one
+    * projection of nested literal-pattern regexp passes (one linear
+    * string pass per merge) over the space-padded token string. Same
+    * output shape: (doc_id, n_tokens_raw, n_tokens_bpe, encoded_text). */
+  def bpeEncodeLiteral(df: DataFrame, idCol: String, textCol: String,
+                       merges: Seq[(String, String)]): DataFrame = {
+    val base = df.select(col(idCol).as("doc_id"),
+      TextAnalysis.tokens(col(textCol)).as("__raw"))
+    val padded = concat(lit(" "), array_join(col("__raw"), " "), lit(" "))
+    val encStr = trim(merges.foldLeft(padded) {
+      case (s, (a, b)) => Lm.applyMergeStr(s, a, b)
+    })
+    base.select(col("doc_id"), col("__raw"), encStr.as("__encs"))
+      .select(col("doc_id"),
+        size(col("__raw")).as("n_tokens_raw"),
+        when(size(col("__raw")) === 0, lit(0))
+          .otherwise(size(split(col("__encs"), " "))).as("n_tokens_bpe"),
+        col("__encs").as("encoded_text"))
   }
 
   /** (id, sig) via the typed array aggregator ([[Dedup.minhashAgg]]). */

@@ -18,7 +18,7 @@ import graft.operators.{Dedup, Similarity}
   * spec, different loop/fold order, no Spark plan shapes shared.
   * Shared determinism contract (the reason diff 0 is achievable): all
   * engine vector math is index-ordered left-to-right IEEE folds over
-  * double-cast arrays (`Similarity.dot`), and the hyperplanes are
+  * double-cast arrays (`Similarity.dotNative`), and the hyperplanes are
   * deterministic in (planes, table) via `planeLiterals` — so the
   * reference's sequential while-loops produce bit-identical doubles,
   * and ranks/thresholds computed on them agree exactly.

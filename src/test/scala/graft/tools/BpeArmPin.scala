@@ -23,8 +23,8 @@ object BpeArmPin {
       df.collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
         .sortBy(_._1).toSeq
     val t0 = System.nanoTime()
-    val dist = collectPicks(graft.operators.Lm.bpeMergesDistributed(
-      docs, "doc_id", "text", rounds, "~"))
+    val dist = collectPicks(graft.operators.Lm.bpeMerges(
+      docs, "doc_id", "text", rounds))
     val tDist = (System.nanoTime() - t0) / 1e9
     val t1 = System.nanoTime()
     val samp = collectPicks(graft.operators.Lm.bpeMergesSampled(

@@ -10,12 +10,11 @@ import org.apache.spark.sql.functions._
   * The comparator is a plain per-row Scala greedy scan — the same
   * reference semantics the PropertySpec/LmSpec driver-side trainers
   * pin, here run DISTRIBUTED as a typed Dataset map so it reaches any
-  * scale the engine does. It shares no code with the engine path (a
-  * regexp_replace chain over the space-padded string,
-  * [[graft.operators.Lm.applyMergeStr]]): an imperative index scan per
-  * merge vs leftmost-first regex replacement — a drift in either
-  * implementation of greedy left-to-right non-overlapping merge fails
-  * the exceptAll below.
+  * scale the engine does. It shares no code with the engine path (the
+  * `graft_bpe_encode` kernel, [[graft.expressions.BpeMergeKernel]],
+  * with its token-presence skip): a plain index scan per merge — a
+  * drift in either implementation of greedy left-to-right
+  * non-overlapping merge fails the exceptAll below.
   *
   * Output: row counts of both encodings and the symmetric exceptAll
   * difference (want 0) over the FULL 4-column contract

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * centroid LIMIT and the allocator-heavy within-cluster pair join).
   * The ENGINE runs the exact gate derivation (`SparkEntry.queries`'s
   * sd1 entry — doubled corpus, centroidsFor-scaled quantizer, which at
-  * sf1 exceeds ExpressionAssignMaxC and so exercises the BROADCAST
-  * KERNEL assign arm the sf0.01 oracle never reaches); the REFERENCE
+  * sf1 runs hundreds of centroids through the assign kernel, a width
+  * the sf0.01 oracle never reaches); the REFERENCE
   * re-derives the whole SemDeDup path driver-local — seed selection,
   * argmax assignment with the smaller-cid tie-break, within-cluster
   * pair cosines, the larger-id-drops rule — through plain JVM arrays,
