@@ -236,6 +236,15 @@ object Bench {
       s""""total":${n(total)},"runs":5,"stat":"min"}""", total))
   }
 
+  /** Where the full artifact goes: SPARK_GRAFT_BENCH_FULL if set, else
+    * the tracked `BENCH_full.json` for a full-surface run, else (a
+    * SPARK_GRAFT_ONLY subset) `target/BENCH_subset.json`, so a partial
+    * run never overwrites the committed full artifact that [[postCheck]]
+    * reads back as its reference. */
+  private[graft] def fullArtifactPath(env: Map[String, String]): String =
+    env.getOrElse("SPARK_GRAFT_BENCH_FULL",
+      if (env.contains("SPARK_GRAFT_ONLY")) "target/BENCH_subset.json" else "BENCH_full.json")
+
   def main(args: Array[String]): Unit = {
     val (quietVerdict, quietWaitSec) = quietGate()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -406,9 +415,13 @@ object Bench {
     // (the r12 compact line still embedded the 124-entry medians map and
     // still got its head clipped): just total + runs + sf + the file
     // pointer — small enough that any tail capture holds it whole.
-    val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_full.json")
+    val fullPath = fullArtifactPath(sys.env)
     val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"times":$times,"loads":$loads,"bimodal":$bimodal,"runs":$runs,"sf":"$sfDir",$guard,$adjud,"env":$env}"""
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(fullPath), full)
+    try {
+      val p = java.nio.file.Paths.get(fullPath)
+      Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
+      java.nio.file.Files.writeString(p, full)
+    }
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $fullPath (${e.getMessage}); full artifact follows on stderr")
       System.err.println(full)

@@ -1,5 +1,8 @@
 package graft.core
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.SparkSession
 
 /** Session factory for the engine.
@@ -18,17 +21,36 @@ import org.apache.spark.sql.SparkSession
   *    `timestamp without time zone` columns and the DuckDB oracle.
   *  - every `graft_*` kernel is injected into the function registry
   *    once, here ([[graft.expressions.GraftExtensions]]).
+  *  - codegen class cache = [[CodegenCacheEntries]]. Spark's default of
+  *    100 entries is smaller than one pass of the engine's plans, so the
+  *    LRU cache evicted every class before its reuse and each repeated
+  *    pass recompiled from scratch (a warm corpus_dedup op compiled ~265
+  *    classes, ~3.4 s of Janino time). Measured distinct working sets:
+  *    ~270 classes for the dedup gates x13+x14+x8 run together, ~226 for
+  *    one overwrite VcPipeline run with its checks, at most ~190 for any
+  *    single Bench gate (cur5 at sf0.01), and ~1,400 for all 142 gates.
+  *    1024 holds every repeated unit about 4x over, while a full Bench
+  *    run still evicts, so class metadata stays bounded (+10 MB of
+  *    metaspace over the default on the 142-gate pass). A static conf:
+  *    it only takes effect when set before the JVM's first compile.
+  *  - WindowExec's "No Partition Defined" warning is silenced: the
+  *    engine's global windows run on deliberately small inputs, and the
+  *    warning drowned every other WARN line of a pipeline run.
   *
   * Every session in the engine, its mains, tools and specs is built here;
   * callers add only their own settings on the returned builder.
   */
-object GraftSession {
+object GraftSession extends Logging {
   /** Task slots: SPARK_GRAFT_CPUS, else the machine's cores. */
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
     Runtime.getRuntime.availableProcessors().toString)
 
+  /** Entries of Spark's generated-class cache (`spark.sql.codegen.cache.maxEntries`). */
+  val CodegenCacheEntries = 1024
+
   /** `local[cpus]` with `cpus` shuffle partitions and the engine defaults. */
-  def builder(cpus: Int = GraftSession.cpus.toInt): SparkSession.Builder =
+  def builder(cpus: Int = GraftSession.cpus.toInt): SparkSession.Builder = {
+    quietGlobalWindows()
     SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft")
@@ -41,7 +63,16 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .withExtensions(new graft.expressions.GraftExtensions)
+  }
+
+  private def quietGlobalWindows(): Unit = {
+    // Spark's first log call loads its default log4j configuration when
+    // none was given, which drops any level set before it
+    initializeLogIfNecessary(isInterpreter = false)
+    Configurator.setLevel("org.apache.spark.sql.execution.window.WindowExec", Level.ERROR)
+  }
 
   /** Get-or-create with engine defaults. */
   def get(): SparkSession = {

@@ -1,13 +1,17 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import scala.collection.mutable
 
 /** Generic per-query bench forensics (r20 optimization round): runs the
   * named gates N times in one JVM and attributes each run's wall time to
   * jobs / stages / tasks, so a slow gate can be blamed on task compute,
   * a straggler, GC, or driver gaps (planning, codegen, scheduling) —
-  * the thing the sf0.1 bench numbers alone cannot distinguish.
+  * the thing the sf0.1 bench numbers alone cannot distinguish. Each run
+  * line also carries the Janino compiles of the run and their ms, so a
+  * driver gap splits into codegen and everything else.
   * tools/Y3Probe (deleted after 17eacc8) generalized to any gate; the one
   * per-gate attribution probe. Not part of the library surface.
   *
@@ -17,6 +21,13 @@ object QueryProbe {
   final case class StageRec(id: Int, name: String, durMs: Long,
                             maxTaskMs: Long, taskSumMs: Long, cpuSumMs: Long,
                             deserSumMs: Long, gcMs: Long, tasks: Int)
+
+  /** JVM-wide (Janino compiles, compile ns) so far; a run's codegen is
+    * the difference of two readings. Read it only once a GraftSession
+    * exists: the first touch of Spark's CodeGenerator fixes its cache
+    * size for the JVM, and without a session that is Spark's default. */
+  def codegen(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
@@ -83,9 +94,11 @@ object QueryProbe {
           jobStart.clear(); stageStart.clear()
           taskGc.clear(); taskCnt.clear(); jobs = 0; jobMs = 0L
         }
+        val (compiles0, compileNs0) = codegen()
         val t0 = System.nanoTime()
         val n = fn(spark, sfDir).count()
         val wall = (System.nanoTime() - t0) / 1e9
+        val (compiles1, compileNs1) = codegen()
         Thread.sleep(700) // listener bus is async: let it drain
         val (snap, nJobs, sumJobMs) =
           synchronized { (stages.toList, jobs, jobMs) }
@@ -93,7 +106,8 @@ object QueryProbe {
         val taskMs = snap.map(_.taskSumMs).sum
         println(f"== $name run=$r wall=$wall%.2f s rows=$n jobs=$nJobs " +
           f"jobMs=$sumJobMs stages=${snap.length} stageMsSum=$stageMs " +
-          f"taskMsSum=$taskMs gcMs=${snap.map(_.gcMs).sum}")
+          f"taskMsSum=$taskMs gcMs=${snap.map(_.gcMs).sum} " +
+          f"compiles=${compiles1 - compiles0} compileMs=${(compileNs1 - compileNs0) / 1000000L}")
         snap.sortBy(-_.durMs).take(topN).foreach(s => println(
           f"  stage=${s.id}%4d dur=${s.durMs}%6d ms maxTask=${s.maxTaskMs}%5d " +
             f"taskSum=${s.taskSumMs}%6d cpuSum=${s.cpuSumMs}%6d deser=${s.deserSumMs}%5d " +

@@ -60,7 +60,7 @@ class ClassifierSpec extends SparkSpec {
   }
 
   test("scoring from a parquet model store equals a fresh retrain") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_nb_spec").toString
+    val dir = TestDirs.fresh("nb_spec")
     Classifier.nbTermStats(seed, "text", "lang", Seq("a", "b"))
       .write.mode("overwrite").parquet(s"$dir/stats")
     Classifier.nbPriors(seed, "lang", Seq("a", "b"))
@@ -137,7 +137,7 @@ class ClassifierSpec extends SparkSpec {
     val seedHalf = graft.Tables.documents(spark, d)
       .filter(col("doc_id") % 2 === 0)
     val langs = Seq("de", "en", "es", "fr", "zh")
-    val store = java.nio.file.Files.createTempDirectory("nb_store_s").toString
+    val store = TestDirs.fresh("nb_store_s")
     Classifier.nbTermStats(seedHalf, "text", "lang", langs)
       .write.mode("overwrite").parquet(s"$store/stats")
     Classifier.nbPriors(seedHalf, "lang", langs)
@@ -150,7 +150,7 @@ class ClassifierSpec extends SparkSpec {
         "en", langs, seed = 3001L, tau = 0.02, temperature = 0.02)
         .select("doc_id", "p_keep", "predicted")
         .collect().map(r => (r.getLong(0), r.getDouble(1), r.getString(2)))
-    val deltaDir = java.nio.file.Files.createTempDirectory("nb_delta_s").toString
+    val deltaDir = TestDirs.fresh("nb_delta_s")
     docs.repartition(5).write.mode("overwrite").parquet(deltaDir)
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, String)]
     val q = spark.readStream
@@ -162,7 +162,7 @@ class ClassifierSpec extends SparkSpec {
         got ++= scoreResample(batch); ()
       }
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ckpt_nb").toString)
+        TestDirs.fresh("ckpt_nb"))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()

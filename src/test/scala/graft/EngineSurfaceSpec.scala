@@ -10,8 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * custom function is injected by the one registry; every MinHash
   * signature frame is built through the one aggregate site; every
   * global running sum goes through the one ranged construction; every
-  * scratch directory comes from the one cleaned-up factory; and the only
-  * hand-written partition loops are the codec decoders. */
+  * scratch directory, specs' included, comes from the one cleaned-up
+  * factory; the codegen class cache is sized in the session factory
+  * only; and the only hand-written partition loops are the codec
+  * decoders. */
 class EngineSurfaceSpec extends AnyFunSuite {
   private def mainSources: Seq[Path] = {
     val root = Paths.get("src/main/scala")
@@ -76,6 +78,23 @@ class EngineSurfaceSpec extends AnyFunSuite {
     val sites = filesMentioning("createTempDirectory")
     assert(sites == Seq("src/main/scala/graft/queries/StoreDirs.scala"),
       s"take scratch dirs from StoreDirs.fresh: ${sites.mkString(", ")}")
+  }
+
+  test("spec scratch directories come only from TestDirs") {
+    val root = Paths.get("src/test/scala")
+    val self = root.resolve("graft/EngineSurfaceSpec.scala")
+    val sites = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p != self &&
+        Files.readString(p).contains("createTempDirectory"))
+      .map(_.toString).toSeq.sorted
+    assert(sites.isEmpty, s"take spec scratch dirs from TestDirs.fresh: ${sites.mkString(", ")}")
+  }
+
+  test("only core/GraftSession.scala sizes the codegen class cache") {
+    // a static conf: the first session of the JVM fixes it for good
+    val sites = filesMentioning("spark.sql.codegen.cache.maxEntries")
+    assert(sites == Seq("src/main/scala/graft/core/GraftSession.scala"),
+      s"size the codegen cache in GraftSession only: ${sites.mkString(", ")}")
   }
 
   test("mapPartitions only in the codec decoders") {

@@ -94,7 +94,7 @@ class IvfSpec extends SparkSpec {
         nprobe = 3).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
     val cents = Ivf.seedCentroids(emb, "vec_id", "embedding", 8)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_store").toString
+    val dir = TestDirs.fresh("ivf_store")
     Ivf.assign(emb, "vec_id", "embedding", cents)
       .write.mode("overwrite").parquet(dir + "/assigned")
     Ivf.centroidsAsDf(spark, cents)

@@ -114,9 +114,9 @@ class JdbcSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     // many files -> several micro-batches; file order is NOT
     // version-monotone, which is exactly what the guard must absorb
-    val src = java.nio.file.Files.createTempDirectory("ev_jdbc").toString
+    val src = TestDirs.fresh("ev_jdbc")
     graft.Tables.events(spark, dir).repartition(9).write.mode("overwrite").parquet(src)
-    val ckpt = java.nio.file.Files.createTempDirectory("ckpt_jdbc").toString
+    val ckpt = TestDirs.fresh("ckpt_jdbc")
     val q = graft.streaming.EventsStream.jdbcUpsertSink(
       graft.streaming.EventsStream.readEvents(spark, src)
         .select($"user_id", $"event_id", $"event_type"),
@@ -147,7 +147,7 @@ class JdbcSpec extends SparkSpec {
     // alias and the version-guard WHERE) — so the dialect arm that was
     // previously statement-shape-tested now drives the REAL
     // foreachPartition/prepare/batch/commit path end to end.
-    val dbFile = java.nio.file.Files.createTempDirectory("duck").toString + "/pg.duckdb"
+    val dbFile = TestDirs.fresh("duck") + "/pg.duckdb"
     val duckUrl = s"jdbc:duckdb:$dbFile"
     Class.forName("org.duckdb.DuckDBDriver")
     // PIN one connection for the whole test: in-process duckdb attaches
@@ -204,7 +204,7 @@ class JdbcSpec extends SparkSpec {
     // live only through Derby MERGE; this drives the same multi-batch
     // convergence through the ON CONFLICT arm. connections=1: duckdb
     // file databases take a single writer
-    val dbFile = java.nio.file.Files.createTempDirectory("duck_s").toString + "/s.duckdb"
+    val dbFile = TestDirs.fresh("duck_s") + "/s.duckdb"
     val duckUrl = s"jdbc:duckdb:$dbFile"
     Class.forName("org.duckdb.DuckDBDriver")
     val pin = DriverManager.getConnection(duckUrl)
@@ -212,9 +212,9 @@ class JdbcSpec extends SparkSpec {
       pin.createStatement().execute(
         "CREATE TABLE user_latest_pg (user_id BIGINT PRIMARY KEY, event_id BIGINT, event_type VARCHAR)")
       val dir = "/root/testdata/sf0.001"
-      val src = java.nio.file.Files.createTempDirectory("ev_pg").toString
+      val src = TestDirs.fresh("ev_pg")
       graft.Tables.events(spark, dir).repartition(9).write.mode("overwrite").parquet(src)
-      val ckpt = java.nio.file.Files.createTempDirectory("ckpt_pg").toString
+      val ckpt = TestDirs.fresh("ckpt_pg")
       val q = graft.streaming.EventsStream.jdbcUpsertSink(
         graft.streaming.EventsStream.readEvents(spark, src)
           .select($"user_id", $"event_id", $"event_type"),
@@ -260,11 +260,11 @@ class JdbcSpec extends SparkSpec {
       val conn2 = DriverManager.getConnection(url)
       try conn2.createStatement().execute("DELETE FROM tie_latest")
       finally conn2.close()
-      val src = java.nio.file.Files.createTempDirectory(s"jtie_src$i").toString
+      val src = TestDirs.fresh(s"jtie_src$i")
       // vary physical order per run; the converged row must not move
       rows.toDF("user_id", "event_id", "event_type")
         .repartition(i).write.mode("overwrite").parquet(src)
-      val ckpt = java.nio.file.Files.createTempDirectory(s"jtie_ckpt$i").toString
+      val ckpt = TestDirs.fresh(s"jtie_ckpt$i")
       val q = graft.streaming.EventsStream.jdbcUpsertSink(
         spark.readStream.schema(schema).parquet(src),
         keyCols = Seq("user_id"), versionCol = "event_id",

@@ -93,6 +93,16 @@ class ScaleKnobSpec extends AnyFunSuite {
     assert(Bench.stableMed(Seq(0.5, 1.9, 1.9, 2.0)) == 1.9)
   }
 
+  test("Bench.fullArtifactPath: a SPARK_GRAFT_ONLY subset writes under target/, not over BENCH_full.json") {
+    // the full surface keeps the tracked artifact (the total line names it)
+    assert(Bench.fullArtifactPath(Map.empty) == "BENCH_full.json")
+    assert(Bench.fullArtifactPath(Map("SPARK_GRAFT_ONLY" -> "x13_edit_distance")) ==
+      "target/BENCH_subset.json")
+    // an explicit path wins on either surface
+    for (only <- Seq(Map.empty[String, String], Map("SPARK_GRAFT_ONLY" -> "x8")))
+      assert(Bench.fullArtifactPath(only + ("SPARK_GRAFT_BENCH_FULL" -> "/d/b.json")) == "/d/b.json")
+  }
+
   test("Bench.postCheckDecision: deviation vs committed ref downgrades to suspect") {
     def ref(total: Double, gate: String, lb: String, sf: String = "/d/sf0.1",
             calib: String = "null") =

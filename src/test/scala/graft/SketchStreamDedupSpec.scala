@@ -25,7 +25,7 @@ class SketchStreamDedupSpec extends SparkSpec {
 
   test("streaming dedupByKey == batch dropDuplicates (AvailableNow)") {
     // duplicate the stream source file so every event arrives twice
-    val d = java.nio.file.Files.createTempDirectory("events_dup")
+    val d = java.nio.file.Paths.get(TestDirs.fresh("events_dup"))
     for (i <- 1 to 2)
       java.nio.file.Files.copy(
         java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.net.InetSocketAddress
 import org.apache.spark.sql.functions._
@@ -13,7 +12,7 @@ class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
   test("csv round-trip preserves schema'd values") {
-    val tmp = Files.createTempDirectory("csvspec").toString
+    val tmp = TestDirs.fresh("csvspec")
     val df = Seq((1L, "a", BigDecimal("10.50")), (2L, "b", BigDecimal("-3.25")))
       .toDF("id", "name", "amount")
       .select(col("id"), col("name"), col("amount").cast("decimal(18,2)").as("amount"))
@@ -25,7 +24,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("orc round-trip preserves values and keeps filter pushdown") {
-    val tmp = java.nio.file.Files.createTempDirectory("orc_spec").toString
+    val tmp = TestDirs.fresh("orc_spec")
     val in = Seq((1L, "a", BigDecimal(10)), (2L, "b", BigDecimal(-5)))
       .toDF("id", "s", "v").select($"id", $"s", $"v".cast("decimal(18,2)").as("v"))
     Writers.orc(in, s"$tmp/t")
@@ -213,7 +212,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("partitioned write + dynamic overwrite replaces only touched partitions") {
-    val tmp = Files.createTempDirectory("partspec").toString
+    val tmp = TestDirs.fresh("partspec")
     val v1 = Seq((1, "a"), (2, "b")).toDF("id", "pt")
     Writers.parquetPartitioned(v1, s"$tmp/t", "pt")
     // overwrite only partition 'a' with new content
@@ -225,7 +224,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("compactParquet: 64 fragments -> <= 4 files, rows and values intact") {
-    val tmp = Files.createTempDirectory("graft_compact_spec").toString
+    val tmp = TestDirs.fresh("compact_spec")
     val out = s"$tmp/t"
     val df = spark.range(10000).selectExpr("id", "id % 7 AS grp")
     df.repartition(64).write.parquet(out)
@@ -250,7 +249,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("clusteredWrite: per-file zkey intervals are disjoint (data skipping)") {
-    val tmp = Files.createTempDirectory("graft_zorder_spec").toString
+    val tmp = TestDirs.fresh("zorder_spec")
     val out = s"$tmp/t"
     val df = spark.range(20000).selectExpr(
       "id % 251 AS a", "(id * 7) % 241 AS b")

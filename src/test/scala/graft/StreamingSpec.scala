@@ -14,7 +14,7 @@ class StreamingSpec extends SparkSpec {
   /** The file stream source wants a directory; the testdata table is a
     * single parquet file — stage a copy. */
   private lazy val streamDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("events_stream")
+    val d = java.nio.file.Paths.get(TestDirs.fresh("events_stream"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
       d.resolve("part-0.parquet"))
@@ -47,7 +47,7 @@ class StreamingSpec extends SparkSpec {
     // the effectively-infinite watermark guarantees no state eviction
     // on the unordered file input (exact parity is the claim here —
     // bounded-state eviction semantics are Spark's own contract)
-    val src = java.nio.file.Files.createTempDirectory("ev_ssj").toString
+    val src = TestDirs.fresh("ev_ssj")
     graft.Tables.events(spark, dir).repartition(9)
       .write.mode("overwrite").parquet(src)
     val q = EventsStream.attributionJoin(
@@ -55,7 +55,7 @@ class StreamingSpec extends SparkSpec {
       lookback = "1 hour", watermark = "3650 days")
       .writeStream.format("memory").queryName("ssj")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ckpt_ssj").toString)
+        TestDirs.fresh("ckpt_ssj"))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -79,7 +79,7 @@ class StreamingSpec extends SparkSpec {
     val micros = Seq(1700000000000000L, 1700000000123456L, 1700003600999999L)
     val base = micros.zipWithIndex
       .map { case (us, i) => (i.toLong, us) }.toDF("event_id", "us")
-    val root = java.nio.file.Files.createTempDirectory("ts_layouts").toString
+    val root = TestDirs.fresh("ts_layouts")
     val layouts = Map(
       // nanos exceed 2^53: exact long arithmetic, never a double route
       "nanos" -> base.select($"event_id", ($"us" * 1000L).as("ts")),
@@ -126,8 +126,8 @@ class StreamingSpec extends SparkSpec {
     // = max event time of batches < b minus the delay, ms precision;
     // drop iff the row's window end <= that watermark).
     val raw = spark.read.parquet(s"$dir/events.parquet")
-    val src = java.nio.file.Files.createTempDirectory("ev_late").toString
-    val stage = java.nio.file.Files.createTempDirectory("ev_late_stage").toString
+    val src = TestDirs.fresh("ev_late")
+    val stage = TestDirs.fresh("ev_late_stage")
     val base = System.currentTimeMillis() - 3600 * 1000L
     def placeFile(fromDir: String, name: String, mtime: Long): Unit = {
       val part = new java.io.File(fromDir).listFiles()
@@ -167,7 +167,7 @@ class StreamingSpec extends SparkSpec {
         .writeStream.format("memory").queryName("late_rollup")
         .outputMode(OutputMode.Append())
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ckpt_late").toString)
+          TestDirs.fresh("ckpt_late"))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
@@ -207,11 +207,11 @@ class StreamingSpec extends SparkSpec {
   test("upsert snapshot sink: multi-batch stream == latest-per-key batch") {
     // stage events as MULTIPLE files so maxFilesPerTrigger=4 yields
     // several micro-batches (batch-boundary independence is the claim)
-    val src = java.nio.file.Files.createTempDirectory("events_many").toString
+    val src = TestDirs.fresh("events_many")
     graft.Tables.events(spark, dir).repartition(9)
       .write.mode("overwrite").parquet(src)
-    val snapDir = java.nio.file.Files.createTempDirectory("snap").toString + "/current"
-    val ckpt = java.nio.file.Files.createTempDirectory("ckpt").toString
+    val snapDir = TestDirs.fresh("snap") + "/current"
+    val ckpt = TestDirs.fresh("ckpt")
     val q = EventsStream.upsertSnapshotSink(
       EventsStream.readEvents(spark, src),
       keyCols = Seq("user_id"), versionCol = "event_id",
@@ -250,12 +250,12 @@ class StreamingSpec extends SparkSpec {
       if (hs("payload_a") > hs("payload_b")) "payload_a" else "payload_b"
     }
     val winners = (1 to 3).map { i =>
-      val src = java.nio.file.Files.createTempDirectory(s"tie_src$i").toString
+      val src = TestDirs.fresh(s"tie_src$i")
       // shuffle the physical row order per run: the winner must not care
       rows.toDF("user_id", "event_id", "event_type")
         .repartition(i).write.mode("overwrite").parquet(src)
-      val snapDir = java.nio.file.Files.createTempDirectory(s"tie_snap$i").toString + "/cur"
-      val ckpt = java.nio.file.Files.createTempDirectory(s"tie_ckpt$i").toString
+      val snapDir = TestDirs.fresh(s"tie_snap$i") + "/cur"
+      val ckpt = TestDirs.fresh(s"tie_ckpt$i")
       val q = EventsStream.upsertSnapshotSink(
         spark.readStream.schema(rows.toDF("user_id", "event_id", "event_type").schema)
           .parquet(src),
@@ -309,7 +309,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.hadoop.fs.Path
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sparkContext.hadoopConfiguration)
-    val root = java.nio.file.Files.createTempDirectory("swap").toString
+    val root = TestDirs.fresh("swap")
     val snap = new Path(root + "/current")
     val old = new Path(root + "/current__old")
     def mk(p: Path, tag: String): Unit = {
@@ -342,10 +342,10 @@ class StreamingSpec extends SparkSpec {
     val d = "/root/testdata/sf0.001"
     val left = graft.Tables.documents(spark, d).select(col("doc_id"), col("text"))
     val delta = graft.queries.TextQueries.perturbedDocs(spark, d)
-    val storeDir = java.nio.file.Files.createTempDirectory("sigstore_s").toString
+    val storeDir = TestDirs.fresh("sigstore_s")
     graft.operators.Dedup.signatureStore(left, "doc_id", "text")
       .write.mode("overwrite").parquet(storeDir)
-    val deltaDir = java.nio.file.Files.createTempDirectory("delta_s").toString
+    val deltaDir = TestDirs.fresh("delta_s")
     delta.repartition(5).write.mode("overwrite").parquet(deltaDir) // >1 micro-batch
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
     val q = spark.readStream
@@ -361,7 +361,7 @@ class StreamingSpec extends SparkSpec {
         ()
       }
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ckpt_inc_dedup").toString)
+        TestDirs.fresh("ckpt_inc_dedup"))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -375,11 +375,11 @@ class StreamingSpec extends SparkSpec {
   test("snapshot sink fails loudly when checkpoint outruns a deleted snapshot") {
     // checkpoint says batch 0 committed; snapshot vanished out-of-band ->
     // the next batch must refuse to rebuild state from one micro-batch
-    val src = java.nio.file.Files.createTempDirectory("events_inc").toString
+    val src = TestDirs.fresh("events_inc")
     graft.Tables.events(spark, dir).limit(100).write.mode("overwrite")
       .parquet(src + "/f1")
-    val snapDir = java.nio.file.Files.createTempDirectory("snap2").toString + "/current"
-    val ckpt = java.nio.file.Files.createTempDirectory("ckpt2").toString
+    val snapDir = TestDirs.fresh("snap2") + "/current"
+    val ckpt = TestDirs.fresh("ckpt2")
     def run() = {
       val q = EventsStream.upsertSnapshotSink(
         spark.readStream.schema(graft.Tables.events(spark, dir).schema)

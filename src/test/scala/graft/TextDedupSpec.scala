@@ -457,7 +457,7 @@ class TextDedupSpec extends SparkSpec {
     val full = Dedup.crossDedupRoster(left, right, "doc_id", "text",
         n = 3, bands = 16, rowsPerBand = 8, threshold = 0.6)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
-    val dir = java.nio.file.Files.createTempDirectory("graft_sigstore").toString
+    val dir = TestDirs.fresh("sigstore")
     Dedup.signatureStore(left, "doc_id", "text", n = 3, bands = 16,
       rowsPerBand = 8).write.mode("overwrite").parquet(dir)
     val inc = Dedup.incrementalDedupRoster(right, spark.read.parquet(dir),

@@ -14,7 +14,7 @@ class VcPipelineSpec extends SparkSpec {
 
   /** Write a small, edge-case-bearing staging area; returns its dir. */
   private def writeStaging(emptyAcquisition: Boolean = false): String = {
-    val dir = Files.createTempDirectory("vc_staging").toString
+    val dir = TestDirs.fresh("vc_staging")
     def put(name: String, df: org.apache.spark.sql.DataFrame): Unit =
       df.write.mode("overwrite").parquet(s"$dir/$name.parquet")
 
@@ -82,7 +82,7 @@ class VcPipelineSpec extends SparkSpec {
         $"updated_at")
 
   test("full pipeline run produces the whole warehouse") {
-    val out = Files.createTempDirectory("vc_out").toString
+    val out = TestDirs.fresh("vc_out")
     val results = VcPipeline.run(spark, VcPipeline.Config(writeStaging(), out))
     assert(results.values.forall(r => r == Pipeline.Completed()),
       s"unexpected stage results: ${results.filterNot(_._2 == Pipeline.Completed())}")
@@ -119,7 +119,7 @@ class VcPipelineSpec extends SparkSpec {
   }
 
   test("overwrite run pins every table's parquet schema, nullability included") {
-    val out = Files.createTempDirectory("vc_out_schema").toString
+    val out = TestDirs.fresh("vc_out_schema")
     VcPipeline.run(spark, VcPipeline.Config(writeStaging(), out))
     // surrogate keys stay REQUIRED in the facts and the bridge: they read
     // the dims' in-run frames, never a re-read of the written files
@@ -233,7 +233,7 @@ class VcPipelineSpec extends SparkSpec {
   }
 
   test("milestones: keyed upsert across runs, delta wins, idempotent replay") {
-    val out = Files.createTempDirectory("vc_out_ms").toString
+    val out = TestDirs.fresh("vc_out_ms")
     val staging = writeStaging()
     assert(VcPipeline.run(spark, VcPipeline.Config(staging, out))("milestones")
       == Pipeline.Completed())
@@ -261,7 +261,7 @@ class VcPipelineSpec extends SparkSpec {
   }
 
   test("empty staging table skips its stage and dependents only") {
-    val out = Files.createTempDirectory("vc_out_skip").toString
+    val out = TestDirs.fresh("vc_out_skip")
     val results = VcPipeline.run(spark,
       VcPipeline.Config(writeStaging(emptyAcquisition = true), out))
     assert(results("stg_acquisition") == Pipeline.Skipped)
@@ -271,7 +271,7 @@ class VcPipelineSpec extends SparkSpec {
   }
 
   test("append mode: two-day replay, continued dense keys, idempotent day 2") {
-    val out = Files.createTempDirectory("vc_out_append").toString
+    val out = TestDirs.fresh("vc_out_append")
     val staging = writeStaging()
     def dimC() = spark.read.parquet(s"$out/dim_company")
       .select("sk_company_id", "nk_company_id").orderBy("sk_company_id")
@@ -301,7 +301,7 @@ class VcPipelineSpec extends SparkSpec {
   }
 
   test("incremental mode keeps only rows created on ds-1") {
-    val out = Files.createTempDirectory("vc_out_incr").toString
+    val out = TestDirs.fresh("vc_out_incr")
     val results = VcPipeline.run(spark,
       VcPipeline.Config(writeStaging(), out, incrementalDs = Some("2020-01-03")))
     // company rows created 2020-01-02: c:2 and f:3 -> dim_company has 2

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class VerifyLedgerSpec extends SparkSpec {
 
   private def scratchDir(): String =
-    Files.createTempDirectory("graft_ledger_spec").toString + "/out"
+    TestDirs.fresh("ledger_spec") + "/out"
 
   private val good: (SparkSession, String) => DataFrame =
     (s, _) => s.range(3).select(col("id"))

@@ -41,9 +41,9 @@ object B7StreamEqPin {
     // deleted after spark.stop(): the staging side holds a full coalesced
     // copy of the corpus, so at the big SFs this tool targets a leaked run
     // would leave corpus-sized litter in /tmp (r18 advice).
-    val src = java.nio.file.Files.createTempDirectory("b7_sf_late").toString
-    val stage = java.nio.file.Files.createTempDirectory("b7_sf_stage").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("b7_sf_ckpt").toString
+    val src = graft.TestDirs.fresh("b7_sf_late")
+    val stage = graft.TestDirs.fresh("b7_sf_stage")
+    val ckpt = graft.TestDirs.fresh("b7_sf_ckpt")
     // cleanup is a finally (r19 advice: the success-path-only delete still
     // leaked the corpus-sized staging copy on any mid-run failure — the
     // exact litter the cleanup was added to prevent); the walk stream is
