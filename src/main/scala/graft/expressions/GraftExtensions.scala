@@ -32,6 +32,7 @@ object GraftExtensions {
     ("graft_hyperplane_sig", classOf[HyperplaneSig],
       e => HyperplaneSig(e(0), e(1), e(2))),
     ("graft_bpe_encode", classOf[BpeEncode], e => BpeEncode(e(0), e(1), e(2))),
+    ("graft_levenshtein", classOf[EditDistance], e => EditDistance(e(0), e(1), e(2))),
     // Spark's own codegen'd bloom probe, which Spark registers under no
     // SQL name (Integrity.fkViolationsBloom)
     ("graft_might_contain", classOf[BloomFilterMightContain],

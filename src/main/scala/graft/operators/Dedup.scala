@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.expressions.EditDistance
 import graft.functions.TextAnalysis
 
 /** Deduplication suite for training-data curation: exact, n-gram Jaccard,
@@ -817,12 +818,15 @@ object Dedup {
     * Scale shape: candidates come from the banded sort-merge self-join
     * (never all-pairs; signatures are sig-ONLY — no gram sets, the
     * expensive half of the x3 frame, because verification reads text).
-    * Verification uses the THRESHOLD form of levenshtein — the banded
-    * O(maxDist·(|a|+|b|)) DP with early exit, not the full quadratic
-    * table — and texts are capped at `maxLen` chars first, so the
-    * per-pair cost is bounded by construction (the cap is part of the
-    * contract: two documents identical in their first `maxLen` chars
-    * compare equal — pick maxLen at the P99 doc length for exactness).
+    * Verification is `graft_levenshtein`
+    * ([[graft.expressions.BoundedLevenshtein]]): common prefix and
+    * suffix stripped, then Ukkonen's banded DP with early exit, so a
+    * pair costs O(len) plus O(maxDist·len) at most — where Spark's own
+    * threshold form costs O(|a|·|b|) per pair. Texts are capped at
+    * `maxLen` chars first, so the per-pair cost is bounded by
+    * construction (the cap is part of the contract: two documents
+    * identical in their first `maxLen` chars compare equal — pick
+    * maxLen at the P99 doc length for exactness).
     * Text attaches to candidates by two id-keyed joins (ids-only band
     * join stays narrow — the x10 re-attach pattern).
     *
@@ -848,8 +852,8 @@ object Dedup {
     selfCandidates(bandRows(sigs, bands, rowsPerBand), maxBucketSize)
       .join(texts.select(col("id").as("id_a"), col("t").as("t_a")).hint("merge"), Seq("id_a"))
       .join(texts.select(col("id").as("id_b"), col("t").as("t_b")).hint("merge"), Seq("id_b"))
-      // threshold form: banded DP, returns -1 past maxDist
-      .withColumn("edit_dist", levenshtein(col("t_a"), col("t_b"), maxDist))
+      // -1 past maxDist
+      .withColumn("edit_dist", EditDistance.column(col("t_a"), col("t_b"), maxDist))
       .filter(col("edit_dist") >= 0)
       .select("id_a", "id_b", "edit_dist")
   }

@@ -12,8 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * global running sum goes through the one ranged construction; every
   * scratch directory, specs' included, comes from the one cleaned-up
   * factory; the codegen class cache is sized in the session factory
-  * only; and the only hand-written partition loops are the codec
-  * decoders. */
+  * only; edit distance has one kernel; and the only hand-written
+  * partition loops are the codec decoders. */
 class EngineSurfaceSpec extends AnyFunSuite {
   private def mainSources: Seq[Path] = {
     val root = Paths.get("src/main/scala")
@@ -71,6 +71,29 @@ class EngineSurfaceSpec extends AnyFunSuite {
 
   private def filesMentioning(word: String): Seq[String] =
     mainSources.filter(p => Files.readString(p).contains(word)).map(_.toString).sorted
+
+  test("edit distance has one kernel: no call of Spark's levenshtein in main") {
+    // x13's DuckDB oracle text (TextQueries.oracle) is the one place the
+    // word may appear as a call: it is SQL the oracle runs, not Spark
+    val sparkCall = raw"(?i)(?<![\w])levenshtein\s*\(".r
+    val calls = mainSources.flatMap { p =>
+      val lines = Files.readAllLines(p).asScala.toIndexedSeq
+      val oracle =
+        if (!p.endsWith("queries/TextQueries.scala")) Range(0, 0)
+        else {
+          val from = lines.indexWhere(_.contains("val oracle: Map[String, String] = Map("))
+          assert(from >= 0, s"$p: the oracle map moved")
+          Range(from, lines.indexWhere(_ == "  )", from))
+        }
+      lines.indices.filter { i =>
+        val t = lines(i).trim
+        !(t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) &&
+          !oracle.contains(i) && sparkCall.findFirstIn(lines(i)).isDefined
+      }.map(i => s"$p:${i + 1}")
+    }
+    assert(calls.isEmpty,
+      s"verify edit distance with graft_levenshtein (EditDistance.column): ${calls.mkString(", ")}")
+  }
 
   test("scratch directories come only from StoreDirs") {
     // StoreDirs.fresh registers each directory for deletion at JVM exit;

@@ -288,6 +288,9 @@ class PlanSpec extends SparkSpec {
       s"band self-join must reuse its exchange:\n$p")
     assert(!p.contains("BroadcastHashJoin"),
       s"never broadcast a corpus-sized side:\n$p")
+    // pairs are verified by the bounded edit-distance kernel
+    assert(p.contains("graft_levenshtein("),
+      s"expected the graft_levenshtein verify:\n$p")
   }
 
   test("nb classifier: seed tokenizes once (checkpointed model), totals broadcast") {
