@@ -1,63 +1,62 @@
 package graft.core
 
-import java.util.concurrent.Executors
 import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.{Await, Future, Promise}
+import scala.util.{Failure, Success}
 
-/** Overlap independent Spark jobs from a small driver-side thread pool
-  * (guide §2.6): actions are only sequential because driver code calls
-  * them sequentially — when two legs of a query share no state (the two
-  * half-store builds of x14, a store write vs. the delta's signature
-  * materialization in x12), submitting them concurrently lets the second
-  * job's tasks back-fill executors freed by the first job's straggler
-  * tail instead of leaving the cluster idle. FIFO scheduling (the
-  * default) gives exactly that back-fill behaviour.
+/** The engine's one way to run driver work concurrently: independent
+  * Spark jobs overlap (guide §2.6) because actions are only sequential
+  * when driver code calls them sequentially — when two legs of a query
+  * share no state (the two half-store builds of x14, a store write vs.
+  * the delta's signature materialization in x12), submitting them
+  * concurrently lets the second job's tasks back-fill executors freed
+  * by the first job's straggler tail instead of leaving the cluster
+  * idle. FIFO scheduling (the default) gives exactly that back-fill
+  * behaviour. `pipeline.Pipeline.Runner` runs its stages on [[task]]
+  * too.
   *
-  * The pool is deliberately tiny (guide: "2-3 jobs in flight is plenty")
-  * and daemon (never blocks JVM exit). Job-description properties are
-  * thread-local in Spark, so concurrent legs stay correctly labelled.
+  * Every leg or stage runs on a fresh daemon thread (never blocks JVM
+  * exit). Spark's local properties (job group, job description) are
+  * inheritable thread-locals copied when a thread is created, so each
+  * leg carries its CALLER's properties: a job group set by the caller
+  * tags, and cancels, the legs' jobs too. No thread ever waits on a
+  * bounded pool, so legs may themselves call `par`/`par3`.
   *
   * Precondition: the legs' outputs are independent — no leg reads what
   * another writes (a table, a path, a mutable collection), so every leg
   * computes the same frames it did sequentially; only the submission
-  * ORDER changes, which no result in this codebase depends on.
-  *
-  * Legs must not call `par`/`par3` themselves: a leg waiting on legs
-  * queued behind it in the same fixed pool would deadlock the driver, so
-  * such a nested call throws `IllegalStateException` instead. Any number
-  * of callers outside the pool (concurrent pipeline stages, for one) may
-  * call concurrently: their legs queue, and no pool thread ever waits. */
+  * ORDER changes, which no result in this codebase depends on. */
 object Overlap {
-  private val ThreadName = "graft-overlap"
 
-  private lazy val pool = ExecutionContext.fromExecutorService(
-    Executors.newFixedThreadPool(3, (r: Runnable) => {
-      val t = new Thread(r, ThreadName)
-      t.setDaemon(true)
-      t
-    }))
+  /** `body` on a fresh daemon thread that inherits the calling thread's
+    * Spark local properties. Unlike `Future(body)`, any `Throwable`
+    * completes the future (a fatal error arrives boxed in an
+    * `ExecutionException`), so no waiter hangs on a dead leg. */
+  private[graft] def task[A](body: => A): Future[A] = {
+    val p = Promise[A]()
+    val t = new Thread(() => p.complete(try Success(body) catch { case e: Throwable => Failure(e) }),
+      "graft-overlap")
+    t.setDaemon(true)
+    t.start()
+    p.future
+  }
 
-  private def requireOutsidePool(): Unit =
-    if (Thread.currentThread.getName == ThreadName)
-      throw new IllegalStateException(
-        "Overlap.par/par3 called from an Overlap leg: nested calls would " +
-          "deadlock the fixed pool; run the inner legs sequentially")
-
-  /** Run two independent legs concurrently; rethrows the first failure. */
+  /** Run two independent legs concurrently. Returns once both have
+    * finished; rethrows the first failure in leg order. */
   def par[A, B](a: => A, b: => B): (A, B) = {
-    requireOutsidePool()
-    val fa = Future(a)(pool)
-    val fb = Future(b)(pool)
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
+    val (fa, fb) = (task(a), task(b))
+    settle(fa, fb)
+    (fa.value.get.get, fb.value.get.get)
   }
 
-  /** Run three independent legs concurrently; rethrows the first failure. */
+  /** Run three independent legs concurrently. Returns once all three
+    * have finished; rethrows the first failure in leg order. */
   def par3[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
-    requireOutsidePool()
-    val fa = Future(a)(pool)
-    val fb = Future(b)(pool)
-    val fc = Future(c)(pool)
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf),
-      Await.result(fc, Duration.Inf))
+    val (fa, fb, fc) = (task(a), task(b), task(c))
+    settle(fa, fb, fc)
+    (fa.value.get.get, fb.value.get.get, fc.value.get.get)
   }
+
+  /** Waits for every leg, failed or not, so no leg outlives its call. */
+  private def settle(legs: Future[_]*): Unit = legs.foreach(Await.ready(_, Duration.Inf))
 }

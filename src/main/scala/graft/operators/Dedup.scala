@@ -138,13 +138,14 @@ object Dedup {
     // measured ~2× the pair-pipeline cost inside this checkpoint.
     //
     // The edge list is hash-partitioned on the join key (dst) BEFORE the
-    // checkpoint: localCheckpoint preserves outputPartitioning, and the
-    // per-iteration labels frame arrives hash-partitioned on id from its
-    // own aggregation, so every iteration's edges⋈labels join is then
-    // exchange-free on BOTH sides — the (large) edge list is shuffled
-    // once for the whole loop, not once per iteration. At corpus scale
-    // the edge list is the big side; this is the difference between
-    // O(iters) and O(1) edge shuffles.
+    // checkpoint, so that every iteration's edges⋈labels join could skip
+    // the edge shuffle. It does not: under AQE (every GraftSession
+    // enables it) localCheckpoint does NOT preserve outputPartitioning —
+    // the checkpointed edges, and a checkpointed aggregate, eager or
+    // lazy, report UnknownPartitioning(0), so a join that is not planned
+    // as a broadcast re-shuffles the edge list on every iteration. Only
+    // with AQE off does a lazy checkpoint keep its hash partitioning.
+    // ROADMAP direction 3 (`Checkpoint.keyed`) is the planned fix.
     val edges = pairs.select(explode(array(
         struct(col(aCol).as("src"), col(bCol).as("dst")),
         struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
@@ -840,13 +841,10 @@ object Dedup {
                         maxBucketSize: Int = Int.MaxValue): DataFrame = {
     require(maxDist >= 0 && maxLen > 0 && maxBucketSize > 1,
       "editDistancePairs: bad bounds")
-    // sig-ONLY frame: the checkpoint stores no gram sets
-    val sigs = tokenized(df, idCol, textCol).select(col("id"),
-      explode(shinglesFromTokens(col("__toks"), n)).as("g"))
-      .select(col("id"), TextAnalysis.tokenHash32(col("g")).as("h32"))
-      .groupBy(col("id"))
-      .agg(minhashAgg(bands * rowsPerBand)(col("h32")).as("sig"))
-      .localCheckpoint(false)
+    // sig-ONLY frame: column pruning drops the gram sets and their h64
+    // projection before the checkpoint, so it stores signatures only
+    val sigs = sigGramsFrame(df, idCol, textCol, n, bands * rowsPerBand)
+      .select("id", "sig").localCheckpoint(false)
     val texts = df.select(col(idCol).as("id"),
       substring(col(textCol), 1, maxLen).as("t"))
     selfCandidates(bandRows(sigs, bands, rowsPerBand), maxBucketSize)

@@ -1,14 +1,14 @@
 package graft.pipeline
 
-import java.util.concurrent.{ConcurrentLinkedQueue, Executors}
+import java.util.concurrent.ConcurrentLinkedQueue
 import scala.collection.mutable
 import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future, Promise}
+import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
-import scala.util.{Failure, Success}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
+import graft.core.Overlap
 
 /** In-process pipeline graph runner — the engine's replacement for the
   * reference's Airflow DAG orchestration (SURVEY §3, `dags/<dag>/run.py`,
@@ -21,11 +21,12 @@ import org.apache.spark.storage.StorageLevel
   * "No data to process" early return.
   *
   * Concurrency: a stage starts as soon as every dependency has completed,
-  * so independent stages run at the same time — the reference's
-  * task-group parallelism under Airflow (SURVEY §3.2, §4), on a daemon
-  * pool sized to the session's task slots. Stage builds and sinks must
-  * therefore be thread-safe, and concurrent sinks must write distinct
-  * paths. A build sees only its own dependencies' frames.
+  * on its own fresh thread ([[graft.core.Overlap.task]]) carrying the
+  * Spark local properties of the thread that started it, so every ready
+  * stage runs at once — the reference's task-group parallelism under
+  * Airflow (SURVEY §3.2, §4). Stage builds and sinks must therefore be
+  * thread-safe, and concurrent sinks must write distinct paths. A build
+  * sees only its own dependencies' frames.
   *
   * Shared stages evaluate once per run: a stage with a sink and at least
   * one dependent is persisted before its emptiness probe, so the probe,
@@ -70,16 +71,9 @@ object Pipeline {
       for (st <- stages.values; d <- st.deps if !stages.contains(d))
         throw new IllegalArgumentException(s"unknown stage: $d")
       val fed = stages.values.flatMap(_.deps).toSet
-      // the session's task slots; before any session exists (the stages
-      // would create it) the cores it would default to
-      val slots = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-        .fold(Runtime.getRuntime.availableProcessors)(_.sparkContext.defaultParallelism)
-      val pool = Executors.newFixedThreadPool(slots, (r: Runnable) => {
-        val t = new Thread(r, "graft-pipeline")
-        t.setDaemon(true)
-        t
-      })
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+      // the future glue runs on whichever thread completes a dependency;
+      // each stage's own work runs on the fresh thread Overlap.task starts
+      implicit val ec: ExecutionContext = ExecutionContext.parasitic
       val persisted = new ConcurrentLinkedQueue[DataFrame]()
 
       def exec(st: Stage, inputs: Map[String, DataFrame]): Outcome =
@@ -111,7 +105,7 @@ object Pipeline {
         case None =>
           val st = stages(name)
           val f = Future.sequence(st.deps.map(schedule)).flatMap { ups =>
-            if (ups.forall(_._2.isDefined)) task(exec(st, st.deps.zip(ups.map(_._2.get)).toMap))
+            if (ups.forall(_._2.isDefined)) Overlap.task(exec(st, st.deps.zip(ups.map(_._2.get)).toMap))
             else Future.successful((Skipped, None))
           }
           futures(name) = f
@@ -121,18 +115,7 @@ object Pipeline {
       try {
         val outcomes = Await.result(Future.sequence(stages.keys.toSeq.map(schedule)), Duration.Inf)
         stages.keys.zip(outcomes.map(_._1)).toMap
-      } finally {
-        pool.shutdown()
-        persisted.asScala.foreach(_.unpersist())
-      }
-    }
-
-    /** `body` on the pool. Unlike `Future(body)`, a fatal error fails the
-      * future instead of leaving it pending, so `run` cannot hang. */
-    private def task[A](body: => A)(implicit ec: ExecutionContext): Future[A] = {
-      val p = Promise[A]()
-      ec.execute(() => p.complete(try Success(body) catch { case t: Throwable => Failure(t) }))
-      p.future
+      } finally persisted.asScala.foreach(_.unpersist())
     }
   }
 }

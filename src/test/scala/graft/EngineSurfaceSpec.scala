@@ -12,8 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * global running sum goes through the one ranged construction; every
   * scratch directory, specs' included, comes from the one cleaned-up
   * factory; the codegen class cache is sized in the session factory
-  * only; edit distance has one kernel; and the only hand-written
-  * partition loops are the codec decoders. */
+  * only; edit distance has one kernel; driver work runs concurrently
+  * only through core/Overlap; and the only hand-written partition loops
+  * are the codec decoders. */
 class EngineSurfaceSpec extends AnyFunSuite {
   private def mainSources: Seq[Path] = {
     val root = Paths.get("src/main/scala")
@@ -48,6 +49,13 @@ class EngineSurfaceSpec extends AnyFunSuite {
       Seq.fill(ctor.findAllIn(Files.readString(p)).length)(p.toString))
     assert(sites.size == 1,
       s"build signatures through Dedup.minhashAgg: ${sites.size} sites in ${sites.distinct.sorted.mkString(", ")}")
+    // and one signature frame calls it: every other frame selects from
+    // Dedup.sigGramsFrame
+    val calls = mainSources.flatMap(p =>
+      Seq.fill(raw"(?<!def )\bminhashAgg\(".r.findAllIn(Files.readString(p)).length)(p.toString))
+    assert(calls == Seq("src/main/scala/graft/operators/Dedup.scala"),
+      s"build signature frames through Dedup.sigGramsFrame: ${calls.size} minhashAgg calls in " +
+        calls.distinct.sorted.mkString(", "))
   }
 
   test("one ranged running sum: spark_partition_id at 1 code site, repartitionByRange at 2") {
@@ -118,6 +126,16 @@ class EngineSurfaceSpec extends AnyFunSuite {
     val sites = filesMentioning("spark.sql.codegen.cache.maxEntries")
     assert(sites == Seq("src/main/scala/graft/core/GraftSession.scala"),
       s"size the codegen cache in GraftSession only: ${sites.mkString(", ")}")
+  }
+
+  test("driver work runs concurrently only through core/Overlap: no hand-rolled pool") {
+    // Verify's per-gate timeout pool is the one executor: it interrupts
+    // a timed-out gate with task.cancel(true)
+    val executors = filesMentioning("Executors.")
+    assert(executors == Seq("src/main/scala/graft/Verify.scala"),
+      s"run legs and stages through Overlap.task: ${executors.mkString(", ")}")
+    val pools = (filesMentioning("newFixedThreadPool") ++ filesMentioning("fromExecutorService")).distinct
+    assert(pools.isEmpty, s"run legs and stages through Overlap.task: ${pools.mkString(", ")}")
   }
 
   test("mapPartitions only in the codec decoders") {

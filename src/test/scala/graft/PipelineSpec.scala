@@ -1,6 +1,8 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.{CountDownLatch, TimeUnit, TimeoutException}
+import scala.concurrent.duration._
+import scala.concurrent.{Await, ExecutionContext, Future}
 import org.apache.spark.sql.functions._
 import graft.pipeline.Pipeline
 import graft.pipeline.Pipeline._
@@ -9,7 +11,7 @@ import graft.pipeline.Pipeline._
   * error notification, concurrent independent stages, and shared
   * upstream stages computed once per run.
   *
-  * Stage callbacks run on the runner's pool threads, so every collector
+  * Stage callbacks run on the stages' own threads, so every collector
   * a callback mutates is updated under `synchronized`. */
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -111,6 +113,16 @@ class PipelineSpec extends SparkSpec {
     val sunkAt = events.indexOf("up:sunk")
     assert(sunkAt >= 0 && Seq("a", "b", "c").forall(d => events.indexOf(s"$d:build") > sunkAt),
       s"events: $events")
+  }
+
+  test("a fatal error in a stage build fails run() instead of hanging it") {
+    val run = Future(new Runner()
+      .add(Stage("fatal", Nil, { _ => throw new StackOverflowError("build") }))
+      .run())(ExecutionContext.global)
+    val e = intercept[Throwable](Await.result(run, 60.seconds))
+    assert(!e.isInstanceOf[TimeoutException], "run() was still pending after 60 s")
+    assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[StackOverflowError]), e)
   }
 
   test("run() leaves nothing in the cache manager") {
