@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.{DimDate, Profiler, Warehouse}
-import graft.sources.{Readers, Writers}
+import graft.sources.{JdbcUpsert, Readers, Writers}
 
 /** The full reference pipeline, composed in-process: staging parquet →
   * star-schema warehouse parquet (+ per-table profiling), replacing the
@@ -58,11 +58,8 @@ object VcPipeline {
     }
     def sink(name: String)(df: DataFrame): Unit =
       Writers.parquetOverwrite(df, s"${cfg.outDir}/$name")
-    def stored(name: String): Option[DataFrame] = {
-      val p = new org.apache.hadoop.fs.Path(s"${cfg.outDir}/$name")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) Some(Readers.parquet(spark, p.toString)) else None
-    }
+    def stored(name: String): Option[DataFrame] =
+      Readers.snapshot(spark, s"${cfg.outDir}/$name")
     /** Append-with-continued-keys (reference BIGSERIAL semantics): only
       * natural keys unseen in the stored dim get rows, keyed densely from
       * the stored max surrogate key; the returned frame is the FULL dim,
@@ -85,7 +82,7 @@ object VcPipeline {
       (if (cfg.appendMode) stored(name) else None) match {
         case None => newRows
         case Some(existing) =>
-          graft.sources.JdbcUpsert.mergeByKey(existing, newRows, keys, keys.head)
+          JdbcUpsert.mergeByKey(existing, newRows, keys, keys.head)
       }
     /** Warehouse-table stage. Overwrite mode sinks after the emptiness
       * check, and the runner hands dependents the one materialization
@@ -144,19 +141,14 @@ object VcPipeline {
     // staging.milestones (staging load.py:94-118; PK per init_stg.sql
     // milestones_pkey = milestone_id). Lake-side: merge-by-key with the
     // newest updated_at winning, delta preferred on ties, written back
-    // via a rename swap (the snapshot is both input and output).
+    // via the snapshot swap (the snapshot is both input and output).
     runner.add(Pipeline.Stage("milestones", Seq("stg_milestones"),
       f => {
         val delta = f("stg_milestones")
-        val snapshot = s"${cfg.outDir}/milestones"
-        val p = new org.apache.hadoop.fs.Path(snapshot)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val existing =
-          if (fs.exists(p)) Readers.parquet(spark, snapshot) else delta.limit(0)
-        graft.sources.JdbcUpsert.mergeByKey(existing, delta,
-          Seq("milestone_id"), "updated_at")
+        JdbcUpsert.mergeByKey(stored("milestones").getOrElse(delta.limit(0)),
+          delta, Seq("milestone_id"), "updated_at")
       },
-      df => graft.sources.Writers.parquetReplace(df, s"${cfg.outDir}/milestones")))
+      df => Writers.parquetReplace(df, s"${cfg.outDir}/milestones")))
     // profiling over the produced dims/facts (reference: third DAG)
     runner.add(Pipeline.Stage("profiling",
       Seq("dim_company", "dim_funds", "fct_investments"),

@@ -23,51 +23,42 @@ object JdbcUpsert {
     * placeholders expect. The `foreachPartition` execute path below is
     * dialect-agnostic and shared — so a live test against any one
     * dialect (Derby MERGE in `JdbcSpec`) exercises the identical
-    * connection/batch/commit code the Postgres path runs in production. */
+    * connection/batch/commit code the Postgres path runs in production.
+    *
+    * With a `versionCol` the statement is version-guarded: the update
+    * arm fires only when the incoming `versionCol` is STRICTLY newer
+    * than the stored row's, so the table converges to the newest version
+    * per key under ANY arrival order (out-of-order micro-batches,
+    * replays) — blind upsert is last-writer-wins, which is wrong the
+    * moment batches aren't version-monotone. Equal versions no-op: a
+    * retried batch re-lands identical state (idempotent). */
   sealed trait Dialect {
-    def statement(table: String, schema: StructType, keyCols: Seq[String]): String
+    def statement(table: String, schema: StructType, keyCols: Seq[String],
+                  versionCol: Option[String]): String
     /** Placeholder bind order as schema field indices. */
-    def bindOrder(schema: StructType, keyCols: Seq[String]): Seq[Int]
-    /** Version-guarded form: the update arm fires only when the incoming
-      * `versionCol` is STRICTLY newer than the stored row's, so the
-      * table converges to the newest version per key under ANY arrival
-      * order (out-of-order micro-batches, replays) — blind upsert is
-      * last-writer-wins, which is wrong the moment batches aren't
-      * version-monotone. Equal versions no-op: a retried batch re-lands
-      * identical state (idempotent). */
-    def versionedStatement(table: String, schema: StructType,
-                           keyCols: Seq[String], versionCol: String): String
-    def versionedBindOrder(schema: StructType, keyCols: Seq[String],
-                           versionCol: String): Seq[Int]
+    def bindOrder(schema: StructType, keyCols: Seq[String],
+                  versionCol: Option[String]): Seq[Int]
   }
 
   /** PostgreSQL `INSERT … ON CONFLICT (pk) DO UPDATE` — the statement
     * pangres emits for `if_row_exists='update'`. Placeholders appear in
     * schema order. */
   case object Postgres extends Dialect {
-    def statement(table: String, schema: StructType, keyCols: Seq[String]): String = {
+    def statement(table: String, schema: StructType, keyCols: Seq[String],
+                  versionCol: Option[String]): String = {
       val cols = schema.fields.map(_.name)
       val placeholders = cols.map(_ => "?").mkString(", ")
       val updates = cols.filterNot(keyCols.contains)
         .map(c => s"$c = EXCLUDED.$c").mkString(", ")
-      s"""INSERT INTO $table (${cols.mkString(", ")}) VALUES ($placeholders)
-         |ON CONFLICT (${keyCols.mkString(", ")}) DO UPDATE SET $updates""".stripMargin
+      // the guarded form aliases the target: EXCLUDED vs t disambiguates
+      // the guard columns
+      val target = versionCol.fold(table)(_ => s"$table AS t")
+      s"""INSERT INTO $target (${cols.mkString(", ")}) VALUES ($placeholders)
+         |ON CONFLICT (${keyCols.mkString(", ")}) DO UPDATE SET $updates""".stripMargin +
+        versionCol.fold("")(v => s"\nWHERE EXCLUDED.$v > t.$v")
     }
-    def bindOrder(schema: StructType, keyCols: Seq[String]): Seq[Int] =
-      schema.fields.indices.toSeq
-    def versionedStatement(table: String, schema: StructType,
-                           keyCols: Seq[String], versionCol: String): String = {
-      val cols = schema.fields.map(_.name)
-      val placeholders = cols.map(_ => "?").mkString(", ")
-      val updates = cols.filterNot(keyCols.contains)
-        .map(c => s"$c = EXCLUDED.$c").mkString(", ")
-      // alias the target: EXCLUDED vs t disambiguates the guard columns
-      s"""INSERT INTO $table AS t (${cols.mkString(", ")}) VALUES ($placeholders)
-         |ON CONFLICT (${keyCols.mkString(", ")}) DO UPDATE SET $updates
-         |WHERE EXCLUDED.$versionCol > t.$versionCol""".stripMargin
-    }
-    def versionedBindOrder(schema: StructType, keyCols: Seq[String],
-                           versionCol: String): Seq[Int] =
+    def bindOrder(schema: StructType, keyCols: Seq[String],
+                  versionCol: Option[String]): Seq[Int] =
       schema.fields.indices.toSeq
   }
 
@@ -75,8 +66,9 @@ object JdbcUpsert {
     * form Derby/DB2 accept (Derby ≥10.11; `SYSIBM.SYSDUMMY1` is its
     * built-in one-row table). Untyped `?` params need explicit CASTs in
     * Derby, so placeholders carry the column's SQL type. Placeholders
-    * appear keys-first (ON), then non-keys (UPDATE SET), then all
-    * columns (INSERT VALUES). */
+    * appear keys-first (ON), then the version (MATCHED guard, when
+    * versioned), then non-keys (UPDATE SET), then all columns (INSERT
+    * VALUES). */
   case object Merge extends Dialect {
     private def sqlType(dt: DataType): String = dt match {
       case LongType          => "BIGINT"
@@ -90,53 +82,28 @@ object JdbcUpsert {
       case d: DecimalType    => s"DECIMAL(${d.precision},${d.scale})"
       case _                 => "VARCHAR(32672)"
     }
-    def statement(table: String, schema: StructType, keyCols: Seq[String]): String = {
+    def statement(table: String, schema: StructType, keyCols: Seq[String],
+                  versionCol: Option[String]): String = {
       def p(f: StructField) = s"CAST(? AS ${sqlType(f.dataType)})"
       val keys = schema.fields.filter(f => keyCols.contains(f.name))
       val rest = schema.fields.filterNot(f => keyCols.contains(f.name))
       val on = keys.map(f => s"t.${f.name} = ${p(f)}").mkString(" AND ")
+      val guard = versionCol.map(schema(_)).fold("")(v => s" AND ${p(v)} > t.${v.name}")
       val set = rest.map(f => s"${f.name} = ${p(f)}").mkString(", ")
       val cols = schema.fields.map(_.name).mkString(", ")
       val vals = schema.fields.map(p).mkString(", ")
       s"""MERGE INTO $table t USING SYSIBM.SYSDUMMY1 ON $on
-         |WHEN MATCHED THEN UPDATE SET $set
+         |WHEN MATCHED$guard THEN UPDATE SET $set
          |WHEN NOT MATCHED THEN INSERT ($cols) VALUES ($vals)""".stripMargin
     }
-    def bindOrder(schema: StructType, keyCols: Seq[String]): Seq[Int] = {
+    def bindOrder(schema: StructType, keyCols: Seq[String],
+                  versionCol: Option[String]): Seq[Int] = {
       val idx = schema.fields.indices
       val keys = idx.filter(i => keyCols.contains(schema.fields(i).name))
       val rest = idx.filterNot(i => keyCols.contains(schema.fields(i).name))
-      (keys ++ rest ++ idx).toSeq
-    }
-    def versionedStatement(table: String, schema: StructType,
-                           keyCols: Seq[String], versionCol: String): String = {
-      def p(f: StructField) = s"CAST(? AS ${sqlType(f.dataType)})"
-      val keys = schema.fields.filter(f => keyCols.contains(f.name))
-      val rest = schema.fields.filterNot(f => keyCols.contains(f.name))
-      val ver = schema.fields(schema.fieldIndex(versionCol))
-      val on = keys.map(f => s"t.${f.name} = ${p(f)}").mkString(" AND ")
-      val set = rest.map(f => s"${f.name} = ${p(f)}").mkString(", ")
-      val cols = schema.fields.map(_.name).mkString(", ")
-      val vals = schema.fields.map(p).mkString(", ")
-      s"""MERGE INTO $table t USING SYSIBM.SYSDUMMY1
-         |ON $on
-         |WHEN MATCHED AND ${p(ver)} > t.${ver.name} THEN UPDATE SET $set
-         |WHEN NOT MATCHED THEN INSERT ($cols) VALUES ($vals)""".stripMargin
-    }
-    /** keys (ON), version (MATCHED guard), non-keys (SET), all (VALUES). */
-    def versionedBindOrder(schema: StructType, keyCols: Seq[String],
-                           versionCol: String): Seq[Int] = {
-      val idx = schema.fields.indices
-      val keys = idx.filter(i => keyCols.contains(schema.fields(i).name))
-      val rest = idx.filterNot(i => keyCols.contains(schema.fields(i).name))
-      (keys ++ Seq(schema.fieldIndex(versionCol)) ++ rest ++ idx).toSeq
+      (keys ++ versionCol.map(schema.fieldIndex) ++ rest ++ idx).toSeq
     }
   }
-
-  /** Build the PostgreSQL `INSERT … ON CONFLICT DO UPDATE` statement for
-    * a schema. Exposed for statement-shape tests. */
-  def upsertStatement(table: String, schema: StructType, keyCols: Seq[String]): String =
-    Postgres.statement(table, schema, keyCols)
 
   private def bind(ps: PreparedStatement, row: Row, schema: StructType,
                    order: Seq[Int]): Unit =
@@ -227,12 +194,8 @@ object JdbcUpsert {
       require(schema.fieldNames.contains(v),
         s"upsert: versionCol '$v' not in schema ${schema.fieldNames.mkString(",")}")
     }
-    val sql = versionCol
-      .map(v => dialect.versionedStatement(table, schema, keyCols, v))
-      .getOrElse(dialect.statement(table, schema, keyCols))
-    val order = versionCol
-      .map(v => dialect.versionedBindOrder(schema, keyCols, v))
-      .getOrElse(dialect.bindOrder(schema, keyCols))
+    val sql = dialect.statement(table, schema, keyCols, versionCol)
+    val order = dialect.bindOrder(schema, keyCols, versionCol)
     val (user, pass) = (props.getProperty("user"), props.getProperty("password"))
     df.coalesce(connections).foreachPartition { (rows: Iterator[Row]) =>
       if (rows.nonEmpty) {

@@ -20,6 +20,17 @@ object Readers {
   def parquet(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
+  /** The parquet snapshot at `path`, or None before the first write. An
+    * interrupted [[Writers.parquetReplace]] is undone first
+    * ([[Writers.recoverSnapshot]]), so a crash mid-swap never reads as a
+    * first run. */
+  def snapshot(spark: SparkSession, path: String): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Writers.recoverSnapshot(fs, p)
+    if (fs.exists(p)) Some(parquet(spark, path)) else None
+  }
+
   /** S9: CSV with header; explicit schema preferred (inference = extra pass). */
   def csv(spark: SparkSession, path: String, schema: Option[StructType] = None): DataFrame = {
     val r = spark.read.option("header", "true")

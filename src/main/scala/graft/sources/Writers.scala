@@ -1,8 +1,15 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Sink layer (SURVEY §2.1 S4, S5, S8).
+  *
+  * [[parquetReplace]] is the engine's one snapshot swap: the pipeline's
+  * milestones stage and append-mode tables, [[compactParquet]] and the
+  * streaming snapshot sink all replace a snapshot through it, and read
+  * one back through [[Readers.snapshot]], which first undoes a swap a
+  * crash interrupted ([[recoverSnapshot]]).
   *
   * Scale notes vs the reference:
   *  - S4 parquet snapshots become *date-partitioned* writes with dynamic
@@ -27,20 +34,52 @@ object Writers {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol).parquet(path)
 
-  /** Snapshot replace that is safe when `df` READS from `path` (Spark
-    * refuses a direct overwrite of an input path): write to a sibling
-    * temp dir, then swap via filesystem rename — the upsert-merge sink
-    * shape (staging `milestones` snapshot). Hadoop FS API, so the same
-    * code path works on local disk and HDFS-like stores. */
+  /** Snapshot swap, safe when `df` READS from `path` (Spark refuses a
+    * direct overwrite of an input path): write the new snapshot to
+    * `path__tmp`, rename the live one aside to `path__old`, rename
+    * `__tmp` in, then delete `__old`. Hadoop FS API, so the same code
+    * path works on local disk and HDFS-like stores (a production
+    * deployment would swap a table pointer in a metastore / table format
+    * instead — same merge semantics, different commit protocol).
+    *
+    * The swap never holds the snapshot in a deleted state, so a crash at
+    * any point leaves either the old or the new directory recoverable:
+    * before the rename-aside, `path` is intact; between the two renames,
+    * the stranded `__old` is the live snapshot; after the rename-in, the
+    * new `path` is, and `__old` is garbage. [[recoverSnapshot]] (run by
+    * [[Readers.snapshot]] and at the top of every swap) resolves both.
+    * Every rename result is checked: a failed rename-in restores `__old`
+    * and throws, so a swap that cannot complete fails loudly. */
   def parquetReplace(df: DataFrame, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val target = new Path(path)
-    val tmp = new Path(path + "__tmp")
+    val (tmp, old) = (new Path(path + "__tmp"), oldPath(target))
     val fs = target.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    recoverSnapshot(fs, target)
     df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    if (fs.exists(target)) fs.delete(target, true)
-    if (!fs.rename(tmp, target))
+    if (fs.exists(target) && !fs.rename(target, old))
+      throw new java.io.IOException(s"parquetReplace: rename-aside $target -> $old failed")
+    if (!fs.rename(tmp, target)) {
+      if (fs.exists(old)) fs.rename(old, target)
       throw new java.io.IOException(s"parquetReplace: rename $tmp -> $target failed")
+    }
+    if (fs.exists(old)) fs.delete(old, true)
+  }
+
+  private def oldPath(snap: Path) = new Path(snap.toString + "__old")
+
+  /** Crash recovery for [[parquetReplace]]: if a crash landed between
+    * `snap -> snap__old` and `tmp -> snap`, the live snapshot is the
+    * stranded `__old` — rename it back. If BOTH exist the crash was after
+    * the new snapshot took its place; the `__old` is just leftover garbage
+    * and is deleted. Idempotent, no-op in steady state. */
+  def recoverSnapshot(fs: FileSystem, snap: Path): Unit = {
+    val old = oldPath(snap)
+    if (fs.exists(old)) {
+      if (!fs.exists(snap)) {
+        if (!fs.rename(old, snap))
+          throw new java.io.IOException(s"recoverSnapshot: rename $old -> $snap failed")
+      } else fs.delete(old, true)
+    }
   }
 
   /** S8: CSV with header. */
@@ -72,11 +111,15 @@ object Writers {
     * `repartition`) — compaction must MERGE files without paying a full
     * shuffle of the data; rows are only concatenated, never moved
     * between existing partition boundaries' key ranges. Writes aside +
-    * atomic-rename swap via [[parquetReplace]], so a reader never sees
-    * a half-compacted directory. */
+    * rename swap via [[parquetReplace]], so a reader never sees a
+    * half-compacted directory; the read goes through [[Readers.snapshot]],
+    * so a directory an interrupted swap left as `path__old` is restored
+    * and then compacted. */
   def compactParquet(spark: org.apache.spark.sql.SparkSession, path: String,
                      targetFiles: Int = 8): Unit = {
     require(targetFiles > 0, s"compactParquet: targetFiles=$targetFiles")
-    parquetReplace(spark.read.parquet(path).coalesce(targetFiles), path)
+    val snapshot = Readers.snapshot(spark, path).getOrElse(
+      throw new java.io.FileNotFoundException(s"compactParquet: no snapshot at $path"))
+    parquetReplace(snapshot.coalesce(targetFiles), path)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
+import graft.sources.{JdbcUpsert, Readers, Writers}
 
 /** Structured Streaming over the events table — the streaming story the
   * reference lacks (SURVEY §2.8: its "incremental mode" is a daily
@@ -166,26 +167,18 @@ object EventsStream {
   /** Incremental keyed-snapshot maintenance from a stream — the
     * streaming form of the reference's milestones upsert (pangres
     * `if_row_exists='update'`): each micro-batch folds into the parquet
-    * snapshot at `snapshotDir` via
-    * [[graft.sources.JdbcUpsert.mergeByKey]], keeping the newest row
-    * per key. Result is batch-boundary independent when `versionCol` is
-    * unique per key (latest-wins is associative), so rate limits and
-    * restarts can't change the snapshot — StreamingSpec asserts
-    * multi-batch == single-batch == batch parity.
+    * snapshot at `snapshotDir` via [[JdbcUpsert.mergeByKey]], keeping
+    * the newest row per key, and is written back through the engine's
+    * one snapshot swap, [[Writers.parquetReplace]] (whose scaladoc covers
+    * its crash windows; [[Readers.snapshot]] recovers an interrupted swap
+    * at the top of every batch). Result is batch-boundary independent
+    * when `versionCol` is unique per key (latest-wins is associative), so
+    * rate limits and restarts can't change the snapshot — StreamingSpec
+    * asserts multi-batch == single-batch == batch parity.
     *
-    * Snapshot swap is write-new-then-RENAME-ASIDE on the filesystem (the
-    * minimal dependency-free form; a production deployment would swap a
-    * table pointer in a metastore / table format instead — same merge
-    * semantics, different commit protocol). The swap never holds the
-    * snapshot in a deleted state: `snap` is renamed to `snap__old`
-    * BEFORE `tmp` takes its place, so a crash at any point leaves either
-    * the old or the new directory recoverable — [[recoverSnapshot]]
-    * (called at the top of every batch) renames a stranded `__old` back.
-    * Every `fs.rename` result is checked; a batch that cannot complete
-    * the swap fails loudly instead of committing its checkpoint. A
-    * missing snapshot with `batchId > 0` (checkpoint says prior batches
-    * committed) also fails loudly rather than silently rebuilding state
-    * from one micro-batch. */
+    * A missing snapshot with `batchId > 0` (checkpoint says prior batches
+    * committed) fails loudly rather than silently rebuilding state from
+    * one micro-batch. */
   def upsertSnapshotSink(stream: DataFrame, keyCols: Seq[String],
                          versionCol: String, snapshotDir: String,
                          checkpointDir: String,
@@ -194,111 +187,50 @@ object EventsStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val snap = new org.apache.hadoop.fs.Path(snapshotDir)
-        val fs = snap.getFileSystem(hconf)
-        recoverSnapshot(fs, snap)
-        if (batchId > 0 && !fs.exists(snap))
+        val existing = Readers.snapshot(batch.sparkSession, snapshotDir)
+        if (batchId > 0 && existing.isEmpty)
           sys.error(s"upsertSnapshotSink: checkpoint is at batch $batchId but " +
-            s"snapshot $snap is missing (and no __old to recover) — refusing to " +
+            s"snapshot $snapshotDir is missing (and no __old to recover) — refusing to " +
             "silently rebuild state from a single micro-batch")
-        val merged =
-          if (fs.exists(snap))
-            graft.sources.JdbcUpsert.mergeByKey(
-              spark.read.parquet(snapshotDir), batch, keyCols, versionCol)
-          else batch.withColumn("__rn", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(keyCols.map(col): _*)
-              .orderBy(col(versionCol).desc,
-                // same content-hash tie-break as mergeByKey: the
-                // bootstrap batch must pick equal-version winners
-                // deterministically too, or the first snapshot differs
-                // across retries
-                graft.sources.JdbcUpsert
-                  .contentHash(batch.schema, batch.columns.toSeq).desc)))
-            .filter(col("__rn") === 1).drop("__rn")
-        // the merge reads the live snapshot, so materialize to a sibling
-        // and swap — never overwrite a path that feeds the running plan
-        val tmp = new org.apache.hadoop.fs.Path(snapshotDir + s"__b$batchId")
-        merged.write.mode("overwrite").parquet(tmp.toString)
-        val old = oldPath(snap)
-        if (fs.exists(snap) && !fs.rename(snap, old))
-          sys.error(s"upsertSnapshotSink: rename-aside $snap -> $old failed")
-        if (!fs.rename(tmp, snap)) {
-          // put the old snapshot back before failing, if it moved
-          if (fs.exists(old)) fs.rename(old, snap)
-          sys.error(s"upsertSnapshotSink: swap $tmp -> $snap failed")
-        }
-        if (fs.exists(old)) fs.delete(old, true)
-        ()
+        Writers.parquetReplace(JdbcUpsert.mergeByKey(
+          existing.getOrElse(batch.limit(0)), batch, keyCols, versionCol), snapshotDir)
       }
       .start()
 
   /** Stream micro-batches into a keyed JDBC upsert through the
-    * [[graft.sources.JdbcUpsert.Dialect]] seam — the streaming form of
-    * the reference's milestones upsert (pangres `if_row_exists='update'`,
-    * reference `load.py:94-118`), replacing its daily re-extract cadence
-    * with continuous catch-up.
+    * [[JdbcUpsert.Dialect]] seam — the streaming form of the reference's
+    * milestones upsert (pangres `if_row_exists='update'`, reference
+    * `load.py:94-118`), replacing its daily re-extract cadence with
+    * continuous catch-up.
     *
-    * Each micro-batch is deduped to one row per key (newest `versionCol`
-    * wins) before the batched single-statement upsert executes — the
-    * per-batch distinct-key requirement [[graft.sources.JdbcUpsert.upsert]]
-    * shares with pangres. The upsert runs VERSION-GUARDED (update arm
-    * fires only for strictly newer versions), so the table converges to
-    * the newest version per key under any micro-batch arrival order —
-    * file streams are not version-monotone — and foreachBatch's
-    * at-least-once retries are idempotent (equal version → no-op). */
+    * Each micro-batch is deduped to one row per key by
+    * [[JdbcUpsert.mergeByKey]] against an empty snapshot (newest
+    * `versionCol` wins, equal-version duplicates resolve by content
+    * hash) before the batched single-statement upsert executes — the
+    * per-batch distinct-key requirement [[JdbcUpsert.upsert]] shares with
+    * pangres. The upsert runs VERSION-GUARDED (update arm fires only for
+    * strictly newer versions), so the table converges to the newest
+    * version per key under any micro-batch arrival order — file streams
+    * are not version-monotone — and foreachBatch's at-least-once retries
+    * are idempotent (equal version → no-op). Scope: the content-hash
+    * tie-break is deterministic WITHIN a batch; equal-version rows split
+    * ACROSS micro-batches still resolve first-arrival, because the
+    * strictly-newer guard makes the later batch's row a no-op. */
   def jdbcUpsertSink(stream: DataFrame, keyCols: Seq[String],
                      versionCol: String, url: String, table: String,
                      props: java.util.Properties, checkpointDir: String,
-                     dialect: graft.sources.JdbcUpsert.Dialect = graft.sources.JdbcUpsert.Postgres,
+                     dialect: JdbcUpsert.Dialect = JdbcUpsert.Postgres,
                      connections: Int = 8,
                      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // Secondary sort on a content hash of the FULL row (map columns
-        // hash via their json form, see JdbcUpsert.contentHash):
-        // equal-version duplicates inside one micro-batch would
-        // otherwise pick an arbitrary (partition-order-dependent)
-        // winner. Scope: determinism holds WITHIN a batch; equal-version
-        // rows split ACROSS micro-batches still resolve first-arrival,
-        // because the strictly-newer version guard makes the later
-        // batch's equal-version row a no-op.
-        val dedup = batch.withColumn("__rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(keyCols.map(col): _*)
-            .orderBy(col(versionCol).desc,
-              graft.sources.JdbcUpsert
-                .contentHash(batch.schema, batch.columns.toSeq).desc)))
-          .filter(col("__rn") === 1).drop("__rn")
-        graft.sources.JdbcUpsert.upsert(dedup, url, table, props, keyCols,
-          connections = connections, dialect = dialect,
+        JdbcUpsert.upsert(JdbcUpsert.mergeByKey(batch.limit(0), batch, keyCols, versionCol),
+          url, table, props, keyCols, connections = connections, dialect = dialect,
           versionCol = Some(versionCol))
-        ()
       }
       .start()
-
-  private def oldPath(snap: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(snap.toString + "__old")
-
-  /** Crash recovery for [[upsertSnapshotSink]]'s rename-aside swap: if a
-    * crash landed between `snap -> snap__old` and `tmp -> snap`, the live
-    * snapshot is the stranded `__old` — rename it back. If BOTH exist the
-    * crash was after the new snapshot took its place; the `__old` is just
-    * leftover garbage and is deleted. Idempotent, no-op in steady state. */
-  def recoverSnapshot(fs: org.apache.hadoop.fs.FileSystem,
-                      snap: org.apache.hadoop.fs.Path): Unit = {
-    val old = oldPath(snap)
-    if (fs.exists(old)) {
-      if (!fs.exists(snap)) {
-        if (!fs.rename(old, snap))
-          sys.error(s"upsertSnapshotSink: recovery rename $old -> $snap failed")
-      } else fs.delete(old, true)
-    }
-  }
 
   /** Run a streaming transform over `dir` with Trigger.AvailableNow into
     * an in-memory table; returns the final result. Used by specs to

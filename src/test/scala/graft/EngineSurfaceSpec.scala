@@ -10,11 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * custom function is injected by the one registry; every MinHash
   * signature frame is built through the one aggregate site; every
   * global running sum goes through the one ranged construction; every
-  * scratch directory, specs' included, comes from the one cleaned-up
-  * factory; the codegen class cache is sized in the session factory
-  * only; edit distance has one kernel; driver work runs concurrently
-  * only through core/Overlap; and the only hand-written partition loops
-  * are the codec decoders. */
+  * snapshot is replaced through the one swap and merged through the one
+  * newest-per-key merge; every scratch directory, specs' included, comes
+  * from the one cleaned-up factory; the codegen class cache is sized in
+  * the session factory only; edit distance has one kernel; driver work
+  * runs concurrently only through core/Overlap; and the only
+  * hand-written partition loops are the codec decoders. */
 class EngineSurfaceSpec extends AnyFunSuite {
   private def mainSources: Seq[Path] = {
     val root = Paths.get("src/main/scala")
@@ -58,14 +59,15 @@ class EngineSurfaceSpec extends AnyFunSuite {
         calls.distinct.sorted.mkString(", "))
   }
 
+  // code lines only — a comment citing the API is not a site
+  private def codeSites(word: String): Seq[String] = mainSources.flatMap { p =>
+    Files.readAllLines(p).asScala.toSeq.filter { line =>
+      val t = line.trim
+      line.contains(word) && !(t.startsWith("//") || t.startsWith("*") || t.startsWith("/*"))
+    }.map(_ => p.toString)
+  }.sorted
+
   test("one ranged running sum: spark_partition_id at 1 code site, repartitionByRange at 2") {
-    // code lines only — a comment citing the API is not a site
-    def codeSites(word: String) = mainSources.flatMap { p =>
-      Files.readAllLines(p).asScala.toSeq.filter { line =>
-        val t = line.trim
-        line.contains(word) && !(t.startsWith("//") || t.startsWith("*") || t.startsWith("/*"))
-      }.map(_ => p.toString)
-    }.sorted
     val warehouse = "src/main/scala/graft/operators/Warehouse.scala"
     val pid = codeSites("spark_partition_id")
     assert(pid == Seq(warehouse),
@@ -75,6 +77,18 @@ class EngineSurfaceSpec extends AnyFunSuite {
     val ranged = codeSites("repartitionByRange")
     assert(ranged == Seq("src/main/scala/graft/operators/Clustering.scala", warehouse),
       s"range-partition through Warehouse.rangedRunningSum: ${ranged.mkString(", ")}")
+  }
+
+  test("one snapshot swap: filesystem renames only in sources/Writers.scala") {
+    val sites = codeSites(".rename(").distinct
+    assert(sites == Seq("src/main/scala/graft/sources/Writers.scala"),
+      s"replace snapshots through Writers.parquetReplace: ${sites.mkString(", ")}")
+  }
+
+  test("one newest-per-key merge: contentHash is called only in sources/JdbcUpsert.scala") {
+    val sites = codeSites("contentHash(").distinct
+    assert(sites == Seq("src/main/scala/graft/sources/JdbcUpsert.scala"),
+      s"keep the newest row per key through JdbcUpsert.mergeByKey: ${sites.mkString(", ")}")
   }
 
   private def filesMentioning(word: String): Seq[String] =

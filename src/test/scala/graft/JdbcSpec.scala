@@ -283,12 +283,12 @@ class JdbcSpec extends SparkSpec {
     val schema = batchSchema
     val pg = JdbcUpsert.Postgres
     val mg = JdbcUpsert.Merge
-    val pgSql = pg.statement("t", schema, Seq("id"))
-    val mgSql = mg.statement("t", schema, Seq("id"))
-    assert(pgSql.count(_ == '?') == pg.bindOrder(schema, Seq("id")).length)
-    assert(mgSql.count(_ == '?') == mg.bindOrder(schema, Seq("id")).length)
+    val pgSql = pg.statement("t", schema, Seq("id"), None)
+    val mgSql = mg.statement("t", schema, Seq("id"), None)
+    assert(pgSql.count(_ == '?') == pg.bindOrder(schema, Seq("id"), None).length)
+    assert(mgSql.count(_ == '?') == mg.bindOrder(schema, Seq("id"), None).length)
     // merge binds keys (ON), non-keys (SET), then every column (VALUES)
-    assert(mg.bindOrder(schema, Seq("id")) == Seq(0, 1, 2, 0, 1, 2))
+    assert(mg.bindOrder(schema, Seq("id"), None) == Seq(0, 1, 2, 0, 1, 2))
   }
 
   private def batchSchema =

@@ -180,7 +180,7 @@ class SourcesSpec extends SparkSpec {
 
   test("upsert statement shape (pangres ON CONFLICT parity)") {
     val schema = StructType.fromDDL("milestone_id INT, description STRING, updated_at TIMESTAMP")
-    val sql = JdbcUpsert.upsertStatement("staging.milestones", schema, Seq("milestone_id"))
+    val sql = JdbcUpsert.Postgres.statement("staging.milestones", schema, Seq("milestone_id"), None)
     assert(sql.contains("INSERT INTO staging.milestones (milestone_id, description, updated_at)"))
     assert(sql.contains("ON CONFLICT (milestone_id) DO UPDATE SET"))
     assert(sql.contains("description = EXCLUDED.description"))
@@ -189,17 +189,17 @@ class SourcesSpec extends SparkSpec {
 
   test("versioned upsert statement shape (both dialects guard on the version)") {
     val schema = StructType.fromDDL("milestone_id INT, description STRING, updated_at TIMESTAMP")
-    val pg = JdbcUpsert.Postgres.versionedStatement(
-      "staging.milestones", schema, Seq("milestone_id"), "updated_at")
+    val pg = JdbcUpsert.Postgres.statement(
+      "staging.milestones", schema, Seq("milestone_id"), Some("updated_at"))
     assert(pg.contains("INSERT INTO staging.milestones AS t"))
     assert(pg.contains("WHERE EXCLUDED.updated_at > t.updated_at"))
-    val mg = JdbcUpsert.Merge.versionedStatement(
-      "milestones", schema, Seq("milestone_id"), "updated_at")
+    val mg = JdbcUpsert.Merge.statement(
+      "milestones", schema, Seq("milestone_id"), Some("updated_at"))
     assert(mg.contains("WHEN MATCHED AND CAST(? AS TIMESTAMP) > t.updated_at THEN UPDATE SET"))
     // bind order: key, version guard, non-keys, then all columns
-    assert(JdbcUpsert.Merge.versionedBindOrder(schema, Seq("milestone_id"), "updated_at")
+    assert(JdbcUpsert.Merge.bindOrder(schema, Seq("milestone_id"), Some("updated_at"))
       == Seq(0, 2, 1, 2, 0, 1, 2))
-    assert(JdbcUpsert.Postgres.versionedBindOrder(schema, Seq("milestone_id"), "updated_at")
+    assert(JdbcUpsert.Postgres.bindOrder(schema, Seq("milestone_id"), Some("updated_at"))
       == Seq(0, 1, 2))
   }
 
@@ -225,17 +225,35 @@ class SourcesSpec extends SparkSpec {
 
   test("compactParquet: 64 fragments -> <= 4 files, rows and values intact") {
     val tmp = TestDirs.fresh("compact_spec")
-    val out = s"$tmp/t"
     val df = spark.range(10000).selectExpr("id", "id % 7 AS grp")
-    df.repartition(64).write.parquet(out)
-    def partFiles() = new java.io.File(out).listFiles()
+    // a live directory, and one an interrupted swap left only as __old
+    def partFiles(dir: String) = new java.io.File(dir).listFiles()
       .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-    assert(partFiles().length > 4, "precondition: fragmented input")
-    Writers.compactParquet(spark, out, targetFiles = 4)
-    assert(partFiles().length <= 4, s"still ${partFiles().length} files")
-    val got = Readers.parquet(spark, out)
-    assert(got.count() == 10000)
-    assert(got.agg(sum(col("id"))).first().getLong(0) == 10000L * 9999 / 2)
+    for ((out, written) <- Seq(s"$tmp/t" -> s"$tmp/t", s"$tmp/u" -> s"$tmp/u__old")) {
+      df.repartition(64).write.parquet(written)
+      assert(partFiles(written).length > 4, "precondition: fragmented input")
+      Writers.compactParquet(spark, out, targetFiles = 4)
+      assert(partFiles(out).length <= 4, s"$out: still ${partFiles(out).length} files")
+      assert(!new java.io.File(s"${out}__old").exists(), s"$out: __old left behind")
+      val got = Readers.parquet(spark, out)
+      assert(got.count() == 10000)
+      assert(got.agg(sum(col("id"))).first().getLong(0) == 10000L * 9999 / 2)
+    }
+  }
+
+  test("parquetReplace of a frame reading its own path leaves only the merged snapshot") {
+    val tmp = TestDirs.fresh("replace_spec")
+    val snap = s"$tmp/snap"
+    Seq((1, "old", 10L), (2, "keep", 11L)).toDF("k", "v", "ver").write.parquet(snap)
+    // the garbage of an earlier swap that crashed after its rename-in
+    Seq((9, "stale", 1L)).toDF("k", "v", "ver").write.parquet(s"${snap}__old")
+    val delta = Seq((1, "new", 20L), (3, "ins", 21L)).toDF("k", "v", "ver")
+    Writers.parquetReplace(
+      JdbcUpsert.mergeByKey(Readers.parquet(spark, snap), delta, Seq("k"), "ver"), snap)
+    assert(new java.io.File(tmp).list().toSeq == Seq("snap"))
+    val got = Readers.parquet(spark, snap).orderBy("k").collect()
+      .map(r => (r.getInt(0), r.getString(1))).toSeq
+    assert(got == Seq((1, "new"), (2, "keep"), (3, "ins")))
   }
 
   test("zValue matches hand-computed Morton interleave; masks wide inputs") {

@@ -321,15 +321,15 @@ class StreamingSpec extends SparkSpec {
     // crash BETWEEN snap->old and tmp->snap: only __old exists — the
     // live snapshot must come back
     mk(old, "v1")
-    EventsStream.recoverSnapshot(fs, snap)
+    graft.sources.Writers.recoverSnapshot(fs, snap)
     assert(fs.exists(snap) && !fs.exists(old) && tag(snap) == "v1")
     // crash AFTER tmp->snap but before delete(__old): new snapshot wins,
     // stale __old is garbage-collected
     mk(old, "v1-stale")
-    EventsStream.recoverSnapshot(fs, snap)
+    graft.sources.Writers.recoverSnapshot(fs, snap)
     assert(tag(snap) == "v1" && !fs.exists(old))
     // steady state: no-op
-    EventsStream.recoverSnapshot(fs, snap)
+    graft.sources.Writers.recoverSnapshot(fs, snap)
     assert(tag(snap) == "v1")
   }
 

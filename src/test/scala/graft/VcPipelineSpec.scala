@@ -260,6 +260,27 @@ class VcPipelineSpec extends SparkSpec {
     assert(snapshot() == day2)
   }
 
+  test("milestones: a swap interrupted after the rename-aside keeps the prior snapshot") {
+    val out = TestDirs.fresh("vc_out_ms_crash")
+    val staging = writeStaging()
+    assert(VcPipeline.run(spark, VcPipeline.Config(staging, out))("milestones")
+      == Pipeline.Completed())
+    // a crash between `milestones -> milestones__old` and the rename-in
+    // leaves only the aside copy
+    Files.move(java.nio.file.Paths.get(s"$out/milestones"),
+      java.nio.file.Paths.get(s"$out/milestones__old"))
+    // day 2 carries milestone 3 only; milestone 2 lives in the day-1 snapshot
+    milestonesDf(Seq(
+      (3, "f:3", "fund closed", ts("2020-01-05 08:00:00"), ts("2020-01-05 08:00:00"))))
+      .write.mode("overwrite").parquet(s"$staging/milestones.parquet")
+    assert(VcPipeline.run(spark, VcPipeline.Config(staging, out))("milestones")
+      == Pipeline.Completed())
+    val got = spark.read.parquet(s"$out/milestones").select("milestone_id", "description")
+      .orderBy("milestone_id").collect().map(r => (r.getInt(0), r.getString(1))).toSeq
+    assert(got == Seq((1, "first customer"), (2, "series a"), (3, "fund closed")))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$out/milestones__old")))
+  }
+
   test("empty staging table skips its stage and dependents only") {
     val out = TestDirs.fresh("vc_out_skip")
     val results = VcPipeline.run(spark,
