@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * query runs at sf0.001 (smoke), sf0.01 (oracle), sf0.1 (bench). */
 object Tables {
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.sources.Readers.parquet(spark, s"$dir/$name.parquet")
 
   def lineitem(s: SparkSession, d: String): DataFrame   = t(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame     = t(s, d, "orders")

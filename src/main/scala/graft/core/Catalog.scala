@@ -14,6 +14,6 @@ object Catalog {
   /** Register every testdata table under its name as a temp view. */
   def register(spark: SparkSession, dir: String): Unit =
     Tables.foreach { t =>
-      spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t)
+      graft.sources.Readers.parquet(spark, s"$dir/$t.parquet").createOrReplaceTempView(t)
     }
 }

@@ -16,9 +16,13 @@ import graft.core.Overlap
   * (P3, `extract.py:57-59`), and a pluggable failure notifier standing in
   * for the Slack webhook (`helper/slack_notifier.py`).
   *
-  * Stages produce DataFrames lazily; a stage whose input is empty reports
-  * `Skipped` without running its action — exactly the reference's
-  * "No data to process" early return.
+  * Stages produce DataFrames lazily; an empty stage reports `Skipped`
+  * and its dependents do not run — the reference's "No data to process"
+  * early return. A stage learns it is empty from the work it does
+  * anyway: a sink returns the rows it published and publishes nothing
+  * for an empty frame, so a sinked stage is `Skipped` when its sink
+  * returns 0, at no cost beyond its write. Only a stage without a sink
+  * (a source that just feeds its dependents) runs an emptiness probe.
   *
   * Concurrency: a stage starts as soon as every dependency has completed,
   * on its own fresh thread ([[graft.core.Overlap.task]]) carrying the
@@ -29,8 +33,8 @@ import graft.core.Overlap
   * sees only its own dependencies' frames.
   *
   * Shared stages evaluate once per run: a stage with a sink and at least
-  * one dependent is persisted before its emptiness probe, so the probe,
-  * the sink and every dependent read one materialization — the cross-job
+  * one dependent is persisted before its sink runs, so the sink's write
+  * materializes it and every dependent reads that one copy — the cross-job
   * reuse the reference's job-per-script architecture cannot express
   * (SURVEY §4 caching row). Dependents start only after that sink has
   * returned, and every persisted frame is released before `run` returns.
@@ -47,14 +51,15 @@ object Pipeline {
   case class Errored(error: Throwable) extends Result
 
   /** The default sink: a stage without one only feeds its dependents. */
-  val NoSink: DataFrame => Unit = _ => ()
+  val NoSink: DataFrame => Long = _ => 0L
 
+  /** A pipeline stage. `sink` publishes the built frame and returns the
+    * rows it published: 0, with nothing published, for an empty frame. */
   case class Stage(
       name: String,
       deps: Seq[String],
       build: Map[String, DataFrame] => DataFrame,
-      sink: DataFrame => Unit = NoSink,
-      skipWhenEmpty: Boolean = true)
+      sink: DataFrame => Long = NoSink)
 
   /** A stage's result, with its frame when it completed. */
   private type Outcome = (Result, Option[DataFrame])
@@ -91,8 +96,8 @@ object Pipeline {
               persisted.add(built)
               built.persist(StorageLevel.MEMORY_AND_DISK)
             } else built
-          if (st.skipWhenEmpty && df.isEmpty) (Skipped, None)
-          else { st.sink(df); (Completed(), Some(df)) }
+          val empty = if (st.sink eq NoSink) df.isEmpty else st.sink(df) == 0
+          if (empty) (Skipped, None) else (Completed(), Some(df))
         } catch {
           case NonFatal(e) =>
             notifier.synchronized(notifier(st.name, e))

@@ -12,16 +12,19 @@ import graft.sources.{JdbcUpsert, Readers, Writers}
   *
   * Differences from the reference's architecture, by design:
   *  - one SparkSession for the whole graph — shared dims (dim_company
-  *    feeds four tables and profiling) are computed once per run and
-  *    read from that one copy by their probe, their sink and every
-  *    dependent, where the reference re-reads dim tables over JDBC in
+  *    feeds four tables and profiling) are computed once per run: their
+  *    sink's write materializes them and every dependent reads that one
+  *    copy, where the reference re-reads dim tables over JDBC in
   *    every per-table job (SURVEY §4 caching row). dim_date, a generated
   *    range, is shared the same way;
   *  - independent stages run concurrently (see [[Pipeline]]): every
   *    build and sink here is thread-safe and writes its own path under
   *    `outDir`;
   *  - skip-on-empty short-circuits per stage, as the reference does per
-  *    job (P3);
+  *    job (P3): every table is published through
+  *    [[graft.sources.Writers.parquetPublish]], which publishes nothing
+  *    for an empty frame and returns the rows it wrote, so a table
+  *    learns it is empty from its own write, with no probe job;
   *  - incremental mode is a declarative `created_at` day filter pushed
   *    into each staging scan (S2), not interpolated SQL.
   */
@@ -56,8 +59,8 @@ object VcPipeline {
         case _ => df
       }
     }
-    def sink(name: String)(df: DataFrame): Unit =
-      Writers.parquetOverwrite(df, s"${cfg.outDir}/$name")
+    def sink(name: String)(df: DataFrame): Long =
+      Writers.parquetPublish(df, s"${cfg.outDir}/$name")
     def stored(name: String): Option[DataFrame] =
       Readers.snapshot(spark, s"${cfg.outDir}/$name")
     /** Append-with-continued-keys (reference BIGSERIAL semantics): only
@@ -84,9 +87,9 @@ object VcPipeline {
         case Some(existing) =>
           JdbcUpsert.mergeByKey(existing, newRows, keys, keys.head)
       }
-    /** Warehouse-table stage. Overwrite mode sinks after the emptiness
-      * check, and the runner hands dependents the one materialization
-      * its probe and sink read. Append mode PUBLISHES inside the build — swap
+    /** Warehouse-table stage. Overwrite mode publishes through the sink,
+      * and the runner hands dependents the one materialization its write
+      * made. Append mode PUBLISHES inside the build — swap
       * the snapshot, then hand downstream a fresh read of the new files —
       * because the merged frame lazily reads the files the swap replaces:
       * a post-sink consumer of the old frame would hit deleted parts. */
@@ -107,7 +110,7 @@ object VcPipeline {
     // dims
     runner
       .add(Pipeline.Stage("dim_date", Nil,
-        _ => DimDate.build(spark), sink("dim_date"), skipWhenEmpty = false))
+        _ => DimDate.build(spark), sink("dim_date")))
       .add(tableStage("dim_company", Seq("stg_company"),
         f => dimFrame("dim_company", "sk_company_id", "nk_company_id",
           Warehouse.dimCompany(f("stg_company")))))
@@ -148,14 +151,14 @@ object VcPipeline {
         JdbcUpsert.mergeByKey(stored("milestones").getOrElse(delta.limit(0)),
           delta, Seq("milestone_id"), "updated_at")
       },
-      df => Writers.parquetReplace(df, s"${cfg.outDir}/milestones")))
+      sink("milestones")))
     // profiling over the produced dims/facts (reference: third DAG)
     runner.add(Pipeline.Stage("profiling",
       Seq("dim_company", "dim_funds", "fct_investments"),
       f => Seq("dim_company", "dim_funds", "fct_investments")
         .map(t => Profiler.profile(f(t), "warehouse", t))
         .reduce(_ unionByName _),
-      sink("data_profile"), skipWhenEmpty = false))
+      sink("data_profile")))
 
     runner.run()
   }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.sources.Readers
 import graft.operators.Classifier
 
 /** Learned-classifier coverage: multinomial NB trained on a labeled
@@ -40,7 +41,7 @@ object ClassifierQueries {
       Classifier.nbPriors(seedDocs(s, d), "lang", Langs)
         .write.mode("overwrite").parquet(s"$dir/priors")
       Classifier.nbScoreFromStats(documents(s, d),
-        s.read.parquet(s"$dir/stats"), s.read.parquet(s"$dir/priors"),
+        Readers.parquet(s, s"$dir/stats"), Readers.parquet(s, s"$dir/priors"),
         "doc_id", "text", Langs)
         .orderBy(col("doc_id"))
     },

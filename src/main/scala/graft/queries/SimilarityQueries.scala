@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.sources.Readers
 import graft.operators.{Dedup, Multimodal, Similarity}
 
 /** Embedding-similarity + multimodal coverage. Vector math is mirrored in
@@ -136,8 +137,8 @@ object SimilarityQueries {
         Ivf.centroidsAsDf(s, cents)
           .write.mode("overwrite").parquet(dir + "/centroids"))
       Ivf.ivfTopKFromStore(
-        s.read.parquet(dir + "/assigned"),
-        Ivf.centroidsFromDf(s.read.parquet(dir + "/centroids")),
+        Readers.parquet(s, dir + "/assigned"),
+        Ivf.centroidsFromDf(Readers.parquet(s, dir + "/centroids")),
         emb.filter(col("vec_id").isin(QueryIds: _*)), "vec_id", "embedding",
         k = 10, nprobe = 4)
         .withColumn("cosine_sim", round(col("cosine_sim"), 6))
@@ -166,11 +167,11 @@ object SimilarityQueries {
           .write.mode("overwrite").parquet(dir + "/assigned"),
         Ivf.centroidsAsDf(s, cents)
           .write.mode("overwrite").parquet(dir + "/centroids"))
-      val storedCents = Ivf.centroidsFromDf(s.read.parquet(dir + "/centroids"))
+      val storedCents = Ivf.centroidsFromDf(Readers.parquet(s, dir + "/centroids"))
       val delta = Ivf.assign(emb.filter(col("vec_id") % 2 =!= 0),
         "vec_id", "embedding", storedCents)
       val merged = Ivf.mergeAssignmentStore(
-        s.read.parquet(dir + "/assigned"), delta)
+        Readers.parquet(s, dir + "/assigned"), delta)
       Ivf.ivfTopKFromStore(merged, storedCents,
         emb.filter(col("vec_id").isin(QueryIds: _*)), "vec_id", "embedding",
         k = 10, nprobe = 4)

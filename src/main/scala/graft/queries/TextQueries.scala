@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.sources.Readers
 import graft.functions.TextAnalysis
 import graft.operators.Dedup
 
@@ -238,7 +239,7 @@ object TextQueries {
           .write.mode("overwrite").parquet(dir),
         deltaSig.count())
       Dedup.incrementalDedupRosterPrepared(
-        deltaSig, s.read.parquet(dir),
+        deltaSig, Readers.parquet(s, dir),
         n = 3, bands = 16, rowsPerBand = 8, threshold = 0.6,
         maxBucketSize = MaxBucket)
         .orderBy(col("doc_id"))
@@ -273,7 +274,7 @@ object TextQueries {
         halfStore(0, dirA), halfStore(1, dirB), deltaSig.count())
       Dedup.incrementalDedupRosterPrepared(
         deltaSig,
-        Dedup.mergeSignatureStore(s.read.parquet(dirA), s.read.parquet(dirB)),
+        Dedup.mergeSignatureStore(Readers.parquet(s, dirA), Readers.parquet(s, dirB)),
         n = 3, bands = 16, rowsPerBand = 8,
         threshold = 0.6, maxBucketSize = MaxBucket)
         .orderBy(col("doc_id"))

@@ -5,11 +5,14 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Sink layer (SURVEY §2.1 S4, S5, S8).
   *
-  * [[parquetReplace]] is the engine's one snapshot swap: the pipeline's
-  * milestones stage and append-mode tables, [[compactParquet]] and the
-  * streaming snapshot sink all replace a snapshot through it, and read
-  * one back through [[Readers.snapshot]], which first undoes a swap a
-  * crash interrupted ([[recoverSnapshot]]).
+  * Two parquet publish forms share the engine's one snapshot swap
+  * ([[swapIn]]): [[parquetReplace]] always publishes, and the pipeline's
+  * append-mode tables, [[compactParquet]] and the streaming snapshot sink
+  * replace a snapshot through it; [[parquetPublish]] publishes only a
+  * frame that has rows, and reports how many, so the pipeline's tables
+  * learn they are empty from their own write. Every snapshot is read
+  * back through [[Readers.snapshot]], which first undoes a swap a crash
+  * interrupted ([[recoverSnapshot]]).
   *
   * Scale notes vs the reference:
   *  - S4 parquet snapshots become *date-partitioned* writes with dynamic
@@ -21,10 +24,6 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   *    parallelism — at cluster scale that's one DB connection per task).
   */
 object Writers {
-
-  /** S4: parquet snapshot overwrite. */
-  def parquetOverwrite(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
 
   /** S4 at scale: date-partitioned parquet with per-partition overwrite.
     * Requires spark.sql.sources.partitionOverwriteMode=dynamic to only
@@ -51,11 +50,38 @@ object Writers {
     * Every rename result is checked: a failed rename-in restores `__old`
     * and throws, so a swap that cannot complete fails loudly. */
   def parquetReplace(df: DataFrame, path: String): Unit = {
+    val (fs, tmp, target) = writeAside(df, path)
+    swapIn(fs, tmp, target)
+  }
+
+  /** S4: publish `df` at `path` only if it has rows, and return how many
+    * it published. The frame is written aside as [[parquetReplace]]
+    * writes it; the rows are then summed from the written files' footers
+    * on the driver ([[Readers.parquetRows]]), so learning that a frame was
+    * empty costs no job beyond its write. An empty write is deleted and
+    * leaves `path` as it was; any other is swapped in. */
+  def parquetPublish(df: DataFrame, path: String): Long = {
+    val (fs, tmp, target) = writeAside(df, path)
+    val rows = Readers.parquetRows(df.sparkSession, tmp.toString)
+    if (rows == 0) fs.delete(tmp, true) else swapIn(fs, tmp, target)
+    rows
+  }
+
+  /** Recover `path` from any interrupted swap, then write `df` to
+    * `path__tmp`; returns the filesystem, `__tmp` and `path`. */
+  private def writeAside(df: DataFrame, path: String): (FileSystem, Path, Path) = {
     val target = new Path(path)
-    val (tmp, old) = (new Path(path + "__tmp"), oldPath(target))
+    val tmp = new Path(path + "__tmp")
     val fs = target.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     recoverSnapshot(fs, target)
     df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    (fs, tmp, target)
+  }
+
+  /** The swap: rename the live `target` aside to `__old`, rename `tmp`
+    * in (restoring `__old` and throwing if that fails), delete `__old`. */
+  private def swapIn(fs: FileSystem, tmp: Path, target: Path): Unit = {
+    val old = oldPath(target)
     if (fs.exists(target) && !fs.rename(target, old))
       throw new java.io.IOException(s"parquetReplace: rename-aside $target -> $old failed")
     if (!fs.rename(tmp, target)) {

@@ -60,7 +60,7 @@ object EventsStream {
     * disk instead of pinning one in a DDL literal. */
   def readEvents(spark: SparkSession, dir: String): DataFrame =
     withEventTime(
-      spark.readStream.schema(spark.read.parquet(dir).schema)
+      spark.readStream.schema(Readers.parquet(spark, dir).schema)
         .option("maxFilesPerTrigger", "4")
         .parquet(dir))
 

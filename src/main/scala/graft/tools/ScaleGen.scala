@@ -119,7 +119,7 @@ object ScaleGen {
     requireDistinctCiphers(factor)
     val spark = graft.core.GraftSession.get()
 
-    def in(name: String) = spark.read.parquet(s"$inDir/$name.parquet")
+    def in(name: String) = graft.sources.Readers.parquet(spark, s"$inDir/$name.parquet")
     def out(df: => DataFrame, name: String, parts: Int): Unit =
       if (tables(name))
         df.repartition(parts).write.mode("overwrite")

@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * signature frame is built through the one aggregate site; every
   * global running sum goes through the one ranged construction; every
   * snapshot is replaced through the one swap and merged through the one
-  * newest-per-key merge; every scratch directory, specs' included, comes
+  * newest-per-key merge; every parquet read takes its schema from one
+  * footer through the one reader; a sinked pipeline stage learns it is
+  * empty from its own write; every scratch directory, specs' included, comes
   * from the one cleaned-up factory; the codegen class cache is sized in
   * the session factory only; edit distance has one kernel; driver work
   * runs concurrently only through core/Overlap; and the only
@@ -60,12 +62,14 @@ class EngineSurfaceSpec extends AnyFunSuite {
   }
 
   // code lines only — a comment citing the API is not a site
-  private def codeSites(word: String): Seq[String] = mainSources.flatMap { p =>
+  private def codeLines(word: String): Seq[(String, String)] = mainSources.flatMap { p =>
     Files.readAllLines(p).asScala.toSeq.filter { line =>
       val t = line.trim
       line.contains(word) && !(t.startsWith("//") || t.startsWith("*") || t.startsWith("/*"))
-    }.map(_ => p.toString)
-  }.sorted
+    }.map(p.toString -> _)
+  }.sortBy(_._1)
+
+  private def codeSites(word: String): Seq[String] = codeLines(word).map(_._1)
 
   test("one ranged running sum: spark_partition_id at 1 code site, repartitionByRange at 2") {
     val warehouse = "src/main/scala/graft/operators/Warehouse.scala"
@@ -89,6 +93,19 @@ class EngineSurfaceSpec extends AnyFunSuite {
     val sites = codeSites("contentHash(").distinct
     assert(sites == Seq("src/main/scala/graft/sources/JdbcUpsert.scala"),
       s"keep the newest row per key through JdbcUpsert.mergeByKey: ${sites.mkString(", ")}")
+  }
+
+  test("one parquet reader: read.parquet( at code lines only in sources/Readers.scala") {
+    val sites = codeSites("read.parquet(").distinct
+    assert(sites == Seq("src/main/scala/graft/sources/Readers.scala"),
+      s"read parquet through Readers.parquet (schema from one footer, no job): ${sites.mkString(", ")}")
+  }
+
+  test("a stage learns it is empty from its sink: isEmpty in pipeline/ only on the no-sink path") {
+    val probes = codeLines("isEmpty").filter(_._1.startsWith("src/main/scala/graft/pipeline/"))
+    assert(probes.size == 1 && probes.head._1 == "src/main/scala/graft/pipeline/Pipeline.scala" &&
+      probes.head._2.contains("NoSink"),
+      s"a sinked stage is Skipped when its sink publishes 0 rows: ${probes.mkString(", ")}")
   }
 
   private def filesMentioning(word: String): Seq[String] =

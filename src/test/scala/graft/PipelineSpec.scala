@@ -6,6 +6,7 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import org.apache.spark.sql.functions._
 import graft.pipeline.Pipeline
 import graft.pipeline.Pipeline._
+import graft.sources.{Readers, Writers}
 
 /** Pipeline runner: dependency order, skip-on-empty short-circuit,
   * error notification, concurrent independent stages, and shared
@@ -25,11 +26,11 @@ class PipelineSpec extends SparkSpec {
     var sunk: Seq[String] = Nil
     val r = new Runner()
       .add(Stage("dim", Nil, { _ => synchronized(builds += 1); Seq((1, "c:1")).toDF("sk", "nk") },
-        df => synchronized(sunk :+= "dim")))
+        df => { synchronized(sunk :+= "dim"); 1L }))
       .add(Stage("fact_a", Seq("dim"), { f => f("dim").select("sk") },
-        _ => synchronized(sunk :+= "fact_a")))
+        _ => { synchronized(sunk :+= "fact_a"); 1L }))
       .add(Stage("fact_b", Seq("dim"), { f => f("dim").select("nk") },
-        _ => synchronized(sunk :+= "fact_b")))
+        _ => { synchronized(sunk :+= "fact_b"); 1L }))
       .run()
     assert(builds == 1)
     assert(r.values.forall(_ == Completed()))
@@ -40,9 +41,39 @@ class PipelineSpec extends SparkSpec {
     var sinkRan = false
     val r = new Runner()
       .add(Stage("src", Nil, { _ => Seq.empty[(Int, String)].toDF("a", "b") }))
-      .add(Stage("down", Seq("src"), { f => f("src") }, _ => synchronized { sinkRan = true }))
+      .add(Stage("down", Seq("src"), { f => f("src") }, _ => { synchronized { sinkRan = true }; 1L }))
       .run()
     assert(r("src") == Skipped && r("down") == Skipped && !sinkRan)
+  }
+
+  test("a sinked stage learns it has rows from its own write: one job, no probe") {
+    val out = s"${TestDirs.fresh("publish_rows")}/t"
+    val (r, jobs) = jobsOf(new Runner()
+      .add(Stage("t", Nil, { _ => spark.range(0, 10, 1, 2).toDF() }, Writers.parquetPublish(_, out)))
+      .run())
+    assert(r == Map("t" -> Completed()))
+    assert(jobs == 1, s"the stage ran $jobs jobs, not its write alone")
+    assert(Readers.parquet(spark, out).count() == 10)
+  }
+
+  test("an empty sinked stage is Skipped, publishes nothing and keeps the table it would replace") {
+    val tmp = TestDirs.fresh("publish_empty")
+    val out = s"$tmp/t"
+    assert(Writers.parquetPublish(spark.range(0, 3, 1, 1).toDF(), out) == 3)
+    val nothing = Seq(
+      "limit(0)" -> spark.range(0, 10, 1, 2).toDF().limit(0),
+      "a filter that keeps nothing" -> spark.range(0, 10, 1, 2).toDF().filter($"id" < 0))
+    for ((how, empty) <- nothing) {
+      var downRan = false
+      val run = Future(new Runner()
+        .add(Stage("t", Nil, { _ => empty }, Writers.parquetPublish(_, out)))
+        .add(Stage("down", Seq("t"), { f => synchronized { downRan = true }; f("t") }))
+        .run())(ExecutionContext.global)
+      val r = Await.result(run, 60.seconds)
+      assert(r == Map("t" -> Skipped, "down" -> Skipped) && !downRan, how)
+      assert(new java.io.File(tmp).list().toSeq == Seq("t"), s"$how left ${new java.io.File(tmp).list().toSeq}")
+      assert(Readers.parquet(spark, out).orderBy("id").collect().map(_.getLong(0)).toSeq == Seq(0L, 1L, 2L), how)
+    }
   }
 
   test("failure notifies and skips dependents") {
@@ -70,7 +101,7 @@ class PipelineSpec extends SparkSpec {
     val computed = spark.sparkContext.longAccumulator("shared-rows")
     val tick = udf { (id: Long) => computed.add(1); id }
     // each consumer sums the column, so an unshared plan re-runs the udf
-    def total(df: org.apache.spark.sql.DataFrame): Unit = df.agg(sum("v")).collect()
+    def total(df: org.apache.spark.sql.DataFrame): Long = df.agg(count(lit(1)), sum("v")).first().getLong(0)
     val r = new Runner()
       .add(Stage("up", Nil, { _ => spark.range(0, 100, 1, 4).select(tick($"id").as("v")) }, total))
       .add(Stage("a", Seq("up"), { f => f("up") }, total))
@@ -91,7 +122,7 @@ class PipelineSpec extends SparkSpec {
       .add(Stage("sibling", Nil, { _ =>
         require(await(failed), "the failing branch never notified")
         spark.range(0, 50, 1, 4).toDF()
-      }, df => synchronized { siblingRows = df.count() }))
+      }, df => synchronized { siblingRows = df.count(); siblingRows }))
       .run()
     assert(r("boom").isInstanceOf[Errored] && r("down") == Skipped)
     assert(r("sibling") == Completed() && siblingRows == 50L)
@@ -102,9 +133,10 @@ class PipelineSpec extends SparkSpec {
     var events = Seq.empty[String]
     def log(e: String): Unit = synchronized(events :+= e)
     val up = Stage("up", Nil, { _ => Seq(1, 2, 3).toDF("v") }, { df =>
-      df.collect()
+      val rows = df.count()
       Thread.sleep(300)
       log("up:sunk")
+      rows
     })
     val runner = new Runner().add(up)
     for (d <- Seq("a", "b", "c"))
@@ -130,7 +162,7 @@ class PipelineSpec extends SparkSpec {
     val cache = spark.sharedState.cacheManager
     var cachedDuringRun = false
     val r = new Runner()
-      .add(Stage("up", Nil, { _ => spark.range(0, 20, 1, 2).toDF() }, _.collect()))
+      .add(Stage("up", Nil, { _ => spark.range(0, 20, 1, 2).toDF() }, _.count()))
       .add(Stage("down", Seq("up"), { f => synchronized { cachedDuringRun = !cache.isEmpty }; f("up") }))
       .run()
     assert(r.values.forall(_ == Completed()))

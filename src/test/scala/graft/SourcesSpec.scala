@@ -256,6 +256,85 @@ class SourcesSpec extends SparkSpec {
     assert(got == Seq((1, "new"), (2, "keep"), (3, "ins")))
   }
 
+  /** Rows of `df` as sorted strings, binary values as their bytes, for
+    * order-free comparison. */
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map {
+      case b: Array[Byte] => b.mkString("0x", ".", "")
+      case v => String.valueOf(v)
+    }.mkString(",")).toSeq.sorted
+
+  /** A scan's plan with expression ids masked: ReadSchema, pushed
+    * filters and partition columns, as two reads of one path plan them. */
+  private def scanPlan(df: org.apache.spark.sql.DataFrame): String =
+    df.filter(col("id") > 1).queryExecution.executedPlan.toString.replaceAll("#\\d+", "#N")
+
+  test("Readers.parquet takes its schema from one footer: no job, spark.read.parquet's schema and rows") {
+    val tmp = TestDirs.fresh("footer_schema")
+    val rows = Seq((1, "a", 1.5), (2, "b", 2.5), (3, null, 3.5), (4, "a", 4.5)).toDF("id", "s", "x")
+    rows.coalesce(1).write.parquet(s"$tmp/one")
+    val part = new java.io.File(s"$tmp/one").listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    val single = s"$tmp/single.parquet"
+    java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(single))
+    rows.repartition(3).write.parquet(s"$tmp/parts")
+    assert(new java.io.File(s"$tmp/parts/_SUCCESS").exists(), "precondition: _SUCCESS written")
+    rows.write.partitionBy("s").parquet(s"$tmp/partitioned")
+    rows.limit(0).write.parquet(s"$tmp/empty")
+    // the counter sees the inference job a bare read starts
+    assert(jobsOf(spark.read.parquet(s"$tmp/parts"))._2 >= 1, "the listener missed Spark's inference job")
+    for (path <- Seq(single, s"$tmp/parts", s"$tmp/partitioned", s"$tmp/empty")) {
+      val (got, jobs) = jobsOf(Readers.parquet(spark, path))
+      assert(jobs == 0, s"$path: Readers.parquet started $jobs jobs")
+      val want = spark.read.parquet(path)
+      assert(got.schema == want.schema, path)
+      assert(rowsOf(got) == rowsOf(want), path)
+      assert(scanPlan(got) == scanPlan(want), path)
+    }
+    assert(rowsOf(Readers.parquet(spark, s"$tmp/partitioned")).size == 4)
+    // a session that merges parquet schemas gets Spark's merge, not one footer
+    Seq((5, 9L)).toDF("id", "y").write.mode("append").parquet(s"$tmp/parts")
+    val key = "spark.sql.parquet.mergeSchema"
+    spark.conf.set(key, "true")
+    try {
+      val got = Readers.parquet(spark, s"$tmp/parts")
+      assert(got.schema == spark.read.parquet(s"$tmp/parts").schema && got.columns.contains("y"), got.schema)
+    } finally spark.conf.unset(key)
+  }
+
+  test("Readers.parquet follows spark.sql.parquet.binaryAsString for a binary column without a Spark schema") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = s"${TestDirs.fresh("binary_as_string")}/raw"
+    // written by parquet itself, so no Spark row schema in the footer
+    val schema = MessageTypeParser.parseMessageType("message m { required int32 id; optional binary b; }")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+      new org.apache.hadoop.fs.Path(s"$dir/part-0.parquet"), conf)).withType(schema).withConf(conf).build()
+    val groups = new SimpleGroupFactory(schema)
+    try Seq(1 -> "x", 2 -> "y").foreach { case (i, b) => writer.write(groups.newGroup().append("id", i).append("b", b)) }
+    finally writer.close()
+    val key = "spark.sql.parquet.binaryAsString"
+    val prev = spark.conf.getOption(key)
+    try for ((asString, typ) <- Seq("true" -> StringType, "false" -> BinaryType)) {
+      spark.conf.set(key, asString)
+      val (got, jobs) = jobsOf(Readers.parquet(spark, dir))
+      val want = spark.read.parquet(dir)
+      assert(jobs == 0)
+      assert(got.schema == want.schema && got.schema("b").dataType == typ, got.schema)
+      assert(rowsOf(got) == rowsOf(want))
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("Readers.parquet of a directory with no data file fails as Spark does") {
+    val dir = new java.io.File(TestDirs.fresh("no_data_file"), "t")
+    assert(dir.mkdirs() && new java.io.File(dir, "_SUCCESS").createNewFile())
+    val e = intercept[org.apache.spark.sql.AnalysisException](Readers.parquet(spark, dir.toString))
+    assert(e.getMessage.contains("UNABLE_TO_INFER_SCHEMA"), e.getMessage)
+  }
+
   test("zValue matches hand-computed Morton interleave; masks wide inputs") {
     val got = Seq((0L, 0L), (1L, 0L), (0L, 1L), (3L, 5L), (65536L + 2L, 1L))
       .toDF("a", "b")

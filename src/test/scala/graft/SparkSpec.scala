@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,6 +17,35 @@ object TestSession {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
+
+  /** `body`'s result and the Spark jobs it started, on this thread or on
+    * any thread it started (a new thread inherits the local property that
+    * labels them), counted by a listener. A sentinel job closes the
+    * count: the listener bus delivers job starts in order. */
+  def jobsOf[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val label = "graft.spec.jobs"
+    val run = java.util.UUID.randomUUID().toString
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(label))).foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(label, run)
+      val out = body
+      sc.setLocalProperty(label, s"$run/end")
+      spark.range(1).count()
+      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(s"$run/end") && System.nanoTime < deadline) Thread.sleep(10)
+      assert(seen.contains(s"$run/end"), "the sentinel job's start never arrived")
+      (out, seen.asScala.count(_ == run))
+    } finally {
+      sc.setLocalProperty(label, null)
+      sc.removeSparkListener(listener)
+    }
+  }
 
   /** Run `body` with scan-split sizing shrunk so the test parquet files
     * plan as MANY splits — the corpus-scale input geometry. Plan-shape
