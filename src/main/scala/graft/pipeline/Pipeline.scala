@@ -18,11 +18,10 @@ import graft.core.Overlap
   *
   * Stages produce DataFrames lazily; an empty stage reports `Skipped`
   * and its dependents do not run — the reference's "No data to process"
-  * early return. A stage learns it is empty from the work it does
-  * anyway: a sink returns the rows it published and publishes nothing
-  * for an empty frame, so a sinked stage is `Skipped` when its sink
-  * returns 0, at no cost beyond its write. Only a stage without a sink
-  * (a source that just feeds its dependents) runs an emptiness probe.
+  * early return. There is one emptiness rule, and it costs no job: every
+  * stage has a sink, a sink returns the rows it published and publishes
+  * nothing for an empty frame, and a stage is `Skipped` exactly when its
+  * sink returns 0.
   *
   * Concurrency: a stage starts as soon as every dependency has completed,
   * on its own fresh thread ([[graft.core.Overlap.task]]) carrying the
@@ -32,8 +31,8 @@ import graft.core.Overlap
   * thread-safe, and concurrent sinks must write distinct paths. A build
   * sees only its own dependencies' frames.
   *
-  * Shared stages evaluate once per run: a stage with a sink and at least
-  * one dependent is persisted before its sink runs, so the sink's write
+  * Shared stages evaluate once per run: a stage with at least one
+  * dependent is persisted before its sink runs, so the sink's write
   * materializes it and every dependent reads that one copy — the cross-job
   * reuse the reference's job-per-script architecture cannot express
   * (SURVEY §4 caching row). Dependents start only after that sink has
@@ -46,12 +45,9 @@ import graft.core.Overlap
 object Pipeline {
 
   sealed trait Result
-  case class Completed(rows: Option[Long] = None) extends Result
+  case class Completed() extends Result
   case object Skipped extends Result
   case class Errored(error: Throwable) extends Result
-
-  /** The default sink: a stage without one only feeds its dependents. */
-  val NoSink: DataFrame => Long = _ => 0L
 
   /** A pipeline stage. `sink` publishes the built frame and returns the
     * rows it published: 0, with nothing published, for an empty frame. */
@@ -59,7 +55,7 @@ object Pipeline {
       name: String,
       deps: Seq[String],
       build: Map[String, DataFrame] => DataFrame,
-      sink: DataFrame => Long = NoSink)
+      sink: DataFrame => Long)
 
   /** A stage's result, with its frame when it completed. */
   private type Outcome = (Result, Option[DataFrame])
@@ -88,7 +84,7 @@ object Pipeline {
           // optimizer tightens nullability (a constant-folded input) would
           // be written with looser columns; it is recomputed per consumer
           // instead. A frame the caller already cached stays theirs.
-          val shared = st.sink.ne(NoSink) && fed(st.name) &&
+          val shared = fed(st.name) &&
             built.storageLevel == StorageLevel.NONE &&
             built.queryExecution.optimizedPlan.schema == built.schema
           val df =
@@ -96,8 +92,7 @@ object Pipeline {
               persisted.add(built)
               built.persist(StorageLevel.MEMORY_AND_DISK)
             } else built
-          val empty = if (st.sink eq NoSink) df.isEmpty else st.sink(df) == 0
-          if (empty) (Skipped, None) else (Completed(), Some(df))
+          if (st.sink(df) == 0) (Skipped, None) else (Completed(), Some(df))
         } catch {
           case NonFatal(e) =>
             notifier.synchronized(notifier(st.name, e))

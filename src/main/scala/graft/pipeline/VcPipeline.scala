@@ -21,10 +21,13 @@ import graft.sources.{JdbcUpsert, Readers, Writers}
   *    build and sink here is thread-safe and writes its own path under
   *    `outDir`;
   *  - skip-on-empty short-circuits per stage, as the reference does per
-  *    job (P3): every table is published through
-  *    [[graft.sources.Writers.parquetPublish]], which publishes nothing
-  *    for an empty frame and returns the rows it wrote, so a table
-  *    learns it is empty from its own write, with no probe job;
+  *    job (P3), by the runner's one rule: a table is `Skipped`, with its
+  *    dependents, when its own publish writes no rows; no probe job runs.
+  *    Each build reads its own staging inputs, so an empty input skips
+  *    only a table it empties: fct_investments, which left-joins
+  *    funding_rounds, still publishes. Every table is published through
+  *    [[graft.sources.Writers.parquetPublish]]; append mode, which
+  *    publishes inside its build, counts the stored footer rows;
   *  - incremental mode is a declarative `created_at` day filter pushed
   *    into each staging scan (S2), not interpolated SQL.
   */
@@ -45,10 +48,6 @@ object VcPipeline {
         * so replaying a day is idempotent. false = full overwrite. */
       appendMode: Boolean = false)
 
-  private val StagingTables = Seq(
-    "company", "funds", "people", "relationships",
-    "investments", "funding_rounds", "ipos", "acquisition", "milestones")
-
   def run(spark: SparkSession, cfg: Config,
           notifier: (String, Throwable) => Unit = (_, _) => ()): Map[String, Pipeline.Result] = {
     def staging(name: String): DataFrame = {
@@ -59,10 +58,9 @@ object VcPipeline {
         case _ => df
       }
     }
-    def sink(name: String)(df: DataFrame): Long =
-      Writers.parquetPublish(df, s"${cfg.outDir}/$name")
-    def stored(name: String): Option[DataFrame] =
-      Readers.snapshot(spark, s"${cfg.outDir}/$name")
+    def out(name: String) = s"${cfg.outDir}/$name"
+    def sink(name: String)(df: DataFrame): Long = Writers.parquetPublish(df, out(name))
+    def stored(name: String): Option[DataFrame] = Readers.snapshot(spark, out(name))
     /** Append-with-continued-keys (reference BIGSERIAL semantics): only
       * natural keys unseen in the stored dim get rows, keyed densely from
       * the stored max surrogate key; the returned frame is the FULL dim,
@@ -92,52 +90,48 @@ object VcPipeline {
       * made. Append mode PUBLISHES inside the build — swap
       * the snapshot, then hand downstream a fresh read of the new files —
       * because the merged frame lazily reads the files the swap replaces:
-      * a post-sink consumer of the old frame would hit deleted parts. */
+      * a post-sink consumer of the old frame would hit deleted parts. An
+      * empty merge publishes nothing, as in overwrite mode. Its sink
+      * counts the stored snapshot's footer rows, with no job. */
     def tableStage(name: String, deps: Seq[String],
                    frame: Map[String, DataFrame] => DataFrame): Pipeline.Stage =
       if (cfg.appendMode)
         Pipeline.Stage(name, deps, f => {
-          Writers.parquetReplace(frame(f), s"${cfg.outDir}/$name")
-          Readers.parquet(spark, s"${cfg.outDir}/$name")
-        })
+          val merged = frame(f)
+          if (sink(name)(merged) == 0) merged else Readers.parquet(spark, out(name))
+        }, _ => Readers.parquetRows(spark, out(name)))
       else Pipeline.Stage(name, deps, frame, sink(name))
 
     val runner = new Pipeline.Runner(notifier)
-    // sources
-    StagingTables.foreach { t =>
-      runner.add(Pipeline.Stage(s"stg_$t", Nil, _ => staging(t)))
-    }
     // dims
     runner
       .add(Pipeline.Stage("dim_date", Nil,
         _ => DimDate.build(spark), sink("dim_date")))
-      .add(tableStage("dim_company", Seq("stg_company"),
-        f => dimFrame("dim_company", "sk_company_id", "nk_company_id",
-          Warehouse.dimCompany(f("stg_company")))))
-      .add(tableStage("dim_funds", Seq("stg_funds"),
-        f => dimFrame("dim_funds", "sk_fund_id", "nk_fund_id",
-          Warehouse.dimFunds(f("stg_funds")))))
-      .add(tableStage("dim_people", Seq("stg_people"),
-        f => dimFrame("dim_people", "sk_people_id", "nk_people_id",
-          Warehouse.dimPeople(f("stg_people")))))
+      .add(tableStage("dim_company", Nil,
+        _ => dimFrame("dim_company", "sk_company_id", "nk_company_id",
+          Warehouse.dimCompany(staging("company")))))
+      .add(tableStage("dim_funds", Nil,
+        _ => dimFrame("dim_funds", "sk_fund_id", "nk_fund_id",
+          Warehouse.dimFunds(staging("funds")))))
+      .add(tableStage("dim_people", Nil,
+        _ => dimFrame("dim_people", "sk_people_id", "nk_people_id",
+          Warehouse.dimPeople(staging("people")))))
     // facts + bridge
     runner
-      .add(tableStage("fct_investments",
-        Seq("stg_investments", "dim_company", "dim_funds", "dim_date", "stg_funding_rounds"),
+      .add(tableStage("fct_investments", Seq("dim_company", "dim_funds", "dim_date"),
         f => factFrame("fct_investments", Seq("dd_investment_id"),
-          Warehouse.fctInvestments(f("stg_investments"), f("dim_company"),
-            f("dim_funds"), f("dim_date"), f("stg_funding_rounds")))))
-      .add(tableStage("fct_ipos", Seq("stg_ipos", "dim_company"),
+          Warehouse.fctInvestments(staging("investments"), f("dim_company"),
+            f("dim_funds"), f("dim_date"), staging("funding_rounds")))))
+      .add(tableStage("fct_ipos", Seq("dim_company"),
         f => factFrame("fct_ipos", Seq("dd_ipo_id"),
-          Warehouse.fctIpos(f("stg_ipos"), f("dim_company")))))
-      .add(tableStage("fct_acquisition", Seq("stg_acquisition", "dim_company"),
+          Warehouse.fctIpos(staging("ipos"), f("dim_company")))))
+      .add(tableStage("fct_acquisition", Seq("dim_company"),
         f => factFrame("fct_acquisition", Seq("dd_acquisition_id"),
-          Warehouse.fctAcquisition(f("stg_acquisition"), f("dim_company")))))
-      .add(tableStage("bridge_company_people",
-        Seq("stg_relationships", "dim_company", "dim_people"),
+          Warehouse.fctAcquisition(staging("acquisition"), f("dim_company")))))
+      .add(tableStage("bridge_company_people", Seq("dim_company", "dim_people"),
         f => factFrame("bridge_company_people",
           Seq("sk_company_id", "sk_people_id", "relationship_start_at"),
-          Warehouse.bridgeCompanyPeople(f("stg_relationships"),
+          Warehouse.bridgeCompanyPeople(staging("relationships"),
             f("dim_company"), f("dim_people")))))
     // milestones: keyed upsert of the day's delta into the persistent
     // snapshot — the reference's pangres `if_row_exists='update'` into
@@ -145,9 +139,10 @@ object VcPipeline {
     // milestones_pkey = milestone_id). Lake-side: merge-by-key with the
     // newest updated_at winning, delta preferred on ties, written back
     // via the snapshot swap (the snapshot is both input and output).
-    runner.add(Pipeline.Stage("milestones", Seq("stg_milestones"),
-      f => {
-        val delta = f("stg_milestones")
+    // An empty day over a stored snapshot republishes it: Completed, not Skipped.
+    runner.add(Pipeline.Stage("milestones", Nil,
+      _ => {
+        val delta = staging("milestones")
         JdbcUpsert.mergeByKey(stored("milestones").getOrElse(delta.limit(0)),
           delta, Seq("milestone_id"), "updated_at")
       },

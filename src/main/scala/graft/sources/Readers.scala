@@ -79,7 +79,7 @@ object Readers {
 
   /** Rows in the parquet files under `path`, summed from their footers'
     * row groups on the driver: no job. */
-  private[sources] def parquetRows(spark: SparkSession, path: String): Long = {
+  def parquetRows(spark: SparkSession, path: String): Long = {
     val conf = spark.sessionState.newHadoopConf()
     parquetFiles(conf, new Path(path)).filter(isData)
       .map(f => footer(conf, f).getBlocks.asScala.map(_.getRowCount).sum).sum

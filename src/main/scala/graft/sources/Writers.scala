@@ -6,13 +6,13 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 /** Sink layer (SURVEY §2.1 S4, S5, S8).
   *
   * Two parquet publish forms share the engine's one snapshot swap
-  * ([[swapIn]]): [[parquetReplace]] always publishes, and the pipeline's
-  * append-mode tables, [[compactParquet]] and the streaming snapshot sink
-  * replace a snapshot through it; [[parquetPublish]] publishes only a
-  * frame that has rows, and reports how many, so the pipeline's tables
-  * learn they are empty from their own write. Every snapshot is read
-  * back through [[Readers.snapshot]], which first undoes a swap a crash
-  * interrupted ([[recoverSnapshot]]).
+  * ([[swapIn]]): [[parquetReplace]] always publishes, and
+  * [[compactParquet]] and the streaming snapshot sink replace a snapshot
+  * through it; [[parquetPublish]] publishes only a frame that has rows,
+  * and reports how many, so the pipeline's tables learn they are empty
+  * from their own write. Every snapshot is read back through
+  * [[Readers.snapshot]], which first undoes a swap a crash interrupted
+  * ([[recoverSnapshot]]).
   *
   * Scale notes vs the reference:
   *  - S4 parquet snapshots become *date-partitioned* writes with dynamic

@@ -100,7 +100,7 @@ class OverlapSpec extends SparkSpec {
         val legs = Overlap.par(spark.range(10).count(), spark.range(5).count())
         synchronized { counts = legs }
         Seq(1).toDF("v")
-      }))
+      }, _.count()))
       .run()
     assert(r("legs") == Completed())
     assert(counts == ((10L, 5L)))

@@ -40,7 +40,7 @@ class PipelineSpec extends SparkSpec {
   test("empty input skips the stage and its dependents") {
     var sinkRan = false
     val r = new Runner()
-      .add(Stage("src", Nil, { _ => Seq.empty[(Int, String)].toDF("a", "b") }))
+      .add(Stage("src", Nil, { _ => Seq.empty[(Int, String)].toDF("a", "b") }, _.count()))
       .add(Stage("down", Seq("src"), { f => f("src") }, _ => { synchronized { sinkRan = true }; 1L }))
       .run()
     assert(r("src") == Skipped && r("down") == Skipped && !sinkRan)
@@ -56,6 +56,18 @@ class PipelineSpec extends SparkSpec {
     assert(Readers.parquet(spark, out).count() == 10)
   }
 
+  test("a two-stage chain costs exactly its two writes' jobs") {
+    val tmp = TestDirs.fresh("publish_chain")
+    val (r, jobs) = jobsOf(new Runner()
+      .add(Stage("up", Nil, { _ => spark.range(0, 10, 1, 2).toDF() }, Writers.parquetPublish(_, s"$tmp/up")))
+      .add(Stage("down", Seq("up"), { f => f("up").filter($"id" % 2 === 0) },
+        Writers.parquetPublish(_, s"$tmp/down")))
+      .run())
+    assert(r == Map("up" -> Completed(), "down" -> Completed()))
+    assert(jobs == 2, s"the chain ran $jobs jobs, not its two writes alone")
+    assert(Readers.parquet(spark, s"$tmp/down").count() == 5)
+  }
+
   test("an empty sinked stage is Skipped, publishes nothing and keeps the table it would replace") {
     val tmp = TestDirs.fresh("publish_empty")
     val out = s"$tmp/t"
@@ -67,7 +79,7 @@ class PipelineSpec extends SparkSpec {
       var downRan = false
       val run = Future(new Runner()
         .add(Stage("t", Nil, { _ => empty }, Writers.parquetPublish(_, out)))
-        .add(Stage("down", Seq("t"), { f => synchronized { downRan = true }; f("t") }))
+        .add(Stage("down", Seq("t"), { f => synchronized { downRan = true }; f("t") }, _.count()))
         .run())(ExecutionContext.global)
       val r = Await.result(run, 60.seconds)
       assert(r == Map("t" -> Skipped, "down" -> Skipped) && !downRan, how)
@@ -79,8 +91,8 @@ class PipelineSpec extends SparkSpec {
   test("failure notifies and skips dependents") {
     var notified: Option[String] = None
     val r = new Runner((name, _) => synchronized { notified = Some(name) })
-      .add(Stage("boom", Nil, { _ => throw new RuntimeException("x") }))
-      .add(Stage("down", Seq("boom"), { f => f("boom") }))
+      .add(Stage("boom", Nil, { _ => throw new RuntimeException("x") }, _.count()))
+      .add(Stage("down", Seq("boom"), { f => f("boom") }, _.count()))
       .run()
     assert(r("boom").isInstanceOf[Errored] && r("down") == Skipped)
     assert(notified.contains("boom"))
@@ -92,7 +104,7 @@ class PipelineSpec extends SparkSpec {
       met.countDown()
       require(await(met), s"s$n waited alone: independent stages ran one at a time")
       Seq(n).toDF("n")
-    })
+    }, _.count())
     val r = new Runner().add(meet(1)).add(meet(2)).run()
     assert(r == Map("s1" -> Completed(), "s2" -> Completed()))
   }
@@ -117,8 +129,8 @@ class PipelineSpec extends SparkSpec {
     val failed = new CountDownLatch(1)
     var siblingRows = 0L
     val r = new Runner((name, _) => { synchronized(notified :+= name); failed.countDown() })
-      .add(Stage("boom", Nil, { _ => throw new RuntimeException("x") }))
-      .add(Stage("down", Seq("boom"), { f => f("boom") }))
+      .add(Stage("boom", Nil, { _ => throw new RuntimeException("x") }, _.count()))
+      .add(Stage("down", Seq("boom"), { f => f("boom") }, _.count()))
       .add(Stage("sibling", Nil, { _ =>
         require(await(failed), "the failing branch never notified")
         spark.range(0, 50, 1, 4).toDF()
@@ -140,7 +152,7 @@ class PipelineSpec extends SparkSpec {
     })
     val runner = new Runner().add(up)
     for (d <- Seq("a", "b", "c"))
-      runner.add(Stage(d, Seq("up"), { f => log(s"$d:build"); f("up") }))
+      runner.add(Stage(d, Seq("up"), { f => log(s"$d:build"); f("up") }, _.count()))
     assert(runner.run().values.forall(_ == Completed()))
     val sunkAt = events.indexOf("up:sunk")
     assert(sunkAt >= 0 && Seq("a", "b", "c").forall(d => events.indexOf(s"$d:build") > sunkAt),
@@ -149,7 +161,7 @@ class PipelineSpec extends SparkSpec {
 
   test("a fatal error in a stage build fails run() instead of hanging it") {
     val run = Future(new Runner()
-      .add(Stage("fatal", Nil, { _ => throw new StackOverflowError("build") }))
+      .add(Stage("fatal", Nil, { _ => throw new StackOverflowError("build") }, _.count()))
       .run())(ExecutionContext.global)
     val e = intercept[Throwable](Await.result(run, 60.seconds))
     assert(!e.isInstanceOf[TimeoutException], "run() was still pending after 60 s")
@@ -163,7 +175,7 @@ class PipelineSpec extends SparkSpec {
     var cachedDuringRun = false
     val r = new Runner()
       .add(Stage("up", Nil, { _ => spark.range(0, 20, 1, 2).toDF() }, _.count()))
-      .add(Stage("down", Seq("up"), { f => synchronized { cachedDuringRun = !cache.isEmpty }; f("up") }))
+      .add(Stage("down", Seq("up"), { f => synchronized { cachedDuringRun = !cache.isEmpty }; f("up") }, _.count()))
       .run()
     assert(r.values.forall(_ == Completed()))
     assert(cachedDuringRun, "the shared stage was never cached")

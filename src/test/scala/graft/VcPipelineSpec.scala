@@ -12,11 +12,12 @@ class VcPipelineSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  /** Write a small, edge-case-bearing staging area; returns its dir. */
-  private def writeStaging(emptyAcquisition: Boolean = false): String = {
+  /** Write a small, edge-case-bearing staging area, with the tables
+    * named in `empty` written without rows; returns its dir. */
+  private def writeStaging(empty: Set[String] = Set.empty): String = {
     val dir = TestDirs.fresh("vc_staging")
     def put(name: String, df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.mode("overwrite").parquet(s"$dir/$name.parquet")
+      (if (empty(name)) df.limit(0) else df).write.mode("overwrite").parquet(s"$dir/$name.parquet")
 
     put("company", Seq(
       ("c:1", "#12 Market St", "Suite 4", "SF", "Bay", "us", ts("2020-01-01 10:00:00")),
@@ -61,10 +62,8 @@ class VcPipelineSpec extends SparkSpec {
       "valuation_currency_code", "raised_currency_code", "public_at",
       "stock_symbol", "source_description", "created_at"))
 
-    val acq = if (emptyAcquisition) Seq.empty[(Long, String, String, String, BigDecimal, String, Timestamp, String)]
-      else Seq((1L, "c:1", "c:2", "cash", BigDecimal("50.00"), "USD",
-        ts("2011-01-01 00:00:00"), "deal"))
-    put("acquisition", acq.toDF("acquisition_id", "acquiring_object_id",
+    put("acquisition", Seq((1L, "c:1", "c:2", "cash", BigDecimal("50.00"), "USD",
+      ts("2011-01-01 00:00:00"), "deal")).toDF("acquisition_id", "acquiring_object_id",
       "acquired_object_id", "term_code", "price_amount", "price_currency_code",
       "acquired_at", "source_description"))
 
@@ -84,6 +83,9 @@ class VcPipelineSpec extends SparkSpec {
   test("full pipeline run produces the whole warehouse") {
     val out = TestDirs.fresh("vc_out")
     val results = VcPipeline.run(spark, VcPipeline.Config(writeStaging(), out))
+    assert(results.keySet == Set("dim_date", "dim_company", "dim_funds", "dim_people",
+      "fct_investments", "fct_ipos", "fct_acquisition", "bridge_company_people",
+      "milestones", "profiling"), s"stages: ${results.keys.toSeq.sorted}")
     assert(results.values.forall(r => r == Pipeline.Completed()),
       s"unexpected stage results: ${results.filterNot(_._2 == Pipeline.Completed())}")
 
@@ -284,11 +286,38 @@ class VcPipelineSpec extends SparkSpec {
   test("empty staging table skips its stage and dependents only") {
     val out = TestDirs.fresh("vc_out_skip")
     val results = VcPipeline.run(spark,
-      VcPipeline.Config(writeStaging(emptyAcquisition = true), out))
-    assert(results("stg_acquisition") == Pipeline.Skipped)
+      VcPipeline.Config(writeStaging(Set("acquisition")), out))
     assert(results("fct_acquisition") == Pipeline.Skipped)
     assert(results("fct_investments") == Pipeline.Completed())
     assert(!Files.exists(java.nio.file.Paths.get(s"$out/fct_acquisition")))
+  }
+
+  test("an empty funding_rounds table leaves every investment published, round columns null") {
+    val out = TestDirs.fresh("vc_out_no_rounds")
+    val results = VcPipeline.run(spark,
+      VcPipeline.Config(writeStaging(Set("funding_rounds")), out))
+    assert(results.values.forall(_ == Pipeline.Completed()),
+      s"unexpected stage results: ${results.filterNot(_._2 == Pipeline.Completed())}")
+    val facts = spark.read.parquet(s"$out/fct_investments").orderBy("dd_investment_id")
+    // investments 1 and 2 resolve their company and fund; 3 is an orphan
+    assert(facts.select("dd_investment_id").collect().map(_.getLong(0)).toSeq == Seq(1L, 2L))
+    val roundColumns = Seq("funded_at", "funding_round_type", "num_of_participants",
+      "raised_amount_usd", "pre_money_valuation_usd", "post_money_valuation_usd")
+    assert(facts.filter(roundColumns.map(col(_).isNotNull).reduce(_ || _)).count() == 0)
+  }
+
+  test("milestones: an empty day over an existing snapshot republishes it unchanged, Completed") {
+    val out = TestDirs.fresh("vc_out_ms_empty_day")
+    val staging = writeStaging()
+    assert(VcPipeline.run(spark, VcPipeline.Config(staging, out))("milestones")
+      == Pipeline.Completed())
+    def snapshot() = spark.read.parquet(s"$out/milestones").orderBy("milestone_id").collect().toSeq
+    val before = snapshot()
+    assert(before.map(_.getAs[Int]("milestone_id")) == Seq(1, 2))
+    milestonesDf(Nil).write.mode("overwrite").parquet(s"$staging/milestones.parquet")
+    assert(VcPipeline.run(spark, VcPipeline.Config(staging, out))("milestones")
+      == Pipeline.Completed())
+    assert(snapshot() == before)
   }
 
   test("append mode: two-day replay, continued dense keys, idempotent day 2") {
@@ -298,10 +327,16 @@ class VcPipelineSpec extends SparkSpec {
       .select("sk_company_id", "nk_company_id").orderBy("sk_company_id")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
 
-    // day 1 (ds 2020-01-02 keeps rows created 2020-01-01): company c:1
-    VcPipeline.run(spark, VcPipeline.Config(staging, out,
+    // day 1 (ds 2020-01-02 keeps rows created 2020-01-01): company c:1;
+    // no fund, and no investment that resolves, so neither table is
+    // written, as in overwrite mode
+    val day1 = VcPipeline.run(spark, VcPipeline.Config(staging, out,
       incrementalDs = Some("2020-01-02"), appendMode = true))
     assert(dimC() == Seq((1L, "c:1")))
+    for (t <- Seq("dim_funds", "fct_investments")) {
+      assert(day1(t) == Pipeline.Skipped, t)
+      assert(!Files.exists(java.nio.file.Paths.get(s"$out/$t")), s"$t was written empty")
+    }
 
     // day 2: c:2 and f:3 append with keys continuing from the stored max;
     // the day's investments resolve against the FULL dim (c:1 from day 1)
