@@ -20,7 +20,8 @@ import scala.util.{Failure, Success}
   * inheritable thread-locals copied when a thread is created, so each
   * leg carries its CALLER's properties: a job group set by the caller
   * tags, and cancels, the legs' jobs too. No thread ever waits on a
-  * bounded pool, so legs may themselves call `par`/`par3`.
+  * bounded pool, so legs may themselves call `par`: three legs are
+  * `par(a, par(b, c))`.
   *
   * Precondition: the legs' outputs are independent — no leg reads what
   * another writes (a table, a path, a mutable collection), so every leg
@@ -47,14 +48,6 @@ object Overlap {
     val (fa, fb) = (task(a), task(b))
     settle(fa, fb)
     (fa.value.get.get, fb.value.get.get)
-  }
-
-  /** Run three independent legs concurrently. Returns once all three
-    * have finished; rethrows the first failure in leg order. */
-  def par3[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
-    val (fa, fb, fc) = (task(a), task(b), task(c))
-    settle(fa, fb, fc)
-    (fa.value.get.get, fb.value.get.get, fc.value.get.get)
   }
 
   /** Waits for every leg, failed or not, so no leg outlives its call. */

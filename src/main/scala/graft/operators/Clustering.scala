@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sources.Writers
 
 /** Multi-dimensional clustering for data skipping — the write-layout
   * story behind Delta/Iceberg `OPTIMIZE ZORDER` (public docs) and the
@@ -72,8 +73,7 @@ object Clustering {
     // second consumer of the ranged frame is ever added, pin the
     // materialization with .localCheckpoint(false) like
     // Warehouse.rangedRunningSum.
-    df.withColumn("zkey", zValue(col(aCol), col(bCol), bits))
+    Writers.parquet(df.withColumn("zkey", zValue(col(aCol), col(bCol), bits))
       .repartitionByRange(files, col("zkey"))
-      .sortWithinPartitions(col("zkey"))
-      .write.mode("overwrite").parquet(path)
+      .sortWithinPartitions(col("zkey")), path)
 }

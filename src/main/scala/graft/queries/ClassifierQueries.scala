@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
-import graft.sources.Readers
+import graft.sources.{Readers, Writers}
 import graft.operators.Classifier
 
 /** Learned-classifier coverage: multinomial NB trained on a labeled
@@ -36,10 +36,9 @@ object ClassifierQueries {
 
     "nb2_nb_from_store" -> { (s, d) =>
       val dir = StoreDirs.fresh("nb_store", d)
-      Classifier.nbTermStats(seedDocs(s, d), "text", "lang", Langs)
-        .write.mode("overwrite").parquet(s"$dir/stats")
-      Classifier.nbPriors(seedDocs(s, d), "lang", Langs)
-        .write.mode("overwrite").parquet(s"$dir/priors")
+      Writers.parquet(Classifier.nbTermStats(seedDocs(s, d), "text", "lang", Langs),
+        s"$dir/stats")
+      Writers.parquet(Classifier.nbPriors(seedDocs(s, d), "lang", Langs), s"$dir/priors")
       Classifier.nbScoreFromStats(documents(s, d),
         Readers.parquet(s, s"$dir/stats"), Readers.parquet(s, s"$dir/priors"),
         "doc_id", "text", Langs)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
-import graft.sources.Readers
+import graft.sources.{Readers, Writers}
 import graft.operators.{Dedup, Multimodal, Similarity}
 
 /** Embedding-similarity + multimodal coverage. Vector math is mirrored in
@@ -128,14 +128,10 @@ object SimilarityQueries {
       val emb = embeddings(s, d)
       val cents = Ivf.seedCentroids(emb, "vec_id", "embedding", 16, 7L)
       val dir = StoreDirs.fresh("y7_store", d)
-      // the two store writes share no state — overlap them (guide §2.6);
-      // the heavy assignment leg gets guide §6 file sizing on write
+      // the two store writes share no state — overlap them (guide §2.6)
       graft.core.Overlap.par(
-        Ivf.assign(emb, "vec_id", "embedding", cents)
-          .hint("rebalance", col("id"))
-          .write.mode("overwrite").parquet(dir + "/assigned"),
-        Ivf.centroidsAsDf(s, cents)
-          .write.mode("overwrite").parquet(dir + "/centroids"))
+        Writers.parquetStore(Ivf.assign(emb, "vec_id", "embedding", cents), dir + "/assigned"),
+        Writers.parquet(Ivf.centroidsAsDf(s, cents), dir + "/centroids"))
       Ivf.ivfTopKFromStore(
         Readers.parquet(s, dir + "/assigned"),
         Ivf.centroidsFromDf(Readers.parquet(s, dir + "/centroids")),
@@ -162,11 +158,9 @@ object SimilarityQueries {
       // the delta assignment below must still read the PERSISTED
       // centroids (the store-lifecycle contract), so it stays sequential
       graft.core.Overlap.par(
-        Ivf.assign(emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", cents)
-          .hint("rebalance", col("id"))
-          .write.mode("overwrite").parquet(dir + "/assigned"),
-        Ivf.centroidsAsDf(s, cents)
-          .write.mode("overwrite").parquet(dir + "/centroids"))
+        Writers.parquetStore(Ivf.assign(emb.filter(col("vec_id") % 2 === 0),
+          "vec_id", "embedding", cents), dir + "/assigned"),
+        Writers.parquet(Ivf.centroidsAsDf(s, cents), dir + "/centroids"))
       val storedCents = Ivf.centroidsFromDf(Readers.parquet(s, dir + "/centroids"))
       val delta = Ivf.assign(emb.filter(col("vec_id") % 2 =!= 0),
         "vec_id", "embedding", storedCents)

@@ -90,9 +90,8 @@ object SourceQueries {
     "s13_compaction" -> { (s, d) =>
       val tmp = StoreDirs.fresh("compact", d)
       val out = s"$tmp/events"
-      events(s, d).select(col("event_id"), col("event_type"),
-          col("value").cast("decimal(18,2)").as("value"))
-        .repartition(64).write.parquet(out)
+      Writers.parquet(events(s, d).select(col("event_id"), col("event_type"),
+          col("value").cast("decimal(18,2)").as("value")).repartition(64), out)
       Writers.compactParquet(s, out, targetFiles = 4)
       Readers.parquet(s, out)
         .groupBy(col("event_type"))

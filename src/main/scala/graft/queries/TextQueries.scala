@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
-import graft.sources.Readers
+import graft.sources.{Readers, Writers}
 import graft.functions.TextAnalysis
 import graft.operators.Dedup
 
@@ -229,14 +229,9 @@ object TextQueries {
       val deltaSig = Dedup.sigGramsFrame(perturbedDocs(s, d), "doc_id",
         "text", n = 3, numHashes = 128).localCheckpoint(false)
       graft.core.Overlap.par(
-        Dedup.signatureStore(
+        Writers.parquetStore(Dedup.signatureStore(
           documents(s, d).select(col("doc_id"), col("text")),
-          "doc_id", "text", n = 3, bands = 16, rowsPerBand = 8)
-          // guide §6: pin store files to AQE's advisory size on write
-          // (the bare post-aggregate layout wrote parallelism-first
-          // fan-out-width small files)
-          .hint("rebalance", col("id"))
-          .write.mode("overwrite").parquet(dir),
+          "doc_id", "text", n = 3, bands = 16, rowsPerBand = 8), dir),
         deltaSig.count())
       Dedup.incrementalDedupRosterPrepared(
         deltaSig, Readers.parquet(s, dir),
@@ -266,12 +261,10 @@ object TextQueries {
       val deltaSig = Dedup.sigGramsFrame(perturbedDocs(s, d), "doc_id",
         "text", n = 3, numHashes = 128).localCheckpoint(false)
       def halfStore(parity: Int, dir: String): Unit =
-        Dedup.signatureStore(docs.filter(col("doc_id") % 2 === parity),
-          "doc_id", "text", n = 3, bands = 16, rowsPerBand = 8)
-          .hint("rebalance", col("id")) // guide §6: target-sized files
-          .write.mode("overwrite").parquet(dir)
-      graft.core.Overlap.par3(
-        halfStore(0, dirA), halfStore(1, dirB), deltaSig.count())
+        Writers.parquetStore(Dedup.signatureStore(docs.filter(col("doc_id") % 2 === parity),
+          "doc_id", "text", n = 3, bands = 16, rowsPerBand = 8), dir)
+      graft.core.Overlap.par(halfStore(0, dirA),
+        graft.core.Overlap.par(halfStore(1, dirB), deltaSig.count()))
       Dedup.incrementalDedupRosterPrepared(
         deltaSig,
         Dedup.mergeSignatureStore(Readers.parquet(s, dirA), Readers.parquet(s, dirB)),

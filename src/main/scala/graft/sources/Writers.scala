@@ -2,8 +2,15 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.functions.col
 
 /** Sink layer (SURVEY §2.1 S4, S5, S8).
+  *
+  * The engine's one parquet write path: every parquet dataset the
+  * engine writes goes through this object, as [[parquet]] (the
+  * overwrite write), [[parquetStore]] (the same write with the store
+  * layout) or [[parquetPartitioned]]; the publish forms below write
+  * through [[parquet]].
   *
   * Two parquet publish forms share the engine's one snapshot swap
   * ([[swapIn]]): [[parquetReplace]] always publishes, and
@@ -24,6 +31,19 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   *    parallelism — at cluster scale that's one DB connection per task).
   */
 object Writers {
+
+  /** The overwrite write: `df` as parquet at `path`, replacing whatever
+    * is there. */
+  def parquet(df: DataFrame, path: String): Unit =
+    df.write.mode(SaveMode.Overwrite).parquet(path)
+
+  /** A keyed store's write: [[parquet]] with the store layout, a
+    * `REBALANCE` on `id` before the write, so AQE cuts the files at its
+    * advisory partition size (guide §6: target-sized files). Without it
+    * a store written after an aggregate takes the aggregate's fan-out,
+    * one small file per shuffle partition. */
+  def parquetStore(df: DataFrame, path: String): Unit =
+    parquet(df.hint("rebalance", col("id")), path)
 
   /** S4 at scale: date-partitioned parquet with per-partition overwrite.
     * Requires spark.sql.sources.partitionOverwriteMode=dynamic to only
@@ -74,7 +94,7 @@ object Writers {
     val tmp = new Path(path + "__tmp")
     val fs = target.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     recoverSnapshot(fs, target)
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    parquet(df, tmp.toString)
     (fs, tmp, target)
   }
 

@@ -122,8 +122,7 @@ object ScaleGen {
     def in(name: String) = graft.sources.Readers.parquet(spark, s"$inDir/$name.parquet")
     def out(df: => DataFrame, name: String, parts: Int): Unit =
       if (tables(name))
-        df.repartition(parts).write.mode("overwrite")
-          .parquet(s"$outDir/$name.parquet")
+        graft.sources.Writers.parquet(df.repartition(parts), s"$outDir/$name.parquet")
 
     // fixed world dims: copied verbatim, never remapped
     out(in("region"), "region", 1)

@@ -12,8 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * global running sum goes through the one ranged construction; every
   * snapshot is replaced through the one swap and merged through the one
   * newest-per-key merge; every parquet read takes its schema from one
-  * footer through the one reader; a pipeline stage learns it is empty
-  * from its own write, its one emptiness rule; every scratch directory,
+  * footer through the one reader; every parquet write goes through the
+  * one writer, which alone states the store layout; a pipeline stage
+  * learns it is empty from its own write, its one emptiness rule; every scratch directory,
   * specs' included, comes from the one cleaned-up factory; the codegen class cache is sized in
   * the session factory only; edit distance has one kernel; driver work
   * runs concurrently only through core/Overlap; and the only
@@ -62,11 +63,14 @@ class EngineSurfaceSpec extends AnyFunSuite {
   }
 
   // code lines only — a comment citing the API is not a site
+  private def isCode(line: String): Boolean = {
+    val t = line.trim
+    !(t.startsWith("//") || t.startsWith("*") || t.startsWith("/*"))
+  }
+
   private def codeLines(word: String): Seq[(String, String)] = mainSources.flatMap { p =>
-    Files.readAllLines(p).asScala.toSeq.filter { line =>
-      val t = line.trim
-      line.contains(word) && !(t.startsWith("//") || t.startsWith("*") || t.startsWith("/*"))
-    }.map(p.toString -> _)
+    Files.readAllLines(p).asScala.toSeq.filter(line => line.contains(word) && isCode(line))
+      .map(p.toString -> _)
   }.sortBy(_._1)
 
   private def codeSites(word: String): Seq[String] = codeLines(word).map(_._1)
@@ -99,6 +103,30 @@ class EngineSurfaceSpec extends AnyFunSuite {
     val sites = codeSites("read.parquet(").distinct
     assert(sites == Seq("src/main/scala/graft/sources/Readers.scala"),
       s"read parquet through Readers.parquet (schema from one footer, no job): ${sites.mkString(", ")}")
+  }
+
+  test("one parquet writer: .parquet( writes at code lines only in sources/Writers.scala and Verify.scala") {
+    // a call of Spark's `.parquet(` writes when the nearest read or write
+    // before it, across the lines of its chain, is a write: EventsStream's
+    // readStream and Readers' reads are not sites, nor are the engine's
+    // own Readers.parquet/Writers.parquet calls. Verify's result dumps
+    // are harness output.
+    val access = raw"\b(read|readStream|write|writeStream)\b".r
+    def writes(file: String): Boolean = {
+      val code = Files.readAllLines(Paths.get(file)).asScala.filter(isCode).mkString("\n")
+        .replaceAll(raw"\b[A-Z]\w*\.parquet\(", "")
+      raw"\.parquet\(".r.findAllMatchIn(code).exists(m =>
+        access.findAllMatchIn(code.take(m.start)).toSeq.lastOption.exists(_.group(1).startsWith("write")))
+    }
+    val sites = codeSites(".parquet(").distinct.filter(writes)
+    assert(sites == Seq("src/main/scala/graft/Verify.scala", "src/main/scala/graft/sources/Writers.scala"),
+      s"write parquet through Writers.parquet or Writers.parquetStore: ${sites.mkString(", ")}")
+  }
+
+  test("one store layout: the rebalance hint only in sources/Writers.scala") {
+    val sites = codeSites("\"rebalance\"").distinct
+    assert(sites == Seq("src/main/scala/graft/sources/Writers.scala"),
+      s"write keyed stores through Writers.parquetStore: ${sites.mkString(", ")}")
   }
 
   test("no isEmpty and no NoSink in src/main/scala/graft/pipeline/") {

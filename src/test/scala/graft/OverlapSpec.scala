@@ -10,7 +10,7 @@ import graft.core.Overlap
 import graft.pipeline.Pipeline._
 
 /** `core/Overlap`: every leg runs on a fresh thread carrying its
-  * caller's Spark job properties; `par`/`par3` return or throw only
+  * caller's Spark job properties; `par` returns or throws only
   * after every leg has finished, a fatal error in a leg fails the call
   * instead of hanging it, and nested calls complete. Callers on other
   * threads, such as concurrent pipeline stages, use it freely. */
@@ -85,12 +85,12 @@ class OverlapSpec extends SparkSpec {
     assert(finished.get, "par threw while a leg was still running")
   }
 
-  test("nested par and par3 calls from Overlap legs complete") {
+  test("nested par calls from Overlap legs complete") {
     // legs that wait on legs of their own; no thread waits on a bounded
     // pool, and the bounded wait turns a deadlock into a test failure
-    val nested = Future(Overlap.par3(Overlap.par(1, 2), Overlap.par3(3, 4, 5), Overlap.par(6, 7)))(
-      ExecutionContext.global)
-    assert(Await.result(nested, 60.seconds) == (((1, 2), (3, 4, 5), (6, 7))))
+    val nested = Future(Overlap.par(Overlap.par(1, 2),
+      Overlap.par(Overlap.par(3, Overlap.par(4, 5)), Overlap.par(6, 7))))(ExecutionContext.global)
+    assert(Await.result(nested, 60.seconds) == (((1, 2), ((3, (4, 5)), (6, 7)))))
   }
 
   test("a pipeline stage thread calls Overlap.par") {

@@ -5,6 +5,7 @@ import java.net.InetSocketAddress
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sources._
+import graft.tools.WritePlans
 
 /** IO-layer tests: CSV/JSON round-trips, API source against a local HTTP
   * server, upsert statement generation, merge-by-key semantics. */
@@ -221,6 +222,21 @@ class SourcesSpec extends SparkSpec {
     val got = Readers.parquet(spark, s"$tmp/t").orderBy("id")
       .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
     assert(got == Seq((2, "b"), (10, "a")).sortBy(_._1))
+  }
+
+  test("parquetStore writes through a rebalance exchange on id, parquet through none") {
+    val tmp = TestDirs.fresh("write_layout")
+    val df = spark.range(1000).selectExpr("id", "id % 7 AS grp")
+    // the rebalance keys of the one write into `name`, whose rows read back
+    def layoutOf(write: (org.apache.spark.sql.DataFrame, String) => Unit, name: String): Seq[Seq[String]] = {
+      val dir = s"$tmp/$name"
+      val plans = WritePlans.capture(spark)(write(df, dir))
+      assert(plans.size == 1 && plans.head._1.endsWith(s"/$name"), s"one write of $dir: ${plans.map(_._1)}")
+      assert(rowsOf(Readers.parquet(spark, dir)) == rowsOf(df))
+      WritePlans.rebalanceKeys(plans.head._2)
+    }
+    assert(layoutOf(Writers.parquetStore, "store") == Seq(Seq("id")))
+    assert(layoutOf(Writers.parquet, "plain") == Nil)
   }
 
   test("compactParquet: 64 fragments -> <= 4 files, rows and values intact") {

@@ -3,10 +3,8 @@
 # runs graft.Explain <sfDir> <gate>, so no earlier gate in the same JVM
 # shifts the JVM-global counters a formatted plan prints (expression ids,
 # plan ids, RDD ids, lambda variable names). What still differs from run
-# to run is masked: expression ids (#123 -> #N, a bigint's L suffix kept),
-# plan_id=N, RDD[N], lambda x_123 -> lambda x_N, JVM lambda class names,
-# the nonce of StoreDirs scratch directories, and the source line of an
-# RDD's call site. Two dumps of the same plan then diff clean.
+# to run is masked by tools/plan_mask.sed. Two dumps of the same plan
+# then diff clean.
 #
 # Usage: tools/explain_alone.sh <sfDir> <outDir> <gate>...
 # Writes <outDir>/<gate>.txt (the physical plan alone). Compile first
@@ -25,14 +23,7 @@ for g in "$@"; do
     echo "$raw" | tail -5 >&2
     exit 1
   fi
-  sed -n '/^== Physical Plan ==/,$p' <<<"$raw" | sed -E \
-    -e 's/#[0-9]+/#N/g' \
-    -e 's/plan_id=[0-9]+/plan_id=N/g' \
-    -e 's/RDD\[[0-9]+\]/RDD[N]/g' \
-    -e 's/\b(lambda [a-z]+)_[0-9]+/\1_N/g' \
-    -e 's/\$Lambda[$0-9]*\/0x[0-9a-f]+(@[0-9a-f]+)?/$Lambda\/N/g' \
-    -e 's/(graft_[A-Za-z0-9._-]*_)[0-9]+/\1N/g' \
-    -e 's/(at [A-Za-z]+ at [A-Za-z0-9_$]+\.scala):[0-9]+/\1:N/g' \
+  sed -n '/^== Physical Plan ==/,$p' <<<"$raw" | sed -E -f tools/plan_mask.sed \
     > "$OUT/$g.txt"
   echo "[explain_alone] $g -> $OUT/$g.txt"
 done
