@@ -1,9 +1,12 @@
 package graft.core
 
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem}
 import org.apache.logging.log4j.Level
 import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import graft.sources.LocalFs
 
 /** Session factory for the engine.
   *
@@ -33,6 +36,15 @@ import org.apache.spark.sql.SparkSession
   *    run still evicts, so class metadata stays bounded (+10 MB of
   *    metaspace over the default on the 142-gate pass). A static conf:
   *    it only takes effect when set before the JVM's first compile.
+  *  - `file:` is [[graft.sources.LocalFs]]: Hadoop's checksummed local
+  *    filesystem with permissions set in-process. The stock one forks
+  *    `chmod` for every file and directory a parquet write creates
+  *    (~100 per overwrite VcPipeline run). Hadoop caches a
+  *    filesystem per scheme and user, not per conf, so this too holds
+  *    only for a filesystem first opened after the setting.
+  *  - both JVM-wide settings above are checked once, at the JVM's first
+  *    session: a codegen cache or a cached `file:` filesystem that
+  *    predates it throws, naming the cause.
   *  - WindowExec's "No Partition Defined" warning is silenced: the
   *    engine's global windows run on deliberately small inputs, and the
   *    warning drowned every other WARN line of a pipeline run.
@@ -51,7 +63,9 @@ object GraftSession extends Logging {
   /** `local[cpus]` with `cpus` shuffle partitions and the engine defaults. */
   def builder(cpus: Int = GraftSession.cpus.toInt): SparkSession.Builder = {
     quietGlobalWindows()
-    SparkSession.builder()
+    new SparkSession.Builder {
+      override def getOrCreate(): SparkSession = checkJvmSettings(super.getOrCreate())
+    }
       .master(s"local[$cpus]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cpus.toString)
@@ -64,7 +78,62 @@ object GraftSession extends Logging {
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.hadoop.fs.file.impl", classOf[LocalFs].getName)
       .withExtensions(new graft.expressions.GraftExtensions)
+  }
+
+  @volatile private var jvmSettingsChecked = false
+
+  /** `spark`, once the JVM-wide settings of [[builder]] are known to hold:
+    * checked once per JVM, at its first session, and throws
+    * `IllegalStateException` naming each miss. */
+  private def checkJvmSettings(spark: SparkSession): SparkSession = {
+    if (!jvmSettingsChecked) synchronized {
+      if (!jvmSettingsChecked) {
+        val misses = localFsMiss(FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)) ++
+          codegenCacheMiss(codegenCacheEntries())
+        if (misses.nonEmpty) throw new IllegalStateException(misses.mkString("; "))
+        jvmSettingsChecked = true
+      }
+    }
+    spark
+  }
+
+  /** Why `fs`, the JVM's cached `file:` filesystem, is not the engine's. */
+  private[graft] def localFsMiss(fs: FileSystem): Option[String] = {
+    val raw = fs match {
+      case local: LocalFileSystem => local.getRawFileSystem
+      case other => other
+    }
+    if (raw.isInstanceOf[LocalFs.Raw]) None
+    else Some(s"the cached file: filesystem is ${raw.getClass.getName}, not ${classOf[LocalFs.Raw].getName}: " +
+      "Hadoop caches a filesystem per scheme and user, not per conf, so a local filesystem " +
+      "opened before the JVM's first GraftSession keeps forking chmod for every file a write " +
+      "creates; build the session before any Hadoop FileSystem use")
+  }
+
+  /** Why a generated-class cache of `entries` is not the engine's. */
+  private[graft] def codegenCacheMiss(entries: Long): Option[String] =
+    if (entries == CodegenCacheEntries) None
+    else Some(s"Spark's generated-class cache holds $entries entries, not $CodegenCacheEntries: " +
+      "CodeGenerator sizes its cache once, when it first loads, and it loaded before the JVM's " +
+      "first GraftSession, so every warm pass recompiles; build the session before any codegen")
+
+  /** The live bound of Spark's generated-class cache (private in
+    * `CodeGenerator`; a Guava cache's `maxWeight` is its maximum size).
+    * Loads `CodeGenerator` if nothing has, which sizes the cache from the
+    * active session. */
+  private[graft] def codegenCacheEntries(): Long = {
+    def field(owner: AnyRef, name: String): AnyRef = {
+      val f = Iterator.iterate[Class[_]](owner.getClass)(_.getSuperclass)
+        .takeWhile(_ != null).flatMap(_.getDeclaredFields).find(_.getName == name)
+        .getOrElse(throw new NoSuchFieldException(s"${owner.getClass.getName}.$name"))
+      f.setAccessible(true)
+      f.get(owner)
+    }
+    // CodeGenerator.cache wraps the Guava cache in Spark's NonFateSharingCache
+    Seq("cache", "cache", "localCache", "maxWeight").foldLeft(CodeGenerator: AnyRef)(field)
+      .asInstanceOf[Long]
   }
 
   private def quietGlobalWindows(): Unit = {

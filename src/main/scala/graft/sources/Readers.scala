@@ -3,6 +3,7 @@ package graft.sources
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -72,8 +73,12 @@ object Readers {
     name != ParquetFileWriter.PARQUET_COMMON_METADATA_FILE && name != ParquetFileWriter.PARQUET_METADATA_FILE
   }
 
+  /** `f`'s footer, read with `conf`: the one-argument `open` builds its
+    * read options over a new Hadoop `Configuration`, which re-parses the
+    * `core-*.xml` resources on every footer. */
   private def footer(conf: Configuration, f: FileStatus): ParquetMetadata = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf),
+      HadoopReadOptions.builder(conf, f.getPath).build())
     try reader.getFooter finally reader.close()
   }
 

@@ -16,7 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * one writer, which alone states the store layout; a pipeline stage
   * learns it is empty from its own write, its one emptiness rule; every scratch directory,
   * specs' included, comes from the one cleaned-up factory; the codegen class cache is sized in
-  * the session factory only; edit distance has one kernel; driver work
+  * the session factory only, and so is the local filesystem; parquet
+  * footers are read in Readers only, with the caller's conf; edit
+  * distance has one kernel; driver work
   * runs concurrently only through core/Overlap; and the only
   * hand-written partition loops are the codec decoders. */
 class EngineSurfaceSpec extends AnyFunSuite {
@@ -28,7 +30,7 @@ class EngineSurfaceSpec extends AnyFunSuite {
 
   test("only core/GraftSession.scala calls Spark's session builder") {
     val factory = Paths.get("src/main/scala/graft/core/GraftSession.scala")
-    val builder = raw"SparkSession\s*\.\s*builder".r
+    val builder = raw"SparkSession\s*\.\s*[bB]uilder\b".r
     def builds(p: Path) = builder.findFirstIn(Files.readString(p)).isDefined
     assert(builds(factory), s"$factory no longer builds the session")
     val offenders = mainSources.filter(p => p != factory && builds(p)).map(_.toString).sorted
@@ -121,6 +123,39 @@ class EngineSurfaceSpec extends AnyFunSuite {
     val sites = codeSites(".parquet(").distinct.filter(writes)
     assert(sites == Seq("src/main/scala/graft/Verify.scala", "src/main/scala/graft/sources/Writers.scala"),
       s"write parquet through Writers.parquet or Writers.parquetStore: ${sites.mkString(", ")}")
+  }
+
+  test("footers are read only in sources/Readers.scala, and every ParquetFileReader.open passes read options") {
+    // the one-argument open builds its read options over a new Hadoop
+    // Configuration, re-parsing the core-*.xml resources per footer
+    val opens = mainSources.flatMap { p =>
+      val code = Files.readAllLines(p).asScala.filter(isCode).mkString("\n")
+      raw"ParquetFileReader\.open\(".r.findAllMatchIn(code).map { m =>
+        // the call's top-level argument count
+        var depth = 1
+        var commas = 0
+        var i = m.end
+        while (depth > 0) {
+          code(i) match {
+            case '(' => depth += 1
+            case ')' => depth -= 1
+            case ',' if depth == 1 => commas += 1
+            case _ =>
+          }
+          i += 1
+        }
+        (p.toString, commas + 1)
+      }
+    }
+    assert(opens.map(_._1).distinct == Seq("src/main/scala/graft/sources/Readers.scala"),
+      s"read footers through Readers: ${opens.map(_._1).distinct.mkString(", ")}")
+    assert(opens.forall(_._2 > 1), s"pass the caller's conf as read options: $opens")
+  }
+
+  test("only core/GraftSession.scala sets fs.file.impl") {
+    val sites = codeSites("fs.file.impl").distinct
+    assert(sites == Seq("src/main/scala/graft/core/GraftSession.scala"),
+      s"register the local filesystem in GraftSession.builder only: ${sites.mkString(", ")}")
   }
 
   test("one store layout: the rebalance hint only in sources/Writers.scala") {

@@ -3,6 +3,7 @@ package graft
 import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.LoggerContext
 import org.apache.spark.sql.functions.{col, lit}
+import graft.core.GraftSession
 import graft.tools.QueryProbe
 
 /** Session-wide settings of [[graft.core.GraftSession]] that no plan
@@ -29,6 +30,27 @@ class GraftSessionSpec extends SparkSpec {
     val (warm, warmNs) = QueryProbe.codegen()
     assert(warm == cold, s"the second pass recompiled ${warm - cold} classes")
     assert(warmNs == coldNs)
+  }
+
+  test("the JVM's cached file: filesystem is LocalFs; a stock one is reported with its cause") {
+    import org.apache.hadoop.fs.{FileSystem, LocalFileSystem}
+    val conf = spark.sparkContext.hadoopConfiguration
+    assert(GraftSession.localFsMiss(FileSystem.getLocal(conf)).isEmpty)
+    // what a filesystem cached before the first session would be
+    val stock = new LocalFileSystem
+    stock.initialize(java.net.URI.create("file:///"), new org.apache.hadoop.conf.Configuration(false))
+    val miss = GraftSession.localFsMiss(stock)
+    assert(miss.exists(m => m.contains("org.apache.hadoop.fs.RawLocalFileSystem") &&
+      m.contains("before the JVM's first GraftSession")), miss)
+  }
+
+  test("the live codegen cache holds CodegenCacheEntries; Spark's default is reported with its cause") {
+    assert(spark.range(1).count() == 1)
+    assert(GraftSession.codegenCacheEntries() == GraftSession.CodegenCacheEntries)
+    assert(GraftSession.codegenCacheMiss(GraftSession.codegenCacheEntries()).isEmpty)
+    val miss = GraftSession.codegenCacheMiss(100)
+    assert(miss.exists(m => m.contains("holds 100 entries") &&
+      m.contains("before the JVM's first GraftSession")), miss)
   }
 
   test("only WindowExec's logger is raised to ERROR") {

@@ -85,6 +85,25 @@ class JdbcSpec extends SparkSpec {
     assert(back.filter($"NAME".startsWith("v2_")).count() == 60)
   }
 
+  test("two-connection MERGE upserts lose no row, 20 times over on fresh tables") {
+    // a statement that touched no row used to commit as a success; it now
+    // fails its batch, which retries on a fresh connection
+    def batch(ids: Range, tag: String) = ids.map(i => (i.toLong, s"${tag}_$i"))
+      .toDF("id", "name")
+    val counts = (1 to 20).map { i =>
+      val table = s"upsert_rep_$i"
+      val conn = DriverManager.getConnection(url)
+      try conn.createStatement().execute(s"CREATE TABLE $table (id BIGINT PRIMARY KEY, name VARCHAR(64))")
+      finally conn.close()
+      JdbcUpsert.upsert(batch(1 to 60, "v1"), url, table, props,
+        keyCols = Seq("id"), connections = 2, batchSize = 16, dialect = JdbcUpsert.Merge)
+      JdbcUpsert.upsert(batch(31 to 90, "v2"), url, table, props,
+        keyCols = Seq("id"), connections = 2, batchSize = 16, dialect = JdbcUpsert.Merge)
+      Readers.jdbc(spark, url, table, props).count()
+    }
+    assert(counts.forall(_ == 90), s"rows per repeat: ${counts.mkString(", ")}")
+  }
+
   test("version-guarded upsert keeps the newer row when an older one arrives late") {
     val conn = DriverManager.getConnection(url)
     try {

@@ -2,6 +2,7 @@ package graft
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.net.InetSocketAddress
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sources._
@@ -349,6 +350,54 @@ class SourcesSpec extends SparkSpec {
     assert(dir.mkdirs() && new java.io.File(dir, "_SUCCESS").createNewFile())
     val e = intercept[org.apache.spark.sql.AnalysisException](Readers.parquet(spark, dir.toString))
     assert(e.getMessage.contains("UNABLE_TO_INFER_SCHEMA"), e.getMessage)
+  }
+
+  test("a session-built parquet write goes through LocalFs and leaves stock permissions and .crc files") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+    import org.apache.hadoop.fs.permission.FsPermission
+    def mode(p: String): Int =
+      Files.getAttribute(Paths.get(p), "unix:mode").asInstanceOf[Int] & 0xfff
+    val conf = spark.sparkContext.hadoopConfiguration
+    val tmp = TestDirs.fresh("localfs_spec")
+    val out = s"$tmp/t"
+    Writers.parquet(spark.range(100).toDF("id").repartition(3), out)
+    val fs = new Path(out).getFileSystem(conf)
+    assert(fs.asInstanceOf[LocalFileSystem].getRawFileSystem.getClass == classOf[LocalFs.Raw])
+
+    // the file and directory modes a create and a mkdirs leave under `umask`
+    def modes(f: FileSystem, umask: String): (Int, Int) = {
+      val c = new org.apache.hadoop.conf.Configuration(conf)
+      c.set("fs.permissions.umask-mode", umask)
+      f.initialize(java.net.URI.create("file:///"), c)
+      val dir = s"$tmp/${f.getClass.getSimpleName}_$umask"
+      try {
+        assert(f.mkdirs(new Path(s"$dir/d")))
+        f.create(new Path(s"$dir/f"), true).close()
+      } finally f.close()
+      (mode(s"$dir/f"), mode(s"$dir/d"))
+    }
+    val umask = conf.get("fs.permissions.umask-mode", "022")
+    val (file, dir) = modes(new RawLocalFileSystem, umask)
+    assert(modes(new LocalFs, umask) == ((file, dir)))
+    Seq("027", "002").foreach(u =>
+      assert(modes(new LocalFs, u) == modes(new RawLocalFileSystem, u), s"umask $u"))
+    // the write leaves the stock modes, and a .crc beside every part file
+    val written = Files.walk(Paths.get(out)).iterator().asScala.toSeq
+    written.foreach { p =>
+      val want = if (Files.isDirectory(p)) dir else file
+      assert(mode(p.toString) == want, s"$p: ${mode(p.toString).toOctalString} != ${want.toOctalString}")
+    }
+    val parts = written.map(_.getFileName.toString).filter(_.endsWith(".parquet"))
+    assert(parts.nonEmpty)
+    parts.foreach(n => assert(Files.exists(Paths.get(out, s".$n.crc")), s"no .$n.crc"))
+    assert(Readers.parquet(spark, out).count() == 100)
+
+    // a mode above 0777 falls back to Hadoop's own setPermission
+    val sticky = new Path(s"$tmp/sticky")
+    assert(fs.mkdirs(sticky))
+    fs.setPermission(sticky, new FsPermission(Integer.parseInt("1777", 8).toShort))
+    assert(mode(sticky.toString) == Integer.parseInt("1777", 8), mode(sticky.toString).toOctalString)
   }
 
   test("zValue matches hand-computed Morton interleave; masks wide inputs") {
