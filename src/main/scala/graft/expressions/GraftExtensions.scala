@@ -23,7 +23,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object GraftExtensions {
   /** (SQL name, expression class, builder) of every injected function. */
   private val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
-    ("graft_cosine", classOf[CosineSimilarity], e => CosineSimilarity(e(0), e(1))),
     ("graft_dot", classOf[DotProduct], e => DotProduct(e(0), e(1))),
     ("graft_nearest_cids", classOf[NearestCentroids],
       e => NearestCentroids(e(0), e(1), e(2))),

@@ -356,8 +356,9 @@ case class PqLut(vec: Expression, books: Expression)
 
 /** Serializable hyperplane table: sign-bit signature of a vector
   * against `planes` fixed hyperplanes, optionally folded into a bucket
-  * count. Bit-identical to the literal
-  * [[graft.operators.Similarity.hyperplaneSignature]] arm: per-plane
+  * count — the body of [[graft.operators.Similarity.hyperplaneSignature]],
+  * the engine's one signature. Bit-identical to its literal arm
+  * (`LiteralArms.hyperplaneSignature`): per-plane
   * dot folds ascending-index exactly like `aggregate(zip_with(...))`,
   * the sign test is a strict `> 0` (NaN dot → bit 0, like the literal
   * arm's `when`), and the fold is a plain `%` of the non-negative
@@ -389,9 +390,9 @@ final class HyperplaneKernel(val planes: Array[Array[Double]],
 /** `graft_hyperplane_sig(v, planes, buckets)` — v: array&lt;double&gt;,
   * planes: FOLDABLE array&lt;array&lt;double&gt;&gt;, buckets: foldable
   * long (&le; 0 = raw sign-bit signature, no fold). Returns the bucket
-  * id — bit-identical to
-  * [[graft.operators.Similarity.foldedSignature]]'s literal arm
-  * (`LiteralArms.foldedSignature`). */
+  * id. [[graft.operators.Similarity.hyperplaneSignature]] is its one
+  * caller; bit-identical to the literal arm
+  * (`LiteralArms.hyperplaneSignature`). */
 case class HyperplaneSig(vec: Expression, planes: Expression,
                          buckets: Expression) extends TernaryExpression {
 

@@ -704,7 +704,10 @@ object Dedup {
   /** The MinHash signature aggregate over 32-bit shingle hashes: one
     * `numHashes`-lane Long array per group, map-side combinable (the
     * shuffle carries numHashes longs per doc, not shingles). Every
-    * signature frame is built from this one call.
+    * signature frame is built from this one call, with one exception:
+    * the skew path of [[ngramJaccardPairs]] bands oversized blocks on 32
+    * lanes built as an `array_min(transform(...))` projection over the
+    * grams it already holds.
     *
     * Measured alternative (round 4, sf0.1 / 20k docs): a pure-projection
     * form — grams32 materialized, then 128 `array_min(transform(...))`
@@ -1074,25 +1077,15 @@ object Dedup {
     widths.scanLeft(0)(_ + _).zip(widths)
   }
 
-  /** 64-bit SimHash over full xxhash64 whitespace-token hashes: bit i is
-    * set when the signed vote sum over tokens (bit set → +1, clear → -1)
-    * is positive. All 64 bits carry signal (round 1 used 32-bit token
-    * hashes — a collision floor at billions of docs; xxhash64 pushes the
-    * birthday bound to ~2^32 distinct tokens). Pure expressions; no UDF. */
-  def simhash(c: Column): Column = {
-    val hashes = transform(TextAnalysis.tokens(c), t => xxhash64(t))
-    val bits = (0 until 64).map { i =>
-      when(aggregate(hashes, lit(0L),
-        (acc, h) => acc + (shiftright(h, i).bitwiseAND(1) * 2 - 1)) > 0,
-        lit(1L << i)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
-  }
-
-  /** One-pass simhash per id: explode token hashes, aggregate 64 signed
-    * bit-votes in a single hash aggregate (map-side combinable), then
-    * assemble the signature. Avoids the 64× tokenization recompute of the
-    * pure-Column form. Output: (id, sh). */
+  /** The engine's one SimHash: a 64-bit signature per id over full
+    * xxhash64 whitespace-token hashes, where bit i is set when the signed
+    * vote sum over tokens (bit set → +1, clear → -1) is positive. All 64
+    * bits carry signal (round 1 used 32-bit token hashes — a collision
+    * floor at billions of docs; xxhash64 pushes the birthday bound to
+    * ~2^32 distinct tokens). One pass: explode token hashes, aggregate
+    * the 64 bit-votes in a single hash aggregate (map-side combinable),
+    * then assemble the signature — tokenizing once, not once per bit as
+    * a per-row Column form would. Output: (id, sh). */
   def simhashes(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     // fan a narrow scan out before tokenize + 64 bit-vote lanes per
     // token — no-op at scale (Fanout, r20)

@@ -7,18 +7,22 @@ import org.apache.spark.sql.functions._
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`).
   *
-  * Two paths:
+  * Three paths:
   *  - [[bruteForceTopK]]: exact cosine top-k of a bounded query set
   *    against the corpus — the correctness baseline. The query side is
   *    broadcast, so the corpus never shuffles; cost is O(|Q|·n·d).
-  *  - [[lshTopK]]: random-hyperplane LSH bucketing (Charikar) as the
-  *    scale path — candidates share a signature bucket (with multi-probe
-  *    over 1-bit flips), then exact cosine ranks within candidates.
+  *  - [[lshTopK]]: random-hyperplane LSH bucketing (Charikar) with L
+  *    hash tables as the scale path — candidates share a signature
+  *    bucket in any table, then exact cosine ranks within candidates.
+  *  - [[knnGraph]]: the same banding with every vector as a query.
   *
-  * Vector math runs over double-cast arrays through the codegen'd
-  * [[graft.expressions.DotProduct]] and hyperplane kernels —
-  * distributed, deterministic (ascending-index folds, the same IEEE
-  * sequence every run).
+  * One of each primitive: [[cosinePrenormed]] scores every pair over
+  * [[norm]]s computed once per vector, through the codegen'd
+  * [[graft.expressions.DotProduct]] kernel, and [[hyperplaneSignature]]
+  * is the one signature, through the codegen'd
+  * [[graft.expressions.HyperplaneSig]] kernel. Both are distributed and
+  * deterministic (ascending-index folds, the same IEEE sequence every
+  * run).
   */
 object Similarity {
 
@@ -37,20 +41,19 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dotNative(a, a))
 
-  def cosine(a: Column, b: Column): Column = {
-    val d = norm(a) * norm(b)
-    when(d > 0, dotNative(a, b) / d).otherwise(lit(0.0))
-  }
-
-  /** Cosine from PRECOMPUTED norms — bit-identical to [[cosine]] (same
-    * expressions, same operation order), but the norms are computed once
-    * per VECTOR instead of once per candidate PAIR. In a verify step
-    * scoring B·cap pairs per bucket that cuts the array arithmetic from
-    * three reductions per pair (dot + two norms) to one; the norm rides
-    * the attach join as a single extra double per row. */
+  /** The engine's one cosine, from PRECOMPUTED norms ([[norm]]): the
+    * norms are computed once per VECTOR instead of once per candidate
+    * PAIR, so each pair costs one dot reduction instead of three, and
+    * the norm rides the attach join as a single extra double per row.
+    * Every scoring step calls it — [[bruteForceTopK]], [[lshTopK]],
+    * [[knnGraph]], the IVF verify and both embedding near-dup passes.
+    *
+    * A zero norm scores 0.0 (not NaN); a null vector or norm scores
+    * null. A NaN element makes the norm NaN, which Spark's `>` orders
+    * above every number, so the score is NaN. */
   def cosinePrenormed(a: Column, b: Column, na: Column, nb: Column): Column = {
     val d = na * nb
-    when(d > 0, dotNative(a, b) / d).otherwise(lit(0.0))
+    when(d > 0, dotNative(a, b) / d).when(d.isNotNull, lit(0.0))
   }
 
   /** Deterministic random hyperplanes: `planes` rows of `dim` N(0,1)
@@ -104,58 +107,53 @@ object Similarity {
 
   /** Sign-bit signature of a (double-cast) vector against the fixed
     * hyperplanes of one hash table — an integer bucket id in
-    * [0, 2^planes). The planes are `dim`-dimensional; a mismatched vector
-    * length raises (zip_with would otherwise null-pad, silently sending
-    * every vector to bucket 0 and degrading LSH to a cross join).
+    * [0, 2^planes), optionally folded into a non-power-of-two bucket
+    * count (`buckets <= 0` = no fold — raw sign-bit bucket). The planes
+    * are `dim`-dimensional; a mismatched vector length raises (zip_with
+    * would otherwise null-pad, silently sending every vector to bucket 0
+    * and degrading LSH to a cross join).
     *
     * Always the [[graft.expressions.HyperplaneSig]] kernel since r21
-    * (planes as ONE literal, codegen'd sign-bit loop): the literal
-    * per-plane `zip_with`/`aggregate` trees evaluated interpreted and
-    * grew O(tables·planes·dim) plan nodes — the same pathology the
-    * PQ/IVF kernels fixed, measured 5.4×/1.7× there
-    * (tools/QuantArmProbe, deleted after 17eacc8) and a y2/y3/x5
-    * banding-stage cost here. The literal arm is a test-scope reference,
-    * spec-pinned bit-identical (SimilaritySpec). */
+    * (planes as ONE literal, codegen'd sign-bit loop, the fold inside
+    * the same call): the literal per-plane `zip_with`/`aggregate` trees
+    * evaluated interpreted and grew O(tables·planes·dim) plan nodes —
+    * the same pathology the PQ/IVF kernels fixed, measured 5.4×/1.7×
+    * there (tools/QuantArmProbe, deleted after 17eacc8) and a y2/y3/x5
+    * banding-stage cost here. The signature is non-negative
+    * (< 2^planes), so the kernel's `%` is the literal arm's `pmod` and
+    * the DuckDB oracle mirrors it verbatim. The literal arm is a
+    * test-scope reference, spec-pinned bit-identical (SimilaritySpec). */
   def hyperplaneSignature(v: Column, planes: Int, table: Int = 0,
-                          dim: Int = 64): Column =
-    graft.expressions.QuantKernels.hyperplaneSig(v,
-      planeLiterals(planes, dim, table), buckets = 0L)
-
-  /** [[hyperplaneSignature]] optionally folded into a non-power-of-two
-    * bucket count (`buckets <= 0` = no fold — raw sign-bit bucket). The
-    * signature is non-negative (< 2^planes), so the kernel's `%` is the
-    * literal arm's `pmod` and the DuckDB oracle mirrors it verbatim.
-    * The fold rides INSIDE the kernel call (one expression, no extra
-    * pmod node). */
-  def foldedSignature(v: Column, planes: Int, table: Int,
-                      buckets: Long = 0, dim: Int = 64): Column =
+                          buckets: Long = 0L, dim: Int = 64): Column =
     graft.expressions.QuantKernels.hyperplaneSig(v,
       planeLiterals(planes, dim, table), buckets = math.max(0L, buckets))
 
   /** L-table hyperplane banding of an (id, v) frame: one (id, t, bucket)
-    * row per vector per table, bucket = table t's [[foldedSignature]].
+    * row per vector per table, bucket = table t's [[hyperplaneSignature]].
     * The one banding every hyperplane-LSH path (and the AnnCounters
     * volume counters) runs; callers add their own partitioning. */
   private[graft] def tableBuckets(base: DataFrame, planes: Int, tables: Int,
                                   buckets: Long): DataFrame =
     base.select(col("id"),
       posexplode(array((0 until tables).map(t =>
-        foldedSignature(col("v"), planes, t, buckets)): _*)))
+        hyperplaneSignature(col("v"), planes, t, buckets)): _*)))
       .withColumnRenamed("pos", "t").withColumnRenamed("col", "bucket")
 
   /** Exact cosine top-k for a fixed set of query vector ids.
-    * Output: (query_id, rank, neighbor_id, cosine_sim), scored with the
-    * codegen'd [[graft.expressions.CosineSimilarity]] (bit-identical to
-    * the zip_with form, no intermediate arrays). */
+    * Output: (query_id, rank, neighbor_id, cosine_sim), scored like
+    * [[lshTopK]]: [[norm]] once per corpus vector and once per query,
+    * [[cosinePrenormed]] per pair. */
   def bruteForceTopK(emb: DataFrame, idCol: String, vecCol: String,
                      queryIds: Seq[Long], k: Int = 10): DataFrame = {
     val corpus = emb.select(col(idCol).as("neighbor_id"), toDouble(col(vecCol)).as("v"))
+      .withColumn("nv", norm(col("v")))
     val queries = emb.filter(col(idCol).isin(queryIds: _*))
       .select(col(idCol).as("query_id"), toDouble(col(vecCol)).as("q"))
+      .withColumn("nq", norm(col("q")))
     val scored = corpus.crossJoin(broadcast(queries))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine_sim",
-        graft.expressions.CosineSimilarity.column(col("q"), col("v")))
+        cosinePrenormed(col("q"), col("v"), col("nq"), col("nv")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine_sim").desc, col("neighbor_id").asc)
     scored

@@ -37,10 +37,6 @@ import graft.core.Overlap
   * reuse the reference's job-per-script architecture cannot express
   * (SURVEY §4 caching row). Dependents start only after that sink has
   * returned, and every persisted frame is released before `run` returns.
-  * The one exception keeps written schemas unchanged: a frame whose
-  * optimized plan is less nullable than its analyzed plan (say, one
-  * built over a constant-folded expression) is not persisted, since a
-  * cached frame carries the analyzed nullability into its sink.
   */
 object Pipeline {
 
@@ -80,13 +76,8 @@ object Pipeline {
       def exec(st: Stage, inputs: Map[String, DataFrame]): Outcome =
         try {
           val built = st.build(inputs)
-          // A cached frame exposes its analyzed schema, so one whose
-          // optimizer tightens nullability (a constant-folded input) would
-          // be written with looser columns; it is recomputed per consumer
-          // instead. A frame the caller already cached stays theirs.
-          val shared = fed(st.name) &&
-            built.storageLevel == StorageLevel.NONE &&
-            built.queryExecution.optimizedPlan.schema == built.schema
+          // a frame the caller already cached stays theirs
+          val shared = fed(st.name) && built.storageLevel == StorageLevel.NONE
           val df =
             if (shared) {
               persisted.add(built)

@@ -137,8 +137,11 @@ object JdbcUpsert {
     * Unless the statement is version-guarded (`versioned`), where a stale
     * row rightly touches nothing, every row must insert or update one:
     * an update count of 0 is a lost row and fails the attempt like a
-    * transient error (`SUCCESS_NO_INFO`, -2, is not a miss). */
-  private final class BatchWriter(url: String, user: String, pass: String,
+    * transient error (`SUCCESS_NO_INFO`, -2, is not a miss). An
+    * interrupt during the backoff between attempts stops the retries: the
+    * failed attempt's error is thrown with the `InterruptedException`
+    * suppressed on it, and the thread's interrupt flag stays set. */
+  private[graft] final class BatchWriter(url: String, user: String, pass: String,
                                   sql: String, versioned: Boolean) {
     private var conn: Connection = _
     private var ps: PreparedStatement = _
@@ -171,7 +174,15 @@ object JdbcUpsert {
           case e: Throwable =>
             drop()
             if (attempt >= maxBatchAttempts) throw e
-            Thread.sleep(50L * attempt) // linear backoff widens the race exit
+            // linear backoff widens the race exit; an interrupt ends the
+            // retries but keeps the attempt's own error and the flag
+            try Thread.sleep(50L * attempt)
+            catch {
+              case ie: InterruptedException =>
+                Thread.currentThread().interrupt()
+                e.addSuppressed(ie)
+                throw e
+            }
         }
       }
     }

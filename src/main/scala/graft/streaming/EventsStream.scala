@@ -232,9 +232,6 @@ object EventsStream {
       }
       .start()
 
-  /** Run a streaming transform over `dir` with Trigger.AvailableNow into
-    * an in-memory table; returns the final result. Used by specs to
-    * assert stream/batch parity. */
   /** Batch-parity model of WATERMARK-DROPPED LATE DATA (the b7 gate):
     * predicts exactly which rows a watermarked streaming
     * [[windowedRollup]] keeps when the input arrives as an ordered
@@ -302,6 +299,9 @@ object EventsStream {
         col("total_value").cast("double").as("total_value"))
   }
 
+  /** Run a streaming transform over `dir` with Trigger.AvailableNow into
+    * an in-memory table; returns the final result. Used by specs to
+    * assert stream/batch parity. */
   def runAvailableNow(spark: SparkSession, dir: String,
                       transform: DataFrame => DataFrame,
                       queryName: String,

@@ -1,37 +1,51 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+import org.apache.spark.sql.catalyst.expressions.BoundReference
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
-import graft.expressions.{CosineSimilarity, DotProduct}
+import graft.expressions.DotProduct
 import graft.operators.{LiteralArms, Similarity}
 
-/** The native codegen expression must be bit-identical to the
-  * zip_with/aggregate composition, SQL-callable, and null-safe. */
+/** The one cosine ([[Similarity.cosinePrenormed]] over [[Similarity.norm]]s,
+  * both through the codegen'd dot kernel) must be bit-identical to the
+  * pure zip_with/aggregate composition, with a stated null, zero and NaN
+  * contract; the dot kernel is SQL-callable and guards ragged input. */
 class CosineExprSpec extends SparkSpec {
   import spark.implicits._
 
+  private def oneCosine(a: Column, b: Column): Column =
+    Similarity.cosinePrenormed(a, b, Similarity.norm(a), Similarity.norm(b))
+
   test("bit-identical to the Column composition on real embeddings") {
-    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
-      .select($"vec_id", Similarity.toDouble($"embedding").as("v"))
     // the reference side is the PURE zip_with/aggregate composition
-    // (Similarity.cosine itself routes through the dot kernel since r21,
-    // so it can no longer serve as the independent reference)
-    def pureCosine(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) = {
+    def pureCosine(a: Column, b: Column) = {
       val d = sqrt(LiteralArms.dot(a, a)) * sqrt(LiteralArms.dot(b, b))
       when(d > 0, LiteralArms.dot(a, b) / d).otherwise(lit(0.0))
     }
-    val withBoth = emb.crossJoin(emb.limit(5).select($"v".as("q")))
-      .select(
-        pureCosine($"q", $"v").as("composed"),
-        CosineSimilarity.column($"q", $"v").as("native"),
-        Similarity.cosine($"q", $"v").as("routed"))
-    val diff = withBoth.filter($"composed" =!= $"native" ||
-      $"composed" =!= $"routed").count()
-    assert(diff == 0, s"$diff rows differ between composed/native/routed cosine")
+    for (sf <- Seq("sf0.001", "sf0.01")) {
+      val raw = graft.Tables.embeddings(spark, s"/root/testdata/$sf")
+      val emb = raw.select($"vec_id", Similarity.toDouble($"embedding").as("v"))
+      val qids = emb.select($"vec_id").as[Long].orderBy("vec_id").limit(5).collect().toSeq
+      val queries = emb.filter($"vec_id".isin(qids: _*))
+        .select($"vec_id".as("query_id"), $"v".as("q"))
+      val pairs = emb.crossJoin(queries)
+        .select($"query_id", $"vec_id".as("neighbor_id"),
+          pureCosine($"q", $"v").as("composed"), oneCosine($"q", $"v").as("one"))
+      val diff = pairs.filter(!($"composed" <=> $"one")).count()
+      assert(diff == 0, s"$sf: $diff rows differ between the composed and the one cosine")
+      // bruteForceTopK (the y1 gate and the recall ground truth) scores
+      // every pair through the one cosine
+      val n = emb.count().toInt
+      val brute = Similarity.bruteForceTopK(raw, "vec_id", "embedding", qids, k = n)
+      val joined = brute.join(pairs, Seq("query_id", "neighbor_id"))
+      assert(joined.count() == qids.size.toLong * (n - 1), s"$sf: pairs missing")
+      val off = joined.filter(!($"cosine_sim" <=> $"composed")).count()
+      assert(off == 0, s"$sf: $off bruteForceTopK scores differ from the composition")
+    }
   }
 
   test("graft_dot kernel bit-identical to the zip_with/aggregate dot") {
@@ -50,13 +64,16 @@ class CosineExprSpec extends SparkSpec {
     // fresh session of it resolves all of them with no registration call
     val fresh = spark.newSession()
     val registry = fresh.sessionState.functionRegistry
-    for (name <- Seq("graft_cosine", "graft_dot", "graft_nearest_cids",
-        "graft_pq_codes", "graft_pq_lut", "graft_hyperplane_sig",
-        "graft_bpe_encode", "graft_might_contain"))
+    val kernels = Seq("graft_dot", "graft_nearest_cids", "graft_pq_codes",
+      "graft_pq_lut", "graft_hyperplane_sig", "graft_bpe_encode",
+      "graft_levenshtein", "graft_might_contain")
+    for (name <- kernels)
       assert(registry.functionExists(FunctionIdentifier(name)), s"$name not registered")
-    val r = fresh.sql("SELECT graft_cosine(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c")
+    val graftNames = registry.listFunction().map(_.funcName).filter(_.startsWith("graft_"))
+    assert(graftNames.sorted == kernels.sorted, s"injected: ${graftNames.sorted}")
+    val r = fresh.sql("SELECT graft_dot(array(3.0d, 4.0d), array(3.0d, 4.0d)) AS d")
       .collect()(0).getDouble(0)
-    assert(math.abs(r - 1.0) < 1e-15)
+    assert(r == 25.0)
   }
 
   test("null and zero-vector handling") {
@@ -64,23 +81,37 @@ class CosineExprSpec extends SparkSpec {
       (Some(Seq(0.0, 0.0)), Some(Seq(1.0, 2.0))),
       (None, Some(Seq(1.0, 2.0)))
     ).toDF("a", "b")
-    val got = df.select(CosineSimilarity.column($"a", $"b").as("c")).collect()
+    val got = df.select(oneCosine($"a", $"b").as("c")).collect()
     assert(got(0).getDouble(0) == 0.0) // zero vector -> 0, not NaN
     assert(got(1).isNullAt(0))         // null input -> null
   }
 
+  test("a NaN element scores NaN, and bruteForceTopK ranks it first") {
+    // Spark's `>` orders NaN above every number, so the one cosine's
+    // `d > 0` holds for a NaN norm and the score is NaN; the removed
+    // graft_cosine kernel tested `d > 0` in Java, false for NaN, and
+    // scored such a pair 0.0 (rank 2 below, behind neighbor 2)
+    val corpus = Seq(
+      (0L, Seq(1.0, 0.0)), (1L, Seq(Double.NaN, 1.0)), (2L, Seq(1.0, 1.0)))
+      .toDF("vec_id", "embedding")
+    val got = Similarity.bruteForceTopK(corpus, "vec_id", "embedding", Seq(0L), k = 2)
+      .orderBy("rank").collect()
+      .map(r => (r.getAs[Int]("rank"), r.getAs[Long]("neighbor_id"), r.getAs[Double]("cosine_sim")))
+    assert(got.map(g => (g._1, g._2)).toSeq == Seq((1, 1L), (2, 2L)), got.toSeq)
+    assert(got(0)._3.isNaN, got.toSeq)
+    assert(got(1)._3 == 1.0 / math.sqrt(2.0), got.toSeq)
+  }
+
   test("ragged input fails loudly in the interpreted and the codegen path") {
     val t = ArrayType(DoubleType, containsNull = false)
-    val (a, b) = (BoundReference(0, t, nullable = true), BoundReference(1, t, nullable = true))
+    val e = DotProduct(BoundReference(0, t, nullable = true), BoundReference(1, t, nullable = true))
     val ragged = InternalRow(ArrayData.toArrayData(Array(1.0, 2.0, 3.0)),
       ArrayData.toArrayData(Array(1.0, 2.0)))
-    for (e <- Seq[Expression](DotProduct(a, b), CosineSimilarity(a, b))) {
-      val interpreted = intercept[IllegalArgumentException](e.eval(ragged))
-      val generated = intercept[IllegalArgumentException](
-        GenerateUnsafeProjection.generate(Seq(e)).apply(ragged))
-      for (err <- Seq(interpreted, generated))
-        assert(err.getMessage.contains("unequal length (3 vs 2)"), s"${e.prettyName}: $err")
-    }
+    val interpreted = intercept[IllegalArgumentException](e.eval(ragged))
+    val generated = intercept[IllegalArgumentException](
+      GenerateUnsafeProjection.generate(Seq(e)).apply(ragged))
+    for (err <- Seq(interpreted, generated))
+      assert(err.getMessage.contains("unequal length (3 vs 2)"), s"${e.prettyName}: $err")
     // a query reaches the same guard instead of a truncated score
     val q = Seq((Seq(1.0, 2.0, 3.0), Seq(1.0, 2.0))).toDF("a", "b")
       .select(Similarity.dotNative($"a", $"b"))

@@ -19,9 +19,9 @@ class DimDateSpec extends SparkSpec {
   }
 
   test("analyzed and optimized schemas are equal, nullability included") {
-    // the pipeline runner shares (persists) only frames whose optimizer
-    // does not tighten nullability: a cached frame writes its analyzed
-    // schema, so this is what lets one dim_date serve every consumer.
+    // the pipeline runner persists every shared frame, and a cached frame
+    // writes its analyzed schema: this equality is what keeps the shared
+    // dim_date's written schema the one its optimizer would give.
     // A shorter range than `dim`, so the cached plan does not stand in.
     val fresh = DimDate.build(spark, days = 366)
     assert(fresh.queryExecution.optimizedPlan.schema == fresh.schema,

@@ -18,7 +18,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * specs' included, comes from the one cleaned-up factory; the codegen class cache is sized in
   * the session factory only, and so is the local filesystem; parquet
   * footers are read in Readers only, with the caller's conf; edit
-  * distance has one kernel; driver work
+  * distance has one kernel; there is one cosine, one hyperplane
+  * signature and one SimHash; driver work
   * runs concurrently only through core/Overlap; and the only
   * hand-written partition loops are the codec decoders. */
 class EngineSurfaceSpec extends AnyFunSuite {
@@ -230,6 +231,17 @@ class EngineSurfaceSpec extends AnyFunSuite {
       s"run legs and stages through Overlap.task: ${executors.mkString(", ")}")
     val pools = (filesMentioning("newFixedThreadPool") ++ filesMentioning("fromExecutorService")).distinct
     assert(pools.isEmpty, s"run legs and stages through Overlap.task: ${pools.mkString(", ")}")
+  }
+
+  test("one cosine, one hyperplane signature, one SimHash in main") {
+    val gone = Seq("CosineSimilarity", "graft_cosine", "foldedSignature", "def simhash(")
+      .flatMap(w => filesMentioning(w).map(w -> _))
+    assert(gone.isEmpty,
+      s"score with Similarity.cosinePrenormed, sign with Similarity.hyperplaneSignature, " +
+        s"hash with Dedup.simhashes: ${gone.mkString(", ")}")
+    val dots = codeSites("DotProduct.column(").distinct
+    assert(dots == Seq("src/main/scala/graft/operators/Similarity.scala"),
+      s"take dot products through Similarity.dotNative: ${dots.mkString(", ")}")
   }
 
   test("mapPartitions only in the codec decoders") {

@@ -313,6 +313,24 @@ class JdbcSpec extends SparkSpec {
   private def batchSchema =
     Seq((1L, "a", BigDecimal(1))).toDF("id", "name", "amount").schema
 
+  test("an interrupted retry backoff surfaces the attempt's SQL error and keeps the flag") {
+    // no driver answers this url, so every attempt fails in
+    // getConnection before any database is touched
+    val w = new JdbcUpsert.BatchWriter("jdbc:graft-no-driver:db", null, null,
+      "INSERT INTO t VALUES (?)", versioned = false)
+    var flagKept = false
+    Thread.currentThread().interrupt()
+    val err =
+      try intercept[Throwable](w.flush(Seq(org.apache.spark.sql.Row(1L, "a", BigDecimal(1))),
+        batchSchema, Seq(0)))
+      finally flagKept = Thread.interrupted() // and clears it for the next test
+    assert(flagKept, "the interrupt flag was cleared")
+    assert(err.isInstanceOf[java.sql.SQLException], s"not the attempt's error: $err")
+    assert(err.getSuppressed.exists(_.isInstanceOf[InterruptedException]),
+      s"the interrupt is not suppressed on it: ${err.getSuppressed.toSeq}")
+    w.close()
+  }
+
   test("jdbc subquery pushdown (derived-table scan, reference S1 shape)") {
     val sub = Readers.jdbc(spark, url,
       "(SELECT id, name FROM companies WHERE id <= 10) data", props)

@@ -11,24 +11,26 @@ class SimilaritySpec extends SparkSpec {
   test("cosine matches hand-computed values") {
     val df = Seq((Seq(1.0, 0.0), Seq(0.0, 1.0)), (Seq(1.0, 1.0), Seq(1.0, 1.0)),
       (Seq(1.0, 2.0), Seq(2.0, 4.0))).toDF("a", "b")
-    val got = df.select(Similarity.cosine($"a", $"b").as("c")).collect().map(_.getDouble(0))
+    val got = df.select(Similarity.cosinePrenormed($"a", $"b",
+      Similarity.norm($"a"), Similarity.norm($"b")).as("c")).collect().map(_.getDouble(0))
     assert(math.abs(got(0)) < 1e-12)
     assert(math.abs(got(1) - 1.0) < 1e-12)
     assert(math.abs(got(2) - 1.0) < 1e-12)
   }
 
   test("hyperplane signature: kernel expression == literal expression") {
-    // real embeddings at sf0.01, raw and folded, two tables — the
-    // HyperplaneSig kernel (r21, the task-binary/interp-tree fix) must
-    // agree with the literal zip_with/aggregate reference to the bit
+    // real embeddings at sf0.01, raw and folded, two tables — the one
+    // signature (the HyperplaneSig kernel, r21's task-binary/interp-tree
+    // fix) must agree with the literal zip_with/aggregate reference to
+    // the bit
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.01")
       .select($"vec_id", Similarity.toDouble($"embedding").as("v"))
     for (table <- Seq(0, 3); buckets <- Seq(0L, 13L)) {
       val ker = emb.select($"vec_id",
-        Similarity.foldedSignature($"v", planes = 6, table, buckets).as("s"))
+        Similarity.hyperplaneSignature($"v", planes = 6, table, buckets).as("s"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
       val lit0 = emb.select($"vec_id",
-        LiteralArms.foldedSignature($"v", planes = 6, table, buckets).as("s"))
+        LiteralArms.hyperplaneSignature($"v", planes = 6, table, buckets).as("s"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
       assert(ker.nonEmpty && ker.sameElements(lit0),
         s"table=$table buckets=$buckets: kernel and literal signatures differ")

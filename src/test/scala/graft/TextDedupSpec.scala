@@ -61,12 +61,16 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("simhash: identical text -> distance 0; near text -> small distance") {
-    val sh = Seq("the quick brown fox jumps over the lazy dog",
-                 "the quick brown fox jumps over the lazy cat",
-                 "completely different words entirely unrelated topic")
-      .toDF("t").select(Dedup.simhash($"t").as("h")).collect().map(_.getLong(0))
+    val sh = Dedup.simhashes(Seq(
+        (0L, "the quick brown fox jumps over the lazy dog"),
+        (1L, "the quick brown fox jumps over the lazy cat"),
+        (2L, "completely different words entirely unrelated topic"),
+        (3L, "the quick brown fox jumps over the lazy dog"))
+      .toDF("doc_id", "t"), "doc_id", "t")
+      .orderBy("id").collect().map(_.getLong(1))
+    assert(sh.length == 4)
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
-    assert(ham(sh(0), sh(0)) == 0)
+    assert(ham(sh(0), sh(3)) == 0)
     assert(ham(sh(0), sh(1)) < ham(sh(0), sh(2)))
   }
 

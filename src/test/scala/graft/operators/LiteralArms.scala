@@ -70,23 +70,18 @@ object LiteralArms {
   }
 
   /** Reference arm of [[Similarity.hyperplaneSignature]]: per-plane
-    * `when(dot > 0, 1 << i)` lanes + a raise_error dimension guard. */
+    * `when(dot > 0, 1 << i)` lanes + a raise_error dimension guard,
+    * folded by `pmod` when `buckets > 0`. */
   def hyperplaneSignature(v: Column, planes: Int, table: Int = 0,
-                          dim: Int = 64): Column = {
-    val sig = Similarity.planeLiterals(planes, dim, table).zipWithIndex.map { case (p, i) =>
+                          buckets: Long = 0L, dim: Int = 64): Column = {
+    val lanes = Similarity.planeLiterals(planes, dim, table).zipWithIndex.map { case (p, i) =>
       val plane = array(p.map(lit): _*)
       when(dot(v, plane) > 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
     }
     val dimGuard = when(size(v) === dim, lit(0L))
       .otherwise(raise_error(concat(
         lit(s"hyperplaneSignature: expected $dim-dim vector, got "), size(v))))
-    sig.reduce(_ + _) + dimGuard
-  }
-
-  /** Reference arm of [[Similarity.foldedSignature]]. */
-  def foldedSignature(v: Column, planes: Int, table: Int,
-                      buckets: Long = 0, dim: Int = 64): Column = {
-    val sig = hyperplaneSignature(v, planes, table, dim)
+    val sig = lanes.reduce(_ + _) + dimGuard
     if (buckets > 0) pmod(sig, lit(buckets)) else sig
   }
 
